@@ -10,6 +10,7 @@ across thousands of files, and readers never force materialization.
 from __future__ import annotations
 
 import os
+from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -70,33 +71,55 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.schema(SCHEMAS[name]).parquet(path)
 
 
-def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime SQL confs safe to (re)set on an externally-owned session.
+# The narrow shuffle width shared by queries whose post-scan stages are
+# model- or state-sized (few groups), where per-partition overhead, not
+# parallelism, dominates (SCALE.md "Streaming state sizing policy").
+NARROW_SHUFFLE = {"spark.sql.shuffle.partitions": "8"}
+
+# Keys that some registered query overrides and the baseline in tune()
+# does not name; ``registry.query`` adds each query's ``conf`` keys here.
+QUERY_CONF_KEYS: set[str] = set()
+
+
+def tune(spark: SparkSession, conf: Mapping[str, str] | None = None) -> SparkSession:
+    """The one writer of query-scoped session conf.
 
     The driver owns the SparkSession it passes us, so only runtime-settable
-    confs go here.  ``shuffle.partitions`` sized for the local bench scale
-    (32 cores / sub-GB shuffles); AQE coalescing takes it down further at
-    runtime, and on a real 1000-executor cluster AQE + a larger initial
-    value are the policy instead of this constant.
+    confs go here, and every query must start from the same conf.  Each
+    registered query's wrapper (``registry.query``) calls this before its
+    body; it (1) sets the baseline below, (2) returns every key in
+    ``QUERY_CONF_KEYS`` that the baseline does not name to the session
+    default, and (3) applies the query's own ``conf``.  Overrides stay in
+    force after the body returns, because the caller plans and runs the
+    returned DataFrame later; the next registered call resets them.
+
+    ``shuffle.partitions`` is sized for the local bench scale (32 cores /
+    sub-GB shuffles) and re-read from ``$SPARK_GRAFT_SHUFFLE`` on every
+    call; AQE coalescing takes it down further at runtime, and on a real
+    1000-executor cluster AQE + a larger initial value are the policy
+    instead of this constant.
     """
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
-        )
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
+    baseline = {
+        "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
         # lake write default: zstd strictly dominated snappy/gzip/raw on
         # size AND write AND scan in experiments/codec_ab.py (SCALE.md)
-        spark.conf.set("spark.sql.parquet.compression.codec", "zstd")
-        # reset confs that single operators (join_bloom_runtime) override
-        # for their own plan, so they never leak into the next query
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10MB")
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
+        "spark.sql.parquet.compression.codec": "zstd",
+        # Spark's defaults, named so a query that overrides them
+        # (join_bloom_runtime, join_shuffle_hash) is reset explicitly
+        "spark.sql.autoBroadcastJoinThreshold": "10MB",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold":
             "10GB",
-        )
+    }
+    try:
+        for key, value in baseline.items():
+            spark.conf.set(key, value)
+        for key in QUERY_CONF_KEYS - baseline.keys():
+            spark.conf.unset(key)
     except Exception:  # conf locked down — proceed with session defaults
         pass
+    for key, value in (conf or {}).items():
+        spark.conf.set(key, value)
     return spark

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load, tune
+from ..io import load
 from ..registry import query
 from ._helpers import DEC, davg, dsum, sql_davg, sql_dsum
 
@@ -43,7 +43,6 @@ from ._helpers import DEC, davg, dsum, sql_davg, sql_dsum
 )
 def agg_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q1-shaped pricing summary: 8 aggregates by (returnflag, linestatus)."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
@@ -78,7 +77,6 @@ def agg_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ungrouped run-level summary (reference: total fetched/failed per run)."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     return li.agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -101,7 +99,6 @@ def agg_global(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct users per event type (reference: unique pages changed per
     run).  Catalyst plans the distinct via Expand + two-phase aggregate."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("n_users"),
@@ -121,7 +118,6 @@ def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_multi_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two distinct aggregates in one pass — Spark expands the input once
     per distinct group rather than re-scanning."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("n_users"),
@@ -141,7 +137,6 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     defined value with no DuckDB twin. Accuracy vs exact
     COUNT(DISTINCT) asserted in tests.
     """
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.approx_count_distinct("user_id", 0.02).alias("approx_users")
@@ -154,7 +149,6 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def select_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SELECT DISTINCT on two columns (reference: source-registry dedup)."""
-    tune(spark)
     return load(spark, sf_dir, "orders").select("o_orderstatus", "o_orderpriority").distinct()
 
 
@@ -168,7 +162,6 @@ def select_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Post-aggregation filter (reference: sources changing more than N
     times) — HAVING is just a filter above the aggregate in the plan."""
-    tune(spark)
     o = load(spark, sf_dir, "orders")
     return (
         o.groupBy("o_custkey")
@@ -193,7 +186,6 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-granularity subtotals in one pass (reference: per-state /
     per-kind / grand-total scan summaries).  SQL surface — GROUPING SETS
     has no stable DataFrame equivalent."""
-    tune(spark)
     load(spark, sf_dir, "customer").createOrReplaceTempView("cdp_customer")
     load(spark, sf_dir, "nation").createOrReplaceTempView("cdp_nation")
     return spark.sql(
@@ -221,7 +213,6 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical subtotals region -> nation -> grand total."""
-    tune(spark)
     c = load(spark, sf_dir, "customer")
     n = load(spark, sf_dir, "nation")
     r = load(spark, sf_dir, "region")
@@ -242,7 +233,6 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All 2^k grouping combinations over (returnflag, linestatus)."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     return li.cube("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("n"), dsum("l_quantity").alias("sum_qty")
@@ -264,7 +254,6 @@ def agg_collect_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparison harness canonicalizes scalar columns only (list-typed
     pandas columns are unsortable), and the joined form is equally
     deterministic."""
-    tune(spark)
     o = load(spark, sf_dir, "orders")
     return o.groupBy("o_custkey").agg(
         F.array_join(F.sort_array(F.collect_list("o_orderstatus")), ",").alias(
@@ -293,7 +282,6 @@ def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     summary).  Explicit pivot values keep the plan one-pass (no extra
     distinct job to discover columns); counts coalesced to 0 to match
     SQL FILTER semantics."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     piv = ev.groupBy("user_id").pivot("event_type", _EVENT_TYPES).count()
     return piv.select(
@@ -317,7 +305,6 @@ def agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     double reductions with no exact-decimal path, so both sides round:
     magnitudes chosen so engine drift (~1e-12 relative) sits far from
     the rounding boundary."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(F.stddev_samp("l_extendedprice"), 2).alias("sd_price"),
@@ -347,7 +334,6 @@ def agg_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     values; rounded to 6 digits to absorb last-ulp interpolation
     differences.  Exact percentile sorts per group — fine for bounded
     groups; the unbounded-cardinality path is the approx twin below."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     # ONE percentile buffer for all three targets (r11): three scalar
     # percentile() aggregates each built and merged their own
@@ -398,7 +384,6 @@ def agg_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     (fixed sketch memory per group regardless of cardinality); that
     sketch regime's 1%-agreement contract vs the exact twin is asserted
     in tests/test_llm_ops.py with accuracy=1000."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     pcts = F.approx_percentile(
         "l_extendedprice", F.array(F.lit(0.5), F.lit(0.9), F.lit(0.99)), F.lit(1000000)
@@ -429,7 +414,6 @@ def agg_sketch_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-specific representation. Union-vs-direct agreement and
     accuracy asserted in tests.
     """
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     daily = ev.groupBy(F.date_trunc("day", "ts").alias("day")).agg(
         F.hll_sketch_agg("user_id").alias("sk")
@@ -466,7 +450,6 @@ def reshape_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     input row fans to 3 skinny rows map-side); the oracle spells it as
     the portable UNION ALL, which scans 3x — the API exists precisely
     to avoid that."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     long = li.unpivot(
         ids=["l_returnflag"],
@@ -513,7 +496,6 @@ def agg_mode_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the counted CTE is a partial-aggregating groupBy (the heavy
     lift, map-side combined); the window then runs over GROUPS (distinct
     values), not rows — cardinality k per key, not n."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     counted = li.groupBy("l_returnflag", "l_quantity").agg(
         F.count(F.lit(1)).alias("cnt")
@@ -553,7 +535,6 @@ def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the aggregate partial-combines map-side into at most 10 groups, the
     cheapest shuffle shape there is.  Same float division + floor in
     both engines → identical bin assignment bit-for-bit."""
-    tune(spark)
     o = load(spark, sf_dir, "orders")
     bin_col = F.least(F.floor(F.col("o_totalprice") / 50000.0), F.lit(9)).cast("int")
     return (
@@ -590,7 +571,6 @@ def agg_sliding_sketch_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-specific. 5% agreement vs exact sliding distinct asserted
     day-by-day in tests.
     """
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     daily = ev.groupBy(F.to_date("ts").alias("day")).agg(
         F.expr("hll_sketch_agg(user_id)").alias("sk")
@@ -622,7 +602,6 @@ def agg_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum(w*x)/sum(w), both sums through exact decimal so the final
     double division is bit-stable at any partitioning (the same
     last-step-division discipline as analytics_promo_revenue)."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     wx = (F.col("l_extendedprice") * F.col("l_quantity")).cast(DEC)
     return li.groupBy("l_returnflag").agg(
@@ -655,7 +634,6 @@ def agg_argmax_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
     have no per-customer ties (verified: max tie-group size is 1), so
     the hash is stable; on tie-prone data, break ties in the value
     (struct of (price, pk)) on BOTH engines."""
-    tune(spark)
     o = load(spark, sf_dir, "orders")
     return o.groupBy("o_custkey").agg(
         F.max_by("o_orderkey", "o_totalprice").alias("best_orderkey"),
@@ -702,7 +680,6 @@ def agg_regr_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE hash aggregate with map-side partials carrying
     five decimals + a count per group — trend fitting at 100 TB costs
     exactly one scan, like any other sum."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     x, y = F.col("l_quantity"), F.col("l_extendedprice")
     m = li.groupBy("l_returnflag").agg(
@@ -792,7 +769,6 @@ def agg_countmin_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
     fall back to the one-sided guarantees (est >= exact, est <=
     exact + eps*N at the configured confidence), still asserted in
     tests/test_llm_ops.py."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     tok = d.select("lang", F.explode(F.split("text", " ")).alias("token"))
     per_lang = tok.groupBy("lang").agg(
@@ -857,7 +833,6 @@ def agg_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     the naive two-branch plan that re-aggregates the scan).  The
     oracle is plain COUNT(DISTINCT) — exactness, not an estimate, is
     the contract."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     partials = (
         ev.select(
@@ -933,7 +908,6 @@ def agg_bitmap_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair stage works on days x buckets blob rows, never raw events;
     the oracle recomputes each overlap data-sized with
     COUNT(DISTINCT) + IN."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     partials = (
         ev.select(
@@ -1011,7 +985,6 @@ def agg_approx_topk_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: explode aggregates map-side into per-lang sketch
     buffers (bytes per scope, not per token); the merge is one
     sketch-sized reduce."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     tok = d.select("lang", F.explode(F.split("text", " ")).alias("token"))
     per_lang = tok.groupBy("lang").agg(
@@ -1080,7 +1053,6 @@ def reshape_transpose(spark: SparkSession, sf_dir: str) -> DataFrame:
     the flip — transpose requires a least-common value type across the
     matrix.  The oracle spells the flip as the portable conditional-
     aggregation UNION ALL over the same aggregate CTE."""
-    tune(spark)
     c = load(spark, sf_dir, "customer")
     n = load(spark, sf_dir, "nation")
     r = load(spark, sf_dir, "region")
@@ -1146,7 +1118,6 @@ def agg_histogram_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     All-integer arithmetic: the
     rank threshold ceil(total*p/100) is compared as cum*100 >= p*total,
     so no float division anywhere."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     h = (
         li.groupBy(
@@ -1203,7 +1174,6 @@ def agg_mode_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     window, which DuckDB plans efficiently; the struct-argmin is the
     shape that scales on Spark (no per-group sort, partial aggregation
     on both stages)."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     counted = ev.groupBy("user_id", "event_type").agg(
         F.count(F.lit(1)).alias("n")
@@ -1289,7 +1259,6 @@ def agg_mad_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sketch path at unbounded cardinality is agg_histogram_quantile /
     agg_approx_percentile.  At 100 TB run this per bounded group (event
     types, days), never per user."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     c = ev.select("event_type", cents.alias("cents"))
@@ -1367,7 +1336,6 @@ def agg_decay_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     timestamp is a 1-row broadcast (never a driver collect), the rest is
     one map-side-combinable groupBy; map-only before the single
     shuffle — the same shape at any corpus size."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     anchor = ev.agg(F.max(F.unix_micros("ts")).alias("max_us"))
     age_weeks = F.floor(
@@ -1415,7 +1383,6 @@ def sql_pivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     must know the output schema without a discovery pass; at 100 TB the
     two-pass "dynamic pivot" alternative costs a full extra scan).
     Counts are integers; sums ride the decimal-exact reduction."""
-    tune(spark)
     load(spark, sf_dir, "orders").createOrReplaceTempView("pivot_orders")
     return spark.sql(
         """
@@ -1471,7 +1438,6 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     weight-summed bins instead.  Ties in price collapse into one
     cumulative step regardless of row order, so the window needs no
     row-level tiebreaker."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     cents = li.select(
         F.col("l_returnflag").alias("flag"),
@@ -1534,7 +1500,6 @@ def agg_entropy_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     the decimal-exact sum, and the result quantizes to micro units.
     Two map-side-combinable aggregates + one (user_id)-keyed join that
     reuses the mix partitioning — no window, no explode."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     mix = ev.groupBy("user_id", "event_type").agg(
         F.count(F.lit(1)).alias("c")
@@ -1621,7 +1586,6 @@ def agg_moments_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     merging five integers — never re-touching data.  Population (not
     sample-corrected) moments, stated in the column names' contract:
     skew = m3/m2^1.5, excess kurtosis = m4/m2^2 - 3."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     q = F.col("l_quantity").cast("long")
     sums = li.select("l_returnflag", q.alias("q")).groupBy("l_returnflag").agg(
@@ -1697,7 +1661,6 @@ def agg_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     is bit-stable).  At 100 TB swap pass one for the mergeable
     histogram bracket (agg_histogram_quantile) and keep pass two
     unchanged."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     # one shared percentile buffer for both bounds (the agg_quantiles
     # r11 single-buffer rewrite; identical interpolation per target)
@@ -1747,7 +1710,6 @@ def sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial+final hash aggregate, so there is NO runtime cost and NO
     plan difference at any scale).  Counts are integers; the sum rides
     the decimal-exact reduction."""
-    tune(spark)
     load(spark, sf_dir, "orders").createOrReplaceTempView("gba_orders")
     return spark.sql(
         """
@@ -1816,7 +1778,6 @@ def agg_percentile_cont_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     targets; the rank-row fetch is a semi-join on (group, rn) — at
     100 TB the window is the only corpus-sized stage (same cost class
     as agg_quantiles)."""
-    tune(spark)
     o = load(spark, sf_dir, "orders")
     cents = o.select(
         F.col("o_orderpriority").alias("prio"),
@@ -1912,7 +1873,6 @@ def agg_benford_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side digit projection + a 9-row aggregate with
     map-side combine; the grand total broadcasts back.  At 100 TB
     this is scan-bandwidth bound, like every profiling op."""
-    tune(spark)
     o = load(spark, sf_dir, "orders")
     d = (
         o.filter(F.col("o_totalprice") >= 1)
@@ -1961,7 +1921,6 @@ def sql_window_named_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes over one exchange, and functions with compatible frames
     fuse exactly as their inline twins do (the shared-frame doctrine).
     Ordering tie-breaks on o_orderkey so row_number is deterministic."""
-    tune(spark)
     load(spark, sf_dir, "orders").createOrReplaceTempView("wc_orders")
     return spark.sql(
         """
@@ -2001,7 +1960,6 @@ def agg_string_agg_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     only; corpus-sized concatenation belongs in collect_list +
     array_join after an explicit sort, or better, stays unconcatenated
     (the doc-chunking ops)."""
-    tune(spark)
     load(spark, sf_dir, "orders").createOrReplaceTempView("la_orders")
     return spark.sql(
         """
@@ -2058,7 +2016,6 @@ def agg_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the agg_percentile_cont_exact cost class); at 100 TB replace the
     exact rank with the two GK-sketch cut values and a filter —
     documented approximation path, same shape as winsorized's."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     cents = li.select(
         "l_returnflag",
@@ -2130,7 +2087,6 @@ def agg_geo_harmonic_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: additive (n, cents, sum_ln, sum_recip) partials; reciprocal
     pico-sums stay int64-safe to ~9e6 rows per shard at min price ~1
     (here min ~900: ~8e9 rows) — shard partials by month past that."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     x = F.col("l_extendedprice")
     micro = lambda col: F.floor(F.lit(1000000.0) * col + F.lit(0.5)).cast(
@@ -2239,7 +2195,6 @@ def agg_circular_mean_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: additive (n, sum_sin, sum_cos) partials — the circular mean
     of any rollup grain is three-integer arithmetic."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     s = (
         F.lit(3600) * F.hour("ts")
@@ -2315,7 +2270,6 @@ def sql_aggregate_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered metrics ride along — that's the point; the COUNT DISTINCT
     adds the usual expand-or-two-phase plan Catalyst picks for mixed
     distinct/non-distinct aggregates."""
-    tune(spark)
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("sqlf_lineitem")
     return spark.sql(
         """
@@ -2409,7 +2363,6 @@ def agg_ratio_metric_delta_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one map-side-combined grouped pass; the six moments are
     additive partials, so segment CIs merge without re-scanning."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     xc = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
     q = F.col("l_quantity").cast("long")
@@ -2518,7 +2471,6 @@ def agg_tukey_fences_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one per-group rank window (exact-median cost class) + one
     broadcast-back of the 3-row quartile dim; GK-bracket the quartiles
     at unbounded group sizes."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
     w = Window.partitionBy("l_returnflag").orderBy("cents")
@@ -2613,7 +2565,6 @@ def agg_cvar_expected_shortfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-back threshold join; GK-bracket the threshold at
     unbounded group sizes and CVaR becomes a one-pass conditional
     aggregate."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
     w = Window.partitionBy("l_returnflag").orderBy("cents")

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load, tune
+from ..io import load
 from ..registry import query
 from ._helpers import davg, sql_davg
 
@@ -44,7 +44,6 @@ def sample_stratified_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed is per-partition).  The rate table is a broadcast dim join, so
     the corpus side never shuffles; at 100 TB this is a map-only scan
     that prunes rows AT the parquet reader's exit."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     rates = spark.createDataFrame(
         [(k, v) for k, v in _LANG_PCT.items()], "lang string, pct int"
@@ -83,7 +82,6 @@ def merge_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     a single shuffle on doc_id.  At 100 TB this beats a full-outer join
     formulation (one shuffled table, not two shuffled inputs plus null
     patching), and generalizes to n-way merges by adding priorities."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     base = d.select(
         "doc_id",
@@ -133,7 +131,6 @@ def profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's 3 scans.  At 100 TB one pass over the fact table is the
     entire point of the operator (exact distincts shuffle per column;
     swap in approx_count_distinct when cardinality estimates suffice)."""
-    tune(spark)
     o = load(spark, sf_dir, "orders")
     a = o.agg(
         F.count("o_orderstatus").alias("n1"),
@@ -189,7 +186,6 @@ def ts_gapfill_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side cross of each user partition with ~30 dates, never a
     shuffle of the fact table; the fill is one window per user ordered
     by day (``last(ignorenulls)``), partition-parallel at any scale."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     day = F.date_trunc("day", "ts").alias("day")
     daily = e.groupBy("user_id", day).agg(davg("value").alias("v"))
@@ -252,7 +248,6 @@ def corpus_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     per (lang, shard) with shard = hash(doc_id) % n_shards — same plan
     shape, shard count sized to cluster cores; packing quality is
     unaffected because bins never span shards."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     tokens = F.ceil(F.col("n_chars").cast("double") / 4).alias("tokens")
     w = (
@@ -298,7 +293,6 @@ def sample_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     One window shuffle on (lang, source); with heavy strata the
     hash-rank window is still O(n log n) per stratum, and the top-k
     filter prunes before anything downstream."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     w = Window.partitionBy("lang", "source").orderBy(
         (F.col("doc_id") * _SAMPLE_MULT) % _SAMPLE_MOD, "doc_id"
@@ -343,7 +337,6 @@ def ts_backfill_bfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     its first measurement).  Same densify-then-window plan: broadcast
     day spine, one window per user ordered by day with a FOLLOWING
     frame; partition-parallel at any scale."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     day = F.date_trunc("day", "ts").alias("day")
     daily = e.groupBy("user_id", day).agg(davg("value").alias("v"))
@@ -410,7 +403,6 @@ def ts_resample_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     and moves every observation through the shuffle.  The oracle spells
     the same total order as arg_min/arg_max on a zero-padded string
     key."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     us = F.unix_micros("ts")
     seq = F.struct(
@@ -473,7 +465,6 @@ def sample_importance_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     1e6 * q_num^2 / q_den^2 compared cross-multiplied in integers on
     both engines — no float boundary can flip a row.  Single scan,
     map-only, scan-bandwidth bound at any scale."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     q_num = F.size(F.array_distinct(toks)).cast("long")
@@ -519,7 +510,6 @@ def ts_ema_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical cross-engine UNROUNDED.  State per user is one array
     of its own events (bounded by per-entity history, the same bound as
     any per-user window sort); one shuffle on user_id."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     packed = ev.groupBy("user_id").agg(
         F.sort_array(
@@ -582,7 +572,6 @@ def corpus_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver materialization; the epoch column here doubles as the
     demonstration that two epochs produce distinct permutations of the
     same corpus."""
-    tune(spark)
     d = load(spark, sf_dir, "documents").select("doc_id")
 
     def epoch_head(ep: int) -> DataFrame:
@@ -673,7 +662,6 @@ def ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines (daily means go through the exact-decimal trick first), so
     ROUND(...,6) is belt-and-braces, not a crutch; the is_interp gate is
     cast to int per the repo's nullable-boolean doctrine."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     day = F.date_trunc("day", "ts").alias("day")
     daily = e.groupBy("user_id", day).agg(davg("value").alias("v"))
@@ -768,7 +756,6 @@ def sample_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample_topk_per_group; the hash gate keeps the result IDENTICAL
     because the top-k by hash order is invariant under any prefilter
     that keeps hash values below the gate."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     anchors = d.filter(F.col("doc_id") < _NEG_ANCHORS).select(
         F.col("doc_id").alias("anchor_id"), F.col("lang").alias("anchor_lang")
@@ -849,7 +836,6 @@ def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal trick, NULL gating is cast to int, and all four emitted
     floats are rounded post-identical-IEEE-chains, so the driver hash
     is stable."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(F.date_trunc("day", "ts").alias("day")).agg(
         F.sum(F.col("value").cast("decimal(28,6)")).cast("double").alias("v")
@@ -972,7 +958,6 @@ def ts_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound: S^2 needs S < 3e9, i.e. daily totals below ~1e8 x D — beyond
     that, rescale counts (e.g. to thousands) before folding.  DuckDB
     twin folds the identical recurrence with list_reduce."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     daily = (
         ev.groupBy("event_type", F.col("ts").cast("date").alias("d"))
@@ -1095,7 +1080,6 @@ def ts_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     one daily aggregate; the lag windows partition per event_type over
     ~one row per DAY (calendar-bounded, the windows.py:193 doctrine);
     the 7 lag products ride ONE window pass and one final small agg."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.to_date("ts").alias("d")
@@ -1236,7 +1220,6 @@ def ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale split, same as the ts siblings: corpus-sized work = the one
     daily aggregate; the fold runs over ~one value per day per type."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy("event_type", F.to_date("ts").alias("d")).agg(
         F.count(F.lit(1)).cast("double").alias("x")
@@ -1342,7 +1325,6 @@ def win_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     running-max window partitions per event_type over ~one row per day
     (calendar-bounded, the ts-family doctrine); corpus-sized work is
     the single daily aggregate."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy("event_type", F.to_date("ts").alias("d")).agg(
         F.count(F.lit(1)).alias("v")
@@ -1527,7 +1509,6 @@ def ts_partial_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ACF formulation (y = n·x − T centering; the scale factors cancel in
     the correlation ratios).  Corpus-sized work = the one daily
     aggregate; everything after runs on one row per type."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.to_date("ts").alias("d")
@@ -1642,7 +1623,6 @@ def win_rolling_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     ts_seasonal_decompose edge policy.  The window partitions per
     event_type over ~one row per day (calendar-bounded); corpus-sized
     work is the one daily aggregate."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type",
@@ -1729,7 +1709,6 @@ def ts_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
     second exchange).  At 100 TB with unbounded keys, range-partition
     by (key, time-bucket) and hand the bucket-boundary row to the next
     bucket — the numerator is a plain sum, so bucket partials add."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     # ordering by integer t == ordering by ts (epoch-us is monotone)
     w = Window.partitionBy("event_type").orderBy("t", "event_id")
@@ -1824,7 +1803,6 @@ def ts_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
     window (naturally partitioned), then model-sized folds — the
     sparse encoding means state is per-DEMAND, not per-day, which is
     the point of Croston at 100 TB: a year of zeros costs nothing."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     pur = (
         e.filter(F.col("event_type") == "purchase")
@@ -2024,7 +2002,6 @@ def ts_lttb_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (calendar-bounded, pinned).  At 100 TB with long series, bucket
     grain becomes (key, time-bucket) partitions and the same unrolled
     selection runs per segment with boundary handoff."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     # daily (the only corpus-sized stage, ~150 rows out) feeds FOUR
     # consumers (bounds, mid, fp, lp) and mid feeds two (cents, pts);
@@ -2238,7 +2215,6 @@ def sample_bottomk_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle rather than needing an accuracy band.  Ties on hash
     break by user_id; the rank window partitions per type over the
     deduplicated (type, user) set."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     du = e.select("event_type", "user_id").distinct()
     hashed = du.select(
@@ -2346,7 +2322,6 @@ def ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     per key for n<=366 — the LTTB/ACF bounded-domain argument), and at
     100 TB with per-entity keys the same shape shuffles once on the
     equi-key and never crosses keys."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type",
@@ -2462,7 +2437,6 @@ def ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily aggregate; the pair join is per-key quadratic in
     calendar-bounded DAYS, the median window partitions per key over
     ~n^2/2 slope rows (n <= 366), and nothing crosses keys."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type",
@@ -2582,7 +2556,6 @@ def ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to ts_autocorrelation — one corpus-sized daily
     aggregate, per-type lag windows over calendar-bounded rows, 7 lag
     products in ONE window pass."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.col("ts").cast("date").alias("d")
@@ -2684,7 +2657,6 @@ def sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduplicated user set; at 100 TB the top-k per partition pre-prune
     (AQE or a manual mapPartitions top-k) bounds the window input —
     the topk_per_group shape."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     w = e.groupBy("event_type", "user_id").agg(
         F.count(F.lit(1)).cast("long").alias("wt")
@@ -2756,7 +2728,6 @@ def analytics_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, millions of small partitions — the win_sessionize shape),
     then a tiny (|types|^2-row) aggregate with map-side combine; the
     row-total join broadcasts."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = e.select(
@@ -2828,7 +2799,6 @@ def agg_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-key quadratic in calendar-bounded days (the
     ts_mann_kendall pair argument, here n(n+1)/2 pairs including
     i = j), one equi-key shuffle, per-key median window."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type",
@@ -2935,7 +2905,6 @@ def ts_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two window passes sharing the (event_type, d) sort over the
     calendar-bounded daily rollup (the win_rsi shape), then a tiny
     per-type aggregate."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.col("ts").cast("date").alias("d")
@@ -3042,7 +3011,6 @@ def analytics_chisq_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     row/col/grand totals are cell-grid-sized re-aggregations that
     BROADCAST back — at 100 TB nothing after the first groupBy touches
     corpus-sized data."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type",
@@ -3170,7 +3138,6 @@ def agg_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one corpus-sized daily aggregate; the rank window partitions
     per type over calendar-bounded rows; tie terms re-aggregate the
     same tiny table."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type",
@@ -3308,7 +3275,6 @@ def analytics_interarrival_burstiness(spark: SparkSession, sf_dir: str) -> DataF
     win_sessionize.  Overflow bound: ms gaps keep Sum g^2 < 2^63 up
     to ~10^9 gaps of a day each; the us formulation measurably
     overflowed at fixture scale, which is why this is ms."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     w = Window.partitionBy("event_type").orderBy("ts", "event_id")
     ms = F.expr("unix_micros(ts) div 1000")
@@ -3377,7 +3343,6 @@ def analytics_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     is incrementally maintainable (MERGE least(seen_min, new_min) —
     the pipeline_rollup_merge pattern), so the daily job never
     rescans history."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     ud = e.select("user_id", F.col("ts").cast("date").alias("d")).distinct()
     firsts = ud.groupBy("user_id").agg(F.min("d").alias("d0"))
@@ -3433,7 +3398,6 @@ def analytics_dau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
     monthly COUNT(DISTINCT user) re-shuffles the dedup by user — at
     100 TB swap in the bitmap partials (stream_bitmap_partials'
     architecture) to make both grains one-pass mergeable."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     ud = e.select("user_id", F.col("ts").cast("date").alias("d")).distinct()
     daily = ud.groupBy("d").agg(F.count(F.lit(1)).alias("dau"))
@@ -3527,7 +3491,6 @@ def agg_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     over calendar-bounded rows (<= 366 per type-year); the cumulative
     window partitions per type.  At 100 TB the daily table is still
     tiny — the pattern holds unchanged."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type",
@@ -3640,7 +3603,6 @@ def agg_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily rows; the moment sums are additive partials — per-shard
     (n, sx, st, sxx, stt, sxt) tuples ADD, so rollups to coarser grains
     never re-rank (within a fixed ranking grain)."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type",
@@ -3764,7 +3726,6 @@ def agg_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     shards merge by adding, the test statistic is O(groups) driver-free
     arithmetic.  x <= ~1e5/day keeps x^2 sums int64-safe past 1000x
     this fixture; beyond that, shard the power sums by month first."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type",
@@ -3893,7 +3854,6 @@ def agg_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: additive partials — per-shard (n, s1..s4) tuples ADD, so the
     normality score of any rollup grain is five-integer arithmetic."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy("event_type", F.col("ts").cast("date")).agg(
         F.count(F.lit(1)).cast("long").alias("x")
@@ -4009,7 +3969,6 @@ def agg_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one corpus-sized daily aggregate, then O(groups) arithmetic;
     the (n_i, s_i, ss_i) tuples are additive partials that merge across
     shards without re-scanning."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy("event_type", F.col("ts").cast("date")).agg(
         F.count(F.lit(1)).cast("long").alias("x")
@@ -4136,7 +4095,6 @@ def agg_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one corpus-sized aggregate to the |types| x 7 grid, then
     grid-sized arithmetic; row/col/grand totals broadcast back."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type",
@@ -4265,7 +4223,6 @@ def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the join input is the calendar-bounded daily table (|types|
     x |days|); the 7-lag fan-out multiplies THAT, not the corpus.
     Moment tuples are additive partials per (pair, lag)."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type",
@@ -4371,7 +4328,6 @@ def profile_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(distinct keys) memory per column — at 100 TB profile per
     partition and MERGE the (n, max, sum) partials, which are
     additive."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
     e = load(spark, sf_dir, "events")
@@ -4503,7 +4459,6 @@ def ts_seasonality_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one daily rollup, one per-type window, one dow-grain
     broadcast-back; moment tuples are additive partials."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type",
@@ -4670,7 +4625,6 @@ def agg_survival_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one rank window per (type, user) over the corpus, then
     calendar-bounded arithmetic; the risk table is |types| x |days|."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     anchor = e.agg(F.max(F.col("ts").cast("date")).alias("mx"))
     wr = Window.partitionBy("event_type", "user_id").orderBy(
@@ -4824,7 +4778,6 @@ def corpus_length_bucket_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     weight computation is bucket-grain arithmetic.  Applying the
     weights is a broadcast join + deterministic-hash thinning
     (sample_stratified_hash's discipline), never a shuffle."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     nc = F.col("n_chars")
     bucket = (
@@ -4917,7 +4870,6 @@ def ts_local_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: three frames over one per-type sort of the calendar-bounded
     daily rollup — fused by Spark into a single window stage."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type",
@@ -5011,7 +4963,6 @@ def sample_stratified_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
     strata-grain arithmetic.  EXECUTING the allocation is the
     deterministic-hash filter with per-stratum thresholds — no
     shuffle."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     x = F.col("n_chars")
     m = d.groupBy("lang").agg(
@@ -5090,7 +5041,6 @@ def analytics_dow_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: grid cardinality is |types| x 168 forever; the single
     groupBy map-side combines."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     cells = e.groupBy(
         "event_type",
@@ -5158,7 +5108,6 @@ def sample_balanced_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast scalar; at unbounded class sizes swap the exact rank for
     a hash-threshold filter (keep if hash < k/n * MOD — the
     sample_stratified_hash shape) and accept +-sqrt noise in k."""
-    tune(spark)
     e = load(spark, sf_dir, "embeddings").select("label", "vec_id")
     sized = e.groupBy("label").agg(F.count(F.lit(1)).cast("long").alias("n"))
     k = sized.agg(F.min("n").cast("long").alias("k"))
@@ -5255,7 +5204,6 @@ def ts_stl_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one daily rollup, one per-type trend window, a dow-grain
     broadcast-back, and one per-type rank window over <= 24 interior
     days — calendar-bounded throughout."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type",
@@ -5412,7 +5360,6 @@ def agg_wilcoxon_signed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one corpus-sized daily aggregate; the 7-day self-join and
     rank window live on the calendar-bounded daily table."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type",
@@ -5502,7 +5449,6 @@ def agg_chi2_gof(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one corpus aggregate to |types| x 7 cells, then grid-sized
     arithmetic."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type",
@@ -5572,7 +5518,6 @@ def agg_binomial_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one map-side-combined aggregate per type; the z arithmetic
     runs on |types| rows."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     dow = (
         F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
@@ -5657,7 +5602,6 @@ def agg_poisson_rate_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: two corpus-sized aggregates (per-type counts + one global
     day census, broadcast back); arithmetic on |types| rows."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     t = F.datediff(
         F.col("ts").cast("date"), F.lit("2024-01-01").cast("date")
@@ -5747,7 +5691,6 @@ def analytics_ab_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one distinct-user dedup (the analytics_dau_mau shuffle),
     then a single 2-cell aggregate — the check is free next to any
     experiment readout."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     arm = F.when(
         (F.col("user_id") * _SAMPLE_MULT) % _SAMPLE_MOD % 100 < 50, "a"
@@ -5827,7 +5770,6 @@ def corpus_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     the schedule itself is never materialized, only its contract; the
     trainer re-derives any shard's order locally from (phase_idx,
     hash) without coordination."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     phase_idx = (
         F.when(F.col("n_chars") < 200, 1)
@@ -5945,7 +5887,6 @@ def agg_fisher_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one corpus-sized daily aggregate; the combinatorics run on
     |types| x <=9 candidate tables — constant work at any corpus size
     (the margins are calendar days, not rows)."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type",
@@ -6123,7 +6064,6 @@ def agg_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     here), built AFTER the one corpus-sized daily rollup; the rank
     windows partition per (type, rep).  Raising K to 9999 scales the
     small table linearly and the corpus cost not at all."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type",

@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load, tune
+from ..io import load
 from ..registry import query
 
 
@@ -28,7 +28,6 @@ from ..registry import query
 def proj_compute(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arithmetic projection (derived fields on scan records).  Per-row
     IEEE double arithmetic — deterministic, no decimal trick needed."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return li.select(
@@ -54,7 +53,6 @@ def proj_compute(spark: SparkSession, sf_dir: str) -> DataFrame:
 def filter_compound(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compound predicate: AND/OR/NOT, IN, BETWEEN over dates + flags
     (reference: include/skip lists over sources)."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     in_window = F.col("l_shipdate").between(
         F.lit("1996-01-01 00:00:00").cast("timestamp"),
@@ -80,7 +78,6 @@ def filter_like(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIKE / regex pattern filters (reference: URL & content pattern
     matching).  Spark ``rlike`` and DuckDB ``regexp_matches`` are both
     unanchored searches — pattern kept POSIX-safe."""
-    tune(spark)
     p = load(spark, sf_dir, "part")
     return p.filter(
         (F.col("p_name").like("%gear%") | F.col("p_type").like("PRO%"))
@@ -105,7 +102,6 @@ def filter_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three-valued logic on a column made nullable via CASE (reference:
     failed fetches leave content missing): IS NULL, IS DISTINCT FROM and
     the null-safe comparator ``<=>`` / IS NOT DISTINCT FROM."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     big = F.when(F.col("value") >= 10.0, F.col("value"))
     ev = ev.select(
@@ -143,7 +139,6 @@ def sql_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushes the bound predicates to the parquet scan exactly as if they
     were inlined.  The oracle inlines the same constants — identical
     results prove binding changes nothing semantically."""
-    tune(spark)
     load(spark, sf_dir, "orders").createOrReplaceTempView("sqlp_orders")
     return spark.sql(
         """
@@ -193,7 +188,6 @@ def sql_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     spelling the identical partial+final WindowGroupLimit, so this rung
     proves API-surface parity, not a win over the hand-tuned window
     (experiments/lateral_grouplimit_ab.py)."""
-    tune(spark)
     load(spark, sf_dir, "customer").createOrReplaceTempView("lat_customer")
     load(spark, sf_dir, "orders").createOrReplaceTempView("lat_orders")
     return spark.sql(
@@ -240,7 +234,6 @@ def sql_exists_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pure integer counts — no float discipline needed.  Scale: two
     hash joins on the customer key; the EXISTS side aggregates
     nothing (semi-join short-circuits on first match)."""
-    tune(spark)
     load(spark, sf_dir, "customer").createOrReplaceTempView("sqlx_customer")
     load(spark, sf_dir, "orders").createOrReplaceTempView("sqlx_orders")
     return spark.sql(
@@ -294,7 +287,6 @@ def sql_correlated_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one aggregate of the customer table + one broadcast-back
     join — the agg_groupby cost class."""
-    tune(spark)
     load(spark, sf_dir, "customer").createOrReplaceTempView("sqlc_customer")
     return spark.sql(
         """

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load, tune
+from ..io import load
 from ..registry import query
 from ._helpers import DEC, dsum, sql_dsum
 
@@ -37,7 +37,6 @@ from ._helpers import DEC, dsum, sql_dsum
 def join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders ⋈ customer equi-join; Catalyst picks broadcast vs
     sort-merge by size (customer < 10MB here → broadcast)."""
-    tune(spark)
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer")
     return o.join(c, o.o_custkey == c.c_custkey, "inner").select(
@@ -63,7 +62,6 @@ def join_multikey_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """5-way join chain lineitem→orders→customer→nation→region, revenue
     rolled up by region.  nation/region are broadcast (25/5 rows); the
     two big-table joins shuffle on their keys once each."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer")
@@ -90,7 +88,6 @@ def join_multikey_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All customers + their orders, NULLs for customers with none
     (reference: all sources + latest fetch, keeping never-fetched)."""
-    tune(spark)
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders")
     return c.join(o, c.c_custkey == o.o_custkey, "left").select(
@@ -107,7 +104,6 @@ def join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_right(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Right outer: every customer kept even with no matching order."""
-    tune(spark)
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer")
     return o.join(c, o.o_custkey == c.c_custkey, "right").select(
@@ -127,7 +123,6 @@ def join_right(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full outer join reconciling two source lists (reference: old vs
     new registry) — unmatched rows from BOTH sides survive with NULLs."""
-    tune(spark)
     c = load(spark, sf_dir, "customer")
     a = c.filter(F.col("c_mktsegment") == "BUILDING").select(
         F.col("c_custkey").alias("building_key")
@@ -148,7 +143,6 @@ def join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXISTS: customers with ≥1 order (reference: sources that changed
     this run).  left_semi never duplicates and never carries right cols."""
-    tune(spark)
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders")
     return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select(
@@ -170,7 +164,6 @@ def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     that did NOT change this run).  The build side is filtered BEFORE
     the anti join — the fixture gives every customer some order, so the
     unfiltered anti join would be vacuously empty and prove nothing."""
-    tune(spark)
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") == "1-URGENT"
@@ -193,7 +186,6 @@ def join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit broadcast of the small dim (reference: state-code lookup
     tables) — the big side is never shuffled for the join."""
-    tune(spark)
     s = load(spark, sf_dir, "supplier")
     n = load(spark, sf_dir, "nation")
     return (
@@ -210,7 +202,6 @@ def join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross product scaffold (reference: sources × stages grid).  Only
     sane when one side is tiny — this is 5 × 25."""
-    tune(spark)
     r = load(spark, sf_dir, "region")
     n = load(spark, sf_dir, "nation")
     return r.crossJoin(n).select("r_name", "n_name")
@@ -235,7 +226,6 @@ def join_theta_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     BETWEEN-style range predicate → BroadcastNestedLoopJoin with the
     3-row band table broadcast (reference: bucketing scan sizes into
     classes).  At 100 TB: bands stay tiny → NL cost is rows × 3."""
-    tune(spark)
     o = load(spark, sf_dir, "orders")
     bands = spark.createDataFrame(_BANDS, "band string, lo double, hi double")
     cond = (o.o_totalprice >= bands.lo) & (o.o_totalprice < bands.hi)
@@ -270,7 +260,6 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_id) — the tiebreaker makes it deterministic), NOT a self-join:
     the window form is O(n log n) per key and survives 100 TB, while a
     conditional self-join + row_number explodes on hot keys."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -314,7 +303,6 @@ def join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     turns an unbounded theta join into a shuffle-hash join whose fan-out
     is bounded by events-per-user-per-2h — the formulation that holds at
     100 TB (salting the bucket handles hot users)."""
-    tune(spark)
     ev = load(spark, sf_dir, "events").select("user_id", "event_id", "ts")
     bucket = F.floor(F.unix_timestamp("ts") / 3600)
     a = ev.withColumn("bucket", bucket)
@@ -376,7 +364,6 @@ def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql.adaptive.skewJoin.enabled and keep joins unsalted.  Cost:
     the build side shuffles 8x — only worth it when the probe side's
     skew dominates."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_extendedprice", "l_discount"
     )
@@ -427,7 +414,6 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     from urllib.parse import urlparse
 
-    tune(spark)
     # a fresh session has an empty in-memory catalog but the warehouse
     # dirs may survive from an earlier run — clear both or saveAsTable
     # fails with LOCATION_ALREADY_EXISTS
@@ -470,6 +456,10 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE o.o_orderpriority = '1-URGENT'
     GROUP BY l.l_returnflag
     """,
+    conf={
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    },
 )
 def join_bloom_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Runtime bloom-filter join pruning: a selective filter on orders
@@ -483,13 +473,8 @@ def join_bloom_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checkable.  Plan audited in tests/test_plans.py.  Local-scale
     knobs: the application-side size threshold (default 10GB — met
     trivially at 100 TB, lowered here so the 60 MB fixture qualifies)
-    and broadcast disabled (at 100 TB orders wouldn't fit anyway;
-    ``tune()`` restores both for subsequent queries)."""
-    tune(spark)
-    spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0"
-    )
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    and broadcast disabled (at 100 TB orders wouldn't fit anyway) —
+    both are this query's ``conf``, reset by the next registered query."""
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_extendedprice"
     )
@@ -524,7 +509,6 @@ def join_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate-then-join plan a hand-written groupBy+join produces — the
     rewrite is the point: the user writes the dependent loop, the engine
     runs one shuffle, nothing per-row.  Same SQL text runs on DuckDB."""
-    tune(spark)
     load(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(
@@ -586,7 +570,6 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle total, no self-join, tolerance applied as a map-side CASE.
     At 100 TB identical partitioning discipline applies (shuffle on the
     entity key, sort within)."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     wb = (
         Window.partitionBy("user_id")
@@ -655,7 +638,6 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost is identical to a plain equi-join; the one caveat is that ALL
     null keys land in one partition — if nulls are a large fraction,
     pre-split them (they only ever match other nulls) and union."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     k = F.when(F.col("event_type") == "error", None).otherwise(F.col("event_type"))
     a = ev.filter(F.col("event_id") % 2 == 0).select("event_id", k.alias("k"))
@@ -699,7 +681,6 @@ def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin: one shuffle on user_id, a FOLLOWING frame with
     first(ignorenulls) instead of a PRECEDING frame with last — still
     O(n log n) per key, no self-join fan-out on hot users."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -730,6 +711,7 @@ def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
     GROUP BY o.o_orderpriority
     """,
+    conf={"spark.sql.autoBroadcastJoinThreshold": "-1"},
 )
 def join_shuffle_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-strategy control: the SHUFFLE_HASH hint forces a
@@ -742,16 +724,14 @@ def join_shuffle_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     spill risk — a skewed or under-partitioned build side OOMs where
     SMJ degrades gracefully — which is why it's an explicit hint, not
     the default, and why AQE (`spark.sql.adaptive.enabled`, on in
-    ``tune()``) can make the same choice from runtime sizes.
+    ``io.tune``) can make the same choice from runtime sizes.
 
     Strategy hints never change results — the output is the plain
     join-aggregate the oracle recomputes.  Broadcast is disabled for
     the query (at this fixture scale orders would be broadcast and no
     shuffle strategy would be visible); the plan assertion in
-    tests/test_plans.py pins ShuffledHashJoin.  ``tune()`` restores the
-    threshold for subsequent queries."""
-    tune(spark)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    tests/test_plans.py pins ShuffledHashJoin.  The threshold is this
+    query's ``conf``, reset by the next registered query."""
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     joined = li.join(
@@ -800,7 +780,6 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same scale shape as join_asof: one window per user (never a
     conditional self-join), with the tolerance applied as a post-window
     projection — zero extra shuffles over the unbounded variant."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -875,7 +854,6 @@ def join_spatial_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     join shuffles on uniform grid keys; density skew (hot cells) takes
     the same salting as any hot equi-join key, and the 25x explode is
     map-side."""
-    tune(spark)
     emb = load(spark, sf_dir, "embeddings")
     p = emb.select(
         "vec_id",
@@ -981,7 +959,6 @@ def join_spatial_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode, salting for hot cells); the argmin window partitions by
     probe point over its bounded candidate set — WindowGroupLimit
     pushes the rn = 1 cut into the shuffle."""
-    tune(spark)
     emb = load(spark, sf_dir, "embeddings")
     p = emb.select(
         "vec_id",
@@ -1087,7 +1064,6 @@ def join_scd2_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval explosion (the join_asof doctrine applied to versioned
     dimensions).  IS DISTINCT FROM makes row 1 a version start on both
     engines; last(ignorenulls) carries the version forward."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     h = F.sha2("props", 256)

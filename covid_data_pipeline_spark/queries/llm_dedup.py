@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load, tune
+from ..io import NARROW_SHUFFLE, load
 from ..operators import connected_components
 from ..registry import query
 
@@ -41,7 +41,6 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup by content hash, keeping the lowest doc_id per hash —
     the reference's skip-identical-snapshot rule.  One shuffle on the
     64-hex hash (uniform key — no skew by construction)."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     h = F.sha2("text", 256)
     w = Window.partitionBy(h).orderBy("doc_id")
@@ -83,7 +82,6 @@ def dedup_near_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOT a quadratic block join.  It is the recall oracle for
     ``dedup_minhash_lsh``, which trades exactness for a far smaller
     candidate set at 100 TB."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     # hash tokens to int64 before set ops: Jaccard COUNTS are unchanged
     # (xxhash64 collisions are ~n²/2⁶⁴ — absent here, and the oracle
@@ -245,7 +243,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     an exact oracle would assert the wrong contract. Recall >= 0.8 vs
     the exact Jaccard twin asserted in tests/test_llm_ops.py.
     """
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     # tokens pre-hashed to int64 (same trick as the exact twins): the 64
     # seeded minhash passes then fold longs instead of strings, and the
@@ -386,7 +383,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Near-dups then reduce to small-Hamming-distance pairs (bucketable by
     bit-bands at scale — same LSH shape as minhash).  All exact integer
     arithmetic -> fully oracle-checkable."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     return _simhash(spark, d)
 
@@ -547,7 +543,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     the expensive intersection runs only on candidates.  This is the
     exact-dedup shape that survives 100 TB: candidate generation is an
     equi-join keyed by (lang, shingle), never quadratic in a block."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     # shingles hashed to int64 for the set ops — same counts, far
@@ -707,6 +702,11 @@ def _band_collision_components(spark, d):
     WITH RECURSIVE {_CC_SQL_CTES}
     SELECT doc_id, cluster_id FROM comps
     """,
+    # CC rounds shuffle the (vertex-count-sized) label table, orders of
+    # magnitude smaller than the corpus — run them narrow: per-round
+    # materialization overhead scales with partition count.  On a real
+    # cluster size this to |V| / target-partition-rows instead.
+    conf=NARROW_SHUFFLE,
 )
 def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-CLUSTER canonicalization: simhash band-collision edges
@@ -725,12 +725,6 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     per round, lineage truncated per round).  The DuckDB oracle closes
     the same edge set with a recursive CTE — the full clustering is
     hash-checked, not just spot-tested."""
-    tune(spark)
-    # CC rounds shuffle the (vertex-count-sized) label table, orders of
-    # magnitude smaller than the corpus — run them narrow: per-round
-    # materialization overhead scales with partition count.  On a real
-    # cluster size this to |V| / target-partition-rows instead.
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     d = load(spark, sf_dir, "documents")
     return _band_collision_components(spark, d)
 
@@ -773,7 +767,6 @@ def dedup_fuzzy_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle spells the same band as the portable theta-join; results are
     identical, the bucket formulation is just the distributable plan.
     At 100 TB survivors get one full-text verify pass after this."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     a = d.select(
         F.col("doc_id").alias("doc_a"),
@@ -860,7 +853,6 @@ def dedup_paragraph_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries (hash, doc_id, seg) — 3 skinny columns, uniform key
     distribution by construction; the reassembly join (not materialized
     here) is a co-partitioned join back on doc_id."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     n_segs = F.ceil(F.size(toks) / F.lit(float(_PARA_TOKENS))).cast("long")
@@ -940,7 +932,6 @@ def pipeline_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     the greedy higher-id drop (vs cluster-canonical dedup_cluster_cc) is
     the cheap policy — one pass, no iteration — at the cost of possibly
     dropping both ends of a chain a<b<c."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     h = F.sha2("text", 256)
     hashed = d.select(
@@ -1083,7 +1074,6 @@ def dedup_incremental_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniform sha256); intra-increment dedup is the usual first-occurrence
     window.  The report is per-lang admitted/offered counts — the
     ingest-audit number a corpus owner actually watches."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     h = F.sha2("text", 256)
     corpus_hashes = d.filter(F.col("doc_id") % 5 == 0).select(h.alias("h"))
@@ -1131,6 +1121,7 @@ def dedup_incremental_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(n_members AS BIGINT) AS n_members
     FROM ranked WHERE rn = 1
     """,
+    conf=NARROW_SHUFFLE,
 )
 def dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster canonicalization with a QUALITY policy — what production
@@ -1147,8 +1138,6 @@ def dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     policy adds a single shuffle on cluster_id on top of the CC rounds.
     The DuckDB oracle replays the identical closure recursively and the
     identical ranking, so the full POLICY is hash-checked end to end."""
-    tune(spark)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     d = load(spark, sf_dir, "documents")
     comps = _band_collision_components(spark, d)
     toks = F.split("text", " ")
@@ -1298,7 +1287,6 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     Seeded half-docs (see module constants) keep the containment-only
     branch non-vacuous; both engines slice tokens with the same
     floor(n/2) arithmetic so the pair sets match exactly."""
-    tune(spark)
     sh = _containment_shingles(spark, sf_dir)
     # probe prefix: n - ceil(0.8n) + 1 lowest-hash shingles of EVERY doc
     # (any doc may be the contained side); ceil(0.8n) = floor((4n+4)/5)
@@ -1391,7 +1379,6 @@ def dedup_containment_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     1. Recall >= 0.9 and pair-subset precision vs the exact containment
     twin asserted in tests/test_llm_ops.py.
     """
-    tune(spark)
     sh = _containment_shingles(spark, sf_dir)
     s31 = sh.withColumn(
         "sh31", F.transform("sh", lambda x: F.pmod(x, F.lit(_MH_P)))
@@ -1501,7 +1488,6 @@ def dedup_span_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation finds duplicates at EVERY length >= L with one scan;
     this fixed-granule variant is the standard distributed trade — same
     spans for length >= 5, linear shuffle volume."""
-    tune(spark)
     # r12 (guide §2.5, the pre-explode repartition idiom): the
     # single-file scan leaves 1-2 partitions, pinning the shingle
     # explode (run twice — dup build + rejoin side) to 1-2 cores; the
@@ -1621,7 +1607,6 @@ def dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass over the corpus.  Docs without spans ride a left join with
     zero-coalesced counts, so every doc_id appears — billing consumers
     never see a missing row."""
-    tune(spark)
     spans = dedup_span_ngram(spark, sf_dir).select(
         "doc_id", "span_start", "span_end"
     )
@@ -1713,7 +1698,6 @@ def dedup_source_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable) + an equi-join back on the hash (group table is
     corpus-fraction sized — never broadcast by assumption) + one
     per-source rollup."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     mirror = d.filter(F.col("doc_id") % 50 == 0).select(
         F.lit("mirror").alias("source"),
@@ -1797,7 +1781,6 @@ def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag (documented trap).  Two hash group-bys + two joins back on
     the hash — the dedup_exact shuffle shape twice; at 100 TB both
     keys are uniform by construction."""
-    tune(spark)
     d0 = load(spark, sf_dir, "documents")
     base = d0.select("doc_id", "lang", "text")
     mirror = d0.filter(F.col("doc_id") % 40 == 0).select(
@@ -1968,7 +1951,6 @@ def pipeline_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates.  At 100 TB each stage inherits its standalone
     operator's partitioning discipline unchanged; the funnel report
     itself is <=10 rows."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     cleaned = F.trim(F.regexp_replace(F.lower("text"), r"\s+", " "))
     # r11: the 9-branch funnel union replayed the upstream pipeline per

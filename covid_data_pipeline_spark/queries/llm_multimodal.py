@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..io import load, tune
+from ..io import load
 from ..registry import query
 
 
@@ -45,7 +45,6 @@ def multimodal_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     text (fixtures are read-only — FIXTURES.md mandates cast-at-query-
     time), then per-source byte accounting + content digests, the
     screenshot-archive bookkeeping of the reference."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     payload = F.col("text").cast("binary")
     return d.groupBy("source").agg(
@@ -108,7 +107,6 @@ def multimodal_decode_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB this is the pattern for frame-sampling and feature
     extraction (repartition by size-balanced key first if payloads are
     skewed)."""
-    tune(spark)
     d = load(spark, sf_dir, "documents").select(
         "doc_id", "source", F.col("text").cast("binary").alias("payload")
     )
@@ -190,7 +188,6 @@ def multimodal_framesample(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode work."""
     import hashlib
 
-    tune(spark)
     d = load(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").cast("binary").alias("payload")
     )
@@ -271,7 +268,6 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     written back alongside the payload for the training reader."""
     import hashlib
 
-    tune(spark)
     d = load(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").cast("binary").alias("payload")
     )
@@ -357,7 +353,6 @@ def multimodal_blockhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle on the block hash — group sizes bounded by true content
     duplication, never corpus-quadratic; the same plan with a rolling
     Rabin boundary gives content-defined chunks."""
-    tune(spark)
     d0 = load(spark, sf_dir, "documents")
     mirror = d0.filter(F.col("doc_id") % 40 == 0).select(
         (-2 * F.col("doc_id") - 1).alias("doc_id"), "text"
@@ -461,7 +456,6 @@ def multimodal_exact_bytes_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side hash + one shuffle on the digest — group sizes
     bounded by true duplication; the digest table IS the
     content-addressed index a production store keeps hot."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     base = d.select("doc_id", F.col("text").cast("binary").alias("payload"))
     mirror = (

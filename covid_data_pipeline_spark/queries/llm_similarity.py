@@ -23,7 +23,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load, table_path, tune
+from ..io import load, table_path
 from ..registry import query
 from ._helpers import DEC, davg
 
@@ -120,7 +120,6 @@ def sim_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     experiments/opt_r11_hof_ab.py: 3.95 -> 0.74 s).  cos values are
     bit-identical: same IEEE ops in the same order, just evaluated once
     per row instead of once per pair."""
-    tune(spark)
     par = spark.sparkContext.defaultParallelism
     e = (
         load(spark, sf_dir, "embeddings")
@@ -171,7 +170,6 @@ def sim_topk_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROUNDED cosine + neighbor_id tiebreaker so rank is deterministic
     cross-engine.  This is the exact baseline; the bucketed ANN below is
     the scale path."""
-    tune(spark)
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", _vec("embedding").alias("vec")
     )
@@ -314,7 +312,6 @@ def sim_ann_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the loop closure — all 6 planes were identical, collapsing the LSH
     to 2 effective buckets.  Literal planes + this oracle make that
     class of bug impossible to reintroduce silently.)"""
-    tune(spark)
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", _vec("embedding").alias("vec")
     )
@@ -428,7 +425,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pair set matches bit-for-bit.  The k+2M copy pairs with BOTH the
     original and the k+1M copy, making the MIN(a_id) canonicalization do
     real work instead of passing through a single pair."""
-    tune(spark)
     en = _emb_dedup_corpus(spark, sf_dir)
     # r12 (guide §2.5/§3.1): the block key has only 10 distinct values,
     # so the shuffled pair join put each label's quadratic enumeration on
@@ -607,7 +603,6 @@ def sim_ann_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded re-rank — is deterministic and replayed bit-for-bit by
     DuckDB; the table/probe parameters interpolate from ONE Python
     source into both plans."""
-    tune(spark)
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", _vec("embedding").alias("vec")
     )
@@ -760,7 +755,6 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the re-rank is the established fold/round shape — so DuckDB replays
     the whole cell search bit-for-bit.  The oracle asserts the
     implementation; recall vs brute force stays a test-side contract."""
-    tune(spark)
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", "label", _vec("embedding").alias("vec")
     )
@@ -837,7 +831,6 @@ def sim_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL trick (_helpers) so the centroid is bit-identical regardless
     of partitioning — a reproducibility property most distributed
     k-means implementations give up."""
-    tune(spark)
     e = load(spark, sf_dir, "embeddings")
     exploded = e.select(
         "label", F.posexplode(_vec("embedding")).alias("pos", "v")
@@ -873,7 +866,6 @@ def sim_normalize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually BREAK the hash here — Spark rounds via the exact decimal
     expansion, DuckDB via a 1e6-scaled multiply, and ~1 in 5k values
     lands on opposite sides of a half-boundary.)"""
-    tune(spark)
     e = load(spark, sf_dir, "embeddings")
     v = _vec("embedding")
     l2 = F.sqrt(
@@ -920,7 +912,6 @@ def embed_matryoshka_truncate(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine for the same reason as sim_normalize_embeddings (the
     fold order matches DuckDB's list_reduce; IEEE ops are correctly
     rounded; no rounding applied)."""
-    tune(spark)
     e = load(spark, sf_dir, "embeddings")
     head = F.slice(_vec("embedding"), 1, _MRL_DIM)
     l2 = F.sqrt(
@@ -992,7 +983,6 @@ def sim_maxsim_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixed-order zip_with/aggregate fold (bit-identical to DuckDB's
     list_reduce), MAX is order-free, and the final 4-term sum folds
     over the q_id-sorted array in BOTH engines before one ROUND(6)."""
-    tune(spark)
     e = load(spark, sf_dir, "embeddings")
     tok = e.select(
         F.expr(f"vec_id div {_MAXSIM_TOKENS_PER_DOC}").alias("doc_id"),
@@ -1077,7 +1067,6 @@ def sim_pq_adc_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism and recall@5 >= 0.7 vs the brute-force twin asserted in
     tests.
     """
-    tune(spark)
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", _vec("embedding").alias("vec")
     )
@@ -1282,7 +1271,6 @@ def dedup_semdedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     trades recall for never needing labels); the fixture is constructed
     so they cannot.
     """
-    tune(spark)
     base = load(spark, sf_dir, "embeddings").select(
         "vec_id", "label", _vec("embedding").alias("vec")
     )
@@ -1420,7 +1408,6 @@ def sample_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus never shuffles, and the per-anchor top-k window runs on
     anchor-partitioned scores.  Cosines are fixed-order folds over
     exact f32->f64 casts — identical bits cross-engine."""
-    tune(spark)
     v = load(spark, sf_dir, "embeddings").select(
         "vec_id", "label", _vec("embedding").alias("vec")
     )
@@ -1505,7 +1492,6 @@ def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     same shuffle.  At 100 TB you pre-prune per-partition top-k before
     the rank windows (the topk_per_group note) — RRF only needs each
     retriever's top ranks, which is the point of fusion."""
-    tune(spark)
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", _vec("embedding").alias("vec")
     )
@@ -1658,7 +1644,6 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-query scoring pass, identical to sim_topk_neighbors.
     At 100 TB the candidates come from the ANN path (sim_ann_ivf) and
     this rerank costs O(queries * k^2) — nothing."""
-    tune(spark)
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", _vec("embedding").alias("vec")
     )
@@ -1804,7 +1789,6 @@ def sim_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape — no shuffle of the corpus side); at 100 TB swap the exact
     scan for the IVF/LSH candidate join (sim_ann_ivf / sim_ann_bucketed)
     and re-rank exactly — the vote and rollup stages are unchanged."""
-    tune(spark)
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", "label", _vec("embedding").alias("vec")
     )
@@ -1950,7 +1934,6 @@ def sim_silhouette_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     sim_topk_neighbors broadcast shape — no corpus shuffle); at 100 TB
     the per-(vector, label) partial sums come from the IVF/LSH
     candidate join and the rollup is unchanged."""
-    tune(spark)
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", "label", _vec("embedding").alias("vec")
     )

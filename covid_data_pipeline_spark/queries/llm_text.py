@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..io import load, tune
+from ..io import load
 from ..registry import query
 
 
@@ -47,7 +47,6 @@ def text_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
     window, a single-task sort unbounded at 100 TB.  The 20 survivors
     are then ranked via sort_array(collect_list(...)) + posexplode over
     ONE 20-element array — constant-sized by construction, no WindowExec."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     tf = (
         d.select(F.explode(F.split("text", " ")).alias("token"))
@@ -99,7 +98,6 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus a token tiebreaker, so the winner is deterministic cross-engine.
     Pure DataFrame: explode -> two aggregates -> broadcast doc count ->
     window."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
     tf = tok.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
@@ -133,7 +131,6 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_lang_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language corpus profile (reference: per-state content stats).
     Integer sums -> exact averages, no decimal trick needed."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     return d.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -159,7 +156,6 @@ def text_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram shingle counts (the shingling primitive under minhash
     near-dup): zip the token array with its own tail — no explode-join,
     one pass per document."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     n = F.size(toks)
@@ -220,7 +216,6 @@ def text_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same primitive as text_ngrams) and every ratio is a codegen'd
     size/array_distinct expression — at 100 TB this filter is
     scan-bandwidth bound, exactly like quality_filter_funnel."""
-    tune(spark)
     # r12 (guide §2.5): map-only per-doc HOF work ran entirely on the
     # single-file scan's 1-2 partitions; spreading the documents first
     # parallelizes it.  Identical per-row results (distribution only).
@@ -293,7 +288,6 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality scoring for training-data filtering: token stats,
     stopword ratio, lexical diversity, and a pass/fail gate — the
     heuristic-filter stage of an LLM data pipeline, all built-ins."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     n_tok = F.size(toks)
@@ -334,7 +328,6 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     profile method reduced to its word-level core).  One profile here
     because fixture text is English word soup for every label — the
     operator shape (score per profile, argmax) is what matters."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     stop_arr = F.array(*[F.lit(w) for w in _STOPWORDS])
@@ -363,7 +356,6 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting three ways: whitespace, a BPE-ish regex
     (letter-runs / digit-runs / single punctuation), and the chars/4
     LLM-budget approximation."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
@@ -392,7 +384,6 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes mod 2^31-1 — engine-neutral exact integer arithmetic (unlike
     murmur/xxhash built-ins, which differ per engine), the primitive
     under winnowing/rabin-karp shingle selection."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     fp = F.aggregate(
         F.transform(F.split("text", ""), lambda ch: F.ascii(ch).cast("long")),
@@ -437,7 +428,6 @@ def quality_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries one row per (lang, verdict) per task — this funnel costs one
     scan regardless of corpus size, and the same CASE column doubles as
     the keep/drop predicate for the actual filter write."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     n_tok = F.size(toks)
@@ -523,7 +513,6 @@ def corpus_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs that actually hit.  At 100 TB: the same plan, with the eval
     shingle set ~10-100 MB broadcast and contamination output feeding
     the document kill-list."""
-    tune(spark)
     # r12 (guide §2.5, the pre-explode repartition idiom): the
     # single-file scan leaves 1-2 partitions, pinning the gram explode +
     # broadcast join + overlap groupBy to 1-2 cores.  Spreading the
@@ -614,7 +603,6 @@ def text_perplexity_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
     (both map-side combinable), the vocabulary rejoined to per-doc terms
     by token — vocab is corpus-bounded and BROADCASTS after min-count
     pruning at scale; the corpus-total is a 1-row broadcast."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
     tf = tok.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
@@ -676,7 +664,6 @@ def text_char_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter.  At 100 TB: trigram cardinality is alphabet-bounded
     (~50k for Latin corpora), so the aggregate shuffles a tiny
     dictionary per task."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     # start positions 1..min(len-2, 199): same window as the oracle's
     # range(1, 200) with i+2 <= len
@@ -746,7 +733,6 @@ def text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     idf * tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl)) with ln/ROUND(6) for
     cross-engine float discipline (same doctrine as text_tfidf), ties
     broken by doc_id."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     sel = [F.col("doc_id"), F.size(toks).alias("dl")]
@@ -832,7 +818,6 @@ def text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     match bit-for-bit; ln + ROUND(6) as in text_tfidf.  One pass, no
     explode, no shuffle beyond the scan: per-doc work is
     O(distinct x tokens) on an 80-token array, all codegen."""
-    tune(spark)
     # r12 (guide §2.5): map-only per-doc HOF work ran entirely on the
     # single-file scan's 1-2 partitions; spreading the documents first
     # parallelizes it.  Identical per-row results (distribution only).
@@ -912,7 +897,6 @@ def text_unicode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     lack an 'a'), and the md5 of the normalized
     bytes — two unrelated NFC implementations converging on identical
     UTF-8."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     dirty = F.replace(
         F.substring("text", 1, 80),
@@ -975,7 +959,6 @@ def text_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-term phrase folds k-1 such intersections left to right.  The
     oracle spells the classic positional self-join; both formulations
     must agree exactly."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos0", "tok")
@@ -1146,7 +1129,6 @@ def text_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     model-state argmax — no SQL twin. Exact equality with an
     independent pure-Python BPE replay asserted in tests.
     """
-    tune(spark)
     merges, _, _vocab = _bpe_train(spark, sf_dir)
     return spark.createDataFrame(
         merges, "rank int, left string, right string, merged string, wcount long"
@@ -1175,7 +1157,6 @@ def text_bpe_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative trainer — no SQL twin. The pure-Python replay asserts the
     curve exactly in tests.
     """
-    tune(spark)
     merges, curve, _vocab = _bpe_train(spark, sf_dir, track_corpus_tokens=True)
     base = curve[0][1]
     merged_by_rank = {rank: m for rank, _a, _b, m, _n in merges}
@@ -1223,7 +1204,6 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     table — no SQL twin for the training half. Per-doc token counts
     equal a pure-Python train+apply replay exactly in tests.
     """
-    tune(spark)
     _merges, _curve, vocab = _bpe_train(spark, sf_dir)
     wtok = vocab.select(
         "w",
@@ -1300,7 +1280,6 @@ def text_collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     across libm implementations — the text_tfidf doctrine) with an
     (a, b) tiebreaker, and `orderBy().limit(20)` compiles to
     TakeOrderedAndProject — never a global sort."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     n = F.size(toks)
@@ -1417,7 +1396,6 @@ def quality_percentile_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     of n/3 — the threshold semantics real CCNet uses, not exact-rank
     ntile.  Integer milli-unit quantization, not ROUND (the measured
     half-boundary engine divergence in SCALE.md)."""
-    tune(spark)
     scored = text_perplexity_proxy(spark, sf_dir).select("doc_id", "avg_logprob")
     d = load(spark, sf_dir, "documents").select("doc_id", "lang")
     docs = scored.join(d, "doc_id").select(
@@ -1532,7 +1510,6 @@ def text_keyphrase_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc_id, anchor) and reuses that partitioning; word stats are one
     map-side-combinable aggregate; top-15 is TakeOrderedAndProject —
     phrase tables never globally sort."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id",
@@ -1658,7 +1635,6 @@ def text_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded: sources are a registry, vocab prunes by min-count in an
     open-vocabulary corpus — same note as text_collocation_pmi); one
     final per-source sum."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     tok = d.select("source", F.explode(F.split("text", " ")).alias("token"))
     st = tok.groupBy("source", "token").agg(F.count(F.lit(1)).alias("c"))
@@ -1743,7 +1719,6 @@ def text_hapax_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     scales.  All-integer counts; the two ratios are single divisions of
     exact BIGINTs, micro-quantized.  Two map-side-combinable aggregates
     total — (doc, token) then doc — nothing else."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
     tc = tok.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("c"))
@@ -1842,7 +1817,6 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions by lang over vocabulary-sized input, and at 100 TB the
     top-K per lang comes from topk_per_group's rank-filter shape —
     everything after moves K rows per language."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     toks = d.select(
         "lang", F.explode(F.split("text", " ")).alias("tok")
@@ -1925,8 +1899,6 @@ def text_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    tune(spark)
-
     @pandas_udf("long")
     def comp_len(texts: pd.Series) -> pd.Series:
         import zlib
@@ -1995,7 +1967,6 @@ def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     text_langid, so the two queries can never drift), one skinny
     <=10-cell rollup, one broadcast share join.  All-integer until the
     single micro-quantized share division."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     sw = F.array(*[F.lit(w) for w in _STOPWORDS])
@@ -2075,7 +2046,6 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-doc aggregation combines map-side.  Shingle skew (a viral
     phrase) is bounded by distinct-per-doc and salts like any hot
     key."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     ws = F.filter(F.split("text", " "), lambda t: t != "")
     toks = d.select("doc_id", "lang", ws.alias("ws")).filter(
@@ -2172,7 +2142,6 @@ def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: embarrassingly map-only — tokenize, two regex scans, no
     shuffle at all; at 100 TB this runs at source-read speed next to
     text_quality/text_entropy in one fused pass."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     ws = F.filter(F.split(F.lower("text"), " "), lambda w: w != "")
     n_sent = F.greatest(
@@ -2265,7 +2234,6 @@ def text_sttr_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct inside one codegen'd higher-order expression; no shuffle,
     no explode (chunk counts ride the array), runs at source-read
     speed beside text_readability."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     ws = F.filter(F.split(F.lower("text"), " "), lambda w: w != "")
     toks = d.select("doc_id", "lang", ws.alias("ws")).filter(
@@ -2345,7 +2313,6 @@ def text_case_pattern_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: map-only — tokenize once, three in-array filters, zero
     shuffles; fuses into the same single corpus pass as
     text_readability/text_sttr."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     ws = F.filter(F.split("text", " "), lambda w: w != "")
     toks = d.select("doc_id", "lang", ws.alias("ws")).filter(
@@ -2422,7 +2389,6 @@ def text_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k (TakeOrderedAndProject) — the text_tf shape.  At 100 TB
     hash the line to a 64-bit key for the shuffle and keep the text
     only on the surviving rows."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     # fixture docs carry NO sentence punctuation (measured: every doc is
     # one period-segment, so the organic report is empty at every sf) —
@@ -2514,7 +2480,6 @@ def text_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     text_tf cost class; (n_types, n_tokens, coll) partials are additive
     only per fixed grain (collision sums don't merge across shards of
     the SAME type — merge the count table, not the sums)."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     counts = (
         d.select("lang", F.explode(F.split("text", " ")).alias("tok"))
@@ -2599,7 +2564,6 @@ def text_vocab_jaccard_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: vocabulary is sublinear in corpus size (Heaps' law), so the
     join input is tiny relative to the corpus; sizes broadcast.  The
     lang_a < lang_b constraint keeps each unordered pair once."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     vocab = (
         d.select("lang", F.explode(F.split("text", " ")).alias("tok"))
@@ -2745,7 +2709,6 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     over doc-count-sized rows.  At 100 TB, sample the curve at
     log-spaced positions instead of every doc — the moment-sum
     architecture is unchanged."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     toks = d.select(
         "lang", "doc_id", F.explode(F.split("text", " ")).alias("tok")
@@ -2896,7 +2859,6 @@ def text_bigram_lm_crossentropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab dim broadcasts.  The even/odd doc-id split is the
     corpus_split_hash discipline — deterministic, resumable, no
     rand()."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     n = F.size(toks)
@@ -3038,7 +3000,6 @@ def analytics_qq_length_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one (source, n_chars) aggregate; the pooled side reuses the
     same table re-aggregated; the value-grain windows are bounded by
     the length domain, never the corpus."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     per = d.groupBy("source", "n_chars").agg(
         F.count(F.lit(1)).cast("long").alias("c")
@@ -3179,7 +3140,6 @@ def text_keyness_loglik(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one (source, term) aggregate (the closed fixture vocabulary
     bounds it; natural corpora bound it with a min-count filter), term
     and source totals broadcast back, one top-k window per source."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     tok = d.select("source", F.explode(F.split("text", " ")).alias("term"))
     st = tok.groupBy("source", "term").agg(

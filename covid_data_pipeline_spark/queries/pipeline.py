@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load, tune
+from ..io import load
 from ..registry import query
 
 
@@ -62,7 +62,6 @@ def pipeline_change_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle on source_key for the window (the same partition
     a real deployment keys its snapshot store on), one for the daily
     rollup; everything between is narrow."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     cleaned = F.sha2(
         F.trim(F.regexp_replace(F.lower("props"), r"\s+", " ")), 256
@@ -120,7 +119,6 @@ def analytics_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort).  Top-10 carries the l_orderkey tiebreaker in BOTH engines —
     a LIMIT without a unique sort key is nondeterministic under ties
     (SURVEY §2.6 discipline)."""
-    tune(spark)
     pivot = "1998-01-01"
     c = load(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     o = load(spark, sf_dir, "orders").filter(F.col("o_orderdate") < pivot)
@@ -169,7 +167,6 @@ def analytics_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFra
     condition is the classic trap: as a standalone join it's a 25-key
     near-cross-product (massive skew); folded into the equi-join on
     s_suppkey it costs nothing extra."""
-    tune(spark)
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1997-01-01")
@@ -230,7 +227,6 @@ def analytics_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     once each on their join keys; every dim is a broadcast.  The date
     band is pushed to the lineitem scan (min/max row-group pruning on
     l_shipdate)."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate").between("1996-01-01", "1997-12-31")
     )
@@ -294,7 +290,6 @@ def analytics_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     the customer cardinality, not lineitem's; the final top-20 is
     TakeOrderedAndProject — per-partition heaps then a driver merge,
     never a global sort of the aggregate."""
-    tune(spark)
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1996-07-01")
@@ -340,7 +335,6 @@ def analytics_priority_linestatus(spark: SparkSession, sf_dir: str) -> DataFrame
     partial-aggregate map-side; the join itself is the only shuffle
     (orders projected to 2 columns before it — ReadSchema shows just
     o_orderkey, o_orderpriority reach the scan)."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1998-01-01")
     ).select("l_orderkey", "l_linestatus")
@@ -385,7 +379,6 @@ def analytics_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the qualifying set is tiny (heavy-hitter orders), so the
     semi join is broadcast — a runtime-filter shape: the expensive fact
     re-scan is pruned by an aggregate of itself."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer")
@@ -435,7 +428,6 @@ def analytics_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal (order-independent) and the ratio divides two exact values
     as the LAST step, so the result is bit-identical on any partitioning
     — the only safe way to oracle-check a float division of aggregates."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-09-01") & (F.col("l_shipdate") < "1996-10-01")
     )
@@ -485,7 +477,6 @@ def analytics_brand_revenue_or(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this rewrite is the difference between joining 3 brands'
     worth of parts vs the whole dim — free, because it's expressed
     declaratively and the optimizer does the algebra."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
     cond = (
@@ -548,7 +539,6 @@ def analytics_late_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplication, right columns never materialize.  Date filter is pushed
     to the orders scan; at 100 TB the quarter prunes both the scan and
     the semi-join's build side."""
-    tune(spark)
     o = load(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= "1996-07-01") & (F.col("o_orderdate") < "1996-10-01")
     )
@@ -581,7 +571,6 @@ def analytics_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     The whole query is a single map-side scan + one-row reduce; at
     100 TB it is bounded by scan bandwidth alone, and the year filter
     prunes partitions when lineitem is date-partitioned."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     return (
         li.filter(
@@ -620,7 +609,6 @@ def analytics_order_count_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     null row contributes 0, which is the semantics the distribution
     needs.  Two shuffles (custkey, then c_count); the second is ~50
     distinct values, map-side combined to almost nothing."""
-    tune(spark)
     c = load(spark, sf_dir, "customer").select("c_custkey")
     o = load(spark, sf_dir, "orders").select("o_custkey", "o_orderkey", "o_orderpriority")
     cond = (F.col("c_custkey") == F.col("o_custkey")) & (
@@ -663,7 +651,6 @@ def analytics_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     — identical IEEE sequence both engines.  At 100 TB: part is the dim
     (broadcast after the brand/type filter), lineitem never moves except
     the one window shuffle on l_partkey."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity", "l_extendedprice"
     )
@@ -715,7 +702,6 @@ def analytics_idle_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays one job.  The anti join shuffles on custkey; at 100 TB orders'
     o_custkey column alone travels (projection pushdown), and a bloom
     pre-filter (join_bloom_runtime pattern) would cut that too."""
-    tune(spark)
     c = load(spark, sf_dir, "customer")
     o = (
         load(spark, sf_dir, "orders")
@@ -762,7 +748,6 @@ def analytics_top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFram
     an aggregate is only safe because both sides are the same exact
     value.  At 100 TB: one shuffle on l_suppkey for the aggregate; the
     winner filter is map-side."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1996-04-01")
     )
@@ -803,7 +788,6 @@ def pipeline_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     job (vs. a separate audit query that doubles the scan)."""
     from pyspark.sql import Observation
 
-    tune(spark)
     o = load(spark, sf_dir, "orders").filter(F.col("o_orderdate") >= "1996-01-01")
     obs = Observation("run_metrics")
     observed = o.observe(
@@ -885,7 +869,6 @@ def quality_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 1-row result; only the FK check needs a second relation (anti
     join; at 100 TB put a bloom filter of dim keys in front so the
     probe side short-circuits map-side)."""
-    tune(spark)
     o = load(spark, sf_dir, "orders").select(
         F.when(F.col("o_orderkey") % 500 == 3, F.col("o_orderkey") - 1)
         .otherwise(F.col("o_orderkey"))
@@ -1017,7 +1000,6 @@ def pipeline_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift sum goes through the decimal trick so it is order-exact.
     At 100 TB prefer storing per-partition row hashes and diffing
     hashes first — only hash-unequal partitions need the row join."""
-    tune(spark)
     a = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     b = a.filter(F.col("o_orderkey") % 89 != 0).select(
         F.col("o_orderkey").alias("k"),
@@ -1081,7 +1063,6 @@ def pipeline_partition_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     date) — hashing raw double/date string renderings would couple the
     checksum to engine formatting; the 60-bit hash prefix keeps the
     value in int64 for both engines."""
-    tune(spark)
     o = load(spark, sf_dir, "orders")
     row_str = F.concat_ws(
         "|",
@@ -1174,7 +1155,6 @@ def quality_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     [0, 500) (FIXTURES.md), a closed <=50k-row domain at any corpus
     size — for open domains, drop to the PSI buckets or the
     sort_multi_nulls two-phase rank."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     tagged = ev.select(
         "value",
@@ -1282,7 +1262,6 @@ def analytics_copurchase_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     is integer-fed IEEE division, identical bits in both engines, and
     the top-20 is TakeOrderedAndProject on the rounded value with id
     tie-breaks."""
-    tune(spark)
     op = (
         load(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
@@ -1351,7 +1330,6 @@ def pipeline_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(daily uniques) per partial — at 100 TB that's the documented
     trade vs HLL partials (agg_sketch_mergeable is the approximate
     twin; this is the exact one)."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type",
@@ -1430,7 +1408,6 @@ def analytics_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFr
     At 100 TB the lookback bound lets the state live in a streaming
     version (stream_change_detect's GroupState shape) without
     unbounded history."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -1524,7 +1501,6 @@ def quality_freshness_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     telemetry — this is the BATCH audit you run over the lake to catch
     what the pipeline's own metrics can't see: feeds that stopped
     ARRIVING."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     anchor = e.agg(F.max(F.unix_micros("ts")).alias("now_us"))
     per = (
@@ -1598,7 +1574,6 @@ def quality_calendar_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one distinct-day dedup (map-side combined) feeds both the
     span scalar and the per-type gap window; the report is
     |streams|-sized."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.select(
         "event_type",
@@ -1692,7 +1667,6 @@ def quality_null_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ONE map-side-combined aggregate regardless of column count
     — at 100 TB this is the cheapest full-corpus audit there is; the
     unpivot runs on a 1-row frame."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     seeded = e.select(
         F.when(F.col("event_id") % 13 == 0, None)
@@ -1840,7 +1814,6 @@ def pipeline_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plans.py::test_quality_report_one_wide_agg_per_table
     _and_anti_joins (one scan of events/documents; orders/lineitem
     twice — own agg + FK-orphan probe)."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     o = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
@@ -2047,7 +2020,6 @@ def pipeline_experiment_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     no matter the corpus size; the six per-arm integers are additive
     partials, so shards merge by addition — the same property that
     makes agg_welch_ttest 1000x-safe applies end-to-end."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     arm_a = F.when(
         (F.col("user_id") * _AB_MULT) % _AB_MOD % 100 < 50, 1
@@ -2234,7 +2206,6 @@ def pipeline_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys, no skew), the increment is a day's data (orders of magnitude
     smaller), and the report is 9 rows.  Every stage inherits its
     standalone operator's partitioning discipline."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     clean = lambda c: F.trim(F.regexp_replace(c, r"\s+", " "))  # noqa: E731
     corpus = d.filter(F.col("doc_id") % 5 == 0).select(
@@ -2408,7 +2379,6 @@ def pipeline_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval split is fixed-size (a benchmark suite), so the broadcast
     bound holds no matter how large train grows; the kill-list join is
     uniform on doc_id."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     b = (F.col("doc_id") * _DECON_MULT) % _DECON_MOD % 100
     base = d.select("doc_id", "text", b.alias("b"))
@@ -2553,7 +2523,6 @@ def pipeline_daily_series_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded per type (|types| x |days| rows), three windows
     sharing the (event_type, di) sort — at 100 TB the corpus-sized
     stage is the daily aggregate, the report is dashboard-sized."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.col("ts").cast("date").alias("d")
@@ -2697,7 +2666,6 @@ def pipeline_merged_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_incremental_exact's uniform-sha256 no-skew argument.  The
     window runs over the increment only (a day's data), never the
     corpus."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     clean = lambda c: F.trim(F.regexp_replace(c, r"\s+", " "))  # noqa: E731
     corpus = d.filter(F.col("doc_id") % 5 == 0).select(

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load, tune
+from ..io import load
 from ..registry import query
 
 
@@ -63,7 +63,6 @@ def str_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     Script alternative is listed FIRST — leftmost-first matching in both
     java.util.regex and RE2 — so script CONTENT is dropped, not just the
     <script> tags.  One regex pass over the corpus instead of three."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     html = F.concat(
         F.lit("<html><script>var t="),
@@ -95,7 +94,6 @@ def str_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 def str_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The html_extracter stage in miniature: regex group extraction,
     splitting, substring, concat_ws, lpad over order priorities."""
-    tune(spark)
     o = load(spark, sf_dir, "orders")
     return o.select(
         "o_orderkey",
@@ -120,7 +118,6 @@ def str_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def str_hash_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content fingerprinting — the heart of the reference's change
     detection: sha256 + md5 digests per document."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
@@ -150,7 +147,6 @@ def date_parts_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncation, day differences (Spark datediff(end, start) == DuckDB
     date_diff('day', start, end) — note the reversed arguments),
     date_add, last_day."""
-    tune(spark)
     o = load(spark, sf_dir, "orders")
     od = F.col("o_orderdate")
     return o.select(
@@ -185,7 +181,6 @@ def date_parts_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ts_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Epoch math on event timestamps: unix seconds (both engines floor),
     epoch micros, hour/minute parts, to_date, from_unixtime round-trip."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     return ev.select(
         "event_id",
@@ -222,7 +217,6 @@ def math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     round() only applied to irrational outputs (sqrt/ln) where the
     HALF_UP-vs-HALF_EVEN divergence cannot trigger; floor/ceil emitted
     as double (both engines agree on the value)."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     return li.select(
         "l_orderkey",
@@ -257,7 +251,6 @@ def math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cond_case_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Status classification (reference: changed/unchanged/failed):
     CASE tiers, nullif + coalesce fallback, nvl2 presence check."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     not_err = F.nullif(F.col("event_type"), F.lit("error"))
     return ev.select(
@@ -289,7 +282,6 @@ def cast_conversions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parsing scraped numbers: string<->int<->double<->date casts with
     try_cast on invalid input.  double->int always goes through an
     explicit floor — raw CAST truncates in Spark but rounds in DuckDB."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     vint = F.floor("value").cast("long")
     return ev.select(
@@ -327,7 +319,6 @@ def array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     intersect.  array_distinct & array_intersect output order is engine-
     specific, so every set-valued array is sorted before comparison, and
     arrays are joined back to strings for the scalar-only harness."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     return d.select(
@@ -363,7 +354,6 @@ def array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 def explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Generator/UDTF shape: explode tokens to rows and count term
     frequency (reference: word-level extraction over cleaned text)."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     return (
         d.select(F.explode(F.split("text", " ")).alias("token"))
@@ -387,7 +377,6 @@ def map_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MapType round-trip: build a map from the parsed JSON payload,
     then element_at / map_keys / size.  Output projected to scalars so
     the oracle stays engine-neutral (map hashing differs cross-engine)."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     m = F.create_map(F.lit("k"), F.from_json("props", "k INT").getField("k"))
     return ev.select(
@@ -412,7 +401,6 @@ def json_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON payload parsing (reference: state API/JSON sources):
     get_json_object path extraction, from_json to a typed struct,
     to_json normalization back out."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     parsed = F.from_json("props", "k INT")
     return ev.select(
@@ -443,7 +431,6 @@ def array_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
     (reference analogue: per-page token screening in html_extracter).
     Integer outputs, so order of the fold is moot; the fold still runs
     element-ordered to match DuckDB list_reduce."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     return d.select(
@@ -495,7 +482,6 @@ def str_url_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches by default while DuckDB needs the explicit 'g' flag — the
     anchored `$` patterns here match at most once, sidestepping the
     divergence entirely (SURVEY §2.8 flag)."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     raw = F.lower(
         F.concat(
@@ -551,7 +537,6 @@ def json_variant_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     The VARIANT itself never leaves the plan (engines can't compare the
     binary); everything emitted is typed scalars, so the whole path is
     oracle-checked against DuckDB's json_extract."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     v = F.parse_json("props")
     fields = ev.select(
@@ -607,7 +592,6 @@ def str_collate_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     states the same semantics with explicit lower().  Scale: identical
     partial+final hash-agg shape as any groupBy — collation changes the
     comparator, not the plan."""
-    tune(spark)
     p = load(spark, sf_dir, "part")
     cased = F.expr(_CASED_BRAND_SQL)
     return (
@@ -661,7 +645,6 @@ def cast_try_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fail-the-job ANSI cast on quarantine lanes — rows that parse
     proceed, rows that don't are counted where monitoring can see
     them."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     bucket = F.col("event_id") % 5
     s = (

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..io import load, tune
+from ..io import NARROW_SHUFFLE, load
 from ..registry import query
 from ..schemas import DOCUMENTS, EVENTS
 from ._helpers import dsum, sql_dsum
@@ -37,7 +37,6 @@ SCRATCH = os.path.join(_scratch_root, "cdp_spark_scratch")
 @query("scan_parquet", oracle="SELECT * FROM lineitem")
 def scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full scan of lineitem (reference: load every cached page version)."""
-    tune(spark)
     return load(spark, sf_dir, "lineitem")
 
 
@@ -49,7 +48,6 @@ def scan_projected(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column-pruned scan: 2 of 11 columns; ReadSchema in the plan shows
     only these reach the parquet reader (reference: read one stage of a
     snapshot, not the whole record)."""
-    tune(spark)
     return load(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
 
 
@@ -64,7 +62,6 @@ def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns, so the read-back aggregate equals the direct aggregate —
     which makes the filesystem side effect fully ORACLE-CHECKABLE (a
     dropped or duplicated row would break the count)."""
-    tune(spark)
     path = os.path.join(SCRATCH, "csv_roundtrip")
     ev = load(spark, sf_dir, "events")
     (
@@ -110,7 +107,6 @@ def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     outnumber tasks by enough to matter)."""
     import shutil
 
-    tune(spark)
     bin_dir = os.path.join(SCRATCH, "binary_files")
     shutil.rmtree(bin_dir, ignore_errors=True)  # no stale blobs across runs
     os.makedirs(bin_dir, exist_ok=True)
@@ -150,7 +146,6 @@ def scan_json_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parse the JSON ``props`` payload (reference: state API/JSON source
     parsing) and aggregate the extracted field.  Integer sums are exact,
     so no decimal trick is needed for avg_k."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     k = F.from_json("props", "k INT").getField("k")
     return (
@@ -177,7 +172,6 @@ def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition layout + partition pruning on read (reference: directory
     cache persist keyed by source).  Oracle-checked: the partitioned
     round trip must reproduce the direct filtered count exactly."""
-    tune(spark)
     path = os.path.join(SCRATCH, "sink_partitioned")
     ev = load(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(path)
@@ -223,7 +217,6 @@ def _sql_values(rows: list[tuple[str, str, str]]) -> str:
 def source_union_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge two curated source lists and dedup — the reference's
     registry-merge step, as createDataFrame + unionByName + dropDuplicates."""
-    tune(spark)
     a = spark.createDataFrame(_REG_A, _REG_SCHEMA)
     b = spark.createDataFrame(_REG_B, _REG_SCHEMA)
     return a.unionByName(b).dropDuplicates()
@@ -243,7 +236,6 @@ def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit-schema discipline as every reader: no footer sampling, plans
     stable.  Equality with the parquet-sourced aggregate is asserted in
     tests/test_edge_cases.py."""
-    tune(spark)
     path = os.path.join(SCRATCH, "orc_roundtrip")
     ev = load(spark, sf_dir, "events")
     ev.write.mode("overwrite").orc(path)
@@ -280,7 +272,6 @@ def join_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sink_parquet_partitioned) needs the literal in the query; DPP
     covers the join-shaped version.  Broadcast of the dim doubles as
     the DPP value source, so the subquery costs one tiny scan."""
-    tune(spark)
     path = os.path.join(SCRATCH, "dpp_fact")
     ev = load(spark, sf_dir, "events").select("event_id", "value", "event_type")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(path)
@@ -339,8 +330,6 @@ def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     one partition per key-range/API page, never one giant generator."""
     from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-    tune(spark)
-
     class _RegistryReader(DataSourceReader):
         def partitions(self):
             return [InputPartition(i) for i in range(4)]
@@ -389,7 +378,6 @@ def sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import glob
 
-    tune(spark)
     frag_path = os.path.join(SCRATCH, "compact_fragmented")
     out_path = os.path.join(SCRATCH, "compact_done")
     d = load(spark, sf_dir, "documents")
@@ -448,7 +436,6 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         WriterCommitMessage,
     )
 
-    tune(spark)
     out_dir = os.path.join(SCRATCH, "pyds_sink")
     shutil.rmtree(out_dir, ignore_errors=True)
     os.makedirs(out_dir, exist_ok=True)
@@ -529,6 +516,10 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     )}) AS t(state, url, kind, shard)
     GROUP BY kind
     """,
+    # few state groups (kinds): narrow sharding — the stream_foreach_sink
+    # rationale (r12): 32 near-empty state stores per complete-mode
+    # snapshot is per-instance commit overhead, not parallelism
+    conf=NARROW_SHUFFLE,
 )
 def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom Python DataSource STREAM READER (Spark 4
@@ -557,8 +548,6 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     from ..streaming import run_available_now
-
-    tune(spark)
 
     # DataSourceStreamReader offsets are plain dicts serialized as JSON
     class _RegistryStreamReader(DataSourceStreamReader):
@@ -593,10 +582,6 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             return _RegistryStreamReader()
 
     spark.dataSource.register(RegistryStreamDataSource)
-    # few state groups (kinds): narrow sharding — the stream_foreach_sink
-    # rationale (r12): 32 near-empty state stores per complete-mode
-    # snapshot is per-instance commit overhead, not parallelism
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     stream = spark.readStream.format("cdp_registry_stream").load()
     # NB: exact COUNT(DISTINCT) is unsupported on streaming frames
     # (state would be unbounded per group) — MAX(shard) carries the same
@@ -638,7 +623,6 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     else in this repo."""
     import shutil
 
-    tune(spark)
     root = os.path.join(SCRATCH, "schema_evolution")
     shutil.rmtree(root, ignore_errors=True)
     ev = load(spark, sf_dir, "events")
@@ -722,7 +706,6 @@ def scan_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows shuffle nowhere (two-row aggregates).  At 100 TB the
     quarantine column writes to a side sink and bad-row RATE is the
     job health metric — this operator is that audit in miniature."""
-    tune(spark)
     path = os.path.join(SCRATCH, "csv_permissive")
     n = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     n.coalesce(1).write.mode("overwrite").options(header=False).csv(path)
@@ -793,7 +776,6 @@ def scan_xml_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema-projected, column-pruned scan discipline as every other
     source — parse once with an explicit schema, never re-parse per
     expression (the variant lesson applies to XML too)."""
-    tune(spark)
     s = load(spark, sf_dir, "supplier")
     dirty = F.replace(F.col("s_name"), F.lit("#"), F.lit("&"))
     # full text-node escape set (& first, then angle brackets): an
@@ -860,7 +842,6 @@ def sink_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the read-back of dimension-sized tables like this one."""
     import shutil
 
-    tune(spark)
     db = os.path.join(SCRATCH, "jdbc_derby")
     shutil.rmtree(db, ignore_errors=True)
     url = f"jdbc:derby:{db};create=true"
@@ -924,7 +905,6 @@ def sink_positional_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     positions deterministically — the apply step never sees it, only
     (file, position) pairs — so the oracle checking "predicate-filtered
     orders" proves the positional machinery reproduced it exactly."""
-    tune(spark)
     base = os.path.join(SCRATCH, "posdel_base")
     delf = os.path.join(SCRATCH, "posdel_deletes")
     o = load(spark, sf_dir, "orders").select(
@@ -982,7 +962,6 @@ def scan_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     three counters).  At 100 TB: text scans parallelize by line-split
     byte ranges exactly like CSV; the aggregate is one map-side-combined
     1-row reduction."""
-    tune(spark)
     path = os.path.join(SCRATCH, "text_roundtrip")
     d = load(spark, sf_dir, "documents")
     d.select("text").write.mode("overwrite").text(path)
@@ -1024,7 +1003,6 @@ def profile_parquet_footers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as pd
 
-    tune(spark)
     out = os.path.join(SCRATCH, "footer_profile")
     ev = load(spark, sf_dir, "events")
     ev.repartition(8, "user_id").write.partitionBy("event_type").mode(
@@ -1084,7 +1062,6 @@ def scan_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
     losslessly at width 12.  At 100 TB: the text source splits by line
     like any other, the parse is map-only, and the fixed offsets come
     from a copybook-derived spec table rather than literals."""
-    tune(spark)
     path = os.path.join(SCRATCH, "fixed_width")
     ev = load(spark, sf_dir, "events")
     line = F.concat(
@@ -1150,7 +1127,6 @@ def source_calendar_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded (~2,400 rows at any scale factor — it grows with
     TIME, not data volume), so at 100 TB it broadcasts to every
     calendar join for free; generation is a single task by design."""
-    tune(spark)
     o = load(spark, sf_dir, "orders")
     b = o.agg(
         F.min(F.col("o_orderdate").cast("date")).alias("lo"),
@@ -1200,7 +1176,6 @@ def sink_csv_quoted_escapes(spark: SparkSession, sf_dir: str) -> DataFrame:
     documented trade, same as scan_csv_permissive."""
     import tempfile
 
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     evil = F.concat(
         F.lit("pre,"),
@@ -1251,7 +1226,6 @@ def sql_star_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     is not a post-scan drop, it narrows the parquet read itself
     (column pruning still reaches the source, which is what matters
     at 100 TB: excepting a fat column saves its I/O entirely)."""
-    tune(spark)
     load(spark, sf_dir, "orders").createOrReplaceTempView("se_orders")
     return spark.sql(
         """
@@ -1294,7 +1268,6 @@ def scan_parquet_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     with millions of files this is the manifest-building pass, and
     the min/max key ranges it emits are exactly what partition-pruning
     manifests (or Iceberg metadata) store."""
-    tune(spark)
     from ..io import table_path
 
     o = spark.read.schema(
@@ -1334,7 +1307,6 @@ def scan_csv_gz_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
     correct shape: parallelism = file count.  Prefer zstd/parquet for
     anything produced in-house; this operator exists for the files you
     DIDN'T produce."""
-    tune(spark)
     path = os.path.join(SCRATCH, "csv_gz_codec")
     ev = load(spark, sf_dir, "events")
     (
@@ -1383,7 +1355,6 @@ def scan_nested_struct_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the pack is one groupBy on the join key (arrays stay
     order-sized — bounded fan-in); nested parquet columns compress and
     prune like flat ones, and the explode is a narrow map-side op."""
-    tune(spark)
     path = os.path.join(SCRATCH, "nested_struct")
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     li = load(spark, sf_dir, "lineitem").select(
@@ -1434,7 +1405,6 @@ def scan_recursive_directory(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: file listing is driver-side metadata work — at millions of
     files push listing into the catalog/manifest layer; the scan
     itself parallelizes per file split as usual."""
-    tune(spark)
     root = os.path.join(SCRATCH, "recursive_tree")
     ev = load(spark, sf_dir, "events")
     ev.filter(F.col("event_id") % 2 == 0).write.mode("overwrite").parquet(
@@ -1460,6 +1430,11 @@ def scan_recursive_directory(spark: SparkSession, sf_dir: str) -> DataFrame:
            MAX(value) + 0.0 AS max_value
     FROM events GROUP BY event_type
     """,
+    # still in force when the caller plans the returned DataFrame
+    conf={
+        "spark.sql.parquet.aggregatePushdown": "true",
+        "spark.sql.sources.useV1SourceList": "",
+    },
 )
 def scan_aggregate_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parquet AGGREGATE pushdown: MIN/MAX/COUNT grouped by a partition
@@ -1471,46 +1446,22 @@ def scan_aggregate_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     and one that costs a metadata listing — the query author writes the
     same groupBy either way.
 
-    Requires the DSv2 parquet reader (`useV1SourceList` excludes
-    parquet) plus `parquet.aggregatePushdown` — both session configs
-    are flipped inside a try/finally so the rest of the suite keeps the
-    default reader; min/max/count from footers are EXACT (footers
-    record true row min/max), so the oracle is the plain aggregate.
+    Requires the DSv2 parquet reader plus `parquet.aggregatePushdown`,
+    both declared as this query's ``conf``; min/max/count from footers
+    are EXACT (footers record true row min/max), so the oracle is the
+    plain aggregate.
 
     Pushdown silently degrades to a normal scan when rows carry NULLs
     in the aggregated column or the grouping key isn't a partition
-    column — the plan test, not this docstring, is the contract.
-
-    Cost note (round-7 advisor): the in-function `out.collect()` binds
-    the pushed-down physical plan while the v2-reader configs are
-    live; the DataFrame returned to the driver re-plans AFTER the
-    finally block restores the default reader, so the driver-measured
-    execution is the ordinary aggregate, run a second time.  Results
-    are identical either way (footer min/max are exact; +0.0
-    canonicalizes the signed zero), so correctness is unaffected; the
-    pushed-down-plan contract lives in tests/test_plans.py, and bench
-    timing for this id includes the deliberate double execution."""
-    tune(spark)
+    column — the plan test, not this docstring, is the contract."""
     path = os.path.join(SCRATCH, "agg_pushdown")
     ev = load(spark, sf_dir, "events").select("event_id", "value", "event_type")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(path)
-    old_v1 = spark.conf.get("spark.sql.sources.useV1SourceList")
-    spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-    spark.conf.set("spark.sql.sources.useV1SourceList", "")
-    try:
-        back = spark.read.parquet(path)
-        # + 0.0 canonicalizes the IEEE signed zero: parquet footers may
-        # surface -0.0 where a row-wise MIN surfaces +0.0 (measured at
-        # sf0.1) — equal under <, different under a bit-exact hash
-        out = back.groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            (F.min("value") + F.lit(0.0)).alias("min_value"),
-            (F.max("value") + F.lit(0.0)).alias("max_value"),
-        )
-        # materialize the logical plan binding under the v2 reader NOW —
-        # the configs restore before the driver collects
-        out.collect()
-        return out
-    finally:
-        spark.conf.set("spark.sql.sources.useV1SourceList", old_v1)
-        spark.conf.set("spark.sql.parquet.aggregatePushdown", "false")
+    # + 0.0 canonicalizes the IEEE signed zero: parquet footers may
+    # surface -0.0 where a row-wise MIN surfaces +0.0 (measured at
+    # sf0.1) — equal under <, different under a bit-exact hash
+    return spark.read.parquet(path).groupBy("event_type").agg(
+        (F.min("value") + F.lit(0.0)).alias("min_value"),
+        (F.max("value") + F.lit(0.0)).alias("max_value"),
+        F.count(F.lit(1)).cast("long").alias("n"),
+    )

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load, tune
+from ..io import load
 from ..registry import query
 
 
@@ -35,7 +35,6 @@ def set_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bag union of two overlapping slices (reference: concatenating two
     run outputs, duplicates preserved).  unionByName is a zero-shuffle
     plan concatenation."""
-    tune(spark)
     a = _slice(spark, sf_dir, "BUILDING")
     b = (
         load(spark, sf_dir, "customer")
@@ -56,7 +55,6 @@ def set_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 def set_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deduplicated registry merge: union + distinct (one shuffle on the
     full row as key)."""
-    tune(spark)
     a = _slice(spark, sf_dir, "BUILDING")
     b = (
         load(spark, sf_dir, "customer")
@@ -77,7 +75,6 @@ def set_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nations present in both segments' customer bases (reference:
     sources present in both runs).  INTERSECT distinct semantics."""
-    tune(spark)
     a = _slice(spark, sf_dir, "BUILDING").select("c_nationkey")
     b = _slice(spark, sf_dir, "MACHINERY").select("c_nationkey")
     return a.intersect(b)
@@ -95,7 +92,6 @@ def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A \\ B: high-balance customers outside BUILDING (reference:
     added/removed source detection between runs).  EXCEPT distinct
     semantics = Spark ``subtract``/``exceptAll().distinct()``."""
-    tune(spark)
     a = (
         load(spark, sf_dir, "customer")
         .filter(F.col("c_acctbal") > 5000)
@@ -120,7 +116,6 @@ def set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     than machinery customers each nation has, as rows).  Spark's
     ``exceptAll`` plans it as a counted anti-semantics join — no
     row-by-row matching, one shuffle on the value."""
-    tune(spark)
     a = _slice(spark, sf_dir, "BUILDING").select("c_nationkey")
     b = _slice(spark, sf_dir, "MACHINERY").select("c_nationkey")
     return a.exceptAll(b)
@@ -139,7 +134,6 @@ def set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     per nation key, completing §2.7's set family with both bag-semantics
     variants (EXCEPT ALL above).  Same counted-join plan shape as
     exceptAll; one shuffle on the value."""
-    tune(spark)
     a = _slice(spark, sf_dir, "BUILDING").select("c_nationkey")
     b = _slice(spark, sf_dir, "MACHINERY").select("c_nationkey")
     return a.intersectAll(b)
@@ -177,7 +171,6 @@ def sql_recursive_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     while only frontier deltas move, the same asymptotics as the CC
     operator.  Dialect twins: DuckDB `//` vs Spark `div` integer
     division, CONCAT for the path in both."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     # r12: the recursion's step query joins the frontier against this
     # view PER LEVEL (~11 levels at 2k users), and a temp view is only

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load, tune
+from ..io import load
 from ..registry import query
 
 
@@ -63,7 +63,6 @@ def sort_multi_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
        same model-state pattern as ``zipWithIndex``'s count job — and
        broadcast the offsets back.  global_rank = offset + local_rank.
     """
-    tune(spark)
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_totalprice",
@@ -127,7 +126,6 @@ def limit_topk_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     o_orderkey tiebreaker makes the sort key unique — REQUIRED for a
     deterministic result set.  Plan: TakeOrderedAndProject (no full
     sort)."""
-    tune(spark)
     o = load(spark, sf_dir, "orders")
     return (
         o.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
@@ -150,7 +148,6 @@ def limit_topk_global(spark: SparkSession, sf_dir: str) -> DataFrame:
 def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical per-group top-k: 2 priciest parts per brand via
     row_number + filter — no global sort, one shuffle on the group key."""
-    tune(spark)
     p = load(spark, sf_dir, "part")
     w = Window.partitionBy("p_brand").orderBy(
         F.col("p_retailprice").desc(), F.col("p_partkey")

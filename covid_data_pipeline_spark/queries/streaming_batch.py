@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load, tune
+from ..io import NARROW_SHUFFLE, load
 from ..registry import query
 from ..streaming import transforms as TR
 from ..streaming.runner import scratch_dir
@@ -43,7 +43,6 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour tumbling count+sum by event_type (reference: per-scan-cycle
     aggregation).  Same transform the streaming twin runs incrementally;
     window start surfaced as epoch-µs for cross-engine stability."""
-    tune(spark)
     return TR.tumbling_hourly(load(spark, sf_dir, "events"))
 
 
@@ -64,7 +63,6 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     4 windows (floor-to-15min start minus k*15min, k=0..3, always within
     the hour), which is how the oracle enumerates Spark's window
     assignment without a window function."""
-    tune(spark)
     return TR.sliding_1h_15m(load(spark, sf_dir, "events"))
 
 
@@ -98,7 +96,6 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     min — exactly the native ``session_window`` overlap rule ([ts,
     ts+gap) windows merge iff gap < 30 min), so the streaming twin is
     provably equivalent (asserted in tests/test_streaming.py)."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap_us = F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
@@ -142,7 +139,6 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrival-order window is single-task by construction — test-scale
     oracle only; the streaming engine tracks its watermark without any
     global sort."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.orderBy("event_id").rowsBetween(Window.unboundedPreceding, -1)
     max_prior = F.max("ts").over(w)
@@ -177,7 +173,6 @@ def stream_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dropDuplicates`` (first ARRIVAL wins — same key set, asserted
     set-equal in tests).  State per distinct key; on a real stream,
     ``dropDuplicatesWithinWatermark`` bounds it."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     keyed = ev.select(
         "event_id", "user_id", F.sha2("props", 256).alias("content_hash"), "ts"
@@ -200,6 +195,12 @@ def stream_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY 1, 2
     """,
+    # narrow state/output sharding: the complete-mode snapshot is
+    # windows x types rows (~3.6k at sf0.1), so 32 shuffle partitions
+    # meant 32 state-store instances AND 32 near-empty parquet files
+    # per batch snapshot — the stream_static_join "narrow sharding"
+    # rationale (r12 A/B: 1.81 -> 1.24 s warm, identical rows)
+    conf=NARROW_SHUFFLE,
 )  # oracle-checked: complete-mode final batch == full batch aggregate
 def stream_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreachBatch incremental archive: a TRUE Structured Streaming run
@@ -213,13 +214,6 @@ def stream_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.runner import run_foreach_parquet
     import os
 
-    tune(spark)
-    # narrow state/output sharding: the complete-mode snapshot is
-    # windows x types rows (~3.6k at sf0.1), so 32 shuffle partitions
-    # meant 32 state-store instances AND 32 near-empty parquet files
-    # per batch snapshot — the stream_static_join "narrow sharding"
-    # rationale (r12 A/B: 1.81 -> 1.24 s warm, identical rows)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     stream = TR.tumbling_hourly(read_events_stream(spark, sf_dir))
     out = run_foreach_parquet(stream)
     sunk = spark.read.parquet(os.path.join(out, "data"))
@@ -236,6 +230,7 @@ def stream_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events e JOIN customer c ON e.user_id = c.c_custkey
     GROUP BY c.c_mktsegment
     """,
+    conf=NARROW_SHUFFLE,
 )  # oracle-checked: complete-mode final batch == full batch join+aggregate
 def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE stream-STATIC join — the dimension-enrichment pattern every
@@ -256,8 +251,6 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality."""
     from ..streaming import read_events_stream, run_available_now
 
-    tune(spark)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     ev = read_events_stream(spark, sf_dir)
     dim = load(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
@@ -282,6 +275,11 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                      AS BIGINT) AS DOUBLE) / 1000000 AS sum_value
     FROM events GROUP BY user_id
     """,
+    # one state-store instance per shuffle partition — few state groups,
+    # so per-instance commit overhead dominates and narrow (8) wins;
+    # the many-group regime (stream_dedup_simhash) wants 32.  Full
+    # sizing policy: SCALE.md "Streaming state sizing policy".
+    conf=NARROW_SHUFFLE,
 )
 def stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE streaming run of the applyInPandasWithState custom operator
@@ -301,12 +299,6 @@ def stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     separately by test_stateful_totals_carry_state_across_batches."""
     from ..streaming import read_events_stream, run_available_now
 
-    tune(spark)
-    # one state-store instance per shuffle partition — few state groups,
-    # so per-instance commit overhead dominates and narrow (8) wins;
-    # the many-group regime (stream_dedup_simhash) wants 32.  Full
-    # sizing policy: SCALE.md "Streaming state sizing policy".
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     sunk = run_available_now(
         TR.stateful_user_totals(read_events_stream(spark, sf_dir)),
         output_mode="update",
@@ -336,6 +328,8 @@ def stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM h
     )
     """,
+    # narrow state-store sharding, same rationale as stream_stateful_totals
+    conf=NARROW_SHUFFLE,
 )
 def stream_change_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's change-detection loop as a TRUE incremental
@@ -355,9 +349,6 @@ def stream_change_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_stateful_change_detect_carries_hash_across_batches."""
     from ..streaming import read_events_stream, run_available_now
 
-    tune(spark)
-    # narrow state-store sharding, same rationale as stream_stateful_totals
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     return run_available_now(
         TR.stateful_change_detect(read_events_stream(spark, sf_dir)),
         output_mode="append",
@@ -377,6 +368,10 @@ def stream_change_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND p.event_type = 'purchase' AND v.event_type = 'view'
      AND v.ts <= p.ts AND v.ts >= p.ts - INTERVAL 1 HOUR
     """,
+    # one state-store instance per shuffle partition: at this scale the
+    # per-instance commit overhead dominates, so run the join narrower
+    # than the batch default (on a cluster: size to cores as usual)
+    conf=NARROW_SHUFFLE,
 )
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE stream-stream join: each purchase joined to the same user's
@@ -393,11 +388,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     users."""
     from ..streaming import read_events_stream, run_available_now
 
-    tune(spark)
-    # one state-store instance per shuffle partition: at this scale the
-    # per-instance commit overhead dominates, so run the join narrower
-    # than the batch default (on a cluster: size to cores as usual)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     ev = read_events_stream(spark, sf_dir)
     return run_available_now(purchase_view_join(ev), output_mode="append")
 
@@ -442,62 +432,6 @@ def purchase_view_join(ev: DataFrame) -> DataFrame:
     )
 
 
-def stream_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TRUE streaming run of the ``transformWithStateInPandas`` operator
-    (Spark 4's named-typed-state successor to applyInPandasWithState):
-    per-user running totals in a ValueState, drained with availableNow in
-    update mode, then reduced to each user's final update.
-
-    NOT REGISTERED as a driver query: the transformWithState runtime
-    spawns a Python state server that requires the ``protobuf`` package,
-    which this container does not ship (and installs are off-limits) —
-    the operator crashes at runtime with "cannot import google.protobuf"
-    however correct the plan is.  The implementation is real and
-    complete (streaming/transforms.py: tws_user_totals); the equivalence
-    test in tests/test_streaming.py runs it wherever protobuf exists and
-    SKIPS here, so the gate is explicit rather than a silent fallback to
-    the old API.
-
-    The transformWithState runtime also requires the RocksDB state-store
-    provider (its state layout is column-family based) — set here and
-    restored, since RocksDB is the 100 TB state backend recommendation
-    regardless (bounded executor memory at any key cardinality)."""
-    from ..streaming import read_events_stream, run_available_now
-
-    tune(spark)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    key = "spark.sql.streaming.stateStore.providerClass"
-    saved = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        sunk = run_available_now(
-            TR.tws_user_totals(read_events_stream(spark, sf_dir)),
-            output_mode="update",
-        )
-        # materialize while the provider conf is still in force
-        sunk = sunk.cache()
-        sunk.count()
-    finally:
-        if saved is not None:
-            spark.conf.set(key, saved)
-        else:
-            spark.conf.unset(key)
-    out = sunk.groupBy("user_id").agg(
-        F.max("n_events").alias("n_events"),
-        F.max_by("sum_value", "n_events").alias("sum_value"),
-    )
-    # materialize the (per-user, bounded) aggregate on executors and cut
-    # its lineage off the cached microbatch output, so the cache can be
-    # released NOW instead of leaking into the shared session (ADVICE r4)
-    out = out.localCheckpoint(eager=True)
-    sunk.unpersist()
-    return out
-
-
 @query(
     "stream_bitmap_partials",
     oracle="""
@@ -523,7 +457,6 @@ def stream_bitmap_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
     blobs as batch.  The oracle checks the popcount column via
     COUNT(DISTINCT) with the bucket function spelled as floor
     division (truncating division misbuckets id 0)."""
-    tune(spark)
     return TR.daily_bitmap_partials(load(spark, sf_dir, "events")).drop(
         "bm_md5"
     )
@@ -543,6 +476,7 @@ def stream_bitmap_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
     CROSS JOIN bound
     WHERE p.event_type = 'purchase' AND p.ts <= bound.closable
     """,
+    conf=NARROW_SHUFFLE,
 )
 def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE stream-stream LEFT OUTER join: every purchase emits — padded
@@ -565,8 +499,6 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     State bounds and salting guidance match stream_stream_join."""
     from ..streaming import read_events_stream, run_available_now
 
-    tune(spark)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     closable = (
         load(spark, sf_dir, "events")
         .agg((F.max("ts") - F.expr("INTERVAL 3 HOUR")).alias("b"))
@@ -621,6 +553,14 @@ from .llm_dedup import _SIMHASH_SQL_CTES  # noqa: E402  (shared fingerprint)
       ON a.lang = b.lang AND a.doc_id < b.doc_id
      AND bit_count(xor(a.simhash, b.simhash)) <= 3
     """,
+    # WIDE state sharding, unlike the other stateful ops: they have few
+    # groups (users/sources), where per-state-store commit overhead
+    # dominates and 8 partitions win; this op shards ~4 buckets/doc
+    # (hundreds of thousands of groups at sf0.1), so the overhead
+    # amortizes and parallelism wins — measured 11.6 s at 8 partitions
+    # vs 4.3 s at 32 on sf0.1 (2-band variant).  Full sizing policy:
+    # SCALE.md "Streaming state sizing policy".
+    conf={"spark.sql.shuffle.partitions": "32"},
 )
 def stream_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE streaming near-duplicate detection over the document corpus —
@@ -660,15 +600,6 @@ def stream_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..queries.llm_dedup import banded_simhash
     from ..streaming import read_documents_stream, run_available_now
 
-    tune(spark)
-    # WIDE state sharding, unlike the other stateful ops: they have few
-    # groups (users/sources), where per-state-store commit overhead
-    # dominates and 8 partitions win; this op shards ~4 buckets/doc
-    # (hundreds of thousands of groups at sf0.1), so the overhead
-    # amortizes and parallelism wins — measured 11.6 s at 8 partitions
-    # vs 4.3 s at 32 on sf0.1 (2-band variant).  Full sizing policy:
-    # SCALE.md "Streaming state sizing policy".
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
     docs = read_documents_stream(spark, sf_dir).repartition(32)
     # parquet sink: the drain emits ~896k raw pair rows at sf0.1 (band
     # collisions pre-distinct) — the default memory sink would collect
@@ -713,6 +644,8 @@ def decay_agg(df: DataFrame, anchor_us: int) -> DataFrame:
     FROM events CROSS JOIN anchor
     GROUP BY user_id
     """,
+    # few state groups (users): narrow sharding — SCALE.md sizing policy
+    conf=NARROW_SHUFFLE,
 )  # oracle-checked: complete-mode final snapshot == the batch decay
 def stream_decay_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING ingest half of recency weighting
@@ -737,9 +670,6 @@ def stream_decay_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     sharding — few groups), weights cost one codegen pow per event."""
     from ..streaming import read_events_stream, run_available_now
 
-    tune(spark)
-    # few state groups (users): narrow sharding — SCALE.md sizing policy
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     anchor_us = (
         load(spark, sf_dir, "events")
         .agg(F.max(F.unix_micros("ts")).alias("m"))
@@ -749,7 +679,9 @@ def stream_decay_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(agg, output_mode="complete")
 
 
-@query("stream_spacesaving_topk", oracle=None)  # rows-only: custom state op
+# rows-only: custom state op.  Few state groups (5 types): narrow
+# sharding, same rationale as stream_stateful_totals
+@query("stream_spacesaving_topk", oracle=None, conf=NARROW_SHUFFLE)
 def stream_spacesaving_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE streaming heavy hitters: a Space-Saving sketch (capacity 8)
     per event_type carried in GroupState across micro-batches — the
@@ -773,17 +705,13 @@ def stream_spacesaving_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..streaming import read_events_stream, run_available_now
 
-    tune(spark)
-    # few state groups (5 types) — narrow sharding, same rationale as
-    # stream_stateful_totals
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     sunk = run_available_now(
         TR.stateful_spacesaving_topk(read_events_stream(spark, sf_dir)),
         output_mode="update",
     )
     # two consumers of the memory sink (the max probe + the join back):
-    # eager-localCheckpoint the bounded emissions and release the plan,
-    # the tws_user_totals idiom
+    # eager-localCheckpoint the bounded emissions once so neither
+    # consumer re-reads the sink, and its plan is released
     sunk = sunk.localCheckpoint(eager=True)
     last = sunk.groupBy("event_type").agg(F.max("n_seen").alias("n_seen"))
     return sunk.join(F.broadcast(last), ["event_type", "n_seen"]).select(
@@ -801,6 +729,7 @@ def stream_spacesaving_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM events
     ) WHERE rn = 1
     """,
+    conf=NARROW_SHUFFLE,
 )  # oracle-checked: in-order arrival => first arrival == earliest event
 def stream_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE streaming ``dropDuplicatesWithinWatermark`` — the
@@ -825,8 +754,6 @@ def stream_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     the API's documented trade of memory for exactness."""
     from ..streaming import read_events_stream, run_available_now
 
-    tune(spark)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     ev = read_events_stream(spark, sf_dir)
     keyed = ev.select(
         "event_id",
@@ -892,6 +819,7 @@ def upsert_merge_batch(root: str):
            l.event_id AS last_event_id
     FROM cnts c JOIN latest l ON c.user_id = l.user_id AND l.rn = 1
     """,
+    conf=NARROW_SHUFFLE,
 )  # oracle-checked: merged per-batch state == the batch latest-wins + count
 def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE streaming CDC-apply: foreachBatch maintains a keyed state
@@ -922,8 +850,6 @@ def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming import read_events_stream
 
-    tune(spark)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     root = scratch_dir("cdp_upsert_")
     ckpt = os.path.join(root, "_checkpoint")
 
@@ -950,7 +876,8 @@ def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("stream_progress_metrics", oracle=None)  # rows-only: engine metrics
+# rows-only: engine metrics
+@query("stream_progress_metrics", oracle=None, conf=NARROW_SHUFFLE)
 def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming OBSERVABILITY: drain the hourly tumbling aggregation
     with availableNow and surface the engine's own progress telemetry
@@ -981,8 +908,6 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..streaming import read_events_stream
 
-    tune(spark)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     name = f"prog_{uuid.uuid4().hex[:12]}"
     import tempfile
 
@@ -1041,6 +966,8 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ordered WHERE event_type = 'purchase'
     GROUP BY 1
     """,
+    # narrow state-store sharding, same rationale as stream_stateful_totals
+    conf=NARROW_SHUFFLE,
 )
 def stream_last_touch_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE streaming last-touch attribution: per-user GroupState holds
@@ -1066,9 +993,6 @@ def stream_last_touch_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     add-on, one line in the state update)."""
     from ..streaming import read_events_stream, run_available_now
 
-    tune(spark)
-    # narrow state-store sharding, same rationale as stream_stateful_totals
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     sunk = run_available_now(
         TR.stateful_last_touch(read_events_stream(spark, sf_dir)),
         output_mode="append",
@@ -1122,6 +1046,10 @@ def stream_last_touch_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE 'admitted_new' END AS decision
     FROM ranked
     """,
+    # narrow state sharding like the rest of the family (r12 A/B:
+    # 4.09 -> 3.83 s, identical rows; state is one int64 per content
+    # hash, ~1.5k groups at sf0.1)
+    conf=NARROW_SHUFFLE,
 )
 def stream_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The daily incremental ingest as a TRUE incremental stream — the
@@ -1156,11 +1084,6 @@ def stream_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-batched rank worker."""
     from ..streaming import read_documents_stream, run_available_now
 
-    tune(spark)
-    # narrow state sharding like the rest of the family (r12 A/B:
-    # 4.09 -> 3.83 s, identical rows; state is one int64 per content
-    # hash, ~1.5k groups at sf0.1)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     d = load(spark, sf_dir, "documents")
     clean = lambda c: F.trim(F.regexp_replace(c, r"\s+", " "))  # noqa: E731
     corpus_hashes = (
@@ -1295,6 +1218,7 @@ def _drain_to_parquet(
     FROM kept_w k JOIN fed_w f ON k.ws_us = f.ws_us, mx
     WHERE k.ws_us + 3600000000 <= mx.m - 600000000
     """,
+    conf=NARROW_SHUFFLE,
 )
 def stream_watermark_drop_witness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DROP side of ``withWatermark('ts','10 minutes')``, witnessed in
@@ -1326,8 +1250,6 @@ def stream_watermark_drop_witness(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..schemas import EVENTS
     from ..streaming import pin_feed_mtimes
 
-    tune(spark)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     ev = load(spark, sf_dir, "events")
     bounds = ev.agg(
         F.min(F.unix_micros("ts")).alias("mn"),
@@ -1413,6 +1335,7 @@ def stream_watermark_drop_witness(spark: SparkSession, sf_dir: str) -> DataFrame
     SELECT event_id, user_id, content_hash,
            'post_evict_readmit' AS src FROM day1_redup
     """,
+    conf=NARROW_SHUFFLE,
 )
 def stream_dedup_ttl_evict_witness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both sides of ``dropDuplicatesWithinWatermark``'s bounded-state
@@ -1450,8 +1373,6 @@ def stream_dedup_ttl_evict_witness(spark: SparkSession, sf_dir: str) -> DataFram
     from ..schemas import EVENTS
     from ..streaming import pin_feed_mtimes
 
-    tune(spark)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     ev = load(spark, sf_dir, "events")
     bounds = ev.agg(
         F.min(F.unix_micros("ts")).alias("mn"),

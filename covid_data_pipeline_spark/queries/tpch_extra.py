@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load, tune
+from ..io import load
 from ..registry import query
 from ._helpers import DEC, dsum, sql_dsum
 
@@ -73,7 +73,6 @@ def analytics_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     division is the last step — bit-stable at any partitioning.  Plan:
     every dim broadcasts; lineitem shuffles once for the year aggregate;
     the date filter pushes to the orders scan."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
     s = load(spark, sf_dir, "supplier")
@@ -154,7 +153,6 @@ def analytics_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing is quadratic.  At 100 TB the order key is uniform — no
     skew; all of orders' columns needed later are carried through the
     first join instead of re-joined."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate"
     )
@@ -226,7 +224,6 @@ def analytics_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Profit goes through one exact decimal sum; part/supplier/nation
     broadcast; lineitem and orders shuffle once on the order key and
     once for the (nation, year) aggregate."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part").filter(F.col("p_name").like("%gear%"))
     s = load(spark, sf_dir, "supplier")
@@ -302,7 +299,6 @@ def analytics_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal.  floor(x*1e6+0.5) is one IEEE multiply + add + floor on
     identical inputs — bit-identical in any engine, no decimal
     semantics involved (costs are positive, so floor(+0.5) == half-up)."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     cost = li.groupBy("l_partkey", "l_suppkey").agg(
         F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("unit_cost")
@@ -378,7 +374,6 @@ def analytics_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the per-part values), so the > cutoff is deterministic; the global
     threshold is a 1-row broadcast, and Spark's exchange reuse computes
     the per-part aggregate once for both consumers."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     s = load(spark, sf_dir, "supplier")
     n = load(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_19")
@@ -434,7 +429,6 @@ def analytics_parts_supplier_dist(spark: SparkSession, sf_dir: str) -> DataFrame
     has no NULLs by construction — s_suppkey is a key — so anti-join
     and NOT IN agree); the distinct-pair projection and the distinct
     count share one shuffle on the part key."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     pairs = li.select("l_partkey", "l_suppkey").distinct()
     bad = (
@@ -494,7 +488,6 @@ def analytics_excess_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:
     Quantities go through exact decimal sums so the 0.5x comparison is
     deterministic; the dominant-supplier set is tiny and broadcasts
     into the final semi-join-style prune."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1998-01-01")
     )
@@ -554,7 +547,6 @@ def analytics_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFra
     order-sensitive float reduction exists anywhere — the alternative
     Σ(share_i²) would sum pre-divided doubles in partition order and
     drift.  Two combinable aggregates, both on uniform keys."""
-    tune(spark)
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     per_cust = (
@@ -691,7 +683,6 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     has no dangling nodes by construction (every edge is mirrored), so
     no dangling-mass redistribution term is needed — on a general
     graph that term is one extra 1-row aggregate per iteration."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     # edges feed every unrolled iteration plus deg/nodes — without
@@ -876,7 +867,6 @@ def graph_knn_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard distributed triangle-count formulation whose cost is
     O(sum of deg^2) on the SPARSIFIED graph (bounded by k^2 per node),
     not on the raw clique."""
-    tune(spark)
     # edges feed FIVE consumers (e1/e2/e3, degrees, edge count); without
     # lineage truncation each one replays the projection + kNN upstream
     # (measured: 76 static exchanges, ~5 s at sf0.1).  localCheckpoint
@@ -975,7 +965,6 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     doctrine.  Top-20 is TakeOrderedAndProject.  The edge set is
     localCheckpoint-truncated once and feeds both the adjacency and
     degree consumers (the graph_knn_triangles idiom)."""
-    tune(spark)
     edges = _knn_edges(spark, sf_dir).localCheckpoint(eager=False)
     adj = edges.select(F.col("a").alias("v"), F.col("b").alias("n")).unionByName(
         edges.select(F.col("b").alias("v"), F.col("a").alias("n"))
@@ -1051,7 +1040,6 @@ def agg_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-median cost class; at unbounded group size bracket G from the
     mergeable histogram's Lorenz curve instead).  The per-customer
     revenue rollup is the only corpus-sized stage."""
-    tune(spark)
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     o = load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     cust = (
@@ -1171,7 +1159,6 @@ def analytics_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     side (>= cutoff), deterministic on both engines.  Recency scores
     invert (small = recent = 4) by bucketing on the DESC running sum of
     days-ago, mirrored exactly in the oracle."""
-    tune(spark)
     o = load(spark, sf_dir, "orders")
     anchor = o.agg(F.max("o_orderdate").alias("mx"))
     cust = (
@@ -1306,7 +1293,6 @@ def agg_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     The two SUM(rev_c) references are the identical expression — one
     aggregate buffer, squared once in the final projection, same shape
     both engines."""
-    tune(spark)
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     o = load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     cust = (
@@ -1377,7 +1363,6 @@ def analytics_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     class: exact-median (one ranked pass per brand); at unbounded parts
     per group, classify against histogram-bracketed cumulative cutoffs
     instead (the RFM discipline)."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem").select("l_partkey", "l_extendedprice")
     p = load(spark, sf_dir, "part").select("p_partkey", "p_brand")
     rev = (
@@ -1455,7 +1440,6 @@ def analytics_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation, so the bounded-sweep rewrite is verified against the
     definition itself, not a mirror of its own arithmetic.  Prices
     compare as exact centi-integers."""
-    tune(spark)
     pts = load(spark, sf_dir, "part").select(
         "p_partkey",
         "p_brand",
@@ -1551,7 +1535,6 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical wedge-enumeration bound as the Jaccard twin
     (sum-of-deg^2, k^2|V| on the sparsified graph); the degree lookup
     joins on the wedge's CENTER — one broadcastable |V|-row dim."""
-    tune(spark)
     edges = _knn_edges(spark, sf_dir).localCheckpoint(eager=False)
     adj = edges.select(F.col("a").alias("v"), F.col("b").alias("n")).unionByName(
         edges.select(F.col("b").alias("v"), F.col("a").alias("n"))
@@ -1633,7 +1616,6 @@ def agg_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-customer rollup is the only corpus-sized stage; the
     group-total dim broadcasts; per-shard (n, S, sum t_micro) partials
     ADD."""
-    tune(spark)
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     o = load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     cust = (
@@ -1727,7 +1709,6 @@ def agg_atkinson_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: additive (n, S, sum_ln, sum_sqrt) partials — the index of
     any rollup grain is four-integer arithmetic, no ranked pass."""
-    tune(spark)
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     o = load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     cust = (
@@ -1813,7 +1794,6 @@ def analytics_lorenz_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the ranked pass is per-nation (the Gini cost class); past
     that, swap NTILE for bucketed histogram cut points — the decile
     table itself is O(groups x 10) forever."""
-    tune(spark)
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     o = load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     cust = (
@@ -1938,7 +1918,6 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: degrees broadcast onto edges; moment sums are additive
     partials — the correlation of any subgraph rollup merges from six
     integers."""
-    tune(spark)
     edges = _knn_edges(spark, sf_dir).localCheckpoint(eager=False)
     adj = edges.select(F.col("a").alias("v"), F.col("b").alias("n")).unionByName(
         edges.select(F.col("b").alias("v"), F.col("a").alias("n"))
@@ -2004,7 +1983,6 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each round touches only surviving edges (monotonically
     shrinking); at 100 TB the peel runs the same plan with the edge
     set hash-partitioned on v — no broadcast of corpus-sized state."""
-    tune(spark)
     k = 3
     edges = _knn_edges(spark, sf_dir).select("a", "b").localCheckpoint(
         eager=True
@@ -2085,7 +2063,6 @@ def analytics_pareto_8020(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one per-nation ranked pass (the Gini cost class); at
     unbounded group size bracket the 80% point from the mergeable
     revenue histogram instead of the exact rank."""
-    tune(spark)
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     o = load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     cust = (
@@ -2180,7 +2157,6 @@ def analytics_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one first-order aggregate + one (cohort, age) rollup — both
     map-side combined; the curve table is |cohorts| x |ages|."""
-    tune(spark)
     o = load(spark, sf_dir, "orders")
     m = (
         F.year("o_orderdate") * 12 + F.month("o_orderdate") - 1
@@ -2268,7 +2244,6 @@ def analytics_leadtime_percentiles(spark: SparkSession, sf_dir: str) -> DataFram
     Scale: one join + one per-priority rank window (the exact-median
     cost class); at unbounded group size swap the exact rank for the
     GK sketch in exact-bracket mode (agg_approx_percentile's path)."""
-    tune(spark)
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate", "o_orderpriority"
     )
@@ -2339,7 +2314,6 @@ def analytics_state_dwell_time(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one shuffle on user_id with a partition-local sort (the
     sessionize cost class); the state rollup is |types|-sized."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     iv = e.select(
@@ -2444,7 +2418,6 @@ def analytics_priority_mix_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one monthly aggregate, month-grain self-join on (m-1, pri)
     — calendar-bounded; the alarm table is |months|-sized."""
-    tune(spark)
     o = load(spark, sf_dir, "orders")
     m = (F.year("o_orderdate") * 12 + F.month("o_orderdate") - 1).cast("long")
     monthly = o.groupBy(
@@ -2567,7 +2540,6 @@ def analytics_shift_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one fact-table aggregate to (year, nation) grain — the
     dims broadcast; everything after is |years x nations| arithmetic."""
-    tune(spark)
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer")
     n = load(spark, sf_dir, "nation")
@@ -2692,7 +2664,6 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to graph_knn_triangles — the sparsified graph
     bounds the triangle join at O(k^2) per node; the per-node rollup
     adds two skinny aggregates.  Output is |V|-sized."""
-    tune(spark)
     edges = _knn_edges(spark, sf_dir).localCheckpoint(eager=False)
     deg = (
         edges.select(F.col("a").alias("v"))
@@ -2777,7 +2748,6 @@ def analytics_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     3.9e4, so n*sxy stays under 2^63 through ~2e8 rows per type (~30x
     this fixture at sf1); past that, shard the power sums by month and
     merge — they are additive partials, the agg_welch_ttest recipe."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part")
     pts = (

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load, tune
+from ..io import NARROW_SHUFFLE, load
 from ..registry import query
 from ._helpers import DEC, davg, dsum, sql_davg
 
@@ -68,7 +68,6 @@ def doc_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the fan-out is bounded per input split, so task memory is
     flat; chunk text itself is hashed here (hash + len are what dedup
     and length-balancing consume) rather than re-materialized."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     chunks = d.select(
         "doc_id",
@@ -113,7 +112,6 @@ def corpus_mixture_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode of ``sequence(1, n_copies)`` — the corpus never shuffles,
     and the output is reproducible row-for-row, so a resumed 100 TB run
     regenerates the identical mixture."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     w = spark.createDataFrame(
         [(s, a, b) for s, (a, b) in _MIX.items()],
@@ -158,7 +156,6 @@ def corpus_split_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     Map-side bucket computation + one skinny aggregate; at 100 TB the
     split column is typically materialized at ingest and this query is
     the audit that distributions stayed balanced."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     b = (F.col("doc_id") * _MULT) % _MOD % 100
     split = (
@@ -207,7 +204,6 @@ def text_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the compliance artifact.  Dialect note: Spark ``regexp_replace``
     replaces all matches by default, DuckDB needs the explicit ``'g'``
     flag (SURVEY §2.8)."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     injected = F.concat(
         F.col("text"),
@@ -270,7 +266,6 @@ def embed_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checked quantizer.  Integer q_sum/min/max are order-free;
     sq_err folds in element order, matching DuckDB list_reduce exactly
     (same doctrine as sim_normalize_embeddings)."""
-    tune(spark)
     e = load(spark, sf_dir, "embeddings")
     ed = e.select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
@@ -324,8 +319,9 @@ def kmeans_lloyd(
 
     Shuffle width: every post-scan stage here is MODEL-sized (one row
     per vector -> k x dim cells), so the loop runs NARROW regardless of
-    core count — experiments/cpu_scaling.py measured the wide version
-    scaling NEGATIVELY (3.12 s at 4c -> 3.92 s at 32c).  Narrowing
+    core count (the caller's ``conf``: sim_kmeans_lloyd registers
+    NARROW_SHUFFLE) — experiments/cpu_scaling.py measured the wide
+    version scaling NEGATIVELY (3.12 s at 4c -> 3.92 s at 32c).  Narrowing
     recovers only part of that (3.9 -> 3.7 s at 32c, measured): the
     remaining latency is per-ROUND fixed cost — a centroid broadcast
     plus two actions per iteration, nine driver-scheduled jobs total —
@@ -335,8 +331,6 @@ def kmeans_lloyd(
     latency.  At 100 TB the corpus-sized assignment map still
     parallelizes with the scan; only the shuffled aggregates stay
     narrow."""
-    tune(spark)
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     e = (
         load(spark, sf_dir, "embeddings")
         .select(
@@ -533,7 +527,8 @@ def _km_oracle() -> str:
     """
 
 
-@query("sim_kmeans_lloyd", oracle=_km_oracle())
+# model-sized shuffles: see kmeans_lloyd's "Shuffle width"
+@query("sim_kmeans_lloyd", oracle=_km_oracle(), conf=NARROW_SHUFFLE)
 def sim_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-means clustering (3 Lloyd iterations, k=10) over embeddings —
     the genuinely iterative algorithm of the suite and the real trainer
@@ -594,7 +589,6 @@ def sim_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    tune(spark)
     e = load(spark, sf_dir, "embeddings")
 
     def _partials(batches):
@@ -689,7 +683,6 @@ def corpus_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one partial-aggregated groupBy on source (domain
     cardinality is tiny at any corpus size), one 1-row broadcast back —
     the corpus itself never shuffles."""
-    tune(spark)
     d = load(spark, sf_dir, "documents")
     per = d.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
     z = per.agg(
@@ -759,7 +752,6 @@ def embed_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratios: median 0.89, p5 0.45, p95 1.73) — unbiased, per the JL
     property test in tests/test_llm_ops.py; use it to PRE-FILTER
     distance computations, not to replace them."""
-    tune(spark)
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("vec")
     )

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..io import load, tune
+from ..io import load
 from ..registry import query
 
 
@@ -110,7 +110,6 @@ def _udf_suite_lazy(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFr
     """Build the (cached input, lazy result) pair — split out so
     tests/test_plans.py can assert the Arrow/Python plan shape on the
     SAME lazy plan :func:`udf_suite` executes."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_quantity", "l_extendedprice", "l_discount", "l_tax"
     )
@@ -174,7 +173,6 @@ def udtf_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     to one source first; at 100 TB the same logic belongs in
     ``explode(filter(split(...)))`` built-ins (rows-equal here, that's
     the point of the oracle) or an Arrow-batched mapInPandas."""
-    tune(spark)
     spark.udtf.register("cdp_tokenize", F.udtf(
         _TokenizeUDTF, returnType="doc_id bigint, token string, pos int"
     ))
@@ -215,8 +213,6 @@ def udf_map_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row cost — the practical ceiling for Python in the row path."""
     import pyarrow as pa
     import pyarrow.compute as pc
-
-    tune(spark)
 
     def add_revenue(batches):
         for b in batches:
@@ -318,6 +314,7 @@ def _cogroup_merge(key, orders_t, events_t):
     LEFT JOIN e ON k.cust_id = e.cust_id
     LEFT JOIN aft ON k.cust_id = aft.cust_id
     """,
+    conf={"spark.sql.adaptive.coalescePartitions.enabled": "false"},
 )
 def udf_cogroup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rung 7 of the Python-interop ladder: ``groupBy().cogroup()``
@@ -359,10 +356,8 @@ def udf_cogroup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     cores: 23.1 s; with coalescing disabled the same work spread over
     32 tasks: 3.6 s (6.4x).  The general rule: for grouped-map /
     cogrouped-map stages, partition count must track GROUP count, not
-    shuffle bytes — so this query turns coalescing off for itself
-    (``tune()`` restores it for the next query)."""
-    tune(spark)
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    shuffle bytes — so this query turns coalescing off for itself in
+    its ``conf`` (the next registered query starts with it back on)."""
     o = load(spark, sf_dir, "orders").select("o_custkey", "o_orderdate")
     e = load(spark, sf_dir, "events").select("user_id", "ts")
     return (

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load, tune
+from ..io import load
 from ..registry import query
 from ._helpers import DEC
 
@@ -39,7 +39,6 @@ def win_row_number_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 orders per customer (reference: latest-N versions per
     source).  row_number + filter — the canonical per-group top-k that
     never materializes the full sort."""
-    tune(spark)
     o = load(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey")
@@ -64,7 +63,6 @@ def win_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rank/dense_rank of suppliers by balance within nation — tie
     handling is value-based, so no tiebreaker is needed for
     determinism of the rank values themselves."""
-    tune(spark)
     s = load(spark, sf_dir, "supplier")
     w = Window.partitionBy("s_nationkey").orderBy(F.col("s_acctbal").desc())
     return s.select(
@@ -96,7 +94,6 @@ def win_lag_change_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     (props), and flag rows whose hash differs from the previous
     snapshot's.  First snapshot counts as changed (new source).  One
     shuffle on the source key; scales linearly in snapshots."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     h = F.sha2("props", 256)
@@ -121,7 +118,6 @@ def win_lag_change_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def win_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-to-next-event per user (reference: time-to-next-scan)."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     nxt = F.lead("ts").over(w)
@@ -149,7 +145,6 @@ def win_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cumulative revenue per customer over order time (reference:
     cumulative change counts).  Decimal-summed so every prefix is exact
     and engine-order-independent."""
-    tune(spark)
     o = load(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
@@ -182,7 +177,6 @@ def win_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan metrics).  The global (partition-less) window runs on the
     already-aggregated daily table — ~30 rows here, one row per day at
     any scale — so the single-task sort is safe by construction."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     # day emitted as an ISO string: Spark DATE and DuckDB DATE round-trip
     # through pandas differently (date object vs midnight timestamp), so
@@ -213,7 +207,6 @@ def win_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     each order.  RANGE includes all peers of the current value, so ties
     need no tiebreaker — frame bounds are expressed in epoch-µs on both
     engines."""
-    tune(spark)
     o = load(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
@@ -239,7 +232,6 @@ def win_ntile_cume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quartiles / percent_rank / cume_dist of balances within segment.
     NTILE assigns ties by position, so the unique c_custkey tiebreaker
     is REQUIRED for cross-engine determinism."""
-    tune(spark)
     c = load(spark, sf_dir, "customer")
     w = Window.partitionBy("c_mktsegment").orderBy("c_acctbal", "c_custkey")
     return c.select(
@@ -267,7 +259,6 @@ def win_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First/last event value per user-day (reference: first-seen /
     last-seen snapshot per source per day).  Explicit full frame —
     LAST_VALUE over the default frame is a classic wrong-answer trap."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     day = F.col("ts").cast("date")
     w = (
@@ -319,7 +310,6 @@ def win_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     extra funnel stages by adding one forward-min per stage.  At 100 TB
     this beats the join formulation (which pairs every view with every
     candidate purchase before aggregating)."""
-    tune(spark)
     ev = load(spark, sf_dir, "events").filter(
         F.col("event_type").isin("view", "purchase")
     )
@@ -379,7 +369,6 @@ def scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the standard one-pass history derivation; the alternative
     (join each snapshot to its successor) pays a second shuffle for
     nothing."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     w = Window.partitionBy("source_key").orderBy("ts", "event_id")
     hashed = e.select(
@@ -443,7 +432,6 @@ def win_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning end-to-end at any scale.  The date-minus-int anchor is
     exact integer arithmetic: no float, no tz, identical in both
     engines."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     days = e.select("user_id", F.to_date("ts").alias("d")).distinct()
     w = Window.partitionBy("user_id").orderBy("d")
@@ -491,7 +479,6 @@ def win_lag_change_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rounded(6) because the µs->s division is engine-identical IEEE but
     the display canon isn't worth risking on 12-significant-digit
     ratios."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     delta = F.col("value") - F.lag("value").over(w)
@@ -549,7 +536,6 @@ def win_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain reuses a single hash partitioning end-to-end (one shuffle at
     any scale); ties on ts break on event_id so session boundaries are
     deterministic cross-engine."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gap_us = F.unix_micros("ts") - F.unix_micros(F.lag("ts").over(w))
@@ -614,7 +600,6 @@ def win_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     score NULL rather than pretending confidence.  One window, one
     shuffle on user_id — the same scale shape as every entity-stream
     operator here."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -669,7 +654,6 @@ def win_retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     DATE and DuckDB DATE canonicalize differently through pandas —
     same trick as win_moving_avg); week truncation is ISO Monday on
     both engines and the offset is exact integer day arithmetic."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     wk = F.date_trunc("week", F.col("ts"))
     wu = Window.partitionBy("user_id")
@@ -715,7 +699,6 @@ def win_conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     both firsts come out of the same map-side-combinable pass, so the
     operator costs a single shuffle of two timestamps per user at any
     scale."""
-    tune(spark)
     ev = load(spark, sf_dir, "events")
     first_view = F.min(F.when(F.col("event_type") == "view", F.col("ts")))
     first_purchase = F.min(F.when(F.col("event_type") == "purchase", F.col("ts")))
@@ -764,7 +747,6 @@ def win_moving_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     here, quantile_cont in DuckDB) is exact in BOTH engines — no
     ROUND needed; verified bit-identical over all 6000 sf0.001 rows
     before this landed."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     w = (
         Window.partitionBy("l_suppkey")
@@ -856,7 +838,6 @@ def win_rolling_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern.  The DuckDB oracle computes the same metric as a windowed
     COUNT(DISTINCT) over (day, user) pairs — same numbers from a
     completely different mechanism."""
-    tune(spark)
     daily, out = _rolling_bitmap_lazy(load(spark, sf_dir, "events"))
     try:
         rows = out.collect()
@@ -922,7 +903,6 @@ def win_hampel_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     float boundary; Spark percentile() and DuckDB median() both
     linear-interpolate.  Flag emitted as INT (nullable-boolean
     doctrine)."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.col("ts").cast("date").alias("d")
@@ -1001,7 +981,6 @@ def win_week_over_week(spark: SparkSession, sf_dir: str) -> DataFrame:
     key) as an equi-join on (type, date) — co-partitioned, no
     window, no global sort; at 100 TB the corpus-sized stage is the
     one daily aggregate."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.col("ts").cast("date").alias("d")
@@ -1071,7 +1050,6 @@ def win_bollinger_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     win_rolling_regression edge policy).  Per-type windows over the
     calendar-bounded daily rollup — no global sort, corpus-sized work
     is the one daily aggregate."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.col("ts").cast("date").alias("d")
@@ -1159,7 +1137,6 @@ def win_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lag + rolling sums) share the (event_type, d) sort order so
     Catalyst fuses them into sequential Window nodes over ONE
     exchange."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.col("ts").cast("date").alias("d")
@@ -1243,7 +1220,6 @@ def win_seasonal_naive_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one corpus-sized daily aggregate, one per-type lag window
     over calendar-bounded rows, one tiny final aggregate."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.col("ts").cast("date").alias("d")
@@ -1318,7 +1294,6 @@ def win_stochastic_oscillator(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per-type windows over the calendar-bounded daily rollup —
     the win_bollinger_exact cost class exactly."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.col("ts").cast("date").alias("d")
@@ -1422,7 +1397,6 @@ def win_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two per-type windows (running max + rolling sum) over the
     calendar-bounded daily rollup, fused into the same sort order —
     one partition-local sort, no extra shuffle."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.col("ts").cast("date").alias("d")
@@ -1520,7 +1494,6 @@ def win_seasonal_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one per-(type, dow) window over the calendar-bounded daily
     rollup — seven interleaved expanding windows per type, one sort."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type",
@@ -1624,7 +1597,6 @@ def win_xmr_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one lag window + one |types|-sized limit dim broadcast back
     — the bollinger cost class with an O(types) second stage."""
-    tune(spark)
     e = load(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type",
@@ -1712,7 +1684,6 @@ def win_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ONE window shuffle on l_suppkey, sort within — the
     win_running_sum cost shape; both cumulative sums share the same
     frame so Spark computes them in one pass."""
-    tune(spark)
     li = load(spark, sf_dir, "lineitem")
     t = li.select(
         "l_suppkey",

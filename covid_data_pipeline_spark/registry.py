@@ -2,16 +2,20 @@
 
 Each operator from SURVEY.md §2 registers here exactly once, pairing the
 Spark implementation with its DuckDB oracle SQL (or ``None`` for
-rows-only ops: approx sketches, filesystem side effects, true streaming).
+rows-only ops: approx sketches, filesystem side effects, true streaming)
+and with the session conf it overrides (``conf``, applied by ``io.tune``).
 """
 
 from __future__ import annotations
 
+import functools
 import importlib
-from collections.abc import Callable
+from collections.abc import Callable, Mapping
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .io import QUERY_CONF_KEYS, tune
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -46,16 +50,32 @@ class QuerySpec:
     fn: QueryFn
     oracle: str | None  # ANSI SQL for DuckDB; None => rows-only check
     doc: str
+    conf: Mapping[str, str]  # session conf this query overrides
 
 
-def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Decorator: register a (spark, sf_dir) -> DataFrame query."""
+def query(
+    name: str, oracle: str | None = None, conf: Mapping[str, str] | None = None
+) -> Callable[[QueryFn], QueryFn]:
+    """Decorator: register a (spark, sf_dir) -> DataFrame query.
+
+    Registers and returns a wrapper that calls ``io.tune(spark, conf)``
+    before the body, so every call (through ``__spark_entry__``, a direct
+    import, or a nested call from another query) starts from the
+    baseline conf plus this query's own ``conf``."""
+    conf = dict(conf or {})
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query id {name!r}")
-        REGISTRY[name] = QuerySpec(name, fn, oracle, (fn.__doc__ or "").strip())
-        return fn
+        QUERY_CONF_KEYS.update(conf)
+
+        @functools.wraps(fn)
+        def tuned(spark: SparkSession, *args, **kwargs) -> DataFrame:
+            tune(spark, conf)
+            return fn(spark, *args, **kwargs)
+
+        REGISTRY[name] = QuerySpec(name, tuned, oracle, (fn.__doc__ or "").strip(), conf)
+        return tuned
 
     return deco
 
@@ -142,12 +162,7 @@ def load_all() -> dict[str, QuerySpec]:
     global _loaded
     if not _loaded:
         for mod in _QUERY_MODULES:
-            try:
-                importlib.import_module(f"{__package__}.queries.{mod}")
-            except ModuleNotFoundError as e:
-                # tolerate not-yet-written modules during incremental build
-                if f"queries.{mod}" not in str(e):
-                    raise
+            importlib.import_module(f"{__package__}.queries.{mod}")
         _loaded = True
         missing = [n for n in SHOWCASE if n not in REGISTRY]
         if missing:

@@ -51,10 +51,8 @@ def get_spark(app: str = "covid-data-pipeline-spark", cpus: int | None = None) -
     spark = (
         builder
         .appName(app)
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+        # SQL runtime confs (shuffle width, AQE, time zone) are set by
+        # tune() below and before every registered query
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # local-mode driver == the only executor.  8g vs 32g was A/B'd at
         # r3 on the heavy dedup queries: no consistent difference (run

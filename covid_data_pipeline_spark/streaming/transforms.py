@@ -213,55 +213,6 @@ def stateful_change_detect(df: DataFrame) -> DataFrame:
     )
 
 
-def tws_user_totals(df: DataFrame) -> DataFrame:
-    """Per-user running totals on ``transformWithStateInPandas`` —
-    Spark 4's successor to ``applyInPandasWithState`` and the API a new
-    pipeline should target: instead of one opaque state tuple, a
-    ``StatefulProcessor`` gets a handle to NAMED, TYPED state variables
-    (value/list/map) plus timers, so complex operators compose state
-    the way the single-blob API never could.  Semantics here mirror
-    ``stateful_user_totals`` exactly (same keys, same totals) so the two
-    APIs can be asserted equivalent in tests.
-
-    Requires the RocksDB state-store provider (the transformWithState
-    runtime is built on its column families) — which is the 100 TB
-    recommendation anyway (SCALE.md: bounded executor memory at any key
-    cardinality); callers set the provider conf before planning."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _UserTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            # exact integer micro-units, like stateful_user_totals
-            self._totals = handle.getValueState("totals", "n long, s long")
-
-        def handleInputRows(self, key, rows, timerValues):
-            import numpy as np
-
-            n, s = self._totals.get() if self._totals.exists() else (0, 0)
-            for pdf in rows:
-                n += len(pdf)
-                v = pdf["value"].to_numpy(dtype="float64")
-                s += int(np.floor(v * 1e6 + 0.5).sum())
-            self._totals.update((n, s))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "sum_value": [s / 1e6]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return df.groupBy("user_id").transformWithStateInPandas(
-        _UserTotals(),
-        outputStructType="user_id long, n_events long, sum_value double",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def daily_bitmap_partials(df: DataFrame) -> DataFrame:
     """Per-(day, bucket) EXACT-distinct bitmap partials — the ingest-time
     streaming job that materializes the table every bitmap operator

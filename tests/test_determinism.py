@@ -6,7 +6,8 @@ and speculative re-execution.
 
 This test actually varies the execution geometry: reduce-side
 parallelism (spark.sql.shuffle.partitions via SPARK_GRAFT_SHUFFLE, which
-io.tune() reads per query call) AND map-side split sizing
+io.tune re-reads when the registry wrapper calls it before each query
+body) AND map-side split sizing
 (spark.sql.files.maxPartitionBytes), then asserts the canonical digest
 of every float-emitting query under test is unchanged.  A raw double
 SUM would fail this immediately — partial-aggregation order changes

@@ -281,9 +281,10 @@ def test_kmeans_cost_monotone_and_exact_partition(spark):
     the summary's per-cluster costs sum exactly (decimal agg) to the
     last assignment cost, and every vector lands in exactly one
     cluster."""
-    from covid_data_pipeline_spark.io import load
+    from covid_data_pipeline_spark.io import load, tune
     from covid_data_pipeline_spark.queries.training import kmeans_lloyd
 
+    tune(spark, load_all()["sim_kmeans_lloyd"].conf)  # its registered caller's conf
     summary, costs = kmeans_lloyd(spark, SF_ORACLE, iters=3, k=10)
     assert len(costs) == 3
     # 1e-6 slack: the assignment step minimizes the QUANTIZED objective

@@ -77,10 +77,12 @@ def test_udf_suite_uses_arrow_not_row_python_for_vectorized_steps(spark):
     # udf_suite returns an eagerly-localized 3-row result (so it can
     # unpersist its cache in the shared session); assert the Arrow plan
     # shape on the lazy plan it actually executed
+    from covid_data_pipeline_spark.io import tune
     from covid_data_pipeline_spark.queries.udfs import _udf_suite_lazy
 
     from .conftest import SF_ORACLE
 
+    tune(spark)  # the conf udf_suite runs it under
     with_rev, out = _udf_suite_lazy(spark, SF_ORACLE)
     try:
         plan = plan_of(out)
@@ -1434,38 +1436,14 @@ def test_key_skew_profiler_all_jvm_and_partial(spark):
 
 
 def test_aggregate_pushdown_reads_only_footers(spark):
-    """With the DSv2 reader + aggregatePushdown, the grouped
+    """With the DSv2 reader + aggregatePushdown (the query's registered
+    conf, still in force when its DataFrame is planned), the grouped
     MIN/MAX/COUNT must appear in the scan as PushedAggregation +
-    PushedGroupBy — the whole answer comes from parquet footers.
-    Replicates the operator's config dance because the registered query
-    restores the session defaults before returning."""
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from .conftest import SF_ORACLE
-
-    path = os.path.join(
-        tempfile.gettempdir(), "cdp_spark_scratch", "agg_pushdown_plan"
-    )
-    ev = spark.read.parquet(f"{SF_ORACLE}/events.parquet").select(
-        "event_id", "value", "event_type"
-    )
-    ev.write.mode("overwrite").partitionBy("event_type").parquet(path)
-    old_v1 = spark.conf.get("spark.sql.sources.useV1SourceList")
-    spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-    spark.conf.set("spark.sql.sources.useV1SourceList", "")
-    try:
-        out = spark.read.parquet(path).groupBy("event_type").agg(
-            F.min("value"), F.max("value"), F.count(F.lit(1))
-        )
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "PushedAggregation: [MIN(value), MAX(value), COUNT(*)]" in plan, plan
-        assert "PushedGroupBy: [event_type]" in plan, plan
-    finally:
-        spark.conf.set("spark.sql.sources.useV1SourceList", old_v1)
-        spark.conf.set("spark.sql.parquet.aggregatePushdown", "false")
+    PushedGroupBy — the whole answer comes from parquet footers."""
+    df = q("scan_aggregate_pushdown", spark)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "PushedAggregation: [MIN(value), MAX(value), COUNT(*)]" in plan, plan
+    assert "PushedGroupBy: [event_type]" in plan, plan
 
 
 def test_bigram_lm_broadcasts_vocab_no_python(spark):

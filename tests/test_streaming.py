@@ -377,38 +377,6 @@ def test_rocksdb_state_store_matches_default(spark):
     assert rocks == default
 
 
-def test_transform_with_state_matches_apply_in_pandas(spark):
-    """transformWithStateInPandas (Spark 4's named-typed-state API) must
-    produce the same per-user totals as its applyInPandasWithState twin.
-    SKIPPED where the protobuf package is missing: the TWS runtime's
-    Python state server imports google.protobuf at startup, and this
-    container neither ships it nor permits installs — the operator is
-    gated explicitly (see queries/streaming_batch.py:
-    stream_transform_with_state) rather than silently falling back."""
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("protobuf not available: transformWithState "
-                    "state server cannot start in this container")
-
-    from covid_data_pipeline_spark.queries.streaming_batch import (
-        stream_transform_with_state,
-    )
-    from covid_data_pipeline_spark.registry import load_all
-
-    tws = {
-        r["user_id"]: (r["n_events"], r["sum_value"])
-        for r in stream_transform_with_state(spark, SF_SMOKE).collect()
-    }
-    apis = {
-        r["user_id"]: (r["n_events"], r["sum_value"])
-        for r in load_all()["stream_stateful_totals"].fn(spark, SF_SMOKE).collect()
-    }
-    assert tws == apis
-
-
 def test_stream_bitmap_partials_equals_batch(spark):
     """Incremental bitmap construction must produce byte-identical blobs
     to batch: compare (day, bucket, popcount, md5-of-bitmap-bytes)."""
