@@ -16,8 +16,11 @@ time only the headline suite.
 
 Each query is timed by full materialization (``df.write.format("noop")``
 — pulls every row through the plan without driver-side collection
-overhead).  One warm-up run of the flagship excluded from timings
-(JVM + codegen warm-up).
+overhead).  Before timing, ``warm_up`` materializes each registered
+query named in WARMUP once, untimed: one real query per machinery path
+(JVM/codegen, Python workers, streaming state, Python data sources), so
+the warm-up cannot drift from the code it warms.  The bench builds no
+DataFrame of its own.
 """
 
 from __future__ import annotations
@@ -25,7 +28,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -62,8 +64,38 @@ HEADLINE = (
 )
 
 
+# Untimed warm-up: one registered query per machinery path, so one-time
+# start-up cost lands on no timed query.  Each path was read off the
+# query's executed plans; a HEADLINE query other than the flagship would
+# be timed warm and lose comparability with earlier rounds.
+WARMUP = (
+    "agg_groupby",             # JVM, codegen, parquet footer caches
+    "udf_cogroup_merge",       # Arrow cogroup (FlatMapCoGroupsInArrow), Python workers
+    "text_unicode_normalize",  # scalar pandas_udf (ArrowEvalPython)
+    "stream_stateful_totals",  # file-stream source, microbatch planner,
+                               # state store, applyInPandasWithState
+    "stream_stream_join",      # symmetric stream-stream join state
+    "source_python_stream",    # Python DataSourceStreamReader (MicroBatchScan)
+    "sink_python_datasource",  # Python DataSource batch writer (AppendData)
+)
+
+
 def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
+
+
+def warm_up(spark, reg, sf_dir: str) -> None:
+    """Materialize each WARMUP query once, untimed.  A failure is LOUD
+    (ADVICE r4): a broken path must be distinguishable from a missing
+    dependency, or it resurfaces as an inflated first-query timing."""
+    for name in WARMUP:
+        try:
+            materialize(reg[name].fn(spark, sf_dir))
+        except Exception as exc:  # warm-up must never fail the bench
+            print(
+                f"# WARMUP-FAIL {name}: {type(exc).__name__}: {exc}",
+                file=sys.stderr,
+            )
 
 
 def main() -> None:
@@ -113,202 +145,7 @@ def main() -> None:
         pass  # py4j surface moved — warnings are cosmetic, never fail bench
     reg = load_all()
 
-    # warm-ups (not timed) — charge one-time machinery to no query:
-    # 1. JVM, codegen, parquet footer caches
-    materialize(reg["agg_groupby"].fn(spark, sf_dir))
-    # 2. Structured Streaming microbatch planner + state-store init (the
-    #    r2 bench charged ~1-2 s of this to whichever streaming query ran
-    #    first — VERDICT r2 "keep the full-suite total trending down")
-    try:
-        with tempfile.TemporaryDirectory() as ckpt:
-            wq = (
-                spark.readStream.format("rate")
-                .option("rowsPerSecond", "1")
-                .load()
-                .writeStream.format("noop")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                # awaitTermination returns False on timeout (no raise) —
-                # always stop, or a straggling warm-up stream would lose
-                # its checkpoint dir and keep running into the timed loop
-                wq.awaitTermination(30)
-            finally:
-                wq.stop()
-    except Exception as exc:  # warm-up must never fail the bench
-        # LOUD (ADVICE r4): a broken streaming runtime must be
-        # distinguishable from an expectedly missing dependency — a
-        # silent skip here resurfaces as inflated first-query timings
-        print(
-            f"# WARMUP-FAIL streaming: {type(exc).__name__}: {exc}",
-            file=sys.stderr,
-        )
-    # 3. Python worker pool + Arrow serde path (scalar pandas_udf AND
-    #    the cogrouped-map eval path — separate serializers/workers)
-    try:
-        import pandas as pd
-        from pyspark.sql import functions as F
-
-        spark.range(1_000).select(
-            F.pandas_udf(lambda s: s + 1, "long")("id").alias("x")
-        ).write.format("noop").mode("overwrite").save()
-        small = spark.createDataFrame([(0, 1), (1, 2)], "k int, v int")
-        small.groupBy("k").cogroup(small.groupBy("k")).applyInPandas(
-            lambda l, r: pd.DataFrame({"k": [0], "n": [len(l) + len(r)]}),
-            "k int, n long",
-        ).write.format("noop").mode("overwrite").save()
-    except Exception as exc:
-        print(
-            f"# WARMUP-FAIL python-worker: {type(exc).__name__}: {exc}",
-            file=sys.stderr,
-        )
-    # 4. The streaming machinery paths the rate->noop warm-up does NOT
-    #    touch (VERDICT r3 #6: stream_change_detect / stream_stream_join /
-    #    source_python_stream each carried 2-3 s of first-use start-up):
-    #    file-stream source listing, the applyInPandasWithState Python
-    #    state worker, symmetric stream-stream join state, and the
-    #    Python DataSourceStreamReader planner — each exercised once on
-    #    a 4-row throwaway input so the cost lands on no timed query.
-    try:
-        import pandas as pd
-        from pyspark.sql import functions as F
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        with tempfile.TemporaryDirectory() as tmp:
-            src = os.path.join(tmp, "src")
-            spark.createDataFrame(
-                [(i, i % 2) for i in range(4)], "v long, k int"
-            ).write.parquet(src)
-            stream = spark.readStream.schema("v long, k int").parquet(src)
-
-            def _warm_state(key, pdfs, state):
-                n = sum(len(p) for p in pdfs)
-                yield pd.DataFrame({"k": [key[0]], "n": [n]})
-
-            stateful = stream.groupBy("k").applyInPandasWithState(
-                _warm_state,
-                "k int, n long",
-                "k int",
-                "append",
-                GroupStateTimeout.NoTimeout,
-            )
-            left = stream.select(
-                F.col("k").alias("lk"),
-                F.timestamp_seconds(F.col("v")).alias("lts"),
-            ).withWatermark("lts", "1 hour")
-            right = stream.select(
-                F.col("k").alias("rk"),
-                F.timestamp_seconds(F.col("v") + 1).alias("rts"),
-            ).withWatermark("rts", "1 hour")
-            ssjoin = left.join(
-                right,
-                F.expr(
-                    "lk = rk AND rts BETWEEN lts AND lts + interval 10 minutes"
-                ),
-            )
-            for warm_df in (stateful, ssjoin):
-                ckpt = tempfile.mkdtemp(dir=tmp)
-                wq = (
-                    warm_df.writeStream.format("noop")
-                    .trigger(availableNow=True)
-                    .option("checkpointLocation", ckpt)
-                    .start()
-                )
-                try:
-                    wq.awaitTermination(30)
-                finally:
-                    wq.stop()
-    except Exception as exc:
-        print(
-            f"# WARMUP-FAIL stateful-streaming: {type(exc).__name__}: {exc}",
-            file=sys.stderr,
-        )
-    try:
-        from pyspark.sql.datasource import (
-            DataSource,
-            DataSourceStreamReader,
-            InputPartition,
-        )
-
-        class _WarmReader(DataSourceStreamReader):
-            def initialOffset(self):
-                return {"i": 0}
-
-            def latestOffset(self):
-                return {"i": 1}
-
-            def partitions(self, start, end):
-                return [InputPartition(0)]
-
-            def read(self, partition):
-                yield (1,)
-
-        class _WarmStreamSource(DataSource):
-            @classmethod
-            def name(cls):
-                return "cdp_bench_warm_stream"
-
-            def schema(self):
-                return "x int"
-
-            def streamReader(self, schema):
-                return _WarmReader()
-
-        spark.dataSource.register(_WarmStreamSource)
-        with tempfile.TemporaryDirectory() as ckpt:
-            wq = (
-                spark.readStream.format("cdp_bench_warm_stream")
-                .load()
-                .writeStream.format("noop")
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                wq.awaitTermination(30)
-            finally:
-                wq.stop()
-    except Exception as exc:
-        print(
-            f"# WARMUP-FAIL python-ds-stream: {type(exc).__name__}: {exc}",
-            file=sys.stderr,
-        )
-    # 5. Python DataSource BATCH writer two-phase-commit machinery
-    #    (sink_python_datasource paid ~3 s of first-use planner/worker
-    #    cost in BENCH_r04 even with the stream reader warmed — the
-    #    batch write path spins its own plan + commit round-trip)
-    try:
-        from pyspark.sql.datasource import (
-            DataSource,
-            DataSourceWriter,
-            WriterCommitMessage,
-        )
-
-        class _WarmWriter(DataSourceWriter):
-            def write(self, rows):
-                for _ in rows:
-                    pass
-                return WriterCommitMessage()
-
-        class _WarmBatchSink(DataSource):
-            @classmethod
-            def name(cls):
-                return "cdp_bench_warm_sink"
-
-            def writer(self, schema, overwrite):
-                return _WarmWriter()
-
-        spark.dataSource.register(_WarmBatchSink)
-        spark.range(4).write.format("cdp_bench_warm_sink").mode(
-            "append"
-        ).save()
-    except Exception as exc:
-        print(
-            f"# WARMUP-FAIL python-ds-batch-sink: {type(exc).__name__}: {exc}",
-            file=sys.stderr,
-        )
+    warm_up(spark, reg, sf_dir)
 
     names = list(HEADLINE) + (sorted(set(reg) - set(HEADLINE)) if bench_all else [])
     timings: dict[str, float] = {}

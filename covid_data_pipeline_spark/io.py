@@ -57,15 +57,15 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy scan of one fixture table with its explicit schema.
 
     ``events.ts`` needs a footer sniff: when stored as TIMESTAMP(NANOS)
-    (which Spark's reader rejects) we read epoch-nanos int64 (legacy
-    nanosAsLong conf) and truncate ns -> µs, matching DuckDB's
-    TIMESTAMP_NS -> TIMESTAMP cast; when stored as µs it reads directly.
+    (which Spark's reader rejects) we read epoch-nanos int64 (the legacy
+    nanosAsLong conf, set in tune()'s baseline) and truncate ns -> µs,
+    matching DuckDB's TIMESTAMP_NS -> TIMESTAMP cast; when stored as µs
+    it reads directly.
     """
     if name not in SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {sorted(SCHEMAS)}")
     path = table_path(sf_dir, name)
     if name == "events" and _events_ts_is_nanos(path):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         raw = spark.read.schema(EVENTS_RAW_NS).parquet(path)
         return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return spark.read.schema(SCHEMAS[name]).parquet(path)
@@ -112,6 +112,10 @@ def tune(spark: SparkSession, conf: Mapping[str, str] | None = None) -> SparkSes
         "spark.sql.autoBroadcastJoinThreshold": "10MB",
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold":
             "10GB",
+        # TIMESTAMP(NANOS) parquet columns read as epoch-nanos int64
+        # (load / read_events_stream truncate them to µs); no other
+        # column type is affected
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
     }
     try:
         for key, value in baseline.items():

@@ -1855,64 +1855,52 @@ def ts_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LTTB_B = 10  # output points per series (first + 8 bucket picks + last)
 
 
-def _lttb_cent_sql(j: int) -> str:
-    """Bucket j's centroid as a BIGINT 4-list [b, st, sv, c], NULL if
-    the bucket is empty — lookup by BUCKET ID, never by list position
-    (positional indexing silently misaligns when a sparse series
-    leaves interior buckets empty)."""
-    return f"list_filter(cents, c -> c[1] = {j})[1]"
-
-
 def _lttb_sql() -> str:
     """Generate the LTTB selection CTE chain (8 unrolled bucket steps,
-    the _durbin_levinson_sql idiom).  Points and accumulators are
-    BIGINT lists ([b,t,v] points / [area,t,v] accumulators) so DuckDB's
-    list_reduce type-checks; all arithmetic is integer (areas
+    the _durbin_levinson_sql idiom) as plain relational SQL: no lambda
+    folds.  ``pick{k}`` holds one row per series carrying the current
+    anchor as plain columns ``at``/``av`` plus the picks so far; step k
+    joins it to bucket k's points and keeps the largest triangle with
+    ``max`` over an ``{area, -t, v}`` struct (ties keep the earliest
+    point, as the Spark fold's strict ``>`` does).  An EMPTY bucket
+    joins no point, so its pick is NULL, the anchor carries forward and
+    the emission below drops the row.  All arithmetic is integer (areas
     cross-multiplied by the third point's cardinality), so engine
-    agreement is exact.  The third point for bucket k is the NEXT
-    NON-EMPTY bucket's centroid (coalesce chain k+1..7, falling back
-    to the last point) — positional cents[k+2] would misalign on
-    sparse series with empty buckets."""
+    agreement is exact.
+
+    DuckDB 1.0.0 mis-evaluated the earlier form (a ``list_reduce`` fold
+    per step whose captured anchor was a nested CASE over the previous
+    folds): with several series in one vector some folds returned
+    ``[0,0,0]`` or a wrong pick, and thread count changed which."""
+    area = ("abs((s.at * p.cc - p.ct) * (p.v - s.av) "
+            "- (s.at - p.t) * (p.cv - s.av * p.cc))")
+    best = f"max({{'area': {area}, 'neg_t': -p.t, 'v': p.v}})"
     steps = []
-    prev_t, prev_v = "fp_t", "fp_v"
-    src = "prep"
     for k in range(8):
-        if k < 7:
-            chain = ", ".join(_lttb_cent_sql(j) for j in range(k + 1, 8))
-            third = (f"COALESCE({chain}, "
-                     f"[CAST(-9 AS BIGINT), lp_t, lp_v, 1])")
-            ct, cv, cc = f"third{k}[2]", f"third{k}[3]", f"third{k}[4]"
-        else:
-            third = None
-            ct, cv, cc = "lp_t", "lp_v", "1"
-        a = (f"abs(({prev_t} * {cc} - {ct}) * (p[3] - {prev_v}) "
-             f"- ({prev_t} - p[2]) * ({cv} - {prev_v} * {cc}))")
-        third_sel = f", {third} AS third{k}" if third is not None else ""
+        picked = "".join(f"s.t{j}, s.v{j}, " for j in range(k))
         steps.append(
-            f"step{k}t AS (SELECT *{third_sel} FROM {src}),\n"
-            f"    step{k} AS (SELECT *, list_reduce(list_prepend("
-            f"CAST([-1, 0, 0] AS BIGINT[]), "
-            f"list_filter(pts, p -> p[1] = {k})), "
-            f"(a, p) -> CASE WHEN {a} > a[1] "
-            f"THEN [{a}, p[2], p[3]] ELSE a END) AS raw{k} FROM step{k}t)"
+            f"best{k} AS (\n"
+            f"        SELECT s.event_type, s.fp_t, s.fp_v, s.lp_t, s.lp_v,\n"
+            f"               {picked}s.at, s.av, {best} AS m\n"
+            f"        FROM pick{k} s LEFT JOIN pts p\n"
+            f"          ON p.event_type = s.event_type AND p.b = {k}\n"
+            f"        GROUP BY ALL\n"
+            f"    ),\n"
+            f"    pick{k + 1} AS (\n"
+            f"        SELECT * EXCLUDE (m, at, av),\n"
+            f"               -m.neg_t AS t{k}, m.v AS v{k},\n"
+            f"               COALESCE(-m.neg_t, at) AS at,"
+            f" COALESCE(m.v, av) AS av\n"
+            f"        FROM best{k}\n"
+            f"    )"
         )
-        # an EMPTY bucket (series with <10 interior days) leaves raw{k}
-        # at the [-1,0,0] fold seed: carry the previous REAL pick
-        # forward as the next step's anchor (never the fabricated
-        # (0,0)), and the emission filter below drops the seed row
-        prev_t = f"(CASE WHEN raw{k}[1] >= 0 THEN raw{k}[2] ELSE {prev_t} END)"
-        prev_v = f"(CASE WHEN raw{k}[1] >= 0 THEN raw{k}[3] ELSE {prev_v} END)"
-        src = f"step{k}"
     return ",\n    ".join(steps)
 
 
-# 'ok' carries the fold's area accumulator (-1 = empty-bucket seed) so
-# the outer query can filter fabricated rows; endpoints are always ok=0
-_LTTB_UNNEST = ", ".join(
-    "{'sel_idx': CAST(%d AS BIGINT), 'ok': raw%d[1], 't': raw%d[2],"
-    " 'v': raw%d[3]}" % (k + 1, k, k, k)
-    for k in range(8)
-)
+def _lttb_emit(col: str) -> str:
+    """CASE over the output slot ``i``: first point, 8 picks, last."""
+    picks = " ".join(f"WHEN {k + 1} THEN {col}{k}" for k in range(8))
+    return f"CASE i WHEN 0 THEN fp_{col} {picks} WHEN 9 THEN lp_{col} END"
 
 
 @query(
@@ -1938,46 +1926,41 @@ _LTTB_UNNEST = ", ".join(
         FROM daily d JOIN bounds b USING (event_type)
         WHERE d.t > b.t_lo AND d.t < b.t_hi
     ),
-    pt_arr AS (
-        SELECT event_type, list([b, t, v] ORDER BY t) AS pts
-        FROM mid GROUP BY event_type
+    ends AS (
+        SELECT bo.event_type, fpd.t AS fp_t, fpd.v AS fp_v,
+               lpd.t AS lp_t, lpd.v AS lp_v
+        FROM bounds bo
+        JOIN daily fpd ON fpd.event_type = bo.event_type
+                      AND fpd.t = bo.t_lo
+        JOIN daily lpd ON lpd.event_type = bo.event_type
+                      AND lpd.t = bo.t_hi
     ),
-    cent_rows AS (
+    cents AS (
         SELECT event_type, b, CAST(SUM(t) AS BIGINT) AS st,
                CAST(SUM(v) AS BIGINT) AS sv, CAST(COUNT(*) AS BIGINT) AS c
         FROM mid GROUP BY event_type, b
     ),
-    cent_arr AS (
-        SELECT event_type, list([b, st, sv, c] ORDER BY b) AS cents
-        FROM cent_rows GROUP BY event_type
+    -- the third point for bucket b: the NEXT NON-EMPTY bucket's
+    -- centroid, falling back to the last point
+    third AS (
+        SELECT c.event_type, c.b,
+               COALESCE(LEAD(c.st) OVER w, e.lp_t) AS ct,
+               COALESCE(LEAD(c.sv) OVER w, e.lp_v) AS cv,
+               COALESCE(LEAD(c.c) OVER w, 1) AS cc
+        FROM cents c JOIN ends e USING (event_type)
+        WINDOW w AS (PARTITION BY c.event_type ORDER BY c.b)
     ),
-    prep AS (
-        SELECT pa.event_type, pa.pts, ca.cents,
-               fpd.t AS fp_t, fpd.v AS fp_v,
-               lpd.t AS lp_t, lpd.v AS lp_v
-        FROM pt_arr pa
-        JOIN cent_arr ca USING (event_type)
-        JOIN bounds bo USING (event_type)
-        JOIN daily fpd ON fpd.event_type = pa.event_type
-                      AND fpd.t = bo.t_lo
-        JOIN daily lpd ON lpd.event_type = pa.event_type
-                      AND lpd.t = bo.t_hi
+    pts AS (
+        SELECT m.event_type, m.b, m.t, m.v, th.ct, th.cv, th.cc
+        FROM mid m JOIN third th USING (event_type, b)
     ),
+    pick0 AS (SELECT *, fp_t AS at, fp_v AS av FROM ends),
     {_lttb_sql()}
-    SELECT event_type, u['sel_idx'] AS sel_idx,
-           u['t'] AS day_idx, u['v'] AS day_value
-    FROM (
-        SELECT event_type,
-               unnest([
-                   {{'sel_idx': CAST(0 AS BIGINT),
-                     'ok': CAST(0 AS BIGINT), 't': fp_t, 'v': fp_v}},
-                   {_LTTB_UNNEST},
-                   {{'sel_idx': CAST(9 AS BIGINT),
-                     'ok': CAST(0 AS BIGINT), 't': lp_t, 'v': lp_v}}
-               ]) AS u
-        FROM step7
-    )
-    WHERE u['ok'] >= 0
+    SELECT event_type, CAST(i AS BIGINT) AS sel_idx,
+           {_lttb_emit("t")} AS day_idx,
+           {_lttb_emit("v")} AS day_value
+    FROM pick8, range(10) r(i)
+    WHERE day_idx IS NOT NULL
     """,
 )
 def ts_lttb_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1185,13 +1185,9 @@ def sim_pq_adc_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "s", "code", _l2("qsv", "cv").alias("pd"))
     )
     n_corpus = en.count()  # one scalar to size the shortlist
-    # experiments/pq_shortlist_ab.py sweeps the recall dial through this
-    # env knob; unset (the normal path) it is exactly 10% with a 50 floor
-    _frac = os.environ.get("SPARK_GRAFT_PQ_SHORTLIST_FRAC")
-    if _frac is None:
-        shortlist = max(50, (n_corpus + 9) // 10)
-    else:
-        shortlist = max(1, int(float(_frac) * n_corpus + 0.999999))
+    # 10% of the corpus with a 50 floor: the recall-vs-shortlist curve
+    # behind this choice is in SCALE.md (PQ-ADC shortlist fraction)
+    shortlist = max(50, (n_corpus + 9) // 10)
     cand = (
         codes.join(F.broadcast(adc), ["s", "code"])
         .filter(F.col("query_id") != F.col("vec_id"))

@@ -9,7 +9,6 @@ pruning and (for the partitioned sink) partition pruning on read-back.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -18,20 +17,21 @@ from pyspark.sql import types as T
 from ..io import NARROW_SHUFFLE, load
 from ..registry import query
 from ..schemas import DOCUMENTS, EVENTS
+from ..streaming.runner import process_scratch
 from ._helpers import dsum, sql_dsum
 
-# fixed scratch root: side-effect queries overwrite their own subdir per
-# run.  Ephemeral (re-written every invocation, never read across runs),
-# so it lives on tmpfs when the box has one — the round-trip queries
-# measure serialization/layout work, not the durability of a throwaway
-# /tmp dir (r11; same policy as streaming.runner scratch_dir).  Override
-# with $SPARK_GRAFT_SCRATCH (set it to /tmp for the old layout); a real
-# lake's sinks are durable storage — this only relocates local scratch.
-_scratch_root = os.environ.get("SPARK_GRAFT_SCRATCH") or (
-    "/dev/shm" if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK)
-    else tempfile.gettempdir()
-)
-SCRATCH = os.path.join(_scratch_root, "cdp_spark_scratch")
+
+def scratch_path(name: str) -> str:
+    """Scratch path for a side-effect query's output, overwritten on
+    every run and never read across runs.  Under $SPARK_GRAFT_SCRATCH
+    when set; else under this process's private scratch dir
+    (``streaming.runner.process_scratch``: tmpfs when the box has one,
+    removed at exit), so concurrent processes never share it.  Resolved
+    per call, never at import, so a Python worker that unpickles a
+    function from this module creates no dir.  A real lake's sinks are
+    durable storage; this only places local scratch."""
+    root = os.environ.get("SPARK_GRAFT_SCRATCH") or process_scratch()
+    return os.path.join(root, "cdp_spark_scratch", name)
 
 
 @query("scan_parquet", oracle="SELECT * FROM lineitem")
@@ -62,7 +62,7 @@ def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns, so the read-back aggregate equals the direct aggregate —
     which makes the filesystem side effect fully ORACLE-CHECKABLE (a
     dropped or duplicated row would break the count)."""
-    path = os.path.join(SCRATCH, "csv_roundtrip")
+    path = scratch_path("csv_roundtrip")
     ev = load(spark, sf_dir, "events")
     (
         ev.write.mode("overwrite")
@@ -107,7 +107,7 @@ def scan_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     outnumber tasks by enough to matter)."""
     import shutil
 
-    bin_dir = os.path.join(SCRATCH, "binary_files")
+    bin_dir = scratch_path("binary_files")
     shutil.rmtree(bin_dir, ignore_errors=True)  # no stale blobs across runs
     os.makedirs(bin_dir, exist_ok=True)
     docs = (
@@ -172,7 +172,7 @@ def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition layout + partition pruning on read (reference: directory
     cache persist keyed by source).  Oracle-checked: the partitioned
     round trip must reproduce the direct filtered count exactly."""
-    path = os.path.join(SCRATCH, "sink_partitioned")
+    path = scratch_path("sink_partitioned")
     ev = load(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(path)
     back = spark.read.parquet(path).filter(F.col("event_type") == "purchase")
@@ -236,7 +236,7 @@ def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit-schema discipline as every reader: no footer sampling, plans
     stable.  Equality with the parquet-sourced aggregate is asserted in
     tests/test_edge_cases.py."""
-    path = os.path.join(SCRATCH, "orc_roundtrip")
+    path = scratch_path("orc_roundtrip")
     ev = load(spark, sf_dir, "events")
     ev.write.mode("overwrite").orc(path)
     back = spark.read.schema(EVENTS).orc(path)
@@ -272,7 +272,7 @@ def join_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sink_parquet_partitioned) needs the literal in the query; DPP
     covers the join-shaped version.  Broadcast of the dim doubles as
     the DPP value source, so the subquery costs one tiny scan."""
-    path = os.path.join(SCRATCH, "dpp_fact")
+    path = scratch_path("dpp_fact")
     ev = load(spark, sf_dir, "events").select("event_id", "value", "event_type")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(path)
     fact = spark.read.parquet(path)
@@ -378,8 +378,8 @@ def sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import glob
 
-    frag_path = os.path.join(SCRATCH, "compact_fragmented")
-    out_path = os.path.join(SCRATCH, "compact_done")
+    frag_path = scratch_path("compact_fragmented")
+    out_path = scratch_path("compact_done")
     d = load(spark, sf_dir, "documents")
     d.repartition(64).write.mode("overwrite").parquet(frag_path)
 
@@ -436,7 +436,7 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         WriterCommitMessage,
     )
 
-    out_dir = os.path.join(SCRATCH, "pyds_sink")
+    out_dir = scratch_path("pyds_sink")
     shutil.rmtree(out_dir, ignore_errors=True)
     os.makedirs(out_dir, exist_ok=True)
 
@@ -623,7 +623,7 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     else in this repo."""
     import shutil
 
-    root = os.path.join(SCRATCH, "schema_evolution")
+    root = scratch_path("schema_evolution")
     shutil.rmtree(root, ignore_errors=True)
     ev = load(spark, sf_dir, "events")
     v1 = ev.filter(F.col("event_id") % 2 == 0).select("event_id", "user_id")
@@ -706,7 +706,7 @@ def scan_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows shuffle nowhere (two-row aggregates).  At 100 TB the
     quarantine column writes to a side sink and bad-row RATE is the
     job health metric — this operator is that audit in miniature."""
-    path = os.path.join(SCRATCH, "csv_permissive")
+    path = scratch_path("csv_permissive")
     n = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     n.coalesce(1).write.mode("overwrite").options(header=False).csv(path)
     # inject malformed lines as their own shard file (deterministic)
@@ -842,7 +842,7 @@ def sink_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the read-back of dimension-sized tables like this one."""
     import shutil
 
-    db = os.path.join(SCRATCH, "jdbc_derby")
+    db = scratch_path("jdbc_derby")
     shutil.rmtree(db, ignore_errors=True)
     url = f"jdbc:derby:{db};create=true"
     props = {
@@ -905,8 +905,8 @@ def sink_positional_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     positions deterministically — the apply step never sees it, only
     (file, position) pairs — so the oracle checking "predicate-filtered
     orders" proves the positional machinery reproduced it exactly."""
-    base = os.path.join(SCRATCH, "posdel_base")
-    delf = os.path.join(SCRATCH, "posdel_deletes")
+    base = scratch_path("posdel_base")
+    delf = scratch_path("posdel_deletes")
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
@@ -962,7 +962,7 @@ def scan_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     three counters).  At 100 TB: text scans parallelize by line-split
     byte ranges exactly like CSV; the aggregate is one map-side-combined
     1-row reduction."""
-    path = os.path.join(SCRATCH, "text_roundtrip")
+    path = scratch_path("text_roundtrip")
     d = load(spark, sf_dir, "documents")
     d.select("text").write.mode("overwrite").text(path)
     back = spark.read.text(path)
@@ -1003,7 +1003,7 @@ def profile_parquet_footers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as pd
 
-    out = os.path.join(SCRATCH, "footer_profile")
+    out = scratch_path("footer_profile")
     ev = load(spark, sf_dir, "events")
     ev.repartition(8, "user_id").write.partitionBy("event_type").mode(
         "overwrite"
@@ -1062,7 +1062,7 @@ def scan_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
     losslessly at width 12.  At 100 TB: the text source splits by line
     like any other, the parse is map-only, and the fixed offsets come
     from a copybook-derived spec table rather than literals."""
-    path = os.path.join(SCRATCH, "fixed_width")
+    path = scratch_path("fixed_width")
     ev = load(spark, sf_dir, "events")
     line = F.concat(
         F.lpad(F.col("event_id").cast("string"), 12, " "),
@@ -1174,8 +1174,6 @@ def sink_csv_quoted_escapes(spark: SparkSession, sf_dir: str) -> DataFrame:
     CSV is the one format option that DISABLES file splitting (a file
     = a task), which is exactly why the writer shards output —
     documented trade, same as scan_csv_permissive."""
-    import tempfile
-
     d = load(spark, sf_dir, "documents")
     evil = F.concat(
         F.lit("pre,"),
@@ -1187,7 +1185,7 @@ def sink_csv_quoted_escapes(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lang"),
     )
     src = d.select("doc_id", evil.alias("evil"))
-    out = tempfile.mkdtemp(prefix="cdp_csv_evil_")
+    out = scratch_path("csv_evil")
     (
         src.write.mode("overwrite")
         .option("quoteAll", "true")
@@ -1307,7 +1305,7 @@ def scan_csv_gz_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
     correct shape: parallelism = file count.  Prefer zstd/parquet for
     anything produced in-house; this operator exists for the files you
     DIDN'T produce."""
-    path = os.path.join(SCRATCH, "csv_gz_codec")
+    path = scratch_path("csv_gz_codec")
     ev = load(spark, sf_dir, "events")
     (
         ev.write.mode("overwrite")
@@ -1355,7 +1353,7 @@ def scan_nested_struct_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the pack is one groupBy on the join key (arrays stay
     order-sized — bounded fan-in); nested parquet columns compress and
     prune like flat ones, and the explode is a narrow map-side op."""
-    path = os.path.join(SCRATCH, "nested_struct")
+    path = scratch_path("nested_struct")
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey",
@@ -1405,7 +1403,7 @@ def scan_recursive_directory(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: file listing is driver-side metadata work — at millions of
     files push listing into the catalog/manifest layer; the scan
     itself parallelizes per file split as usual."""
-    root = os.path.join(SCRATCH, "recursive_tree")
+    root = scratch_path("recursive_tree")
     ev = load(spark, sf_dir, "events")
     ev.filter(F.col("event_id") % 2 == 0).write.mode("overwrite").parquet(
         os.path.join(root, "shallow")
@@ -1454,7 +1452,7 @@ def scan_aggregate_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pushdown silently degrades to a normal scan when rows carry NULLs
     in the aggregated column or the grouping key isn't a partition
     column — the plan test, not this docstring, is the contract."""
-    path = os.path.join(SCRATCH, "agg_pushdown")
+    path = scratch_path("agg_pushdown")
     ev = load(spark, sf_dir, "events").select("event_id", "value", "event_type")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(path)
     # + 0.0 canonicalizes the IEEE signed zero: parquet footers may

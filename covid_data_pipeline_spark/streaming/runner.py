@@ -19,44 +19,39 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..io import _events_ts_is_nanos, table_path
 from ..schemas import EVENTS, EVENTS_RAW_NS
 
-_SCRATCH_BASE: str | None = None
+_PROCESS_SCRATCH: str | None = None
 
 
-def _scratch_base() -> str | None:
-    """Base dir for EPHEMERAL streaming scratch (checkpoints of
-    availableNow drains, throwaway feeds/sinks).  These dirs live for
-    one query invocation and are never re-read across runs, so their
-    durability is worthless — put them on tmpfs when the box has one
+def process_scratch() -> str:
+    """This process's private scratch dir for EPHEMERAL files, created
+    on first use and removed at exit.  On tmpfs when the box has one
     (r11 measurement: the HDFS-backed state store's per-partition
     delta+commit fsyncs cost ~1 s/run of stream_dedup_simhash on ext4
-    /tmp, 0 on /dev/shm).  PER-PROCESS and removed at exit (r11
-    advice): tmpfs scratch is RAM, and a shared fixed dir accumulated
-    across the ~400-query suite and across runs until reboot — the
-    per-pid base is rmtree'd atexit, after the lazily-read parquet
-    sink frames are dead with the session.  A REAL deployment's
-    checkpoints are restart-recovery state and belong on durable
-    storage — this knob only relocates local scratch; override with
-    $SPARK_GRAFT_STREAM_SCRATCH (set it to /tmp to get the old layout).
-    """
-    global _SCRATCH_BASE
-    base = os.environ.get("SPARK_GRAFT_STREAM_SCRATCH")
-    if base:
-        return base
-    if _SCRATCH_BASE:
-        return _SCRATCH_BASE
-    shm = "/dev/shm"
-    if os.path.isdir(shm) and os.access(shm, os.W_OK):
-        d = os.path.join(shm, f"cdp_stream_scratch.{os.getpid()}")
-        os.makedirs(d, exist_ok=True)
+    /tmp, 0 on /dev/shm), else under tempfile's default dir.
+    PER-PROCESS (r11 advice): tmpfs scratch is RAM, a shared fixed dir
+    accumulated across the ~400-query suite and across runs until
+    reboot, and concurrent processes raced on it.  The base is
+    rmtree'd atexit, after the lazily-read parquet sink frames are dead
+    with the session.  A REAL deployment's checkpoints and sinks are
+    durable state and belong on durable storage."""
+    global _PROCESS_SCRATCH
+    if _PROCESS_SCRATCH is None:
+        shm = "/dev/shm"
+        on_shm = os.path.isdir(shm) and os.access(shm, os.W_OK)
+        d = tempfile.mkdtemp(prefix="cdp_scratch_", dir=shm if on_shm else None)
         atexit.register(shutil.rmtree, d, ignore_errors=True)
-        _SCRATCH_BASE = d
-        return d
-    return None  # tempfile's default
+        _PROCESS_SCRATCH = d
+    return _PROCESS_SCRATCH
 
 
 def scratch_dir(prefix: str) -> str:
-    """mkdtemp for ephemeral streaming scratch (see _scratch_base)."""
-    return tempfile.mkdtemp(prefix=prefix, dir=_scratch_base())
+    """mkdtemp for streaming scratch (checkpoints of availableNow
+    drains, throwaway feeds/sinks): these dirs live for one query
+    invocation and are never re-read across runs.  Under
+    $SPARK_GRAFT_STREAM_SCRATCH when set (set it to /tmp to get the old
+    layout), else under process_scratch()."""
+    base = os.environ.get("SPARK_GRAFT_STREAM_SCRATCH") or process_scratch()
+    return tempfile.mkdtemp(prefix=prefix, dir=base)
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -66,7 +61,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the file stream source wants a directory: stream sf_dir itself,
     # glob-filtered down to the events table
     if _events_ts_is_nanos(table_path(sf_dir, "events")):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         raw = (
             spark.readStream.schema(EVENTS_RAW_NS)
             .option("pathGlobFilter", "events.parquet")

@@ -33,7 +33,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+import bench  # noqa: E402
 from covid_data_pipeline_spark.io import tune  # noqa: E402
+from covid_data_pipeline_spark.registry import load_all  # noqa: E402
 from covid_data_pipeline_spark.session import get_spark  # noqa: E402
 from covid_data_pipeline_spark.streaming import (  # noqa: E402
     read_events_stream,
@@ -93,17 +95,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     tune(spark)
 
-    # warm the streaming machinery (as bench.py does)
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as ckpt:
-        wq = (
-            spark.readStream.format("rate").option("rowsPerSecond", "1").load()
-            .writeStream.format("noop").trigger(availableNow=True)
-            .option("checkpointLocation", ckpt).start()
-        )
-        wq.awaitTermination(30)
-        wq.stop()
+    bench.warm_up(spark, load_all(), SF_DIR)
 
     def mk():
         # stream_session's transform: sessionization via applyInPandasWithState

@@ -11,6 +11,7 @@ clean: 236/236 at sf0.1.
 
 Run: python experiments/oracle_sweep.py            (~16 min at sf0.1)
      SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 python experiments/oracle_sweep.py
+     python experiments/oracle_sweep.py q1 q2 ...   (only the named queries)
 """
 
 from __future__ import annotations
@@ -34,21 +35,22 @@ def main() -> int:
     spark = get_spark("oracle-sweep")
     con = make_duck(SF_DIR)
     reg = load_all()
+    names = sys.argv[1:] or list(reg)
     npass = nfail = 0
     t0 = time.time()
-    for i, (name, spec) in enumerate(reg.items()):
+    for i, name in enumerate(names):
         try:
-            run_compare(name, spec, spark, con, SF_DIR)
+            run_compare(name, reg[name], spark, con, SF_DIR)
             npass += 1
         except Exception:
             nfail += 1
             print(f"FAIL {name}", flush=True)
             traceback.print_exc(limit=3)
         if (i + 1) % 25 == 0:
-            print(f"  ...{i + 1}/{len(reg)} ({time.time() - t0:.0f}s)", flush=True)
+            print(f"  ...{i + 1}/{len(names)} ({time.time() - t0:.0f}s)", flush=True)
     print(
         f"sweep {os.path.basename(SF_DIR)}: {npass} pass, {nfail} fail"
-        f" of {len(reg)} in {time.time() - t0:.0f}s",
+        f" of {len(names)} in {time.time() - t0:.0f}s",
         flush=True,
     )
     return 1 if nfail else 0

@@ -7,6 +7,7 @@ returned DataFrame later) and ends at the next registered call."""
 from __future__ import annotations
 
 import importlib
+import inspect
 import pathlib
 import re
 
@@ -43,15 +44,24 @@ def test_override_lasts_until_next_registered_call(spark):
 
 
 def test_query_modules_never_write_session_conf():
-    """Source guard: conf changes go through ``@query(conf=...)`` only."""
-    qdir = pathlib.Path(registry.__file__).parent / "queries"
-    pat = re.compile(r"\btune\(|spark\.conf\.(set|unset)\b")
-    hits = [
-        f"{path.name}:{n}: {line.strip()}"
-        for path in sorted(qdir.glob("*.py"))
-        for n, line in enumerate(path.read_text().splitlines(), 1)
-        if pat.search(line)
-    ]
+    """Source guard: ``io.tune`` is the package's one writer of session
+    conf; queries change it only through ``@query(conf=...)``, never by
+    calling ``tune`` themselves."""
+    pkg = pathlib.Path(registry.__file__).parent
+    writes = re.compile(r"\.conf\.(set|unset)\b")
+    calls_tune = re.compile(r"\btune\(")
+    hits = []
+    for path in sorted(pkg.rglob("*.py")):
+        text = path.read_text()
+        if path == pkg / "io.py":
+            assert inspect.getsource(tune) in text
+            text = text.replace(inspect.getsource(tune), "")
+        hits += [
+            f"{path.relative_to(pkg)}: {line.strip()}"
+            for line in text.splitlines()
+            if writes.search(line)
+            or (path.parent.name == "queries" and calls_tune.search(line))
+        ]
     assert not hits, hits
 
 
@@ -70,3 +80,40 @@ def test_load_all_raises_on_missing_query_module(monkeypatch):
     monkeypatch.setattr(registry.importlib, "import_module", import_module)
     with pytest.raises(ModuleNotFoundError, match="queries.training"):
         load_all()
+
+
+def test_nanos_events_read_as_the_same_micros_rows(spark, tmp_path):
+    """The TIMESTAMP(NANOS) branch of ``io.load`` and
+    ``read_events_stream``: with only tune()'s baseline conf, a
+    nanos-written events file reads, batch and streaming, as exactly
+    the rows of the same events written in µs."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from covid_data_pipeline_spark.io import load
+    from covid_data_pipeline_spark.streaming import (
+        read_events_stream,
+        run_available_now,
+    )
+
+    micros = pq.read_table(f"{SF_SMOKE}/events.parquet").slice(0, 200)
+    ts = micros.schema.get_field_index("ts")
+    nanos = micros.set_column(ts, "ts", micros["ts"].cast(pa.timestamp("ns")))
+    rows = {}
+    for unit, table in (("us", micros), ("ns", nanos)):
+        path = tmp_path / unit / "events.parquet"
+        path.parent.mkdir()
+        pq.write_table(table, path)
+        assert pq.read_schema(path).field("ts").type.unit == unit
+        tune(spark)
+        sf_dir = str(path.parent)
+        stream = read_events_stream(spark, sf_dir)
+        rows[unit] = [
+            sorted(df.collect(), key=lambda r: r.event_id)
+            for df in (
+                load(spark, sf_dir, "events"),
+                run_available_now(stream, output_mode="append"),
+            )
+        ]
+    assert rows["us"][0] == rows["us"][1]
+    assert rows["ns"] == rows["us"]

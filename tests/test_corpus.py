@@ -129,19 +129,50 @@ def test_compact_small_files_reduces_file_count(spark):
     assert row["n_rows"] == d.count()  # compaction loses nothing
 
 
+def test_scan_scratch_is_per_process_and_removed_at_exit(tmp_path):
+    """Side-effect queries write under scans.scratch_path: by default a
+    dir private to the process and gone once it exits, so concurrent
+    runs never share one; under $SPARK_GRAFT_SCRATCH the path is
+    exactly $SPARK_GRAFT_SCRATCH/cdp_spark_scratch/<name>."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import os\n"
+        "from covid_data_pipeline_spark.queries.scans import scratch_path\n"
+        "p = scratch_path('probe'); os.makedirs(p); print(p)\n"
+    )
+    env = {k: v for k, v in os.environ.items() if "SPARK_GRAFT_" not in k}
+
+    def probe():
+        return subprocess.run(
+            [sys.executable, "-c", code],
+            env=env, cwd=repo, capture_output=True, text=True, check=True,
+        ).stdout.strip()
+
+    first, second = probe(), probe()
+    assert first != second
+    for path in (first, second):
+        base, tail = path.split(os.sep + "cdp_spark_scratch" + os.sep)
+        assert tail == "probe"
+        assert not os.path.exists(base), f"{base} outlived its process"
+    env["SPARK_GRAFT_SCRATCH"] = str(tmp_path)
+    assert probe() == os.path.join(str(tmp_path), "cdp_spark_scratch", "probe")
+
+
 def test_positional_delete_spans_multiple_files(spark):
     """The deletion-vector mechanics must be exercised across file
     boundaries: the base table is written as multiple parquet files and
     the persisted delete file must reference more than one distinct
     data-file path — otherwise the (file_path, row_pos) compound key
     degenerates to a row-number check on a single file."""
-    import os
-
-    from covid_data_pipeline_spark.queries.scans import SCRATCH
+    from covid_data_pipeline_spark.queries.scans import scratch_path
 
     reg = load_all()
     reg["sink_positional_delete"].fn(spark, SF_ORACLE).collect()
-    deletes = spark.read.parquet(os.path.join(SCRATCH, "posdel_deletes"))
+    deletes = spark.read.parquet(scratch_path("posdel_deletes"))
     n_files = deletes.select("file_path").distinct().count()
     n_pos = deletes.count()
     assert n_files > 1, f"delete file references only {n_files} data file"

@@ -27,7 +27,7 @@ from covid_data_pipeline_spark.queries.corpus import (
 )
 from covid_data_pipeline_spark.registry import load_all
 
-from .conftest import SF_SMOKE
+from .conftest import SF_ORACLE, SF_SMOKE
 from .oracle_harness import run_compare
 
 
@@ -225,6 +225,65 @@ def test_lttb_empty_buckets_carry_anchor_and_drop_seed(spark, tmp_path):
     real = {(0, 2), (1, 5), (2, 1), (3, 4), (4, 2)}
     got_pts = {(r["day_idx"] - 31, r["day_value"]) for r in rows}
     assert got_pts <= real, got_pts
+
+
+def _lttb_reference(series: dict[int, int]) -> set[tuple[int, int, int]]:
+    """Plain-Python LTTB over one {day: count} series, same contract as
+    ts_lttb_downsample: 8 buckets by rank, the third point is the next
+    non-empty bucket's centroid (else the last point), integer areas,
+    ties keep the earliest day, empty buckets emit nothing."""
+    days = sorted(series)
+    n, first, last = len(days), days[0], days[-1]
+    buckets: dict[int, list[int]] = {}
+    for rk, t in enumerate(days[1:-1]):
+        buckets.setdefault(rk * 8 // (n - 2), []).append(t)
+    out = {(0, first, series[first]), (9, last, series[last])}
+    at, av = first, series[first]
+    for k in range(8):
+        later = [j for j in range(k + 1, 8) if j in buckets]
+        if later:
+            b = buckets[later[0]]
+            ct, cv, cc = sum(b), sum(series[t] for t in b), len(b)
+        else:
+            ct, cv, cc = last, series[last], 1
+        best, pick = -1, None
+        for t in buckets.get(k, []):
+            v = series[t]
+            area = abs((at * cc - ct) * (v - av) - (at - t) * (cv - av * cc))
+            if area > best:
+                best, pick = area, t
+        if pick is not None:
+            at, av = pick, series[pick]
+            out.add((k + 1, at, av))
+    return out
+
+
+def test_lttb_matches_python_reference(spark, duck):
+    """Spark and the DuckDB oracle both equal an independent pure-Python
+    LTTB at sf0.01 (DuckDB 1.0.0 once returned fold seeds and
+    thread-count-dependent picks here while agreeing with nothing)."""
+    from collections import Counter
+
+    spec = load_all()["ts_lttb_downsample"]
+    daily = Counter(
+        (r[0], r[1])
+        for r in duck.execute(
+            "SELECT event_type, datediff('day', DATE '2024-01-01', "
+            "CAST(ts AS DATE)) FROM events"
+        ).fetchall()
+    )
+    want = {
+        (et, *pt)
+        for et in {et for et, _ in daily}
+        for pt in _lttb_reference({t: v for (e, t), v in daily.items() if e == et})
+    }
+    got_spark = {
+        (r["event_type"], r["sel_idx"], r["day_idx"], r["day_value"])
+        for r in spec.fn(spark, SF_ORACLE).collect()
+    }
+    got_duck = set(duck.execute(spec.oracle).fetchall())
+    assert got_spark == want
+    assert got_duck == want
 
 
 def test_cramers_v_includes_zero_observed_cells(spark, tmp_path):
