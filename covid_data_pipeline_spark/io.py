@@ -57,10 +57,10 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy scan of one fixture table with its explicit schema.
 
     ``events.ts`` needs a footer sniff: when stored as TIMESTAMP(NANOS)
-    (which Spark's reader rejects) we read epoch-nanos int64 (the legacy
-    nanosAsLong conf, set in tune()'s baseline) and truncate ns -> µs,
-    matching DuckDB's TIMESTAMP_NS -> TIMESTAMP cast; when stored as µs
-    it reads directly.
+    (which Spark's reader rejects as a timestamp) we read it as epoch-nanos
+    int64 through the explicit ``EVENTS_RAW_NS`` schema and truncate
+    ns -> µs, matching DuckDB's TIMESTAMP_NS -> TIMESTAMP cast; when
+    stored as µs it reads directly.
     """
     if name not in SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {sorted(SCHEMAS)}")
@@ -105,25 +105,24 @@ def tune(spark: SparkSession, conf: Mapping[str, str] | None = None) -> SparkSes
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.session.timeZone": "UTC",
         # lake write default: zstd strictly dominated snappy/gzip/raw on
-        # size AND write AND scan in experiments/codec_ab.py (SCALE.md)
+        # size AND write AND scan (SCALE.md "Measured: parquet codec
+        # trade", ea6ce32:experiments/codec_ab.py)
         "spark.sql.parquet.compression.codec": "zstd",
         # Spark's defaults, named so a query that overrides them
         # (join_bloom_runtime, join_shuffle_hash) is reset explicitly
         "spark.sql.autoBroadcastJoinThreshold": "10MB",
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold":
             "10GB",
-        # TIMESTAMP(NANOS) parquet columns read as epoch-nanos int64
-        # (load / read_events_stream truncate them to µs); no other
-        # column type is affected
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
     }
-    try:
-        for key, value in baseline.items():
-            spark.conf.set(key, value)
-        for key in QUERY_CONF_KEYS - baseline.keys():
-            spark.conf.unset(key)
-    except Exception:  # conf locked down — proceed with session defaults
-        pass
-    for key, value in (conf or {}).items():
-        spark.conf.set(key, value)
+    # a query that cannot get its conf must not run on whatever the
+    # session holds: a failed write raises, naming the key (None unsets)
+    unset = dict.fromkeys(QUERY_CONF_KEYS - baseline.keys())
+    for key, value in {**baseline, **unset, **(conf or {})}.items():
+        try:
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+        except Exception as e:
+            raise RuntimeError(f"tune: cannot write session conf {key!r}") from e
     return spark

@@ -42,13 +42,15 @@ micro-unit remainders — primitive, codegen-friendly, exact):
   true value has <= 6 dp), and cast to double via the same
   ``BigDecimal.doubleValue`` the old path's final cast used.
 
-Bit-equality old-vs-new is proven in
-``experiments/opt_r12_decimal_kernel_ab.py`` (per-row micros vs the
-string-rounding reference and whole-group double bits, over 368k
-adversarial rows: random bit patterns, dyadic .5 ties, boundary-stress
-values at ``(m+0.5)/1e6``, subnormals, ±0.0, NaN/Inf/NULL, all-null
-groups) and pinned by ``tests/test_helpers_decimal_kernel.py``; the
-full oracle sweep re-verified at both SFs in round 12.
+Bit-equality old-vs-new was proven in round 12 over 368k adversarial
+rows (OPTIMIZATION_r12.md "Inherited state" item 2,
+``ea6ce32:experiments/opt_r12_decimal_kernel_ab.py``: per-row micros vs
+the string-rounding reference and whole-group double bits over random
+bit patterns, dyadic .5 ties, boundary-stress values at
+``(m+0.5)/1e6``, subnormals, ±0.0, NaN/Inf/NULL, all-null groups); the
+same input families, at a few hundred to a few thousand rows each, are
+pinned by ``tests/test_helpers_decimal_kernel.py``; the full oracle
+sweep re-verified at both SFs in round 12.
 
 Overflow bounds (documented, not checked — same posture as the old
 path's decimal(38,6) sum): per group, |sum(x)| < 9.2e18 (the units

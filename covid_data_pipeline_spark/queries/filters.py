@@ -187,7 +187,8 @@ def sql_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     same plan: Spark's InferWindowGroupLimit gives the row_number()<=k
     spelling the identical partial+final WindowGroupLimit, so this rung
     proves API-surface parity, not a win over the hand-tuned window
-    (experiments/lateral_grouplimit_ab.py)."""
+    (SCALE.md "Round-5 additions", MEASURED CORRECTION;
+    ea6ce32:experiments/lateral_grouplimit_ab.py)."""
     load(spark, sf_dir, "customer").createOrReplaceTempView("lat_customer")
     load(spark, sf_dir, "orders").createOrReplaceTempView("lat_orders")
     return spark.sql(

@@ -476,10 +476,11 @@ def simhash_projection(d: "DataFrame") -> "DataFrame":
 # ham<=3 pairs (k+1 bands catch hamming<=k; the standard LSH-banding
 # guarantee).  Contrast with the 2x13 banding dedup_cluster_cc uses
 # (recall only guaranteed at ham<=1; measured 0.36 for ham<=3 on this
-# corpus — a balanced 2-band split is the recall MINIMUM, see
-# experiments/simhash_band_sweep.py): the clustering op trades recall
-# for 10.7x fewer candidates, the streaming dedup op wants the exact
-# semantic.
+# corpus — a balanced 2-band split is the recall MINIMUM, see SCALE.md
+# "Measured: simhash band geometry",
+# ea6ce32:experiments/simhash_band_sweep.py): the clustering op trades
+# recall for 10.7x fewer candidates, the streaming dedup op wants the
+# exact semantic.
 SIMHASH_BANDS_HAM3 = ((0, 7), (7, 7), (14, 6), (20, 6))
 
 

@@ -35,9 +35,10 @@ def _corpus_par(spark: SparkSession, sf_dir: str, name: str = "embeddings") -> i
     the cluster's defaultParallelism.  At fixture scale (a ~1 MB corpus)
     this is 8 — defaultParallelism-wide repartitions meant 32 near-empty
     tasks per stage across the ~12 sequential stages of the PQ/Lloyd
-    pipelines, pure scheduling overhead (measured in
-    experiments/opt_r12_pq_decompose.py); at 100 TB the byte term
-    dominates and the cap keeps it at cluster width."""
+    pipelines, pure scheduling overhead (measured: OPTIMIZATION_r12.md
+    "sim_pq_adc_rerank / dedup_semdedup_kmeans / sim_kmeans_lloyd",
+    ea6ce32:experiments/opt_r12_pq_decompose.py); at 100 TB the byte
+    term dominates and the cap keeps it at cluster width."""
     p = table_path(sf_dir, name)
     if os.path.isdir(p):
         size = sum(
@@ -79,11 +80,12 @@ def _vec(col: str) -> Column:
 
 def _dot(a: Column | str, b: Column | str) -> Column:
     # NB (r11 optimization round): an unrolled 64-term getItem chain was
-    # A/B'd against this fold (experiments/opt_r11_hof_ab.py) and was
-    # NOT faster (1.10 s vs 0.74 s on the repartitioned pair scorer) —
-    # the wins are per-row norms and probe-side repartition, not the
-    # fold itself.  Keep the HOF form: one array reference per operand
-    # is also what keeps CollapseProject inlining harmless.
+    # A/B'd against this fold (OPTIMIZATION_r11.md "Batch 1",
+    # ea6ce32:experiments/opt_r11_hof_ab.py) and was NOT faster (1.10 s
+    # vs 0.74 s on the repartitioned pair scorer) — the wins are per-row
+    # norms and probe-side repartition, not the fold itself.  Keep the
+    # HOF form: one array reference per operand is also what keeps
+    # CollapseProject inlining harmless.
     prods = F.zip_with(a, b, lambda x, y: x * y)
     return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
 
@@ -117,7 +119,8 @@ def sim_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the pair join — the join boundary stops CollapseProject from
     re-inlining the fold per PAIR, so no explicit barrier is needed
     (one fold per pair instead of three; measured A/B in
-    experiments/opt_r11_hof_ab.py: 3.95 -> 0.74 s).  cos values are
+    OPTIMIZATION_r11.md "Batch 1", ea6ce32:experiments/opt_r11_hof_ab.py:
+    3.95 -> 0.74 s).  cos values are
     bit-identical: same IEEE ops in the same order, just evaluated once
     per row instead of once per pair."""
     par = spark.sparkContext.defaultParallelism
@@ -426,16 +429,16 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     original and the k+1M copy, making the MIN(a_id) canonicalization do
     real work instead of passing through a single pair."""
     en = _emb_dedup_corpus(spark, sf_dir)
-    # r12 (guide §2.5/§3.1): the block key has only 10 distinct values,
-    # so the shuffled pair join put each label's quadratic enumeration on
-    # ONE task (<=10 of 32 busy) — and label-salting cannot apply (label
-    # IS the block).  Broadcasting the ~1 MB build side keeps the
-    # streamed side's even data-sized partitioning, so all tasks
-    # enumerate pairs; the checkpoint runs normalize once instead of per
-    # join side.  Identical pair multiset (equi-join strategy), 3.61 ->
-    # 1.61 s interleaved median.  At 100 TB the block side outgrows
-    # broadcast and the block key is an LSH/IVF bucket id with far more
-    # distinct values — the shuffled join returns and partitions evenly.
+    # r12 (guide §2.5): the pair join was already a broadcast (the ~1 MB
+    # build side is under autoBroadcastJoinThreshold), but each join side
+    # re-ran the seed + normalize lineage over three scans of the
+    # single-file corpus, so the streamed side ran one task per scan.
+    # The checkpoint runs normalize once for both sides, at _corpus_par
+    # width, so every task enumerates pairs (OPTIMIZATION_r12.md
+    # "dedup_embedding_cosine").  Identical pair multiset, 3.61 -> 1.61 s
+    # interleaved median.  At 100 TB the block side outgrows broadcast
+    # and the block key is an LSH/IVF bucket id with far more distinct
+    # values — the shuffled join returns and partitions evenly.
     en = en.repartition(_corpus_par(spark, sf_dir), "vec_id").localCheckpoint(
         eager=False
     )
@@ -1115,7 +1118,8 @@ def sim_pq_adc_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s", "code", F.col("sv").alias("cv")
     )
 
-    # r12 (guide §2.4, experiments/opt_r12_pq_decompose.py): each round
+    # r12 (guide §2.4; OPTIMIZATION_r12.md "sim_pq_adc_rerank / ...",
+    # ea6ce32:experiments/opt_r12_pq_decompose.py): each round
     # was 3 exchanges — a 16x broadcast-join row blowup feeding a
     # groupBy(vec, s) argmin, a posexplode, and a two-level means
     # rollup — and at 2000 corpus vectors the pipeline's ~9 s was pure

@@ -2713,7 +2713,8 @@ def pipeline_merged_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (AQE dedupes only shuffle subtrees, and few here qualify — the r8
     # union lesson).  admitted is increment-sized (a day's data), so a
     # lazy localCheckpoint materializes it once.  Paired A/B at sf0.1
-    # (experiments/r10_snapshot_checkpoint_ab.py): medians 0.87 vs
+    # (SCALE.md "Round 9 additions", pipeline_merged_snapshot;
+    # ea6ce32:experiments/r10_snapshot_checkpoint_ab.py): medians 0.87 vs
     # 0.79 s — the checkpoint LOSES at fixture scale, where every scan
     # is milliseconds and its constant overhead dominates; it is kept
     # because the duplicated arm's re-executed work includes the

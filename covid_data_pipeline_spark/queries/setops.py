@@ -178,7 +178,8 @@ def sql_recursive_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the distinct exchange.  Materialize the 2k-row user set once;
     # every level then joins against the in-memory RDD.  Identical row
     # set (it IS the same distinct), oracle hash unchanged; 2.41 ->
-    # 1.54 s interleaved median (experiments/opt_r12_recursive_ab.py).
+    # 1.54 s interleaved median (OPTIMIZATION_r12.md
+    # "sql_recursive_hierarchy", ea6ce32:experiments/opt_r12_recursive_ab.py).
     ev.select("user_id").distinct().localCheckpoint(
         eager=False
     ).createOrReplaceTempView("rc_users")

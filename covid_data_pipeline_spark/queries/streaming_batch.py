@@ -576,8 +576,9 @@ def stream_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     filed in those buckets (transforms.stateful_simhash_band_dedup);
     each pair is emitted the moment its second document arrives.  The
     first cut used 2x13 LSH bands — measured recall for ham<=3 was only
-    0.36 (a balanced 2-band split is the recall minimum,
-    experiments/simhash_band_sweep.py), which is fine for a clustering
+    0.36 (a balanced 2-band split is the recall minimum; SCALE.md
+    "Measured: simhash band geometry",
+    ea6ce32:experiments/simhash_band_sweep.py), which is fine for a clustering
     heuristic but wrong for a dedup gate; 4 bands buy exactness for
     10.7x the candidate volume (242k -> 2.58M comparisons at sf0.1,
     absorbed by the vectorized XOR+popcount).

@@ -717,8 +717,9 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "id", "n", (F.lit(1.0) / F.col("n")).alias("pr")
     )
     q = float(_PR_Q)
-    # r12 loop restructure (guide §3.1/§3.3, A/B in
-    # experiments/opt_r12_pagerank_ab.py): pr_{k+1} references pr_k TWICE
+    # r12 loop restructure (guide §3.1/§3.3, A/B in OPTIMIZATION_r12.md
+    # "graph_pagerank", ea6ce32:experiments/opt_r12_pagerank_ab.py):
+    # pr_{k+1} references pr_k TWICE
     # (contrib + the update join's left side), so without truncation the
     # unrolled plan replays pr_0's subtree 2^ITERS times, each replay
     # re-running edge-sized SortMergeJoins (the before-plan's 50
@@ -773,7 +774,8 @@ def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         # one exchange and the join itself adds none.  Explicit
         # repartitions are exempt from AQE coalescing (the r11 idiom).
         # A/B at sf0.1: projection 3.17 -> 2.06 s median
-        # (experiments/opt_r12_wedge_decompose.py).
+        # (OPTIMIZATION_r12.md "graph wedge family",
+        # ea6ce32:experiments/opt_r12_wedge_decompose.py).
         .repartition(spark.sparkContext.defaultParallelism, "c")
     )
     a = sc.select(F.col("s").alias("s1"), "c")

@@ -320,7 +320,8 @@ def kmeans_lloyd(
     Shuffle width: every post-scan stage here is MODEL-sized (one row
     per vector -> k x dim cells), so the loop runs NARROW regardless of
     core count (the caller's ``conf``: sim_kmeans_lloyd registers
-    NARROW_SHUFFLE) — experiments/cpu_scaling.py measured the wide
+    NARROW_SHUFFLE) — SCALE.md "Measured: strong scaling across core
+    counts" (ea6ce32:experiments/cpu_scaling.py) measured the wide
     version scaling NEGATIVELY (3.12 s at 4c -> 3.92 s at 32c).  Narrowing
     recovers only part of that (3.9 -> 3.7 s at 32c, measured): the
     remaining latency is per-ROUND fixed cost — a centroid broadcast
@@ -339,7 +340,8 @@ def kmeans_lloyd(
         )
         # narrow the CACHED corpus too: each iteration maps it 2-3 times,
         # and at fixture scale 32 near-empty tasks per map stage per
-        # round is pure scheduling overhead (cpu_scaling.py) — size
+        # round is pure scheduling overhead (SCALE.md "Measured: strong
+        # scaling across core counts") — size
         # partitions to data, not cores
         .coalesce(8)
         .cache()

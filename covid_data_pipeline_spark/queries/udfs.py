@@ -256,7 +256,8 @@ def _cogroup_merge(key, orders_t, events_t):
     ``applyInPandas`` — the merge logic is unchanged, but each group's
     payload is an Arrow buffer slice instead of a pandas BlockManager
     build, which is where ~70% of the old per-group ~1.5 ms went
-    (A/B: experiments/opt_r12_cogroup_ab.py, 3.78 -> 1.13 s at sf0.1,
+    (A/B: OPTIMIZATION_r12.md "Inherited state" item 5,
+    ea6ce32:experiments/opt_r12_cogroup_ab.py, 3.78 -> 1.13 s at sf0.1,
     identical 14,999 rows)."""
     import pyarrow as pa
     import pyarrow.compute as pc

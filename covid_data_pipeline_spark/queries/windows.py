@@ -762,8 +762,9 @@ def win_moving_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _rolling_bitmap_lazy(ev: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Build (persisted daily-bitmap partials, lazy result) for
     win_rolling_bitmap_distinct from an events-shaped frame — shared
-    with experiments/rolling_distinct_ab.py so the A/B always measures
-    the shipped formulation.  Caller owns unpersisting the first
+    with the A/B in SCALE.md "Measured: rolling-distinct bitmap window vs
+    naive range join" (ea6ce32:experiments/rolling_distinct_ab.py) so it
+    always measures the shipped formulation.  Caller owns unpersisting the first
     element after consuming the second."""
     epoch = F.lit("1992-01-01").cast("date")
     daily = (

@@ -95,10 +95,10 @@ EVENTS = T.StructType(
 )
 
 # Physical read schema for events: the parquet column is TIMESTAMP(NANOS),
-# which Spark's parquet reader rejects outright; with
-# spark.sql.legacy.parquet.nanosAsLong it surfaces as epoch-nanos int64,
-# and io.load converts ns -> µs (truncating, exactly like DuckDB's
-# TIMESTAMP_NS -> TIMESTAMP cast, so oracle parity holds).
+# which Spark's parquet reader rejects as a timestamp; read through this
+# schema it surfaces as epoch-nanos int64, and io.load converts ns -> µs
+# (truncating, exactly like DuckDB's TIMESTAMP_NS -> TIMESTAMP cast, so
+# oracle parity holds).
 EVENTS_RAW_NS = T.StructType(
     [
         T.StructField("event_id", T.LongType()),

@@ -22,6 +22,7 @@ texts disjoint, so duplicate DENSITY is held constant — the property a
 scaling measurement needs.
 
 Run: python experiments/scaling_curve.py   (~6-8 min, local[32])
+     SPARK_GRAFT_SF_DIR=<testdata>/sf0.01 python experiments/scaling_curve.py
 """
 
 from __future__ import annotations
@@ -34,12 +35,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from oracle_sweep import SF_DIR  # noqa: E402  ($SPARK_GRAFT_SF_DIR, default sf0.1)
 from pyspark.sql import functions as F  # noqa: E402
 
+import bench  # noqa: E402
 from covid_data_pipeline_spark.registry import load_all  # noqa: E402
 from covid_data_pipeline_spark.session import get_spark  # noqa: E402
 
-BASE = "/root/testdata/sf0.1"
 REPL = 10
 QUERIES = (
     "agg_groupby",
@@ -71,7 +73,7 @@ EXTRA = {"lineitem": {"l_suppkey": 100_000, "l_partkey": 1_000_000}}
 
 def build_10x(spark, out_dir: str) -> None:
     for t, shifts in SHIFTS.items():
-        df = spark.read.parquet(os.path.join(BASE, f"{t}.parquet"))
+        df = spark.read.parquet(os.path.join(SF_DIR, f"{t}.parquet"))
         if not shifts and t in ("region", "nation"):
             df.write.mode("overwrite").parquet(os.path.join(out_dir, f"{t}.parquet"))
             continue
@@ -96,25 +98,26 @@ def build_10x(spark, out_dir: str) -> None:
 def main() -> None:
     spark = get_spark("scaling-curve")
     out = tempfile.mkdtemp(prefix="sfx10_")
-    t0 = time.time()
-    build_10x(spark, out)
-    print(f"built 10x slice in {int(time.time() - t0)}s at {out}")
-    reg = load_all()
-    # warm-up
-    reg["agg_groupby"].fn(spark, BASE).collect()
-    print(f"{'query':28s} {'1x (s)':>8s} {'10x (s)':>8s} {'ratio':>6s}")
-    for name in QUERIES:
-        t1 = time.time()
-        reg[name].fn(spark, BASE).collect()
-        base_s = time.time() - t1
-        t2 = time.time()
-        reg[name].fn(spark, out).collect()
-        big_s = time.time() - t2
-        print(
-            f"{name:28s} {base_s:8.2f} {big_s:8.2f} {big_s / base_s:6.1f}x"
-        )
-    shutil.rmtree(out, ignore_errors=True)
-    spark.stop()
+    try:
+        t0 = time.time()
+        build_10x(spark, out)
+        print(f"built 10x slice in {int(time.time() - t0)}s at {out}")
+        reg = load_all()
+        bench.warm_up(spark, reg, SF_DIR)
+        print(f"{'query':28s} {'1x (s)':>8s} {'10x (s)':>8s} {'ratio':>6s}")
+        for name in QUERIES:
+            t1 = time.time()
+            reg[name].fn(spark, SF_DIR).collect()
+            base_s = time.time() - t1
+            t2 = time.time()
+            reg[name].fn(spark, out).collect()
+            big_s = time.time() - t2
+            print(
+                f"{name:28s} {base_s:8.2f} {big_s:8.2f} {big_s / base_s:6.1f}x"
+            )
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+        spark.stop()
 
 
 if __name__ == "__main__":

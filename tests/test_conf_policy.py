@@ -10,6 +10,7 @@ import importlib
 import inspect
 import pathlib
 import re
+import types
 
 import pytest
 
@@ -63,6 +64,22 @@ def test_query_modules_never_write_session_conf():
             or (path.parent.name == "queries" and calls_tune.search(line))
         ]
     assert not hits, hits
+
+
+def test_tune_raises_naming_the_key_it_cannot_write():
+    """A query whose conf cannot be written must not run on whatever the
+    session holds: ``tune`` raises, and the message names the key."""
+    locked = "spark.sql.session.timeZone"
+
+    def set_conf(key, value):
+        if key == locked:
+            raise RuntimeError("conf is read-only")
+
+    fake = types.SimpleNamespace(
+        conf=types.SimpleNamespace(set=set_conf, unset=lambda key: None)
+    )
+    with pytest.raises(RuntimeError, match=re.escape(repr(locked))):
+        tune(fake)
 
 
 def test_load_all_raises_on_missing_query_module(monkeypatch):

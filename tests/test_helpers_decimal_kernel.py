@@ -3,21 +3,24 @@
 ``_helpers.dsum``/``davg`` replaced ``SUM(CAST(x AS DECIMAL(28,6)))``
 with a two-long split sum (module doc in _helpers.py).  These tests pin
 bit-equality against the old formulation on adversarial inputs — any
-drift here is an oracle-hash break across ~380 queries.  The full sweep
-(368k rows, 7 input families) lives in
-experiments/opt_r12_decimal_kernel_ab.py; this is the fast regression
-subset.
+drift here is an oracle-hash break across ~380 queries — and pin each
+row's micro-units against Python's exact string-based HALF_UP rounding.
+The input families are those of the r12 sweep (OPTIMIZATION_r12.md
+"Inherited state"; 368k rows in
+`ea6ce32:experiments/opt_r12_decimal_kernel_ab.py`) at a few hundred to a
+few thousand rows each.
 """
 
 from __future__ import annotations
 
 import random
 import struct
+from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
 from pyspark.sql import functions as F
 
-from covid_data_pipeline_spark.queries._helpers import DEC, davg, dsum
+from covid_data_pipeline_spark.queries._helpers import DEC, _micro, davg, dsum
 
 
 def _old_dsum(c):
@@ -46,13 +49,24 @@ def _adversarial_values():
         / 128.0
         for _ in range(1500)
     ]
+    # dyadic odd / 2^e, e = 1..7: exact .5 ties or exact ints at 6dp
+    for e in range(1, 8):
+        vals += [
+            (2 * rnd.randrange(1, 1 << 30) + 1) / float(1 << e) for _ in range(50)
+        ]
     # boundary-stress: nearest double to (m + 0.5) micro units — where
     # string-based and binary-exact rounding can disagree
     for _ in range(1500):
         m = rnd.randrange(1, int(4.3e15))
         vals.append((1 if rnd.random() < 0.5 else -1) * (m + 0.5) / 1e6)
-    # fast-path edge, tiny, and exact specials
+    # fast-path edge, the double-exactness edge 2^52/1e6, the decimal(18,6)
+    # domain edge, tiny, and exact specials
     vals += [4.4e9 * (1 - rnd.random() * 1e-9) for _ in range(100)]
+    for edge in (2.0**52 / 1e6, 1e12 * 0.99999):
+        vals += [
+            edge * (1 - rnd.random() * 1e-6) * (1 if rnd.random() < 0.5 else -1)
+            for _ in range(300)
+        ]
     vals += [rnd.uniform(-1e-6, 1e-6) for _ in range(500)]
     vals += [0.0, -0.0, 5e-7, -5e-7, 1.5e-6, -1.5e-6, 0.0234375, 6e5 + 0.105]
     return vals
@@ -77,6 +91,23 @@ def test_dsum_bits_match_old_decimal_path(spark):
     for r in res:
         assert _bits(r.old) == _bits(r.new), f"dsum drift in group {r.g}: {r}"
         assert _bits(r.old_avg) == _bits(r.new_avg), f"davg drift: {r}"
+
+
+def test_micro_matches_string_half_up_per_row(spark):
+    """Spark's double->decimal cast rounds the shortest round-trip string
+    (``Double.toString``), which is Python's ``repr``; so the per-row
+    reference is ``Decimal(repr(x))`` rounded HALF_UP to 6dp."""
+    vals = _adversarial_values()
+    df = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(vals)], "id long, x double"
+    )
+    q6 = Decimal("0.000001")
+    bad = [
+        (r.x, r.m)
+        for r in df.select("x", _micro(F.col("x")).alias("m")).collect()
+        if r.m != int(Decimal(repr(r.x)).quantize(q6, ROUND_HALF_UP) * 1_000_000)
+    ]
+    assert not bad, f"{len(bad)} of {len(vals)} rows drift, first: {bad[:5]}"
 
 
 def test_dsum_degenerate_inputs_match_old_decimal_path(spark):

@@ -402,7 +402,8 @@ _SHUFFLE_BUDGET = {
     "dedup_minhash_lsh": 4,
     # r11 optimization round: +1 for the deliberate probe-side
     # repartition by vec_id — the single-file scan otherwise pins the
-    # ~200k pair evaluations to one task (experiments/opt_r11_hof_ab.py)
+    # ~200k pair evaluations to one task (OPTIMIZATION_r11.md "Batch 1",
+    # ea6ce32:experiments/opt_r11_hof_ab.py)
     "sim_cosine_pairs": 2,
     "text_tfidf": 5,
     "win_sessionize": 1,
