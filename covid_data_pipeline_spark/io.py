@@ -12,8 +12,8 @@ from __future__ import annotations
 import os
 from collections.abc import Mapping
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
-
 from pyspark.sql import functions as F
 
 from .schemas import EVENTS_RAW_NS, SCHEMAS
@@ -21,6 +21,19 @@ from .schemas import EVENTS_RAW_NS, SCHEMAS
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def data_bytes(spark: SparkSession, path: str) -> int | None:
+    """Total bytes under ``path`` (a file, or a directory tree), through
+    the Hadoop ``FileSystem`` the session's reads use, so local paths,
+    ``file://``, HDFS and S3A URIs are sized alike; None when the path
+    cannot be statted (missing, or no file system for its scheme)."""
+    try:
+        p = spark._jvm.org.apache.hadoop.fs.Path(path)
+        fs = p.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+        return fs.getContentSummary(p).getLength()
+    except Py4JJavaError:
+        return None
 
 
 _TS_NANOS_CACHE: dict[str, bool] = {}

@@ -18,12 +18,11 @@ shape with deterministic random-hyperplane buckets.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import load, table_path
+from ..io import data_bytes, load, table_path
 from ..registry import query
 from ._helpers import DEC, davg
 
@@ -38,23 +37,15 @@ def _corpus_par(spark: SparkSession, sf_dir: str, name: str = "embeddings") -> i
     pipelines, pure scheduling overhead (measured: OPTIMIZATION_r12.md
     "sim_pq_adc_rerank / dedup_semdedup_kmeans / sim_kmeans_lloyd",
     ea6ce32:experiments/opt_r12_pq_decompose.py); at 100 TB the byte
-    term dominates and the cap keeps it at cluster width."""
-    p = table_path(sf_dir, name)
-    if os.path.isdir(p):
-        size = sum(
-            os.path.getsize(os.path.join(p, f)) for f in os.listdir(p)
-        )
-    elif os.path.exists(p):
-        size = os.path.getsize(p)
-    else:
-        size = 0
-    return max(
-        1,
-        min(
-            spark.sparkContext.defaultParallelism,
-            max(8, size // (32 << 20)),
-        ),
-    )
+    term dominates and the cap keeps it at cluster width.  The size is
+    the whole tree under the table path, from the Hadoop file system;
+    a path that cannot be statted gets the cluster width, not the floor."""
+    par = spark.sparkContext.defaultParallelism
+    size = data_bytes(spark, table_path(sf_dir, name))
+    if size is None:
+        return par
+    return max(1, min(par, max(8, size // (32 << 20))))
+
 
 COSINE_THRESHOLD = 0.25
 
@@ -1290,6 +1281,14 @@ def dedup_semdedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select("vec_id", "vec", _norm("vec").alias("n0"))
         .select("vec_id", "vec", F.explode(F.array("n0")).alias("n"))
         .select("vec_id", F.transform("vec", lambda x: x / F.col("n")).alias("nvec"))
+        # mean_cv below indexes nvec[0.._EMB_DIM): any other width would
+        # give null or truncated centroids, so the first job fails instead
+        .filter(
+            F.assert_true(
+                F.size("nvec") == _EMB_DIM,
+                f"dedup_semdedup_kmeans: embeddings must have {_EMB_DIM} dimensions",
+            ).isNull()
+        )
     )
     # en feeds seeding, two Lloyd rounds, the final assignment and both
     # pair sides — truncate so union+normalize runs once, not 6x; the

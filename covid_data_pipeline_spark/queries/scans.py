@@ -844,6 +844,12 @@ def sink_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     db = scratch_path("jdbc_derby")
     shutil.rmtree(db, ignore_errors=True)
+    # embedded Derby writes derby.log to the JVM's working directory
+    # when it boots (the first JDBC write below) unless told otherwise
+    os.makedirs(os.path.dirname(db), exist_ok=True)
+    spark._jvm.java.lang.System.setProperty(
+        "derby.stream.error.file", scratch_path("derby.log")
+    )
     url = f"jdbc:derby:{db};create=true"
     props = {
         "driver": "org.apache.derby.jdbc.EmbeddedDriver",

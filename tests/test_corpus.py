@@ -162,6 +162,33 @@ def test_scan_scratch_is_per_process_and_removed_at_exit(tmp_path):
     assert probe() == os.path.join(str(tmp_path), "cdp_spark_scratch", "probe")
 
 
+def test_jdbc_sink_keeps_derby_log_out_of_the_working_dir(tmp_path):
+    """Embedded Derby logs to the JVM's working directory when it boots;
+    sink_jdbc_roundtrip points that log into its scratch instead."""
+    import os
+    import subprocess
+    import sys
+
+    from .conftest import SF_SMOKE
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "from covid_data_pipeline_spark.registry import load_all\n"
+        "from covid_data_pipeline_spark.session import get_spark\n"
+        "spark = get_spark('derby-probe', cpus=1)\n"
+        f"load_all()['sink_jdbc_roundtrip'].fn(spark, {SF_SMOKE!r}).collect()\n"
+    )
+    scratch = tmp_path / "scratch"
+    env = dict(os.environ, PYTHONPATH=repo, SPARK_GRAFT_SCRATCH=str(scratch))
+    run = subprocess.run(
+        [sys.executable, "-c", code], env=env, cwd=tmp_path,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert not (tmp_path / "derby.log").exists()
+    assert (scratch / "cdp_spark_scratch" / "derby.log").exists()
+
+
 def test_positional_delete_spans_multiple_files(spark):
     """The deletion-vector mechanics must be exercised across file
     boundaries: the base table is written as multiple parquet files and

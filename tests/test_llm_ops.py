@@ -855,3 +855,49 @@ def test_multitable_ann_recall_dominates_single_table(spark):
     r2 = len(exact & multi) / len(exact)
     assert r2 >= 0.35, f"multitable recall {r2:.3f} < 0.35"
     assert r2 >= r1, f"multitable {r2:.3f} lost to single-table {r1:.3f}"
+
+
+def test_corpus_par_sizes_the_tree_through_hadoop_fs(spark, tmp_path):
+    """_corpus_par sizes a table from every byte under its path, through
+    the Hadoop file system: a nested directory counts its subdirs, a
+    ``file://`` URI sizes like the bare path, and a path that cannot be
+    statted falls back to defaultParallelism, not to the floor of 8."""
+    from covid_data_pipeline_spark.io import data_bytes, table_path
+    from covid_data_pipeline_spark.queries.llm_similarity import _corpus_par
+
+    par = spark.sparkContext.defaultParallelism
+    fixture = table_path(SF_ORACLE, "embeddings")
+    size = data_bytes(spark, fixture)
+    assert size and size < 8 * (32 << 20)
+    assert _corpus_par(spark, SF_ORACLE) == min(par, 8)  # the fixture width
+    assert data_bytes(spark, "file://" + fixture) == size
+    assert _corpus_par(spark, "file://" + SF_ORACLE) == _corpus_par(spark, SF_ORACLE)
+
+    nested = tmp_path / "embeddings.parquet" / "label=0" / "part=1"
+    nested.mkdir(parents=True)
+    (nested / "a.bin").write_bytes(b"x" * 1000)
+    (tmp_path / "embeddings.parquet" / "b.bin").write_bytes(b"x" * 24)
+    assert data_bytes(spark, table_path(str(tmp_path), "embeddings")) == 1024
+
+    missing = str(tmp_path / "absent")
+    assert data_bytes(spark, missing) is None
+    assert _corpus_par(spark, missing) == par
+
+
+@pytest.mark.parametrize("dim", [8, 72])
+def test_semdedup_fails_loudly_on_a_wrong_embedding_dimension(spark, tmp_path, dim):
+    """The centroid means index a fixed 64 dimensions; a corpus of
+    another width must fail the query with a message naming the width,
+    not yield truncated centroids (72) or an array-index error (8)."""
+    from pyspark.sql import functions as F
+
+    from covid_data_pipeline_spark.io import load, table_path
+
+    emb = load(spark, SF_SMOKE, "embeddings")
+    wide = F.concat("embedding", F.slice("embedding", 1, 8))
+    emb.withColumn("embedding", F.slice(wide, 1, dim)).write.parquet(
+        table_path(str(tmp_path), "embeddings")
+    )
+    q = load_all()["dedup_semdedup_kmeans"]
+    with pytest.raises(Exception, match="embeddings must have 64 dimensions"):
+        q.fn(spark, str(tmp_path)).collect()
