@@ -1262,25 +1262,9 @@ def dedup_semdedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     trades recall for never needing labels); the fixture is constructed
     so they cannot.
     """
-    base = load(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", _vec("embedding").alias("vec")
-    )
-    seed = base.filter(F.col("vec_id") % _DUP_SEED_MOD == 0)
-
-    def scaled(offset: int, factor: float) -> DataFrame:
-        return seed.select(
-            (F.col("vec_id") + F.lit(offset)).alias("vec_id"),
-            "label",
-            F.transform("vec", lambda x: x * F.lit(factor)).alias("vec"),
-        )
-
-    e = base.unionByName(scaled(_DUP_OFFSET_1, 2.0)).unionByName(
-        scaled(_DUP_OFFSET_2, 3.0)
-    )
     en = (
-        e.select("vec_id", "vec", _norm("vec").alias("n0"))
-        .select("vec_id", "vec", F.explode(F.array("n0")).alias("n"))
-        .select("vec_id", F.transform("vec", lambda x: x / F.col("n")).alias("nvec"))
+        _emb_dedup_corpus(spark, sf_dir)
+        .select("vec_id", "nvec")
         # mean_cv below indexes nvec[0.._EMB_DIM): any other width would
         # give null or truncated centroids, so the first job fails instead
         .filter(

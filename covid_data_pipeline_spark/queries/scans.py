@@ -14,10 +14,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..io import NARROW_SHUFFLE, load
+from ..io import NARROW_SHUFFLE, load, process_scratch
 from ..registry import query
 from ..schemas import DOCUMENTS, EVENTS
-from ..streaming.runner import process_scratch
 from ._helpers import dsum, sql_dsum
 
 
@@ -25,7 +24,7 @@ def scratch_path(name: str) -> str:
     """Scratch path for a side-effect query's output, overwritten on
     every run and never read across runs.  Under $SPARK_GRAFT_SCRATCH
     when set; else under this process's private scratch dir
-    (``streaming.runner.process_scratch``: tmpfs when the box has one,
+    (``io.process_scratch``: tmpfs when the box has one,
     removed at exit), so concurrent processes never share it.  Resolved
     per call, never at import, so a Python worker that unpickles a
     function from this module creates no dir.  A real lake's sinks are

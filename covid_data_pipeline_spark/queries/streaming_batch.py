@@ -18,13 +18,17 @@ keeps no global order.
 
 from __future__ import annotations
 
+import os
+import shutil
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import NARROW_SHUFFLE, load
 from ..registry import query
 from ..streaming import transforms as TR
-from ..streaming.runner import scratch_dir
+from ..streaming.runner import drain, scratch_dir, take_memory_sink
 from ._helpers import DEC, sql_dsum
 
 
@@ -211,12 +215,17 @@ def stream_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink; in complete output mode that snapshot IS the full aggregate,
     so this true streaming run hash-checks against the batch oracle."""
     from ..streaming import read_events_stream
-    from ..streaming.runner import run_foreach_parquet
-    import os
+
+    data = scratch_dir("cdp_sink_")
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode(
+            "append"
+        ).parquet(data)
 
     stream = TR.tumbling_hourly(read_events_stream(spark, sf_dir))
-    out = run_foreach_parquet(stream)
-    sunk = spark.read.parquet(os.path.join(out, "data"))
+    drain(stream, "complete", foreach_batch=write_batch)
+    sunk = spark.read.parquet(data)
     last = sunk.agg(F.max("batch_id").alias("m")).collect()[0]["m"]
     return sunk.filter(F.col("batch_id") == last).drop("batch_id")
 
@@ -777,7 +786,6 @@ def upsert_merge_batch(root: str):
     latest-wins (ts, event_id, type) struct max) into the previous
     versioned state dir, writing state_v{batch_id}.  Module-level so
     the split-feed test can drive it across REAL multiple batches."""
-    import os
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         part = batch_df.groupBy("user_id").agg(
@@ -846,23 +854,14 @@ def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     key-partitioned merge join against state; state size is O(keys),
     and on a real lakehouse the versioned-dir dance is one MERGE INTO
     against Delta/Iceberg (MIGRATION.md)."""
-    import os
-    import tempfile
-
     from ..streaming import read_events_stream
 
     root = scratch_dir("cdp_upsert_")
-    ckpt = os.path.join(root, "_checkpoint")
-
-    q = (
-        read_events_stream(spark, sf_dir)
-        .writeStream.foreachBatch(upsert_merge_batch(root))
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        read_events_stream(spark, sf_dir),
+        "append",
+        foreach_batch=upsert_merge_batch(root),
     )
-    q.awaitTermination()
     versions = sorted(
         int(p.split("_v")[1])
         for p in os.listdir(root)
@@ -905,23 +904,11 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL twin exists by definition. Exact expected values at fixture
     scale asserted in tests/test_streaming.py.
     """
-    import uuid
-
     from ..streaming import read_events_stream
 
     name = f"prog_{uuid.uuid4().hex[:12]}"
-    import tempfile
-
     agg = TR.tumbling_hourly(read_events_stream(spark, sf_dir))
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", scratch_dir("cdp_prog_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = drain(agg, "complete", memory=name)
     progresses = [p for p in q.recentProgress if p is not None]
     n_batches = len(progresses)
     input_rows = sum(int(p["numInputRows"]) for p in progresses)
@@ -933,7 +920,7 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         default=0,
     )
-    sink_rows = spark.table(name).count()
+    sink_rows = take_memory_sink(spark, name).count()
     return spark.createDataFrame(
         [
             ("n_micro_batches", n_batches),
@@ -1170,28 +1157,9 @@ def _ingest_decisions(flagged: DataFrame) -> DataFrame:
 # availableNow run only COMMITS its watermark at the end (verified:
 # within one run every micro-batch sees the start-of-run watermark, so
 # nothing can be late on a fresh checkpoint; see
-# tests/test_streaming.py::test_watermark_drops_late_rows).
-
-
-def _drain_to_parquet(
-    spark: SparkSession, streaming_df: DataFrame, sink: str, ckpt: str
-) -> None:
-    """One availableNow drain appending every micro-batch to a parquet
-    sink under a SHARED checkpoint (memory sinks cannot resume from a
-    checkpoint, so resumed-run witnesses need foreachBatch)."""
-    import os
-
-    def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(os.path.join(sink, "data"))
-
-    q = (
-        streaming_df.writeStream.foreachBatch(write_batch)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+# tests/test_streaming.py::test_watermark_drops_late_rows).  Both runs
+# append to one native parquet file sink under one checkpoint (a memory
+# sink cannot resume from a checkpoint).
 
 
 @query(
@@ -1244,12 +1212,8 @@ def stream_watermark_drop_witness(spark: SparkSession, sf_dir: str) -> DataFrame
     state bounded by the 30-day calendar (720 hourly windows), and the
     final join is window-grain — both sides tiny.  The two min/max
     scalars are metadata-sized collects by construction."""
-    import os
-    import shutil
-    import tempfile
-
     from ..schemas import EVENTS
-    from ..streaming import pin_feed_mtimes
+    from ..streaming import pin_feed_mtimes, read_feed
 
     ev = load(spark, sf_dir, "events")
     bounds = ev.agg(
@@ -1267,18 +1231,13 @@ def stream_watermark_drop_witness(spark: SparkSession, sf_dir: str) -> DataFrame
     ckpt = scratch_dir("cdp_wmckpt_")
 
     def run() -> None:
-        stream = (
-            spark.readStream.schema(EVENTS)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src + "/*")
-            .withWatermark("ts", "10 minutes")
-        )
+        stream = read_feed(spark, EVENTS, src).withWatermark("ts", "10 minutes")
         agg = (
             stream.groupBy(F.window("ts", "1 hour").alias("w"))
             .agg(F.count(F.lit(1)).alias("n_kept"))
             .select(F.unix_micros(F.col("w.start")).alias("ws_us"), "n_kept")
         )
-        _drain_to_parquet(spark, agg, sink, ckpt)
+        drain(agg, "append", path=sink, checkpoint=ckpt)
 
     try:
         genuine.coalesce(1).write.parquet(os.path.join(src, "b1"))
@@ -1288,7 +1247,7 @@ def stream_watermark_drop_witness(spark: SparkSession, sf_dir: str) -> DataFrame
         pin_feed_mtimes(src, ["b1", "b2"])
         run()  # resumed watermark: every echo is late, window closed
 
-        kept = spark.read.parquet(os.path.join(sink, "data"))
+        kept = spark.read.parquet(sink)
         fed = genuine.unionByName(echoes).groupBy(
             (F.unix_micros("ts") - F.unix_micros("ts") % TR.HOUR_US).alias(
                 "ws_us"
@@ -1367,12 +1326,8 @@ def stream_dedup_ttl_evict_witness(spark: SparkSession, sf_dir: str) -> DataFram
     Scale: dedup state is one row per key within the 10-min delay; the
     doctored slices are calendar-bounded (day 1); the min/max scalars
     are metadata-sized collects."""
-    import os
-    import shutil
-    import tempfile
-
     from ..schemas import EVENTS
-    from ..streaming import pin_feed_mtimes
+    from ..streaming import pin_feed_mtimes, read_feed
 
     ev = load(spark, sf_dir, "events")
     bounds = ev.agg(
@@ -1412,11 +1367,7 @@ def stream_dedup_ttl_evict_witness(spark: SparkSession, sf_dir: str) -> DataFram
     ckpt = scratch_dir("cdp_ttlckpt_")
 
     def run() -> None:
-        stream = (
-            spark.readStream.schema(EVENTS)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src + "/*")
-        )
+        stream = read_feed(spark, EVENTS, src)
         keyed = stream.select(
             "event_id",
             "user_id",
@@ -1426,8 +1377,11 @@ def stream_dedup_ttl_evict_witness(spark: SparkSession, sf_dir: str) -> DataFram
         out = keyed.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark(
             ["user_id", "content_hash"]
         )
-        _drain_to_parquet(
-            spark, out.select("event_id", "user_id", "content_hash"), sink, ckpt
+        drain(
+            out.select("event_id", "user_id", "content_hash"),
+            "append",
+            path=sink,
+            checkpoint=ckpt,
         )
 
     try:
@@ -1440,7 +1394,7 @@ def stream_dedup_ttl_evict_witness(spark: SparkSession, sf_dir: str) -> DataFram
         pin_feed_mtimes(src, ["b1", "b2"])
         run()  # echoes dropped as late; re-dups re-admitted (evicted)
 
-        sunk = spark.read.parquet(os.path.join(sink, "data"))
+        sunk = spark.read.parquet(sink)
         result = sunk.select(
             "event_id",
             "user_id",

@@ -20,7 +20,6 @@ Spark never reads) starts exactly as without this cache.
 
 from __future__ import annotations
 
-import atexit
 import contextlib
 import fcntl
 import hashlib
@@ -28,16 +27,13 @@ import os
 import shutil
 import subprocess
 import sys
-import tempfile
 import time
 
 from pyspark.errors import PySparkRuntimeError
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
-from .io import tune
-
-_WAREHOUSE: str | None = None
+from .io import tune, warehouse_dir
 
 # the JVM logs a rejected archive as a [warning][cds] line on stdout by
 # default, which would corrupt a caller's stdout (bench.py prints one
@@ -46,41 +42,11 @@ _JVM_LOG = "-Xlog:disable -Xlog:all=warning:stderr"
 _BUILD_TIMEOUT_S = 600
 
 
-def _warehouse_dir() -> str | None:
-    """Session warehouse for the catalog-table DEMO operators
-    (join_bucketed, sink tables): every such table is dropped and
-    rewritten inside one query invocation, so its durability is
-    worthless — put the warehouse on tmpfs when the box has one (r11;
-    the same ephemeral-scratch policy as streaming.runner.scratch_dir).
-    PER-PROCESS and mode-0700 (r11 advice): a fixed box-global path let
-    concurrent runs race on the same catalog tables and is a
-    pre-creation hazard in world-writable /dev/shm — mkdtemp gives each
-    process its own private dir, removed at exit.  Override with
-    $SPARK_GRAFT_WAREHOUSE (set it to ./spark-warehouse for the old
-    layout); a REAL deployment's catalog tables are durable state and
-    belong on real storage."""
-    global _WAREHOUSE
-    env = os.environ.get("SPARK_GRAFT_WAREHOUSE")
-    if env:
-        return env
-    if _WAREHOUSE:
-        return _WAREHOUSE
-    shm = "/dev/shm"
-    if os.path.isdir(shm) and os.access(shm, os.W_OK):
-        _WAREHOUSE = tempfile.mkdtemp(prefix="cdp_warehouse_", dir=shm)
-        atexit.register(shutil.rmtree, _WAREHOUSE, ignore_errors=True)
-        return _WAREHOUSE
-    return None  # Spark's default ./spark-warehouse
-
-
 def _builder(app: str, cpus: int, mem: str) -> SparkSession.Builder:
-    builder = SparkSession.builder.master(f"local[{cpus}]")
-    wh = _warehouse_dir()
-    if wh:
-        builder = builder.config("spark.sql.warehouse.dir", wh)
     return (
-        builder
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName(app)
+        .config("spark.sql.warehouse.dir", warehouse_dir())
         # SQL runtime confs (shuffle width, AQE, time zone) are set by
         # tune() below and before every registered query
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -245,7 +211,7 @@ def _launch(builder: SparkSession.Builder, cds_opt: str) -> SparkSession:
     os.environ["SPARK_CONF_DIR"] = empty
     try:
         return builder.config(
-            "spark.driver.defaultJavaOptions", f"{cds_opt} {_JVM_LOG}"
+            "spark.driver.defaultJavaOptions", f"{_JVM_LOG} {cds_opt}"
         ).getOrCreate()
     finally:
         if old is None:
@@ -260,7 +226,12 @@ def _dump_archive(path: str, cpus: int, mem: str) -> None:
     the session and end the JVM by closing the gateway's stdin."""
     from .registry import load_all
 
-    spark = _launch(_builder("spark-graft-archive", cpus, mem), f"-XX:ArchiveClassesAtExit={path}")
+    # CDS warns once per class it cannot archive (~50 generated
+    # reflection accessors, JFR event classes); keep only its errors
+    spark = _launch(
+        _builder("spark-graft-archive", cpus, mem),
+        f"-XX:ArchiveClassesAtExit={path} -Xlog:cds*=error:stderr",
+    )
     tune(spark)
     load_all()
     proc = spark.sparkContext._gateway.proc

@@ -4,44 +4,29 @@ The parquet ``events`` table stands in for the stream (TESTDATA.md); the
 ``availableNow`` trigger drains it in micro-batches and terminates, which
 makes streaming runs deterministic enough for tests while exercising the
 real incremental execution path (state store, watermarks, sinks).
+
+``drain`` is the package's one ``writeStream`` call: every streaming
+query runs through it and gets back the terminated ``StreamingQuery``,
+whose ``recentProgress`` carries each micro-batch's ``durationMs``
+phases and state-operator metrics.  ``run_available_now`` is its common
+case: drain into a memory table or a scratch parquet directory and
+return the sink's rows as a batch DataFrame.
 """
 
 from __future__ import annotations
 
-import atexit
 import os
 import shutil
 import tempfile
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
-from ..io import _events_ts_is_nanos, table_path
+from ..io import _events_ts_is_nanos, process_scratch, table_path
 from ..schemas import EVENTS, EVENTS_RAW_NS
-
-_PROCESS_SCRATCH: str | None = None
-
-
-def process_scratch() -> str:
-    """This process's private scratch dir for EPHEMERAL files, created
-    on first use and removed at exit.  On tmpfs when the box has one
-    (r11 measurement: the HDFS-backed state store's per-partition
-    delta+commit fsyncs cost ~1 s/run of stream_dedup_simhash on ext4
-    /tmp, 0 on /dev/shm), else under tempfile's default dir.
-    PER-PROCESS (r11 advice): tmpfs scratch is RAM, a shared fixed dir
-    accumulated across the ~400-query suite and across runs until
-    reboot, and concurrent processes raced on it.  The base is
-    rmtree'd atexit, after the lazily-read parquet sink frames are dead
-    with the session.  A REAL deployment's checkpoints and sinks are
-    durable state and belong on durable storage."""
-    global _PROCESS_SCRATCH
-    if _PROCESS_SCRATCH is None:
-        shm = "/dev/shm"
-        on_shm = os.path.isdir(shm) and os.access(shm, os.W_OK)
-        d = tempfile.mkdtemp(prefix="cdp_scratch_", dir=shm if on_shm else None)
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
-        _PROCESS_SCRATCH = d
-    return _PROCESS_SCRATCH
 
 
 def scratch_dir(prefix: str) -> str:
@@ -49,7 +34,7 @@ def scratch_dir(prefix: str) -> str:
     drains, throwaway feeds/sinks): these dirs live for one query
     invocation and are never re-read across runs.  Under
     $SPARK_GRAFT_STREAM_SCRATCH when set (set it to /tmp to get the old
-    layout), else under process_scratch()."""
+    layout), else under io.process_scratch()."""
     base = os.environ.get("SPARK_GRAFT_STREAM_SCRATCH") or process_scratch()
     return tempfile.mkdtemp(prefix=prefix, dir=base)
 
@@ -87,14 +72,68 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def run_available_now(
+def read_feed(spark: SparkSession, schema: StructType, src: str) -> DataFrame:
+    """``readStream`` over the parquet feed dirs under ``src``, one file
+    per micro-batch, in the mtime order ``pin_feed_mtimes`` sets: the
+    split feeds of the witness queries and the multi-batch tests.  The
+    batch size is the file source's ``maxFilesPerTrigger``; the stream
+    writer ignores that option."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src + "/*")
+    )
+
+
+def drain(
     sdf: DataFrame,
-    output_mode: str = "complete",
-    max_files_per_trigger: int | None = None,
-    sink: str = "memory",
+    output_mode: str,
+    *,
+    memory: str | None = None,
+    path: str | None = None,
+    foreach_batch: Callable[[DataFrame, int], None] | None = None,
+    checkpoint: str | None = None,
+) -> StreamingQuery:
+    """Run ``sdf`` with the availableNow trigger until it has drained
+    what its source holds, and return the terminated query.
+
+    The sink is exactly one of: the memory table named ``memory`` (every
+    emitted row is collected to the driver), the parquet directory
+    ``path`` (the native file sink, exactly-once through its
+    ``_spark_metadata`` log, append mode only) or the ``foreach_batch``
+    callback.  A run that resumes from an earlier one passes its own
+    ``checkpoint``, which stays; otherwise the checkpoint goes to
+    scratch and is deleted once the query has terminated (a stateful
+    drain's holds megabytes of state-store files, on tmpfs by default).
+    Batch sizes are source options (``read_feed``)."""
+    if sum(s is not None for s in (memory, path, foreach_batch)) != 1:
+        raise ValueError("drain takes exactly one of memory, path, foreach_batch")
+    ckpt = checkpoint or scratch_dir("cdp_ckpt_")
+    writer = (
+        sdf.writeStream.outputMode(output_mode)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+    )
+    if memory is not None:
+        writer = writer.format("memory").queryName(memory)
+    elif path is not None:
+        writer = writer.format("parquet").option("path", path)
+    else:
+        writer = writer.foreachBatch(foreach_batch)
+    try:
+        q = writer.start()
+        q.awaitTermination()
+    finally:
+        if checkpoint is None:
+            shutil.rmtree(ckpt, ignore_errors=True)
+    return q
+
+
+def run_available_now(
+    sdf: DataFrame, output_mode: str = "complete", sink: str = "memory"
 ) -> DataFrame:
-    """Drain a streaming DataFrame with the availableNow trigger into a
-    sink; return the sink contents as a batch DataFrame.
+    """``drain`` a streaming DataFrame and return the sink contents as a
+    batch DataFrame.
 
     ``sink="memory"`` (default) collects every emitted row to the
     DRIVER — fine for the aggregate-sized drains, but a guide-§5
@@ -104,66 +143,30 @@ def run_available_now(
     back with the stream's own schema: the r11 A/B on
     stream_dedup_simhash's 896k-row emission measured the memory sink
     at ~2-4 s over the file sink for the identical row multiset."""
-    ckpt = scratch_dir("cdp_ckpt_")
+    spark = sdf.sparkSession
     if sink == "parquet":
         if output_mode != "append":
             raise ValueError("parquet sink supports append mode only")
-        out = scratch_dir("cdp_sink_")
-        data = os.path.join(out, "data")
-        writer = (
-            sdf.writeStream.format("parquet")
-            .option("path", data)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-        )
-    else:
-        name = f"mem_{uuid.uuid4().hex[:12]}"
-        writer = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-        )
-    if max_files_per_trigger is not None:
-        writer = writer.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    q = writer.start()
-    q.awaitTermination()
-    if sink == "parquet":
+        data = os.path.join(scratch_dir("cdp_sink_"), "data")
+        drain(sdf, output_mode, path=data)
         # a drain that commits zero batches never creates the data dir;
         # match the memory sink's empty-table behavior instead of
         # raising PATH_NOT_FOUND (r11 advice)
         if not os.path.isdir(data):
-            return sdf.sparkSession.createDataFrame([], sdf.schema)
-        return sdf.sparkSession.read.schema(sdf.schema).parquet(data)
-    return sdf.sparkSession.table(name)
+            return spark.createDataFrame([], sdf.schema)
+        return spark.read.schema(sdf.schema).parquet(data)
+    name = f"mem_{uuid.uuid4().hex[:12]}"
+    drain(sdf, output_mode, memory=name)
+    return take_memory_sink(spark, name)
 
 
-def run_foreach_parquet(sdf: DataFrame, out_dir: str | None = None) -> str:
-    """Drain a streaming aggregation via ``foreachBatch``, appending each
-    micro-batch's rows (stamped with the batch id) to a parquet sink —
-    the incremental-archive-write shape of the reference pipeline.
-    Returns the sink directory."""
-    out = out_dir or scratch_dir("cdp_sink_")
-    ckpt = os.path.join(out, "_checkpoint")
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(os.path.join(out, "data"))
-        )
-
-    q = (
-        sdf.writeStream.foreachBatch(write_batch)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return out
+def take_memory_sink(spark: SparkSession, name: str) -> DataFrame:
+    """The memory sink ``name`` as a batch DataFrame, its temp view
+    dropped: the view would pin every emitted row on the driver for the
+    rest of the session, the frame holds them only while it lives."""
+    rows = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return rows
 
 
 def pin_feed_mtimes(src: str, dirs: list[str] | tuple[str, ...]) -> None:

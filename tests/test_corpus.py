@@ -162,6 +162,41 @@ def test_scan_scratch_is_per_process_and_removed_at_exit(tmp_path):
     assert probe() == os.path.join(str(tmp_path), "cdp_spark_scratch", "probe")
 
 
+def test_warehouse_lives_in_process_scratch_without_dev_shm(tmp_path):
+    """The session's catalog warehouse sits in the per-process scratch
+    dir, so on a box without a writable /dev/shm it goes to a private
+    temp dir, removed at exit, and never to the caller's working dir;
+    $SPARK_GRAFT_WAREHOUSE still overrides it."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import os\n"
+        "real = os.access\n"
+        "os.access = lambda p, m: p != '/dev/shm' and real(p, m)\n"
+        "from covid_data_pipeline_spark.io import process_scratch, warehouse_dir\n"
+        "print(process_scratch()); print(warehouse_dir())\n"
+    )
+    env = {k: v for k, v in os.environ.items() if "SPARK_GRAFT_" not in k}
+    env["PYTHONPATH"] = repo
+
+    def probe():
+        return subprocess.run(
+            [sys.executable, "-c", code],
+            env=env, cwd=tmp_path, capture_output=True, text=True, check=True,
+        ).stdout.split()
+
+    scratch, warehouse = probe()
+    assert not scratch.startswith("/dev/shm")
+    assert warehouse == os.path.join(scratch, "warehouse")
+    assert not os.path.exists(scratch), f"{scratch} outlived its process"
+    assert os.listdir(tmp_path) == []
+    env["SPARK_GRAFT_WAREHOUSE"] = str(tmp_path / "wh")
+    assert probe()[1] == str(tmp_path / "wh")
+
+
 def test_jdbc_sink_keeps_derby_log_out_of_the_working_dir(tmp_path):
     """Embedded Derby logs to the JVM's working directory when it boots;
     sink_jdbc_roundtrip points that log into its scratch instead."""

@@ -15,9 +15,12 @@ from pyspark.sql import Row, Window, functions as F
 from covid_data_pipeline_spark.io import load
 from covid_data_pipeline_spark.schemas import EVENTS
 from covid_data_pipeline_spark.streaming import (
+    drain,
     pin_feed_mtimes,
     read_events_stream,
+    read_feed,
     run_available_now,
+    take_memory_sink,
     transforms as TR,
 )
 
@@ -132,15 +135,12 @@ def test_watermark_drops_late_rows(spark, tmp_path):
             .parquet(src + "/*")
             .withWatermark("ts", "10 minutes")
         )
-        q = (
-            TR.tumbling_5m_counts(stream)
-            .writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        drain(
+            TR.tumbling_5m_counts(stream),
+            "append",
+            foreach_batch=sink,
+            checkpoint=ckpt,
         )
-        q.awaitTermination()
         return sorted(emitted)
 
     # run 1: rows at T0, T0+5min (x2), T0+30min -> watermark T0+20min;
@@ -222,11 +222,7 @@ def test_stateful_totals_carry_state_across_batches(spark, tmp_path):
     mk([(1, 1.0), (1, 2.0), (2, 5.0)], os.path.join(src, "b1"))
     mk([(1, 4.0)], os.path.join(src, "b2"))
 
-    stream = (
-        spark.readStream.schema(EVENTS)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src + "/*")
-    )
+    stream = read_feed(spark, EVENTS, src)
     sunk = run_available_now(
         TR.stateful_user_totals(stream), output_mode="update"
     )
@@ -314,11 +310,7 @@ def test_stateful_change_detect_carries_hash_across_batches(spark, tmp_path):
     mk([(1, "AAA"), (2, "AAA"), (3, "BBB")], os.path.join(src, "b1"))
     mk([(4, "BBB"), (5, "AAA")], os.path.join(src, "b2"))
 
-    stream = (
-        spark.readStream.schema(EVENTS)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src + "/*")
-    )
+    stream = read_feed(spark, EVENTS, src)
     got = {
         r["event_id"]: r["status"]
         for r in run_available_now(
@@ -429,11 +421,7 @@ def test_stream_dedup_simhash_matches_across_batches(spark, tmp_path):
         os.path.join(src, "odd")
     )
 
-    stream = (
-        spark.readStream.schema(DOCUMENTS)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src + "/*")
-    )
+    stream = read_feed(spark, DOCUMENTS, src)
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     drained = run_available_now(
         TR.stateful_simhash_band_dedup(banded_simhash(stream)),
@@ -508,15 +496,12 @@ def test_stream_dedup_simhash_state_survives_restart(spark, tmp_path):
         # memory sink can't recover from a checkpoint; foreachBatch can
         emitted.clear()
         stream = spark.readStream.schema(DOCUMENTS).parquet(src + "/*")
-        q = (
-            TR.stateful_simhash_band_dedup(banded_simhash(stream))
-            .writeStream.foreachBatch(sink)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        drain(
+            TR.stateful_simhash_band_dedup(banded_simhash(stream)),
+            "append",
+            foreach_batch=sink,
+            checkpoint=ckpt,
         )
-        q.awaitTermination()
         return set(emitted)
 
     run1 = drain_once()
@@ -570,11 +555,7 @@ def test_stream_decay_weighted_merges_across_batches(spark, tmp_path):
         ev.filter(F.col("event_id") % 3 == i).coalesce(1).write.parquet(
             os.path.join(src, f"part{i}")
         )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src + "/*")
-    )
+    stream = read_feed(spark, ev.schema, src)
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     got = {
         r["user_id"]: (r["n_events"], r["decayed_value"], r["decayed_count"])
@@ -678,19 +659,8 @@ def test_upsert_foreachbatch_merges_across_batches(spark, tmp_path):
 
     root = str(tmp_path / "state")
     os.makedirs(root)
-    stream = (
-        spark.readStream.schema(EVENTS)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src + "/*")
-    )
-    q = (
-        stream.writeStream.foreachBatch(upsert_merge_batch(root))
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = read_feed(spark, EVENTS, src)
+    drain(stream, "append", foreach_batch=upsert_merge_batch(root))
     versions = sorted(
         int(p.split("_v")[1])
         for p in os.listdir(root)
@@ -780,11 +750,7 @@ def test_ingest_rank_carries_state(spark, tmp_path):
     # asserted ranks) a coin flip — pin the order explicitly
     pin_feed_mtimes(src, ("b1", "b2"))
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src + "/*")
-    )
+    stream = read_feed(spark, schema, src)
     sunk = run_available_now(TR.stateful_ingest_rank(stream), output_mode="append")
     ranks = {r["doc_id"]: r["rn"] for r in sunk.collect()}
     # batch 1 ranks A by doc_id (10->1, 11->2) and B (20->1); batch 2's
@@ -857,11 +823,7 @@ def test_stream_ingest_decision_histogram_split_invariant(spark, tmp_path):
         .select(F.sha2(clean(F.col("text")), 256).alias("h"))
         .distinct()
     )
-    stream = (
-        spark.readStream.schema(DOCUMENTS)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src + "/*")
-    )
+    stream = read_feed(spark, DOCUMENTS, src)
     got = hist(
         run_available_now(
             _ingest_decisions(_ingest_flagged(stream, corpus_hashes)),
@@ -936,11 +898,7 @@ def test_stream_stream_join_split_feed_matches_batch(spark, tmp_path):
 
     ev, first, second, src = _write_time_split_feed(spark, tmp_path, cut_us)
     spark.conf.set("spark.sql.shuffle.partitions", "8")
-    stream = (
-        spark.readStream.schema(EVENTS)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src + "/*")
-    )
+    stream = read_feed(spark, EVENTS, src)
     cols = ["user_id", "purchase_id", "view_id", "gap_us"]
     got = _as_sorted_rows(
         run_available_now(purchase_view_join(stream), output_mode="append"),
@@ -975,11 +933,7 @@ def test_stateful_change_detect_split_feed_equals_batch_lag(spark, tmp_path):
     carried last-hash state can produce."""
     ev, first, second, src = _write_time_split_feed(spark, tmp_path)
     spark.conf.set("spark.sql.shuffle.partitions", "8")
-    stream = (
-        spark.readStream.schema(EVENTS)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src + "/*")
-    )
+    stream = read_feed(spark, EVENTS, src)
     cols = ["source_key", "event_id", "content_hash", "status"]
     got = _as_sorted_rows(
         run_available_now(TR.stateful_change_detect(stream), output_mode="append"),
@@ -1050,3 +1004,43 @@ def test_parquet_sink_drain_matches_memory_sink(spark):
             output_mode="complete",
             sink="parquet",
         )
+
+
+def test_memory_drains_leave_no_view_in_the_catalog(spark):
+    """A memory drain's temp view pins every emitted row on the driver
+    for the rest of the session; the package's two memory drains drop
+    it once their result frame holds the table, and the frame still
+    reads every row."""
+    from covid_data_pipeline_spark.registry import load_all
+
+    before = {t.name for t in spark.catalog.listTables()}
+    rows = run_available_now(
+        read_events_stream(spark, SF_SMOKE), output_mode="append"
+    )
+    metrics = {
+        r["metric"]: r["value"]
+        for r in load_all()["stream_progress_metrics"]
+        .fn(spark, SF_SMOKE)
+        .collect()
+    }
+    assert {t.name for t in spark.catalog.listTables()} == before
+    n = load(spark, SF_SMOKE, "events").count()
+    assert rows.count() == n == metrics["total_input_rows"]
+    assert metrics["final_sink_rows"] > 0
+
+
+def test_drain_deletes_only_the_checkpoint_it_created(
+    spark, tmp_path, monkeypatch
+):
+    """A stateful drain's checkpoint is megabytes of state-store files
+    on tmpfs; the drain deletes it after termination when it placed it
+    in scratch, and keeps one a resumed run passed in."""
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SCRATCH", str(tmp_path))
+    agg = TR.tumbling_hourly(read_events_stream(spark, SF_SMOKE))
+    assert run_available_now(agg).count() > 0
+    assert not list(tmp_path.glob("cdp_ckpt_*"))
+    ckpt = tmp_path / "resumed"
+    q = drain(agg, "complete", memory="resumed_drain", checkpoint=str(ckpt))
+    assert take_memory_sink(spark, "resumed_drain").count() > 0
+    assert len(q.recentProgress) >= 1
+    assert (ckpt / "offsets").is_dir() and (ckpt / "state").is_dir()
