@@ -35,8 +35,6 @@ from pyspark.sql import functions as F
 def connected_components(
     edges: DataFrame,
     vertices: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     vertex: str = "node",
     max_rounds: int = 25,
 ) -> DataFrame:
@@ -48,8 +46,8 @@ def connected_components(
     Returns DataFrame[node, component], one row per vertex.
     """
     sym = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .union(edges.select(F.col(dst).alias("s"), F.col(src).alias("d")))
+        edges.select(F.col("src").alias("s"), F.col("dst").alias("d"))
+        .union(edges.select(F.col("dst").alias("s"), F.col("src").alias("d")))
         .distinct()
     )
     # materialize the (small) edge list once; every round re-joins it

@@ -81,6 +81,12 @@ from pyspark.sql import functions as F
 # Still used by inline `.cast(DEC)` sites (window sums, weighted means).
 DEC = "decimal(28,6)"
 
+# Knuth multiplicative hash, (id * KNUTH_MULT) % KNUTH_MOD: a reproducible
+# pseudo-random bucket of an integer id, bit-identical in Spark and the
+# DuckDB oracle on any partitioning (rand(seed) is neither).
+KNUTH_MULT = 2654435761
+KNUTH_MOD = 1 << 32
+
 # Fast-path bound: |x| < 4.4e9 keeps p = |x|*1e6 safely under 2^52, so
 # t = p + 0.5 is exact (ulp(p) <= 0.5) and floor/frac are exact.
 _FAST_MAX = 4.4e9

@@ -18,13 +18,8 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import query
-from ._helpers import davg, sql_davg
+from ._helpers import KNUTH_MOD, KNUTH_MULT, davg, sql_davg
 
-# Knuth multiplicative hash on doc_id, folded to a percent bucket.
-# rand(seed) is NOT reproducible cross-engine (or even cross-partitioning
-# in some engines); an explicit integer hash is, everywhere, forever.
-_SAMPLE_MULT = 2654435761
-_SAMPLE_MOD = 1 << 32
 _LANG_PCT = {"en": 37, "es": 61, "zh": 23, "de": 50, "fr": 80}
 
 
@@ -34,7 +29,7 @@ _LANG_PCT = {"en": 37, "es": 61, "zh": 23, "de": 50, "fr": 80}
     WITH r(lang, pct) AS (VALUES {", ".join(f"('{k}', {v})" for k, v in _LANG_PCT.items())})
     SELECT d.doc_id, d.lang
     FROM documents d JOIN r ON d.lang = r.lang
-    WHERE (d.doc_id * {_SAMPLE_MULT}) % {_SAMPLE_MOD} % 100 < r.pct
+    WHERE (d.doc_id * {KNUTH_MULT}) % {KNUTH_MOD} % 100 < r.pct
     """,
 )
 def sample_stratified_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -48,7 +43,7 @@ def sample_stratified_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     rates = spark.createDataFrame(
         [(k, v) for k, v in _LANG_PCT.items()], "lang string, pct int"
     )
-    bucket = (F.col("doc_id") * _SAMPLE_MULT) % _SAMPLE_MOD % 100
+    bucket = (F.col("doc_id") * KNUTH_MULT) % KNUTH_MOD % 100
     return (
         d.join(F.broadcast(rates), "lang")
         .filter(bucket < F.col("pct"))
@@ -277,7 +272,7 @@ _RESERVOIR_K = 5
     SELECT doc_id, lang, source, rk FROM (
         SELECT doc_id, lang, source,
                ROW_NUMBER() OVER (PARTITION BY lang, source
-                   ORDER BY (doc_id * {_SAMPLE_MULT}) % {_SAMPLE_MOD}, doc_id) AS rk
+                   ORDER BY (doc_id * {KNUTH_MULT}) % {KNUTH_MOD}, doc_id) AS rk
         FROM documents
     ) WHERE rk <= {_RESERVOIR_K}
     """,
@@ -295,7 +290,7 @@ def sample_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter prunes before anything downstream."""
     d = load(spark, sf_dir, "documents")
     w = Window.partitionBy("lang", "source").orderBy(
-        (F.col("doc_id") * _SAMPLE_MULT) % _SAMPLE_MOD, "doc_id"
+        (F.col("doc_id") * KNUTH_MULT) % KNUTH_MOD, "doc_id"
     )
     return (
         d.select("doc_id", "lang", "source", F.row_number().over(w).alias("rk"))
@@ -447,7 +442,7 @@ def ts_resample_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, lang,
            ROUND(CAST(q_num AS DOUBLE) / q_den, 6) AS quality
     FROM scored
-    WHERE (doc_id * {_SAMPLE_MULT}) % {_SAMPLE_MOD} % 1000000
+    WHERE (doc_id * {KNUTH_MULT}) % {KNUTH_MOD} % 1000000
           * q_den * q_den < 1000000 * q_num * q_num
     """,
 )
@@ -469,7 +464,7 @@ def sample_importance_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = F.split("text", " ")
     q_num = F.size(F.array_distinct(toks)).cast("long")
     q_den = F.size(toks).cast("long")
-    bucket = (F.col("doc_id") * _SAMPLE_MULT) % _SAMPLE_MOD % 1_000_000
+    bucket = (F.col("doc_id") * KNUTH_MULT) % KNUTH_MOD % 1_000_000
     # integer cross-multiplication: bucket * q_den^2 < 1e6 * q_num^2
     keep = bucket * q_den * q_den < F.lit(1_000_000) * q_num * q_num
     return d.select(
@@ -725,8 +720,8 @@ _NEG_PRIME = 1_000_003
     ),
     scored AS (
         SELECT a.anchor_id, d.doc_id AS negative_id,
-               ((a.anchor_id * {_NEG_PRIME} + d.doc_id) * {_SAMPLE_MULT})
-                   % {_SAMPLE_MOD} AS h
+               ((a.anchor_id * {_NEG_PRIME} + d.doc_id) * {KNUTH_MULT})
+                   % {KNUTH_MOD} AS h
         FROM anchors a JOIN documents d ON d.lang <> a.anchor_lang
     )
     SELECT anchor_id, negative_id, rank FROM (
@@ -768,8 +763,8 @@ def sample_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "negative_id",
             (
                 (F.col("anchor_id") * _NEG_PRIME + F.col("negative_id"))
-                * _SAMPLE_MULT
-                % _SAMPLE_MOD
+                * KNUTH_MULT
+                % KNUTH_MOD
             ).alias("h"),
         )
     )
@@ -1852,9 +1847,6 @@ def ts_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LTTB_B = 10  # output points per series (first + 8 bucket picks + last)
-
-
 def _lttb_sql() -> str:
     """Generate the LTTB selection CTE chain (8 unrolled bucket steps,
     the _durbin_levinson_sql idiom) as plain relational SQL: no lambda
@@ -2153,7 +2145,7 @@ _KMV_K = 16  # bottom-k sketch size
     ),
     hashed AS (
         SELECT event_type, user_id,
-               (user_id * {_SAMPLE_MULT}) % {_SAMPLE_MOD} AS h
+               (user_id * {KNUTH_MULT}) % {KNUTH_MOD} AS h
         FROM du
     ),
     ranked AS (
@@ -2175,7 +2167,7 @@ _KMV_K = 16  # bottom-k sketch size
     SELECT b.event_type, CAST(b.rk AS BIGINT) AS rk, b.user_id,
            CASE WHEN k.n_bottom < {_KMV_K} THEN k.n_bottom
                 WHEN k.hk > 0 THEN
-               CAST(({(_KMV_K - 1)} * {_SAMPLE_MOD}::BIGINT) // k.hk AS BIGINT)
+               CAST(({(_KMV_K - 1)} * {KNUTH_MOD}::BIGINT) // k.hk AS BIGINT)
            END AS kmv_est
     FROM bottom b JOIN kth k USING (event_type)
     """,
@@ -2203,7 +2195,7 @@ def sample_bottomk_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = du.select(
         "event_type",
         "user_id",
-        ((F.col("user_id") * _SAMPLE_MULT) % _SAMPLE_MOD).alias("h"),
+        ((F.col("user_id") * KNUTH_MULT) % KNUTH_MOD).alias("h"),
     )
     w = Window.partitionBy("event_type").orderBy("h", "user_id")
     bottom = hashed.withColumn("rk", F.row_number().over(w)).filter(
@@ -2218,7 +2210,7 @@ def sample_bottomk_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # div-NULLs-on-0 (see oracle comment)
     est = F.when(F.col("n_bottom") < _KMV_K, F.col("n_bottom")).when(
         F.col("hk") > 0,
-        F.expr(f"{(_KMV_K - 1) * _SAMPLE_MOD} div hk"),
+        F.expr(f"{(_KMV_K - 1) * KNUTH_MOD} div hk"),
     )
     return bottom.join(F.broadcast(kth), "event_type").select(
         "event_type",
@@ -2606,8 +2598,8 @@ _RES_K = 5  # weighted-reservoir sample size per group
     keyed AS (
         SELECT event_type, user_id, wt,
                ln((((user_id + ascii(substr(event_type, 1, 1)) * 131)
-                    * {_SAMPLE_MULT}) % {_SAMPLE_MOD} + 1)
-                  / CAST({_SAMPLE_MOD} AS DOUBLE)) / wt AS k
+                    * {KNUTH_MULT}) % {KNUTH_MOD} + 1)
+                  / CAST({KNUTH_MOD} AS DOUBLE)) / wt AS k
         FROM w
     ),
     ranked AS (
@@ -2650,11 +2642,11 @@ def sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("user_id")
                 + F.ascii(F.substring("event_type", 1, 1)) * 131
             )
-            * _SAMPLE_MULT
+            * KNUTH_MULT
         )
-        % _SAMPLE_MOD
+        % KNUTH_MOD
         + 1
-    ) / F.lit(float(_SAMPLE_MOD))
+    ) / F.lit(float(KNUTH_MOD))
     keyed = w.select(
         "event_type", "user_id", "wt", (F.log(u) / F.col("wt")).alias("k")
     )
@@ -5064,7 +5056,7 @@ def analytics_dow_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT label, vec_id,
                ROW_NUMBER() OVER (
                    PARTITION BY label
-                   ORDER BY (vec_id * {_SAMPLE_MULT}) % {_SAMPLE_MOD},
+                   ORDER BY (vec_id * {KNUTH_MULT}) % {KNUTH_MOD},
                             vec_id) AS rn
         FROM embeddings
     )
@@ -5095,7 +5087,7 @@ def sample_balanced_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized = e.groupBy("label").agg(F.count(F.lit(1)).cast("long").alias("n"))
     k = sized.agg(F.min("n").cast("long").alias("k"))
     w = Window.partitionBy("label").orderBy(
-        (F.col("vec_id") * _SAMPLE_MULT) % _SAMPLE_MOD, "vec_id"
+        (F.col("vec_id") * KNUTH_MULT) % KNUTH_MOD, "vec_id"
     )
     ranked = e.select(
         "label", "vec_id", F.row_number().over(w).alias("rn")
@@ -5636,7 +5628,7 @@ def agg_poisson_rate_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     "analytics_ab_srm",
     oracle=f"""
     WITH arms AS (
-        SELECT CASE WHEN (user_id * {_SAMPLE_MULT}) % {_SAMPLE_MOD} % 100 < 50
+        SELECT CASE WHEN (user_id * {KNUTH_MULT}) % {KNUTH_MOD} % 100 < 50
                     THEN 'a' ELSE 'b' END AS arm
         FROM (SELECT DISTINCT user_id FROM events)
     ),
@@ -5676,7 +5668,7 @@ def analytics_ab_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
     experiment readout."""
     e = load(spark, sf_dir, "events")
     arm = F.when(
-        (F.col("user_id") * _SAMPLE_MULT) % _SAMPLE_MOD % 100 < 50, "a"
+        (F.col("user_id") * KNUTH_MULT) % KNUTH_MOD % 100 < 50, "a"
     ).otherwise("b")
     arms = e.select("user_id").distinct().select(arm.alias("arm"))
     c = arms.agg(
@@ -5721,7 +5713,7 @@ def analytics_ab_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
                     WHEN n_chars < 500 THEN 2 ELSE 3 END AS phase_idx,
                CASE WHEN n_chars < 200 THEN 'short'
                     WHEN n_chars < 500 THEN 'medium' ELSE 'long' END AS phase,
-               (doc_id * {_SAMPLE_MULT}) % {_SAMPLE_MOD} AS h
+               (doc_id * {KNUTH_MULT}) % {KNUTH_MOD} AS h
         FROM documents
     )
     SELECT CAST(phase_idx AS BIGINT) AS phase_idx, phase, lang,
@@ -5770,7 +5762,7 @@ def corpus_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.ceil(F.col("n_chars").cast("double") / 4).cast("long").alias("tokens"),
         phase_idx.cast("long").alias("phase_idx"),
         phase.alias("phase"),
-        ((F.col("doc_id") * _SAMPLE_MULT) % _SAMPLE_MOD).alias("h"),
+        ((F.col("doc_id") * KNUTH_MULT) % KNUTH_MOD).alias("h"),
     )
     return staged.groupBy("phase_idx", "phase", "lang").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -5975,8 +5967,8 @@ _PERM_REPS = 199  # standard K for a 0.005-resolution permutation p-value
     ),
     perms AS (
         SELECT d.event_type, d.t, d.x, r.rep,
-               ((d.t * 2654435761 + r.rep * 40503) % 2147483648)
-                   * 2654435761 % 4294967296 AS h
+               ((d.t * {KNUTH_MULT} + r.rep * 40503) % 2147483648)
+                   * {KNUTH_MULT} % {KNUTH_MOD} AS h
         FROM daily d
         CROSS JOIN (SELECT unnest(range(1, {_PERM_REPS} + 1)) AS rep) r
     ),
@@ -6065,8 +6057,8 @@ def agg_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id").cast("long").alias("rep")
     )
     h = (
-        (F.col("t") * 2654435761 + F.col("rep") * 40503) % 2147483648
-    ) * 2654435761 % 4294967296
+        (F.col("t") * KNUTH_MULT + F.col("rep") * 40503) % 2147483648
+    ) * KNUTH_MULT % KNUTH_MOD
     perms = daily.crossJoin(F.broadcast(reps)).select(
         "event_type", "t", "x", "rep", h.alias("h")
     )

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from ..io import NARROW_SHUFFLE, load
 from ..operators import connected_components
 from ..registry import query
+from ._helpers import KNUTH_MOD, KNUTH_MULT
 
 
 @query(
@@ -51,7 +52,10 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-JACCARD_THRESHOLD = 0.7
+# thresholds as integer ratios num/den: the prefix, size-ratio and
+# positional bounds of jaccard_join are integer arithmetic on them
+JACCARD_RATIO = (7, 10)
+JACCARD_THRESHOLD = JACCARD_RATIO[0] / JACCARD_RATIO[1]
 
 
 @query(
@@ -77,7 +81,7 @@ def dedup_near_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic cross-engine.
 
     Candidates come from a prefix-filtered similarity join (recall
-    exactly 1 — see dedup_ngram_jaccard for the argument), so the
+    exactly 1 — see :func:`jaccard_join` for the argument), so the
     operator is an equi-join on (lang, prefix-token) plus verification,
     NOT a quadratic block join.  It is the recall oracle for
     ``dedup_minhash_lsh``, which trades exactness for a far smaller
@@ -95,15 +99,40 @@ def dedup_near_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.transform(F.split("text", " "), lambda tok: F.xxhash64(tok))
             )
         ).alias("toks"),
-    ).withColumn("n_toks", F.size("toks"))
-    # prefix-filtered similarity join (see dedup_ngram_jaccard for the
-    # recall-1 argument): prefix length n - ceil(0.7*n) + 1; posexplode
-    # keeps each prefix token's 1-based POSITION for the PPJoin filter
-    plen = (F.col("n_toks") - F.floor((F.col("n_toks") * 7 + 9) / 10) + 1).cast("int")
+    )
+    return jaccard_join(t, *JACCARD_RATIO).select(
+        "a_id", "b_id", "lang", F.round("jaccard", 6).alias("jaccard")
+    )
+
+
+def jaccard_join(sets: DataFrame, num: int, den: int) -> DataFrame:
+    """Exact set-similarity self-join: (a_id, b_id, lang, jaccard) for
+    every same-``lang`` pair a_id < b_id whose Jaccard exceeds num/den.
+
+    ``sets`` is (doc_id, lang, toks) with ``toks`` a SORTED DISTINCT
+    bigint array.  Candidates come from a prefix-filtered equi-join
+    (SSJoin/PPJoin): with sets sorted in one global order, a pair with
+    J >= t must share its minimum common element inside both prefixes of
+    length n - ceil(t*n) + 1 (if it sat outside either prefix, that
+    set's overlap would be under t*n), so equi-joining exploded prefix
+    tokens has recall exactly 1 and the intersection runs only on
+    candidates — an equi-join keyed by (lang, token), never quadratic in
+    a block.  Every bound is integer arithmetic on num/den (its floor
+    divisions are exact while sizes stay far below 2^53); every
+    candidate is verified exactly by :func:`jaccard_verify`."""
+    par = sets.sparkSession.sparkContext.defaultParallelism
+    t = sets.withColumn("n_toks", F.size("toks"))
+    # prefix length n - ceil(t*n) + 1; posexplode keeps each prefix
+    # token's 1-based POSITION for the PPJoin filter
+    plen = (
+        F.col("n_toks") - F.floor((F.col("n_toks") * num + (den - 1)) / den) + 1
+    ).cast("int")
     # hash-repartition the probe side by doc_id BEFORE the explode: the
     # single parquet file otherwise pins the candidate join + partial
     # pair-distinct to ONE scan task (measured r11: 13.2 M pre-dedup
-    # matches at sf0.1 ran on 1 task — 12.7 s; repartitioned: 2.3 s).
+    # matches at sf0.1 ran on 1 task — 12.7 s; repartitioned: 2.3 s),
+    # and after a window AQE would coalesce the small exchange to one
+    # partition (an explicit repartition(n, key) is exempt from that).
     # doc_id co-locates each doc's prefix rows, so every duplicate of a
     # (a_id, b_id) candidate stays inside one task and the map-side
     # partial distinct still collapses it before the shuffle.  Count is
@@ -111,7 +140,6 @@ def dedup_near_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # slots on a cluster), never a constant.  At 100 TB the single-file
     # trap this fixes disappears while the exchange remains — the
     # cost/invalidation analysis is in SCALE.md "Round 12 additions".
-    par = spark.sparkContext.defaultParallelism
     pe = t.repartition(par, "doc_id").select(
         "doc_id",
         "lang",
@@ -134,24 +162,24 @@ def dedup_near_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # J > t implies |A|/|B| and |B|/|A| >= t (J <= min/max for sets) —
     # integer size-ratio prune before candidate dedup
-    ratio_ok = (F.col("a_n") * 10 >= F.col("b_n") * 7) & (
-        F.col("b_n") * 10 >= F.col("a_n") * 7
+    ratio_ok = (F.col("a_n") * den >= F.col("b_n") * num) & (
+        F.col("b_n") * den >= F.col("a_n") * num
     )
     # PPJoin positional filter: arrays are sorted, so for a shared token
     # at positions (i, j) the true overlap o is bounded by
     #   o <= min(i-1, j-1) + 1 + min(|A|-i, |B|-j)
     # (shared-before <= min of the prefixes, shared-after <= min of the
-    # suffixes).  J > 0.7 needs o > 0.7(|A|+|B|)/1.7, i.e.
-    # o >= floor(7(|A|+|B|)/17) + 1; every shared token of a TRUE pair
-    # satisfies the bound (it upper-bounds o), so keeping pairs where ANY
-    # match passes loses no recall while pruning candidates whose match
-    # position already proves J <= 0.7.
+    # suffixes).  J > t needs o > t(|A|+|B|)/(1+t), i.e.
+    # o >= floor(num(|A|+|B|)/(num+den)) + 1; every shared token of a
+    # TRUE pair satisfies the bound (it upper-bounds o), so keeping pairs
+    # where ANY match passes loses no recall while pruning candidates
+    # whose match position already proves J <= t.
     ub = (
         F.least(F.col("ai") - 1, F.col("bj") - 1)
         + 1
         + F.least(F.col("a_n") - F.col("ai"), F.col("b_n") - F.col("bj"))
     )
-    o_min = F.floor((F.col("a_n") + F.col("b_n")) * 7 / 17) + 1
+    o_min = F.floor((F.col("a_n") + F.col("b_n")) * num / (num + den)) + 1
     # pair-dedup as a keys-only distinct — lang is functionally
     # dependent on the pair (both ends share it), so carrying it as a
     # GROUP KEY keeps the aggregate a codegen HashAggregate; the old
@@ -163,8 +191,33 @@ def dedup_near_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("a_id", "b_id", "lang")
         .distinct()
     )
-    sa = t.select(F.col("doc_id").alias("a_id"), F.col("toks").alias("a_toks"))
-    sb = t.select(F.col("doc_id").alias("b_id"), F.col("toks").alias("b_toks"))
+    return jaccard_verify(cand, t, num, den)
+
+
+def _lang_coded(sets: DataFrame) -> DataFrame:
+    """``sets`` with ``lang`` replaced by its xxhash64, for callers that
+    drop lang from jaccard_join's result: the join only compares lang
+    for equality, and a bigint key keeps the candidate equi-join and
+    pair distinct off string hashing (funnel's near-dropped set at
+    sf0.1 on 4 local cores: 5.06 s with the string, 4.39 s coded, 4.17 s
+    without the positional filter and lang key; medians of 8 reps
+    interleaved in one process).
+    A collision between two language codes is ~k²/2⁶⁵ for k languages.
+    NULL-lang rows are dropped: NULL never equals NULL in the string
+    join, but xxhash64 of NULL is its seed, a shared non-null key."""
+    return sets.filter(F.col("lang").isNotNull()).select(
+        "doc_id", F.xxhash64("lang").alias("lang"), "toks"
+    )
+
+
+def jaccard_verify(cand: DataFrame, sets: DataFrame, num: int, den: int) -> DataFrame:
+    """Exact Jaccard of candidate pairs: ``cand``'s columns (a_id, b_id,
+    …) plus ``jaccard``, keeping pairs with J > num/den.  ``sets`` is
+    (doc_id, toks) with ``toks`` a distinct array; the token sets rejoin
+    only for candidates (tiny vs the corpus).  The division is a double
+    over integer set sizes, so the compare matches the oracle's."""
+    sa = sets.select(F.col("doc_id").alias("a_id"), F.col("toks").alias("a_toks"))
+    sb = sets.select(F.col("doc_id").alias("b_id"), F.col("toks").alias("b_toks"))
     # single-evaluation verification: the explode(array(...)) Generate is
     # an optimizer barrier (the dedup_embedding_cosine idiom), so the
     # intersection is computed ONCE per candidate; inlined, the filter
@@ -174,9 +227,7 @@ def dedup_near_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand.join(sa, "a_id")
         .join(sb, "b_id")
         .select(
-            "a_id",
-            "b_id",
-            "lang",
+            *cand.columns,
             F.size("a_toks").alias("na"),
             F.size("b_toks").alias("nb"),
             F.explode(F.array(inter1)).alias("inter"),
@@ -187,8 +238,8 @@ def dedup_near_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         verified.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") > JACCARD_THRESHOLD)
-        .select("a_id", "b_id", "lang", F.round("jaccard", 6).alias("jaccard"))
+        .filter(F.col("jaccard") > num / den)
+        .select(*cand.columns, "jaccard")
     )
 
 
@@ -197,7 +248,6 @@ def dedup_near_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the standard S-curve placing the knee at our 0.7 threshold.
 _MH_HASHES = 64
 _MH_BANDS = 16
-_MH_ROWS = _MH_HASHES // _MH_BANDS
 
 # The 64 hash functions are AFFINE maps h_i(t) = (a_i*t + b_i) mod P over
 # a single base xxhash64 per token (folded into [0, P) first), not 64
@@ -262,20 +312,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.transform(F.split("text", " "), lambda tok: F.xxhash64(tok))
         ).alias("toks"),
     ).repartition(par, "doc_id")
-    t = t.withColumn(
-        "toks31", F.transform("toks", lambda x: F.pmod(x, F.lit(_MH_P)))
-    )
-
-    def affine(a: int, b: int):
-        # NB: must be a one-arg lambda — transform() treats a second
-        # lambda parameter as the element INDEX, not a free variable
-        return lambda x: F.pmod(a * x + b, F.lit(_MH_P))
-
-    minhashes = [
-        F.array_min(F.transform("toks31", affine(a, b))).alias(f"h{i}")
-        for i, (a, b) in enumerate(_MH_AB)
-    ]
-    sig = t.select("doc_id", "lang", *minhashes)
+    keys = minhash_band_keys(t, "toks", _MH_BANDS)
     # NB: a b-bit-minhash pre-verification prune (Li & Koenig — pack the
     # low bit of each minhash into one int64, drop candidates whose
     # popcount(xor) says J is far below threshold) was prototyped and
@@ -285,20 +322,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nothing.  On a real corpus whose collision tail is dominated by
     # low-J accidents the same ~30-line change is the standard fix; see
     # SCALE.md "measured dead ends".
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("band"),
-                F.xxhash64(
-                    *[F.col(f"h{j * _MH_ROWS + i}") for i in range(_MH_ROWS)]
-                ).alias("bsig"),
-            )
-            for j in range(_MH_BANDS)
-        ]
-    )
-    keys = sig.select("doc_id", "lang", F.explode(bands).alias("b")).select(
-        "doc_id", "lang", "b.band", "b.bsig"
-    )
     a = keys.select(F.col("doc_id").alias("a_id"), "lang", "band", "bsig")
     b = keys.select(F.col("doc_id").alias("b_id"), "lang", "band", "bsig")
     # keys-only distinct (lang never reaches the output, so carrying it
@@ -309,30 +332,43 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("a_id", "b_id")
         .distinct()
     )
-    # token sets rejoin only for candidates (tiny vs the corpus);
-    # explode(array(...)) Generate barrier = ONE intersection per
-    # candidate instead of the 4 the inlined filter+project evaluated
-    ta = t.select(F.col("doc_id").alias("a_id"), F.col("toks").alias("a_toks"))
-    tb = t.select(F.col("doc_id").alias("b_id"), F.col("toks").alias("b_toks"))
-    inter1 = F.size(F.array_intersect("a_toks", "b_toks"))
-    verified = (
-        cand.join(ta, "a_id")
-        .join(tb, "b_id")
-        .select(
-            "a_id",
-            "b_id",
-            F.size("a_toks").alias("na"),
-            F.size("b_toks").alias("nb"),
-            F.explode(F.array(inter1)).alias("inter"),
-        )
+    return jaccard_verify(cand, t, *JACCARD_RATIO).select(
+        "a_id", "b_id", F.round("jaccard", 6).alias("jaccard_est")
     )
-    jac = F.col("inter").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("inter")
+
+
+def minhash_band_keys(sets: DataFrame, col: str, bands: int) -> DataFrame:
+    """(doc_id, lang, band, bsig) LSH keys: the 64 affine minhashes of
+    the bigint set ``col``, cut into ``bands`` bands of 64/bands rows,
+    each band hashed to one xxhash64 signature."""
+    rows = _MH_HASHES // bands
+    s31 = sets.withColumn(
+        f"{col}31", F.transform(col, lambda x: F.pmod(x, F.lit(_MH_P)))
     )
-    return (
-        verified.withColumn("jaccard_est", jac)
-        .filter(F.col("jaccard_est") > JACCARD_THRESHOLD)
-        .select("a_id", "b_id", F.round("jaccard_est", 6).alias("jaccard_est"))
+
+    def affine(a: int, b: int):
+        # NB: must be a one-arg lambda — transform() treats a second
+        # lambda parameter as the element INDEX, not a free variable
+        return lambda x: F.pmod(a * x + b, F.lit(_MH_P))
+
+    minhashes = [
+        F.array_min(F.transform(f"{col}31", affine(a, b))).alias(f"h{i}")
+        for i, (a, b) in enumerate(_MH_AB)
+    ]
+    sig = s31.select("doc_id", "lang", *minhashes)
+    band_arr = F.array(
+        *[
+            F.struct(
+                F.lit(j).alias("band"),
+                F.xxhash64(*[F.col(f"h{j * rows + i}") for i in range(rows)]).alias(
+                    "bsig"
+                ),
+            )
+            for j in range(bands)
+        ]
+    )
+    return sig.select("doc_id", "lang", F.explode(band_arr).alias("b")).select(
+        "doc_id", "lang", "b.band", "b.bsig"
     )
 
 
@@ -507,7 +543,8 @@ def banded_simhash(d: "DataFrame") -> "DataFrame":
     )
 
 
-NGRAM_THRESHOLD = 0.5
+NGRAM_RATIO = (1, 2)
+NGRAM_THRESHOLD = NGRAM_RATIO[0] / NGRAM_RATIO[1]
 
 
 @query(
@@ -535,15 +572,10 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     token-set Jaccard because shingles encode local word ORDER, the
     standard prefilter for LLM training-corpus dedup.
 
-    EXACT result via prefix-filtered similarity join (SSJoin/PPJoin
-    family) instead of a blocked cross join: with sets sorted in a
-    global order, any pair with J >= t must share its MINIMUM common
-    element within both prefixes of length n - ceil(t*n) + 1 (if it sat
-    outside either prefix, that set's overlap would be under t*n) — so
-    equi-joining on exploded prefix shingles has recall exactly 1, and
-    the expensive intersection runs only on candidates.  This is the
-    exact-dedup shape that survives 100 TB: candidate generation is an
-    equi-join keyed by (lang, shingle), never quadratic in a block."""
+    EXACT result via the prefix-filtered similarity join
+    :func:`jaccard_join` at t = 1/2 instead of a blocked cross join:
+    candidate generation is an equi-join keyed by (lang, shingle), never
+    quadratic in a block — the exact-dedup shape that survives 100 TB."""
     d = load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     # shingles hashed to int64 for the set ops — same counts, far
@@ -562,60 +594,11 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda sh: F.xxhash64(sh),
         )
     )
-    t = (
-        d.filter(F.size(toks) >= 3)
-        .select("doc_id", "lang", F.sort_array(trigrams).alias("shingles"))
-        .withColumn("n_sh", F.size("shingles"))
+    t = d.filter(F.size(toks) >= 3).select(
+        "doc_id", "lang", F.sort_array(trigrams).alias("toks")
     )
-    # prefix length n - ceil(t*n) + 1 at t=0.5 -> floor(n/2) + 1
-    prefix = F.slice(
-        "shingles", 1, (F.floor(F.col("n_sh") / 2) + 1).cast("int")
-    )
-    # repartition before the explode (r11): single-file scan otherwise
-    # pins the candidate join + partial pair-distinct to one task (the
-    # dedup_near_jaccard finding); doc_id keeps a pair's duplicate
-    # matches in one task so the map-side distinct still collapses them
-    par = spark.sparkContext.defaultParallelism
-    pe = t.repartition(par, "doc_id").select(
-        "doc_id", "lang", "n_sh", F.explode(prefix).alias("psh")
-    )
-    ca = pe.select(
-        F.col("doc_id").alias("a_id"), "lang", "psh", F.col("n_sh").alias("a_n")
-    )
-    cb = pe.select(
-        F.col("doc_id").alias("b_id"), "lang", "psh", F.col("n_sh").alias("b_n")
-    )
-    # J > 0.5 implies size ratio >= 0.5 — prune candidates before dedup
-    ratio_ok = (F.col("a_n") * 2 >= F.col("b_n")) & (F.col("b_n") * 2 >= F.col("a_n"))
-    cand = (
-        ca.join(cb, on=["lang", "psh"])
-        .filter((F.col("a_id") < F.col("b_id")) & ratio_ok)
-        .select("a_id", "b_id")
-        .dropDuplicates(["a_id", "b_id"])
-    )
-    sa = t.select(F.col("doc_id").alias("a_id"), F.col("shingles").alias("a_sh"))
-    sb = t.select(F.col("doc_id").alias("b_id"), F.col("shingles").alias("b_sh"))
-    # explode(array(...)) Generate barrier = ONE intersection per
-    # candidate (the dedup_near_jaccard r11 verification shape)
-    inter1 = F.size(F.array_intersect("a_sh", "b_sh"))
-    verified = (
-        cand.join(sa, "a_id")
-        .join(sb, "b_id")
-        .select(
-            "a_id",
-            "b_id",
-            F.size("a_sh").alias("na"),
-            F.size("b_sh").alias("nb"),
-            F.explode(F.array(inter1)).alias("inter"),
-        )
-    )
-    jac = F.col("inter").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("inter")
-    )
-    return (
-        verified.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") > NGRAM_THRESHOLD)
-        .select("a_id", "b_id", F.round("jaccard", 6).alias("jaccard"))
+    return jaccard_join(_lang_coded(t), *NGRAM_RATIO).select(
+        "a_id", "b_id", F.round("jaccard", 6).alias("jaccard")
     )
 
 
@@ -927,7 +910,7 @@ def pipeline_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Composition stays declarative — Catalyst fuses the stages into one
     plan: hash window (shuffle on h), prefix-filtered candidate join on
-    the survivors (same plan as dedup_near_jaccard), two LEFT joins back
+    the survivors (:func:`jaccard_join`), two LEFT joins back
     onto the corpus, one skinny groupBy(lang).  At 100 TB each stage's
     partitioning discipline is unchanged from its standalone operator;
     the greedy higher-id drop (vs cluster-canonical dedup_cluster_cc) is
@@ -954,58 +937,10 @@ def pipeline_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         hashed.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("doc_id", "lang", "toks")
-        .withColumn("n_toks", F.size("toks"))
     )
-    # prefix-filtered candidates among exact survivors (dedup_near_jaccard plan)
-    prefix = F.slice(
-        "toks",
-        1,
-        (F.col("n_toks") - F.floor((F.col("n_toks") * 7 + 9) / 10) + 1).cast("int"),
-    )
-    # explicit repartition before the explode (r11): AQE coalesces the
-    # 5k-row window exchange to ONE post-shuffle partition, which would
-    # pin the 13.4M-row candidate join to one task; an explicit
-    # repartition(n, key) is exempt from AQE coalescing, so the blowup
-    # stays parallel.  doc_id keeps each pair's duplicates in one task
-    # (map-side partial distinct still collapses them).
-    par = spark.sparkContext.defaultParallelism
-    pe = exact_kept.repartition(par, "doc_id").select(
-        "doc_id", "lang", "n_toks", F.explode(prefix).alias("ptok")
-    )
-    ca = pe.select(
-        F.col("doc_id").alias("a_id"), "lang", "ptok", F.col("n_toks").alias("a_n")
-    )
-    cb = pe.select(
-        F.col("doc_id").alias("b_id"), "lang", "ptok", F.col("n_toks").alias("b_n")
-    )
-    ratio_ok = (F.col("a_n") * 10 >= F.col("b_n") * 7) & (
-        F.col("b_n") * 10 >= F.col("a_n") * 7
-    )
-    cand = (
-        ca.join(cb, on=["lang", "ptok"])
-        .filter((F.col("a_id") < F.col("b_id")) & ratio_ok)
-        .select("a_id", "b_id")
-        .dropDuplicates(["a_id", "b_id"])
-    )
-    sa = exact_kept.select(F.col("doc_id").alias("a_id"), F.col("toks").alias("a_toks"))
-    sb = exact_kept.select(F.col("doc_id").alias("b_id"), F.col("toks").alias("b_toks"))
-    # explode(array(...)) Generate barrier = ONE intersection per
-    # candidate (the dedup_near_jaccard r11 verification shape)
-    inter1 = F.size(F.array_intersect("a_toks", "b_toks"))
+    # near pairs among the exact survivors: the higher id of each drops
     near_dropped = (
-        cand.join(sa, "a_id")
-        .join(sb, "b_id")
-        .select(
-            "b_id",
-            F.size("a_toks").alias("na"),
-            F.size("b_toks").alias("nb"),
-            F.explode(F.array(inter1)).alias("inter"),
-        )
-        .filter(
-            F.col("inter").cast("double")
-            / (F.col("na") + F.col("nb") - F.col("inter"))
-            > JACCARD_THRESHOLD
-        )
+        jaccard_join(_lang_coded(exact_kept), *JACCARD_RATIO)
         .select(F.col("b_id").alias("doc_id"))
         .distinct()
     )
@@ -1319,6 +1254,13 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
+    return containment_verify(cand, sh)
+
+
+def containment_verify(cand: DataFrame, sh: DataFrame) -> DataFrame:
+    """(a_id, b_id, lang, containment) for candidate pairs whose exact
+    |A∩B| / min(|A|,|B|) reaches CONTAIN_THRESHOLD; ``sh`` is (doc_id,
+    sh) shingle sets, rejoined only for candidates."""
     sa = sh.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("a_sh"))
     sb = sh.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("b_sh"))
     # containment evaluated ONCE per candidate behind an explode(array())
@@ -1350,7 +1292,6 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # near-dup twin's 16x4 curve BY DESIGN: containment pairs live at low
 # symmetric J.
 _CONT_BANDS = 32
-_CONT_ROWS = _MH_HASHES // _CONT_BANDS
 
 
 @query("dedup_containment_lsh", oracle=None)  # rows-only: LSH candidates
@@ -1381,33 +1322,7 @@ def dedup_containment_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin asserted in tests/test_llm_ops.py.
     """
     sh = _containment_shingles(spark, sf_dir)
-    s31 = sh.withColumn(
-        "sh31", F.transform("sh", lambda x: F.pmod(x, F.lit(_MH_P)))
-    )
-
-    def affine(a: int, b: int):
-        # one-arg lambda (a second transform() parameter means INDEX)
-        return lambda x: F.pmod(a * x + b, F.lit(_MH_P))
-
-    minhashes = [
-        F.array_min(F.transform("sh31", affine(a, b))).alias(f"h{i}")
-        for i, (a, b) in enumerate(_MH_AB)
-    ]
-    sig = s31.select("doc_id", "lang", *minhashes)
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("band"),
-                F.xxhash64(
-                    *[F.col(f"h{j * _CONT_ROWS + i}") for i in range(_CONT_ROWS)]
-                ).alias("bsig"),
-            )
-            for j in range(_CONT_BANDS)
-        ]
-    )
-    keys = sig.select("doc_id", "lang", F.explode(bands).alias("b")).select(
-        "doc_id", "lang", "b.band", "b.bsig"
-    )
+    keys = minhash_band_keys(sh, "sh", _CONT_BANDS)
     a = keys.select(F.col("doc_id").alias("a_id"), "lang", "band", "bsig")
     b = keys.select(F.col("doc_id").alias("b_id"), "lang", "band", "bsig")
     cand = (
@@ -1418,24 +1333,7 @@ def dedup_containment_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         # rewrites as the exact twin (see dedup_containment)
         .distinct()
     )
-    sa = sh.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("a_sh"))
-    sb = sh.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("b_sh"))
-    cont = (
-        F.size(F.array_intersect("a_sh", "b_sh")).cast("double")
-        / F.least(F.size("a_sh"), F.size("b_sh"))
-    )
-    return (
-        cand.join(sa, "a_id")
-        .join(sb, "b_id")
-        .select(
-            "a_id",
-            "b_id",
-            "lang",
-            F.explode(F.array(cont)).alias("containment"),
-        )
-        .filter(F.col("containment") >= CONTAIN_THRESHOLD)
-        .select("a_id", "b_id", "lang", F.round("containment", 6).alias("containment"))
-    )
+    return containment_verify(cand, sh)
 
 
 @query(
@@ -1824,8 +1722,6 @@ def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _PCB_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "for", "with")
 _PCB_SQL_STOPWORDS = "[" + ", ".join(f"'{w}'" for w in _PCB_STOPWORDS) + "]"
-_PCB_MULT = 2654435761  # Knuth multiplicative hash (corpus_split_hash)
-_PCB_MOD = 1 << 32
 _PCB_PACK_BUDGET = 2048  # corpus_pack_sequences token budget
 
 
@@ -1883,9 +1779,9 @@ _PCB_PACK_BUDGET = 2048  # corpus_pack_sequences token budget
         )
     ),
     splits AS (
-        SELECT CASE WHEN (doc_id * {_PCB_MULT}) % {_PCB_MOD} % 100 < 80
+        SELECT CASE WHEN (doc_id * {KNUTH_MULT}) % {KNUTH_MOD} % 100 < 80
                         THEN 'split_train'
-                    WHEN (doc_id * {_PCB_MULT}) % {_PCB_MOD} % 100 < 90
+                    WHEN (doc_id * {KNUTH_MULT}) % {KNUTH_MOD} % 100 < 90
                         THEN 'split_valid'
                     ELSE 'split_test' END AS split,
                tokens
@@ -1947,8 +1843,8 @@ def pipeline_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: stages 0-3 are embarrassingly parallel scan work; stage 4
     shuffles once on the content hash; stage 5 is the PPJoin prefix
-    equi-join (candidates ~linear, not n^2 — same plan as the
-    standalone headliner); stages 6-9 are one window + skinny
+    equi-join (candidates ~linear, not n^2 — :func:`jaccard_join`, the
+    standalone headliner's plan); stages 6-9 are one window + skinny
     aggregates.  At 100 TB each stage inherits its standalone
     operator's partitioning discipline unchanged; the funnel report
     itself is <=10 rows."""
@@ -1999,66 +1895,13 @@ def pipeline_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("toks"),
         )
-        .withColumn("n_toks", F.size("toks"))
         .localCheckpoint(eager=False)
     )
-    # PPJoin prefix-filtered candidates (dedup_near_jaccard's plan; token
-    # ids are xxhash64 on the Spark side vs raw strings in the oracle —
-    # set Jaccard is identical modulo 64-bit collisions, same convention
-    # as pipeline_dedup_funnel)
-    prefix = F.slice(
-        "toks",
-        1,
-        (F.col("n_toks") - F.floor((F.col("n_toks") * 7 + 9) / 10) + 1).cast(
-            "int"
-        ),
-    )
-    # explicit repartition before the explode (r11): AQE coalesces the
-    # small post-window exchange to one partition, which would pin the
-    # candidate blowup to one task (the pipeline_dedup_funnel finding)
-    pe = stage_exact.repartition(par, "doc_id").select(
-        "doc_id", "lang", "n_toks", F.explode(prefix).alias("ptok")
-    )
-    ca = pe.select(
-        F.col("doc_id").alias("a_id"), "lang", "ptok",
-        F.col("n_toks").alias("a_n"),
-    )
-    cb = pe.select(
-        F.col("doc_id").alias("b_id"), "lang", "ptok",
-        F.col("n_toks").alias("b_n"),
-    )
-    ratio_ok = (F.col("a_n") * 10 >= F.col("b_n") * 7) & (
-        F.col("b_n") * 10 >= F.col("a_n") * 7
-    )
-    cand = (
-        ca.join(cb, on=["lang", "ptok"])
-        .filter((F.col("a_id") < F.col("b_id")) & ratio_ok)
-        .select("a_id", "b_id")
-        .dropDuplicates(["a_id", "b_id"])
-    )
-    sa = stage_exact.select(
-        F.col("doc_id").alias("a_id"), F.col("toks").alias("a_toks")
-    )
-    sb = stage_exact.select(
-        F.col("doc_id").alias("b_id"), F.col("toks").alias("b_toks")
-    )
-    # explode(array(...)) Generate barrier = ONE intersection per
-    # candidate (the dedup_near_jaccard r11 verification shape)
-    inter1 = F.size(F.array_intersect("a_toks", "b_toks"))
+    # near pairs via jaccard_join (token ids are xxhash64 on the Spark
+    # side vs raw strings in the oracle — set Jaccard is identical modulo
+    # 64-bit collisions, same convention as pipeline_dedup_funnel)
     near_dropped = (
-        cand.join(sa, "a_id")
-        .join(sb, "b_id")
-        .select(
-            "b_id",
-            F.size("a_toks").alias("na"),
-            F.size("b_toks").alias("nb"),
-            F.explode(F.array(inter1)).alias("inter"),
-        )
-        .filter(
-            F.col("inter").cast("double")
-            / (F.col("na") + F.col("nb") - F.col("inter"))
-            > JACCARD_THRESHOLD
-        )
+        jaccard_join(_lang_coded(stage_exact), *JACCARD_RATIO)
         .select(F.col("b_id").alias("doc_id"))
         .distinct()
     )
@@ -2079,7 +1922,7 @@ def pipeline_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    b = (F.col("doc_id") * _PCB_MULT) % _PCB_MOD % 100
+    b = (F.col("doc_id") * KNUTH_MULT) % KNUTH_MOD % 100
     splits = stage_near.select(
         F.when(b < 80, "split_train")
         .when(b < 90, "split_valid")

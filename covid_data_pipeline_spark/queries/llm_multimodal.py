@@ -9,8 +9,7 @@ Python row-at-a-time.
 The actual image/audio decode is STUBBED (no codec libraries in this
 environment, and fixtures carry no real media): ``decode_image_stub``
 derives deterministic fake (width, height, mode) metadata from the
-payload bytes, and raises ``NotImplementedError`` through the same code
-path if a real decode is requested.  Everything Spark-side — schema,
+payload bytes.  Everything Spark-side — schema,
 partition-preserving mapInPandas plumbing, Arrow batch shapes — is real
 and tested.
 """
@@ -67,18 +66,13 @@ _DECODE_SCHEMA = T.StructType(
 )
 
 
-def decode_image_stub(payload: bytes, real_decode: bool = False) -> tuple[int, int, str]:
+def decode_image_stub(payload: bytes) -> tuple[int, int, str]:
     """Deterministic fake decode: metadata derived from payload bytes.
 
     A production build swaps this for PIL/libvips behind the identical
     signature; the Spark plumbing (schema, batching, partitioning) is
-    unchanged.  ``real_decode=True`` is the explicit stub boundary.
+    unchanged.
     """
-    if real_decode:
-        raise NotImplementedError(
-            "real image decode requires codec libraries not present in this "
-            "environment; the deterministic fake below exercises the pipeline"
-        )
     n = len(payload)
     return (64 + n % 192, 64 + (n * 7) % 192, "RGB" if n % 2 == 0 else "L")
 
@@ -140,14 +134,9 @@ _FRAME_SCHEMA = T.StructType(
 )
 
 
-def frame_count_stub(payload: bytes, real_decode: bool = False) -> int:
+def frame_count_stub(payload: bytes) -> int:
     """Deterministic fake container probe: frame count derived from the
     payload length.  Same stub boundary contract as decode_image_stub."""
-    if real_decode:
-        raise NotImplementedError(
-            "real container demux requires av codec libraries not present "
-            "in this environment"
-        )
     return 4 + len(payload) % 29
 
 
@@ -223,16 +212,11 @@ _AUDIO_SCHEMA = T.StructType(
 )
 
 
-def probe_audio_stub(payload: bytes, real_decode: bool = False) -> tuple[int, int]:
+def probe_audio_stub(payload: bytes) -> tuple[int, int]:
     """Deterministic fake audio probe: (sample_rate, duration_ms) derived
     from payload bytes.  Same stub boundary contract as
     decode_image_stub — a production build swaps in soundfile/ffmpeg
     behind the identical signature."""
-    if real_decode:
-        raise NotImplementedError(
-            "real audio decode requires codec libraries not present in this "
-            "environment"
-        )
     rates = (8000, 16000, 22050, 44100)
     return rates[len(payload) % 4], 500 + (len(payload) * 13) % 9500
 

@@ -24,11 +24,11 @@ from pyspark.sql import functions as F
 
 from ..io import data_bytes, load, table_path
 from ..registry import query
-from ._helpers import DEC, davg
+from ._helpers import KNUTH_MOD, KNUTH_MULT, davg
 
 
-def _corpus_par(spark: SparkSession, sf_dir: str, name: str = "embeddings") -> int:
-    """Partition width for fold-heavy vector frames, sized to DATA not
+def _corpus_par(spark: SparkSession, sf_dir: str) -> int:
+    """Partition width for fold-heavy embeddings frames, sized to DATA not
     cores (guide §2.2/§6): a floor of 8 escapes the single-file scan
     trap (the r11 fix), one partition per ~32 MB beyond that, capped at
     the cluster's defaultParallelism.  At fixture scale (a ~1 MB corpus)
@@ -41,7 +41,7 @@ def _corpus_par(spark: SparkSession, sf_dir: str, name: str = "embeddings") -> i
     the whole tree under the table path, from the Hadoop file system;
     a path that cannot be statted gets the cluster width, not the floor."""
     par = spark.sparkContext.defaultParallelism
-    size = data_bytes(spark, table_path(sf_dir, name))
+    size = data_bytes(spark, table_path(sf_dir, "embeddings"))
     if size is None:
         return par
     return max(1, min(par, max(8, size // (32 << 20))))
@@ -1017,7 +1017,6 @@ _PQ_K = 16          # codebook entries per subspace (4-bit codes)
 _PQ_ITERS = 2       # Lloyd rounds per subspace codebook
 _PQ_NQ = 10         # query set: vec_id < 10, as in the other ANN twins
 _PQ_TOPK = 5
-_PQ_MULT, _PQ_MOD = 2654435761, 1 << 32  # Knuth hash (corpus.py sampling)
 
 
 def _l2(a: Column | str, b: Column | str) -> Column:
@@ -1097,7 +1096,7 @@ def sim_pq_adc_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # -- train: deterministic init (first K vec_ids in Knuth-hash order,
     # the same K vectors seed every subspace), then Lloyd rounds
     seed_ids = (
-        en.select("vec_id", ((F.col("vec_id") * _PQ_MULT) % _PQ_MOD).alias("h"))
+        en.select("vec_id", ((F.col("vec_id") * KNUTH_MULT) % KNUTH_MOD).alias("h"))
         .orderBy("h", "vec_id")
         .limit(_PQ_K)
         .select(
@@ -1282,7 +1281,7 @@ def dedup_semdedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     par = _corpus_par(spark, sf_dir)
     en = en.repartition(par, "vec_id").localCheckpoint(eager=False)
     seeds = (
-        en.select("vec_id", ((F.col("vec_id") * _PQ_MULT) % _PQ_MOD).alias("h"))
+        en.select("vec_id", ((F.col("vec_id") * KNUTH_MULT) % KNUTH_MOD).alias("h"))
         .orderBy("h", "vec_id")
         .limit(_SEM_K)
         .select(

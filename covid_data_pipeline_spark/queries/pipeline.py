@@ -510,7 +510,7 @@ def analytics_brand_revenue_or(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- round-2 additions: the remaining expressible TPC-H query shapes ----
 
-from ._helpers import DEC, davg, dsum, sql_davg, sql_dsum  # noqa: E402
+from ._helpers import DEC, KNUTH_MOD, KNUTH_MULT, davg, dsum, sql_davg, sql_dsum  # noqa: E402
 
 
 @query(
@@ -1912,18 +1912,12 @@ def pipeline_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Knuth multiplicative hash (the corpus_split_hash / analytics_ab_srm
-# assignment) — never rand(): reproducible on any engine, any partitioning.
-_AB_MULT = 2654435761
-_AB_MOD = 1 << 32
-
-
 @query(
     "pipeline_experiment_readout",
     oracle=f"""
     WITH per_user AS (
         SELECT user_id, CAST(COUNT(*) AS BIGINT) AS x,
-               CASE WHEN (user_id * {_AB_MULT}) % {_AB_MOD} % 100 < 50
+               CASE WHEN (user_id * {KNUTH_MULT}) % {KNUTH_MOD} % 100 < 50
                     THEN 1 ELSE 0 END AS arm_a
         FROM events GROUP BY user_id
     ),
@@ -2022,7 +2016,7 @@ def pipeline_experiment_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes agg_welch_ttest 1000x-safe applies end-to-end."""
     e = load(spark, sf_dir, "events")
     arm_a = F.when(
-        (F.col("user_id") * _AB_MULT) % _AB_MOD % 100 < 50, 1
+        (F.col("user_id") * KNUTH_MULT) % KNUTH_MOD % 100 < 50, 1
     ).otherwise(0)
     per_user = e.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("x")
@@ -2300,8 +2294,6 @@ def pipeline_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DECON_N = 3           # n-gram length (fixture demo; production uses 8+)
 _DECON_RATIO = 0.04    # overlap kill threshold (fixture demo; prod ~0.3)
-_DECON_MULT = 2654435761  # Knuth multiplicative hash (corpus_split_hash)
-_DECON_MOD = 1 << 32
 
 
 @query(
@@ -2309,7 +2301,7 @@ _DECON_MOD = 1 << 32
     oracle=f"""
     WITH base AS (
         SELECT doc_id, text,
-               (doc_id * {_DECON_MULT}) % {_DECON_MOD} % 100 AS b
+               (doc_id * {KNUTH_MULT}) % {KNUTH_MOD} % 100 AS b
         FROM documents
     ),
     toks AS (SELECT doc_id, b, string_split(text, ' ') AS t FROM base),
@@ -2380,7 +2372,7 @@ def pipeline_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound holds no matter how large train grows; the kill-list join is
     uniform on doc_id."""
     d = load(spark, sf_dir, "documents")
-    b = (F.col("doc_id") * _DECON_MULT) % _DECON_MOD % 100
+    b = (F.col("doc_id") * KNUTH_MULT) % KNUTH_MOD % 100
     base = d.select("doc_id", "text", b.alias("b"))
     toks = F.split("text", " ")
     grams_arr = F.transform(

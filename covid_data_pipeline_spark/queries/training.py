@@ -22,11 +22,8 @@ from pyspark.sql import functions as F
 
 from ..io import NARROW_SHUFFLE, load
 from ..registry import query
-from ._helpers import DEC, davg, dsum, sql_davg
+from ._helpers import DEC, KNUTH_MOD, KNUTH_MULT, davg, sql_davg
 
-# Same Knuth multiplicative hash as corpus.py.
-_MULT = 2654435761
-_MOD = 1 << 32
 
 _CHUNK_LEN = 200
 _CHUNK_STRIDE = 150  # 50-char overlap between consecutive chunks
@@ -93,7 +90,7 @@ def doc_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     picked AS (
         SELECT d.doc_id, d.source,
-               w.whole + CASE WHEN (d.doc_id * {_MULT}) % {_MOD} % 100 < w.fpct
+               w.whole + CASE WHEN (d.doc_id * {KNUTH_MULT}) % {KNUTH_MOD} % 100 < w.fpct
                               THEN 1 ELSE 0 END AS n_copies
         FROM documents d JOIN w ON d.source = w.source
     )
@@ -118,7 +115,7 @@ def corpus_mixture_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source string, whole int, fpct int",
     )
     n_copies = F.col("whole") + F.when(
-        (F.col("doc_id") * _MULT) % _MOD % 100 < F.col("fpct"), 1
+        (F.col("doc_id") * KNUTH_MULT) % KNUTH_MOD % 100 < F.col("fpct"), 1
     ).otherwise(0)
     return (
         d.join(F.broadcast(w), "source")
@@ -140,7 +137,7 @@ def corpus_mixture_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'valid'
                 ELSE 'test' END AS split,
            lang, COUNT(*) AS n_docs, {sql_davg("n_chars")} AS avg_chars
-    FROM (SELECT lang, n_chars, (doc_id * {_MULT}) % {_MOD} % 100 AS b
+    FROM (SELECT lang, n_chars, (doc_id * {KNUTH_MULT}) % {KNUTH_MOD} % 100 AS b
           FROM documents)
     GROUP BY 1, 2
     """,
@@ -157,7 +154,7 @@ def corpus_split_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     split column is typically materialized at ingest and this query is
     the audit that distributions stayed balanced."""
     d = load(spark, sf_dir, "documents")
-    b = (F.col("doc_id") * _MULT) % _MOD % 100
+    b = (F.col("doc_id") * KNUTH_MULT) % KNUTH_MOD % 100
     split = (
         F.when(b < 80, "train").when(b < 90, "valid").otherwise("test")
     ).alias("split")
@@ -714,8 +711,6 @@ def corpus_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _JL_K = 16            # output dims (64 -> 16, a 4x reduction)
 _JL_PRIME = 1_000_003
-_JL_KNUTH = 2654435761
-_JL_MOD = 1 << 32
 _JL_HALF = 1 << 31
 
 
@@ -728,7 +723,7 @@ _JL_HALF = 1 << 31
     SELECT vec_id, CAST(j AS INTEGER) AS j,
            ROUND(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
                [CASE WHEN (CAST(i - 1 AS BIGINT) * {_JL_PRIME} + j)
-                          * {_JL_KNUTH} % {_JL_MOD} >= {_JL_HALF}
+                          * {KNUTH_MULT} % {KNUTH_MOD} >= {_JL_HALF}
                      THEN vec[i] ELSE -vec[i] END FOR i IN range(1, 65)]),
                (a, x) -> a + x) / 4.0, 6) AS pj
     FROM v CROSS JOIN js
@@ -761,7 +756,7 @@ def embed_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     def comp(j: int):
         signed = F.expr(
             f"transform(vec, (x, i) -> CASE WHEN (CAST(i AS BIGINT)"
-            f" * {_JL_PRIME} + {j}) * {_JL_KNUTH} % {_JL_MOD} >= {_JL_HALF}"
+            f" * {_JL_PRIME} + {j}) * {KNUTH_MULT} % {KNUTH_MOD} >= {_JL_HALF}"
             f" THEN x ELSE -x END)"
         )
         return F.round(

@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame, functions as F
 from ..queries._helpers import DEC
 
 HOUR_US = 3_600_000_000
-Q15_US = 900_000_000
 GAP_US = 1_800_000_000  # 30-minute session gap
 
 
@@ -242,7 +241,14 @@ def daily_bitmap_partials(df: DataFrame) -> DataFrame:
     )
 
 
-def stateful_simhash_band_dedup(banded: DataFrame, ham_max: int = 3) -> DataFrame:
+# Hamming bound of the streaming simhash dedup: the pigeonhole bands
+# (llm_dedup.SIMHASH_BANDS_HAM3) guarantee recall exactly 1 up to 3 bits.
+SIMHASH_HAM_MAX = 3
+# Space-Saving counters kept per event_type.
+SPACESAVING_CAPACITY = 8
+
+
+def stateful_simhash_band_dedup(banded: DataFrame) -> DataFrame:
     """TRUE streaming near-duplicate detection: a banded index that
     grows as documents arrive.  Input rows are (doc_id, lang, simhash,
     band, val) — each document posted under its four pigeonhole simhash
@@ -251,7 +257,7 @@ def stateful_simhash_band_dedup(banded: DataFrame, ham_max: int = 3) -> DataFram
     approximation) — and GroupState per (lang, band, val) bucket carries
     every fingerprint ever filed there; each arriving document is
     compared (vectorized XOR+popcount over the bucket's history) and
-    near-dup pairs (Hamming <= ``ham_max``) are emitted incrementally,
+    near-dup pairs (Hamming <= SIMHASH_HAM_MAX) are emitted incrementally,
     the moment the second copy arrives.  This is the ingest-time twin of
     a batch ham<=3 self-join: no batch pass, just per-bucket state.
 
@@ -320,7 +326,7 @@ def stateful_simhash_band_dedup(banded: DataFrame, ham_max: int = 3) -> DataFram
             # mask off self-and-later incoming partners (j >= n0 + i)
             cols = np.arange(hist.size)[None, :]
             cut = (n0 + np.arange(lo, hi))[:, None]
-            cand = (ham <= ham_max) & (cols < cut)
+            cand = (ham <= SIMHASH_HAM_MAX) & (cols < cut)
             for i, j in zip(*np.nonzero(cand)):
                 doc_id = int(id_arr[n0 + lo + i])
                 prev_id = int(id_arr[j])
@@ -343,9 +349,9 @@ def stateful_simhash_band_dedup(banded: DataFrame, ham_max: int = 3) -> DataFram
     )
 
 
-def stateful_spacesaving_topk(df: DataFrame, capacity: int = 8) -> DataFrame:
+def stateful_spacesaving_topk(df: DataFrame) -> DataFrame:
     """Space-Saving heavy hitters per event_type in explicit GroupState:
-    at most ``capacity`` (user, count) counters per key survive any
+    at most SPACESAVING_CAPACITY (user, count) counters per key survive any
     stream length — the bounded-memory answer to "top users so far" on
     an unbounded stream, with the classic guarantees (every true count
     <= its estimate; any user with true frequency > n/capacity is
@@ -370,7 +376,7 @@ def stateful_spacesaving_topk(df: DataFrame, capacity: int = 8) -> DataFrame:
             n_seen += 1
             if u in table:
                 table[u] += 1
-            elif len(table) < capacity:
+            elif len(table) < SPACESAVING_CAPACITY:
                 table[u] = 1
             else:
                 # evict the deterministic minimum: (count, user_id)

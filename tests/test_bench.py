@@ -1,8 +1,9 @@
-"""bench.py's warm-up list and the experiments/ harness, checked
-without a SparkSession."""
+"""bench.py's warm-up list, the experiments/ harness and the package's
+source, checked without a SparkSession."""
 
 from __future__ import annotations
 
+import ast
 import pathlib
 import re
 import subprocess
@@ -63,3 +64,25 @@ def test_cited_experiment_and_plan_paths_exist():
         if not (REPO / m).is_file()
     ]
     assert not missing, missing
+
+
+def test_package_modules_reference_every_imported_name():
+    """An import the module never references is dead code a refactor left
+    behind, and makes the imported helper look more widely used than it
+    is.  ``__init__.py`` files are exempt: their imports are re-exports."""
+    unused = []
+    for f in sorted((REPO / "covid_data_pipeline_spark").rglob("*.py")):
+        if f.name == "__init__.py":
+            continue
+        tree = ast.parse(f.read_text())
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for node in ast.walk(tree):
+            if not isinstance(node, (ast.Import, ast.ImportFrom)):
+                continue
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            for alias in node.names:
+                name = alias.asname or alias.name.split(".")[0]
+                if name not in used:
+                    unused.append(f"{f.relative_to(REPO)}:{node.lineno}: {name}")
+    assert not unused, unused

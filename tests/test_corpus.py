@@ -289,9 +289,8 @@ def test_bottomk_sketch_is_mergeable(spark):
     assert exact equality with the registered query's sample set."""
     from pyspark.sql import Window, functions as F
 
-    from covid_data_pipeline_spark.queries.corpus import (
-        _KMV_K, _SAMPLE_MOD, _SAMPLE_MULT,
-    )
+    from covid_data_pipeline_spark.queries._helpers import KNUTH_MOD, KNUTH_MULT
+    from covid_data_pipeline_spark.queries.corpus import _KMV_K
     from covid_data_pipeline_spark.registry import load_all
 
     reg = load_all()
@@ -306,7 +305,7 @@ def test_bottomk_sketch_is_mergeable(spark):
         return (
             df.select("event_type", "user_id")
             .distinct()
-            .withColumn("h", (F.col("user_id") * _SAMPLE_MULT) % _SAMPLE_MOD)
+            .withColumn("h", (F.col("user_id") * KNUTH_MULT) % KNUTH_MOD)
             .withColumn("rk", F.row_number().over(w))
             .filter(F.col("rk") <= _KMV_K)
         )

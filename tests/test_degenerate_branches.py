@@ -477,15 +477,12 @@ def test_decontaminate_too_short_doc_has_no_shingles_but_is_reported(
     cannot be killed) and the full report must still hash-match the
     DuckDB oracle.  doc_id chosen so the Knuth-hash bucket lands in
     train (b < 80)."""
-    from covid_data_pipeline_spark.queries.pipeline import (
-        _DECON_MOD,
-        _DECON_MULT,
-    )
+    from covid_data_pipeline_spark.queries._helpers import KNUTH_MOD, KNUTH_MULT
 
     doc_id = next(
         i
         for i in range(999_000, 1_000_000)
-        if (i * _DECON_MULT) % _DECON_MOD % 100 < 80
+        if (i * KNUTH_MULT) % KNUTH_MOD % 100 < 80
     )
     extra = spark.createDataFrame(
         [(doc_id, "two tokens", "en", "src9", 10)],
