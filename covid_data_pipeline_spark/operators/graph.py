@@ -31,12 +31,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# pointer jumping needs O(log diameter) rounds: more than this is a bug
+MAX_ROUNDS = 25
+
 
 def connected_components(
-    edges: DataFrame,
-    vertices: DataFrame,
-    vertex: str = "node",
-    max_rounds: int = 25,
+    edges: DataFrame, vertices: DataFrame, vertex: str = "node"
 ) -> DataFrame:
     """Label every vertex with the MIN vertex id of its component.
 
@@ -57,7 +57,7 @@ def connected_components(
         F.col(vertex).alias("node"), F.col(vertex).alias("component")
     ).localCheckpoint(eager=True)
     prev_sum = None
-    for _ in range(max_rounds):
+    for _ in range(MAX_ROUNDS):
         # propagate: each vertex takes min(own label, neighbors' labels)
         msgs = sym.join(labels, sym["s"] == labels["node"]).select(
             F.col("d").alias("node"), "component"
@@ -81,4 +81,4 @@ def connected_components(
         if cur_sum == prev_sum:
             return labels
         prev_sum = cur_sum
-    raise RuntimeError(f"connected_components did not converge in {max_rounds} rounds")
+    raise RuntimeError(f"connected_components did not converge in {MAX_ROUNDS} rounds")

@@ -219,7 +219,7 @@ def jaccard_verify(cand: DataFrame, sets: DataFrame, num: int, den: int) -> Data
     sa = sets.select(F.col("doc_id").alias("a_id"), F.col("toks").alias("a_toks"))
     sb = sets.select(F.col("doc_id").alias("b_id"), F.col("toks").alias("b_toks"))
     # single-evaluation verification: the explode(array(...)) Generate is
-    # an optimizer barrier (the dedup_embedding_cosine idiom), so the
+    # an optimizer barrier (the _emb_dedup_corpus idiom), so the
     # intersection is computed ONCE per candidate; inlined, the filter
     # pushed into the join condition + the projection re-derived it 4x
     inter1 = F.size(F.array_intersect("a_toks", "b_toks"))

@@ -4,8 +4,10 @@ extension).
 Exact cosine via higher-order functions — zip_with multiply + an
 explicit LEFT-FOLD aggregate, mirrored by DuckDB ``list_reduce`` so
 both engines execute the identical IEEE operation sequence and the
-doubles match bit-for-bit.  Everything stays JVM-side (no Python in
-the row path).
+doubles match bit-for-bit.  The label-blocked exact pair queries run the
+same fold per BLOCK instead, in numpy in one Arrow Python worker per
+block (``cosine_pairs``): ``ArrayAggregate`` is ``CodegenFallback``, so
+the per-pair fold would run interpreted once per pair.
 
 Scale ladder: label-blocked exact pairs (quadratic per block, the
 correctness oracle) -> broadcast top-k for a small query set -> at
@@ -18,6 +20,7 @@ shape with deterministic random-hyperplane buckets.
 from __future__ import annotations
 
 import math
+from functools import partial
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -85,6 +88,89 @@ def _norm(a: Column | str) -> Column:
     return F.sqrt(_dot(a, a))
 
 
+# Rows per tile of the block kernel: a worker holds a few _COS_TILE x n
+# double matrices for a block of n vectors, never n x n.
+_COS_TILE = 256
+
+
+def _cosine_block(table, *, block, threshold):
+    """One block's pairs for ``cosine_pairs``: the IEEE operations of
+    ``_dot(a, b) / (_norm(a) * _norm(b))`` and the oracle's fold, in the
+    same order — f32 -> f64, then ``acc += outer(v[:, i], v[:, i])`` for
+    i = 0..d-1 (not ``v @ v.T``: BLAS sums in another order) — so every
+    double is bit-identical.  As in the fold, a NULL array or element or
+    a length mismatch drops the pair, a NaN cosine is kept (NaN sorts
+    above every double), and a zero divisor under a non-NULL dot raises
+    (ANSI DIVIDE_BY_ZERO), naming the vec_id.  Unannotated: applyInArrow
+    would read annotations as its type-hinted form."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    ids = table.column("vec_id").to_numpy()
+    vec = table.column("vec").combine_chunks()
+    length = pc.list_value_length(vec).to_numpy(zero_copy_only=False)
+    bad = np.isnan(length)  # a NULL array
+    bad[pc.list_parent_indices(vec).filter(vec.flatten().is_null()).to_numpy()] = True
+    ix, cos_out = [np.zeros((2, 0), np.int64)], [np.zeros(0)]
+    for d in np.unique(length[~bad]):
+        rows = np.flatnonzero(~bad & (length == d))
+        rows = rows[np.argsort(ids[rows], kind="stable")]
+        v = vec.take(rows).flatten().to_numpy(zero_copy_only=False)
+        v = v.astype(np.float64).reshape(len(rows), int(d)).T.copy()
+        sq = np.zeros(len(rows))
+        for x in v:
+            sq += x * x
+        nrm, rid = np.sqrt(sq), ids[rows]
+        for r0 in range(0, len(rows), _COS_TILE):
+            r1 = min(r0 + _COS_TILE, len(rows))
+            # a sorted block pairs each row only with the rows after it
+            acc = np.zeros((r1 - r0, len(rows) - r0))
+            for x in v:
+                acc += np.multiply.outer(x[r0:r1], x[r0:])
+            den = np.multiply.outer(nrm[r0:r1], nrm[r0:])
+            later = rid[None, r0:] > rid[r0:r1, None]
+            if (zero := later & (den == 0)).any():
+                i, j = (r0 + int(k[0]) for k in np.nonzero(zero))
+                z = i if nrm[i] == 0 else j
+                raise ZeroDivisionError(
+                    f"cosine_pairs: vec_id {rid[z]} has a zero norm; its "
+                    f"cosine with vec_id {rid[i + j - z]} divides by zero"
+                )
+            cos = np.divide(acc, den, out=np.full_like(acc, np.nan), where=later)
+            i, j = np.nonzero(later & ((cos > threshold) | np.isnan(cos)))
+            ix.append(np.stack([rows[r0 + i], rows[r0 + j]]))
+            cos_out.append(cos[i, j])
+    a_ix, b_ix = np.concatenate(ix, axis=1)
+    vid = table.column("vec_id")
+    return pa.table({
+        "a_id": vid.take(a_ix),
+        "b_id": vid.take(b_ix),
+        block: table.column(block).take(a_ix),
+        "cos_raw": np.concatenate(cos_out),
+    })
+
+
+def cosine_pairs(df: DataFrame, block: str, threshold: float) -> DataFrame:
+    """Exact cosine pairs within a blocking key: ``(vec_id, <block>,
+    vec)`` in, ``(a_id, b_id, <block>, cos_raw)`` out, for same-block
+    pairs with a_id < b_id and cos_raw > threshold.  One grouped Arrow
+    map scores each block whole (``_cosine_block``), in the spirit of
+    REPOSE's per-partition local similarity step (ICDE 2021): a block
+    must fit one worker, _COS_TILE x block-size doubles at a time.  A
+    NULL block or vec_id pairs with nothing, as in the equi-join form."""
+    id_t, block_t = (df.schema[c].dataType.simpleString() for c in ("vec_id", block))
+    schema = f"a_id {id_t}, b_id {id_t}, `{block}` {block_t}, cos_raw double"
+    return (
+        df.select("vec_id", block, "vec")
+        .filter(F.col("vec_id").isNotNull() & F.col(block).isNotNull())
+        .groupBy(block)
+        .applyInArrow(
+            partial(_cosine_block, block=block, threshold=threshold), schema
+        )
+    )
+
+
 @query(
     "sim_cosine_pairs",
     oracle=f"""
@@ -102,40 +188,15 @@ def _norm(a: Column | str) -> Column:
 def sim_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine-similar pairs within a label block (cos > 0.25).
     Label is the blocking key bounding the quadratic term — the same
-    role lang plays for Jaccard dedup.
-
-    r11 optimization-round shape: the stream side hash-repartitions by
-    vec_id first (the single parquet file otherwise pins ~200k pair
-    evaluations to ONE scan task), and norms are computed once per ROW
-    before the pair join — the join boundary stops CollapseProject from
-    re-inlining the fold per PAIR, so no explicit barrier is needed
-    (one fold per pair instead of three; measured A/B in
-    OPTIMIZATION_r11.md "Batch 1", ea6ce32:experiments/opt_r11_hof_ab.py:
-    3.95 -> 0.74 s).  cos values are
-    bit-identical: same IEEE ops in the same order, just evaluated once
-    per row instead of once per pair."""
-    par = spark.sparkContext.defaultParallelism
-    e = (
-        load(spark, sf_dir, "embeddings")
-        .repartition(par, "vec_id")
-        .select("vec_id", "label", _vec("embedding").alias("vec"))
-        .select("vec_id", "label", "vec", _norm("vec").alias("nrm"))
+    role lang plays for Jaccard dedup.  ``cosine_pairs`` scores each
+    label block whole in one grouped Arrow map: the per-pair
+    ``zip_with``/``aggregate`` fold it replaced ran ~200k interpreted
+    64-step folds at sf0.1 (0.88-1.07 -> 0.52 s, same digest)."""
+    e = load(spark, sf_dir, "embeddings").select(
+        "vec_id", "label", F.col("embedding").alias("vec")
     )
-    a = e.select(
-        F.col("vec_id").alias("a_id"), "label",
-        F.col("vec").alias("a_vec"), F.col("nrm").alias("a_n"),
-    )
-    b = e.select(
-        F.col("vec_id").alias("b_id"), "label",
-        F.col("vec").alias("b_vec"), F.col("nrm").alias("b_n"),
-    )
-    cos = _dot("a_vec", "b_vec") / (F.col("a_n") * F.col("b_n"))
-    return (
-        a.join(b, on="label")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .withColumn("cos_raw", cos)
-        .filter(F.col("cos_raw") > COSINE_THRESHOLD)
-        .select("a_id", "b_id", "label", F.round("cos_raw", 6).alias("cosine"))
+    return cosine_pairs(e, "label", COSINE_THRESHOLD).select(
+        "a_id", "b_id", "label", F.round("cos_raw", 6).alias("cosine")
     )
 
 
@@ -168,7 +229,7 @@ def sim_topk_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", _vec("embedding").alias("vec")
     )
     # r12: norms once per ROW before the pair join (1 fold per pair
-    # instead of 3 — the r11 cosine_pairs/silhouette idiom).  The
+    # instead of 3 — the r11 silhouette idiom).  The
     # corpus-side repartition is both the single-file-scan parallelism
     # fix and the projection barrier that stops the optimizer
     # re-inlining the norm into the per-pair projection; the broadcast
@@ -418,43 +479,18 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical doubles (exact f32->f64 cast, then one IEEE multiply), so
     the pair set matches bit-for-bit.  The k+2M copy pairs with BOTH the
     original and the k+1M copy, making the MIN(a_id) canonicalization do
-    real work instead of passing through a single pair."""
-    en = _emb_dedup_corpus(spark, sf_dir)
-    # r12 (guide §2.5): the pair join was already a broadcast (the ~1 MB
-    # build side is under autoBroadcastJoinThreshold), but each join side
-    # re-ran the seed + normalize lineage over three scans of the
-    # single-file corpus, so the streamed side ran one task per scan.
-    # The checkpoint runs normalize once for both sides, at _corpus_par
-    # width, so every task enumerates pairs (OPTIMIZATION_r12.md
-    # "dedup_embedding_cosine").  Identical pair multiset, 3.61 -> 1.61 s
-    # interleaved median.  At 100 TB the block side outgrows broadcast
-    # and the block key is an LSH/IVF bucket id with far more distinct
-    # values — the shuffled join returns and partitions evenly.
-    en = en.repartition(_corpus_par(spark, sf_dir), "vec_id").localCheckpoint(
-        eager=False
-    )
-    a = en.select(
-        F.col("vec_id").alias("a_id"), "label", F.col("nvec").alias("a_vec")
-    )
-    b = en.select(
-        F.col("vec_id").alias("b_id"), "label", F.col("nvec").alias("b_vec")
-    )
-    pairs = (
-        a.join(F.broadcast(b), on="label")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .filter(_dot("a_vec", "b_vec") > DUP_COSINE)
-        .select("a_id", "b_id")
-    )
+    real work instead of passing through a single pair.  ``cosine_pairs``
+    scores the RAW seeded vectors, so each pair's cosine is exactly the
+    oracle's dot / (|a||b|), not a dot of pre-normalized vectors."""
+    pairs = cosine_pairs(_emb_seeded(spark, sf_dir), "label", DUP_COSINE)
     return pairs.groupBy(F.col("b_id").alias("dup_id")).agg(
         F.min("a_id").alias("canon_id")
     )
 
 
-def _emb_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dedup_embedding_cosine's seeded + normalized corpus, PRE-checkpoint
-    (module level so tests/test_plans.py can assert the Generate barrier
-    where the lineage is still visible — the r12 localCheckpoint hides it
-    from the final plan)."""
+def _emb_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embeddings corpus as double vectors, plus the two scaled
+    copies of every _DUP_SEED_MOD-th vector (see dedup_embedding_cosine)."""
     base = load(spark, sf_dir, "embeddings").select(
         "vec_id", "label", _vec("embedding").alias("vec")
     )
@@ -467,9 +503,16 @@ def _emb_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.transform("vec", lambda x: x * F.lit(factor)).alias("vec"),
         )
 
-    e = base.unionByName(scaled(_DUP_OFFSET_1, 2.0)).unionByName(
+    return base.unionByName(scaled(_DUP_OFFSET_1, 2.0)).unionByName(
         scaled(_DUP_OFFSET_2, 3.0)
     )
+
+
+def _emb_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The seeded corpus, normalized: dedup_semdedup_kmeans's input
+    (module level so tests/test_plans.py can assert the Generate barrier
+    on the lineage before semdedup's localCheckpoint hides it)."""
+    e = _emb_seeded(spark, sf_dir)
     # Pre-normalize ONCE per vector so the quadratic stage does one fold
     # (dot) per pair instead of three (dot + both norms) — measured 3x
     # less per-pair work at sf0.1.  Per-element division reorders float
@@ -1063,7 +1106,7 @@ def sim_pq_adc_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", _vec("embedding").alias("vec")
     )
-    # normalize behind a Generate barrier (see dedup_embedding_cosine)
+    # normalize behind a Generate barrier (see _emb_dedup_corpus)
     en = (
         e.select("vec_id", "vec", _norm("vec").alias("n0"))
         .select("vec_id", "vec", F.explode(F.array("n0")).alias("n"))
@@ -1784,7 +1827,7 @@ def sim_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     # instead of three), and the corpus repartitioned off the
     # single-file scan so the panel x corpus fold parallelizes (r11;
     # norm-per-row values are the identical doubles, so cosine is
-    # bit-identical — the sim_cosine_pairs batch-1 precedent)
+    # bit-identical — OPTIMIZATION_r11.md "Batch 1")
     par = spark.sparkContext.defaultParallelism
     c = e.select(
         F.col("vec_id").alias("neighbor_id"),

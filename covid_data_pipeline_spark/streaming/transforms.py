@@ -58,51 +58,6 @@ def sliding_1h_15m(df: DataFrame) -> DataFrame:
     )
 
 
-def session_agg_stream(df: DataFrame) -> DataFrame:
-    """Per-user session windows with a 30-min gap, via the native
-    streaming ``session_window`` operator.  Two events join a session iff
-    their gap is STRICTLY below 30 min (window [ts, ts+gap) overlap) —
-    the batch gaps-and-islands twin uses ``gap >= 30min`` to start a new
-    session, matching exactly."""
-    return (
-        df.groupBy(F.session_window("ts", "30 minutes"), "user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast(DEC)).cast("double").alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.unix_micros(F.col("session_window.start")).alias("session_start_us"),
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def dedup_content(df: DataFrame) -> DataFrame:
-    """Streaming twin of the reference's skip-if-same-hash: drop events
-    whose (user, content-hash) was already seen.  On a stream this is
-    ``dropDuplicates`` keyed on the content identity; state is evicted by
-    the caller's watermark (``dropDuplicatesWithinWatermark``)."""
-    keyed = df.select(
-        "event_id", "user_id", F.sha2("props", 256).alias("content_hash"), "ts"
-    )
-    return keyed.dropDuplicates(["user_id", "content_hash"])
-
-
-def tumbling_5m_counts(df: DataFrame) -> DataFrame:
-    """5-minute tumbling counts — small windows used by the watermark
-    semantics test so late-row drops are observable."""
-    return (
-        df.groupBy(F.window("ts", "5 minutes"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.unix_micros(F.col("window.start")).alias("ws_us"),
-            "n_events",
-        )
-    )
-
-
 def stateful_user_totals(df: DataFrame) -> DataFrame:
     """Custom stateful operator via ``applyInPandasWithState``: per-user
     running (event count, value total) carried in explicit GroupState

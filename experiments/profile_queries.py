@@ -25,6 +25,7 @@ import argparse
 import json
 import os
 import re
+import statistics
 import sys
 import time
 
@@ -36,6 +37,12 @@ PYTHON_NODES = re.compile(
     r"\b(?:BatchEvalPython|ArrowEvalPython|MapIn(?:Pandas|Arrow)"
     r"|FlatMap\w*In(?:Pandas|Arrow)\w*)\b"
 )
+
+
+def summary(times: list[float]) -> tuple[float, float, float]:
+    """(median, min, max) of a query's rep times; an even rep count's
+    median is the mean of the two middle samples."""
+    return statistics.median(times), min(times), max(times)
 
 
 def main() -> None:
@@ -91,13 +98,9 @@ def main() -> None:
         nex = len(re.findall(r"\bExchange\b", plan))
         stats = f"exchanges={nex} python_nodes={len(PYTHON_NODES.findall(plan))}"
         if times:
-            times.sort()
-            med = times[len(times) // 2]
+            med, lo, hi = summary(times)
             results[name] = round(med, 3)
-            stats = (
-                f"med={med:7.3f} min={times[0]:7.3f} max={times[-1]:7.3f}  "
-                + stats
-            )
+            stats = f"med={med:7.3f} min={lo:7.3f} max={hi:7.3f}  " + stats
         print(f"{name:40s} {stats}", flush=True)
     print(f"# load1m at end: {os.getloadavg()[0]:.2f}", file=sys.stderr)
     print(json.dumps(results))

@@ -86,3 +86,13 @@ def test_package_modules_reference_every_imported_name():
                 if name not in used:
                     unused.append(f"{f.relative_to(REPO)}:{node.lineno}: {name}")
     assert not unused, unused
+
+
+def test_profile_summary_median_of_even_reps_is_the_middle_mean(monkeypatch):
+    """Two reps report their mean as the median, not the slower one."""
+    monkeypatch.syspath_prepend(str(REPO / "experiments"))
+    from profile_queries import summary
+
+    assert summary([3.0, 1.0]) == (2.0, 1.0, 3.0)
+    assert summary([4.0, 1.0, 2.0, 3.0]) == (2.5, 1.0, 4.0)
+    assert summary([2.0, 9.0, 1.0]) == (2.0, 1.0, 9.0)

@@ -84,6 +84,138 @@ def test_jaccard_join_matches_brute_force_at_boundaries(spark, num, den):
     assert (19, 20) not in pairs  # NULL lang
 
 
+_NAN, _INF = float("nan"), float("inf")
+# (vec_id, label, vec) rows for the cosine_pairs boundary test; each hand
+# case has its own label so its pairs are isolated
+_COS_CASES = [
+    (1, 1, [1.0, 2.0, 3.0]), (2, 1, [1.0, 2.0, 3.5]), (3, 1, [-1.0, 0.0, 1.0]),
+    (None, 1, [1.0, 2.0, 3.0]),  # NULL vec_id
+    (4, None, [1.0, 2.0]), (5, None, [1.0, 2.0]),  # equal vectors, NULL label
+    (6, 2, [1.0, 2.0]), (7, 2, None), (8, 2, [1.0, 2.0]),  # NULL array
+    (9, 3, [1.0, 2.0]), (10, 3, [1.0, None]), (11, 3, [1.0, 2.0]),  # NULL element
+    (12, 4, [1.0, 2.0]), (13, 4, [1.0, 2.0, 3.0]), (14, 4, [1.0, 2.0]),  # ragged
+    (15, 5, [_NAN, 2.0]), (16, 5, [1.0, 2.0]),  # NaN element
+    (17, 6, [1.0, 2.0]),  # single member
+    # zero norm, but no pair divides by zero under a non-NULL dot
+    (18, 7, [0.0, 0.0]), (19, 7, [1.0, None]), (20, 7, [1.0, 2.0, 3.0]),
+    (21, 7, [_NAN, 1.0]),
+    (22, 8, [3.0, 4.0]), (22, 8, [3.0, 4.0]), (23, 8, [3.0, 4.0]),  # dup vec_id
+    (24, 9, [_INF, 1.0]), (25, 9, [1.0, 2.0]),  # inf / inf
+    (26, 10, [1.0, 0.0]), (27, 10, [3.0, 4.0]),  # cos exactly 0.6
+]
+
+
+def _fold_cosine_pairs(df, threshold):
+    """The per-pair shape cosine_pairs replaced: norms once per row, an
+    equi-join on the block, then the zip_with/aggregate fold per pair."""
+    from pyspark.sql import functions as F
+
+    from covid_data_pipeline_spark.queries.llm_similarity import _dot, _norm, _vec
+
+    e = df.select("vec_id", "label", _vec("vec").alias("vec"))
+    e = e.select("vec_id", "label", "vec", _norm("vec").alias("nrm"))
+
+    def side(s):
+        return e.select(
+            F.col("vec_id").alias(f"{s}_id"), "label",
+            F.col("vec").alias(f"{s}_vec"), F.col("nrm").alias(f"{s}_n"),
+        )
+
+    cos = _dot("a_vec", "b_vec") / (F.col("a_n") * F.col("b_n"))
+    return (
+        side("a").join(side("b"), on="label")
+        .filter(F.col("a_id") < F.col("b_id"))
+        .withColumn("cos_raw", cos)
+        .filter(F.col("cos_raw") > threshold)
+        .select("a_id", "b_id", "label", "cos_raw")
+    )
+
+
+def _exact_rows(df):
+    """Sorted rows with cos_raw as its exact hex (every NaN as 'nan')."""
+    return sorted(
+        (a, b, lab, "nan" if c != c else c.hex()) for a, b, lab, c in df.collect()
+    )
+
+
+@pytest.mark.parametrize("threshold", [0.25, 0.6])
+def test_cosine_pairs_matches_per_pair_fold_at_boundaries(spark, threshold):
+    """cosine_pairs returns exactly the rows of the per-pair fold it
+    replaced, every cos_raw bit-identical: a NULL label or vec_id pairs
+    with nothing, a NULL array, NULL element or length mismatch drops the
+    pair, a NaN cosine is kept (NaN orders above every double), a zero
+    norm paired only under a NULL dot does not raise, equal vec_ids do
+    not pair, cos == threshold is out.  Seeded random blocks, one larger
+    than _COS_TILE, exercise the tiling and the summation order."""
+    import random
+
+    from covid_data_pipeline_spark.queries.llm_similarity import (
+        _COS_TILE,
+        cosine_pairs,
+    )
+
+    rng = random.Random(11)
+    # (label, dim) per random vector; a per-vector offset spreads the
+    # cosines over both thresholds.  At 300 dims a blocked BLAS product
+    # sums in another order than the left fold
+    shapes = [(11, 64)] * (_COS_TILE + 44) + [(12, 64)] * 40 + [(13, 300)] * 40
+    rows = list(_COS_CASES) + [
+        (100 + i, lab, [m + rng.gauss(0.0, 1.0) for _ in range(dim)])
+        for i, (lab, dim, m) in enumerate(
+            (lab, dim, rng.uniform(0.0, 1.5)) for lab, dim in shapes
+        )
+    ]
+    rng.shuffle(rows)
+    df = spark.createDataFrame(rows, "vec_id long, label int, vec array<float>")
+    got = cosine_pairs(df, "label", threshold)
+    assert got.columns == ["a_id", "b_id", "label", "cos_raw"]
+    want = _exact_rows(_fold_cosine_pairs(df, threshold))
+    assert _exact_rows(got) == want
+    pairs = {(a, b) for a, b, _, _ in want}
+    assert (1, 2) in pairs and (4, 5) not in pairs  # NULL label
+    assert (6, 8) in pairs and (9, 11) in pairs and (12, 14) in pairs
+    assert {7, 10, 13, 19, 20} & {i for p in pairs for i in p} == set()
+    assert (15, 16) in pairs and (18, 21) in pairs and (24, 25) in pairs  # NaN
+    assert [p for p in want if p[:2] == (22, 23)] == 2 * [(22, 23, 8, (1.0).hex())]
+    assert ((26, 27) in pairs) == (threshold < 0.6)
+    assert any(p[2] == 11 and p[0] >= 100 + _COS_TILE for p in want)  # 2nd tile
+
+
+def test_cosine_pairs_zero_norm_fails_loudly(spark):
+    """A zero divisor under a non-NULL dot raises DIVIDE_BY_ZERO in the
+    per-pair fold, and cosine_pairs fails too, naming the vec_id; single
+    and empty inputs give no rows."""
+    from covid_data_pipeline_spark.queries.llm_similarity import cosine_pairs
+
+    schema = "vec_id long, label int, vec array<float>"
+    df = spark.createDataFrame(
+        [(1, 1, [1.0, 2.0]), (2, 1, [0.0, 0.0]), (3, 2, [0.0, 0.0])], schema
+    )
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        _fold_cosine_pairs(df, 0.25).collect()
+    with pytest.raises(Exception, match="vec_id 2 has a zero norm"):
+        cosine_pairs(df, "label", 0.25).collect()
+    alone = df.filter("vec_id = 3")  # a zero norm alone in its block
+    assert _fold_cosine_pairs(alone, 0.25).collect() == []
+    assert cosine_pairs(alone, "label", 0.25).collect() == []
+    empty = spark.createDataFrame([], schema)
+    assert cosine_pairs(empty, "label", 0.25).collect() == []
+
+
+def test_connected_components_round_cap_raises(spark, monkeypatch):
+    """A 6-vertex chain converges under MAX_ROUNDS; with the cap at 1 the
+    same chain raises instead of returning unconverged labels."""
+    from covid_data_pipeline_spark.operators import graph
+
+    edges = spark.createDataFrame([(i, i + 1) for i in range(5)], "src long, dst long")
+    vertices = spark.range(6).withColumnRenamed("id", "node")
+    got = {tuple(r) for r in graph.connected_components(edges, vertices).collect()}
+    assert got == {(i, 0) for i in range(6)}
+    monkeypatch.setattr(graph, "MAX_ROUNDS", 1)
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        graph.connected_components(edges, vertices)
+
+
 def test_ann_recall_vs_brute_force(spark):
     reg = load_all()
     exact = {

@@ -9,6 +9,8 @@ from __future__ import annotations
 import io
 from contextlib import redirect_stdout
 
+import pytest as _pytest
+
 from covid_data_pipeline_spark.registry import load_all
 
 from .conftest import SF_ORACLE
@@ -64,13 +66,26 @@ def test_flagship_agg_is_partial_then_final_codegen(spark):
 
 
 def test_jvm_only_queries_have_no_python_workers(spark):
-    """Everything except the UDF-suite demonstrator stays JVM-side —
-    Python row paths are the slow path and must not creep in."""
-    for name in ("agg_groupby", "join_multikey_chain", "sim_cosine_pairs",
+    """These queries stay JVM-side — a Python worker here is a
+    regression, whether row-at-a-time or Arrow."""
+    for name in ("agg_groupby", "join_multikey_chain",
                  "dedup_minhash_lsh", "text_tfidf", "win_lag_change_detect"):
         plan = plan_of(q(name, spark))
-        for marker in ("BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas"):
+        for marker in ("BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas",
+                       "FlatMapGroupsInArrow", "FlatMapCoGroupsInArrow",
+                       "MapInArrow", "MapInPandas"):
             assert marker not in plan, f"{name} routes through Python: {marker}"
+
+
+@_pytest.mark.parametrize("name", ["sim_cosine_pairs", "dedup_embedding_cosine"])
+def test_label_blocked_cosine_runs_one_block_kernel(spark, name):
+    """The label-blocked exact cosine queries score each block in one
+    grouped Arrow map (llm_similarity.cosine_pairs): no per-pair
+    zip_with/aggregate fold and no pair join."""
+    plan = plan_of(q(name, spark), mode="simple")
+    assert plan.count("FlatMapGroupsInArrow") == 1, plan
+    for marker in ("zip_with", "aggregate(", "BroadcastHashJoin"):
+        assert marker not in plan, f"{name} plans {marker}:\n{plan}"
 
 
 def test_udf_suite_uses_arrow_not_row_python_for_vectorized_steps(spark):
@@ -194,8 +209,8 @@ def test_embedding_dedup_norm_not_inlined_into_lambda(spark):
     Generate barrier, not re-inlined into the transform lambda by
     CollapseProject (no CSE inside higher-order functions => O(d^2)
     per row; round-4 review find, fixed via explode(array(n))).
-    Asserted on the PRE-checkpoint corpus helper — the r12
-    localCheckpoint hides the normalize lineage from the final plan."""
+    Asserted on the corpus helper — dedup_semdedup_kmeans's
+    localCheckpoint hides the normalize lineage from its final plan."""
     import re
 
     from covid_data_pipeline_spark.queries.llm_similarity import (
@@ -400,11 +415,8 @@ _SHUFFLE_BUDGET = {
     "dedup_exact": 1,
     "dedup_near_jaccard": 4,
     "dedup_minhash_lsh": 4,
-    # r11 optimization round: +1 for the deliberate probe-side
-    # repartition by vec_id — the single-file scan otherwise pins the
-    # ~200k pair evaluations to one task (OPTIMIZATION_r11.md "Batch 1",
-    # ea6ce32:experiments/opt_r11_hof_ab.py)
-    "sim_cosine_pairs": 2,
+    # the one label exchange feeding the block kernel (cosine_pairs)
+    "sim_cosine_pairs": 1,
     "text_tfidf": 5,
     "win_sessionize": 1,
     "ts_resample_ohlc": 1,
@@ -714,9 +726,6 @@ def test_span_ngram_islands_window_is_doc_partitioned(spark):
 
     win_specs = _re.findall(r"Window \[[^\]]*\], \[([^\]]*)\]", plan)
     assert win_specs and all("doc_id" in s for s in win_specs), plan
-
-
-import pytest as _pytest
 
 
 @_pytest.mark.parametrize("name", sorted(_SHUFFLE_BUDGET))

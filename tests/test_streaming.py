@@ -13,6 +13,7 @@ import os
 from pyspark.sql import Row, Window, functions as F
 
 from covid_data_pipeline_spark.io import load
+from covid_data_pipeline_spark.queries._helpers import DEC
 from covid_data_pipeline_spark.schemas import EVENTS
 from covid_data_pipeline_spark.streaming import (
     drain,
@@ -29,6 +30,51 @@ from .conftest import SF_SMOKE
 
 def _as_sorted_rows(df, cols):
     return sorted(tuple(r[c] for c in cols) for r in df.select(*cols).collect())
+
+
+def _session_agg_stream(df):
+    """Per-user session windows with a 30-min gap, via the native
+    streaming ``session_window`` operator.  Two events join a session iff
+    their gap is STRICTLY below 30 min (window [ts, ts+gap) overlap) —
+    the batch gaps-and-islands twin uses ``gap >= 30min`` to start a new
+    session, matching exactly."""
+    return (
+        df.groupBy(F.session_window("ts", "30 minutes"), "user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.col("value").cast(DEC)).cast("double").alias("sum_value"),
+        )
+        .select(
+            "user_id",
+            F.unix_micros(F.col("session_window.start")).alias("session_start_us"),
+            "n_events",
+            "sum_value",
+        )
+    )
+
+
+def _dedup_content(df):
+    """Streaming twin of the reference's skip-if-same-hash: drop events
+    whose (user, content-hash) was already seen.  On a stream this is
+    ``dropDuplicates`` keyed on the content identity; state is evicted by
+    the caller's watermark (``dropDuplicatesWithinWatermark``)."""
+    keyed = df.select(
+        "event_id", "user_id", F.sha2("props", 256).alias("content_hash"), "ts"
+    )
+    return keyed.dropDuplicates(["user_id", "content_hash"])
+
+
+def _tumbling_5m_counts(df):
+    """5-minute tumbling counts — small windows, so the watermark test
+    can observe late-row drops."""
+    return (
+        df.groupBy(F.window("ts", "5 minutes"))
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(
+            F.unix_micros(F.col("window.start")).alias("ws_us"),
+            "n_events",
+        )
+    )
 
 
 def test_stream_tumbling_equals_batch(spark):
@@ -56,7 +102,7 @@ def test_stream_session_window_equals_gaps_and_islands(spark):
 
     batch = load_all()["stream_session"].fn(spark, SF_SMOKE)
     stream = run_available_now(
-        TR.session_agg_stream(read_events_stream(spark, SF_SMOKE))
+        _session_agg_stream(read_events_stream(spark, SF_SMOKE))
     )
     cols = ["user_id", "session_start_us", "n_events", "sum_value"]
     assert _as_sorted_rows(stream, cols) == _as_sorted_rows(batch, cols)
@@ -70,7 +116,7 @@ def test_stream_dedup_same_key_set(spark):
 
     batch = load_all()["stream_dedup_state"].fn(spark, SF_SMOKE)
     stream = run_available_now(
-        TR.dedup_content(read_events_stream(spark, SF_SMOKE)),
+        _dedup_content(read_events_stream(spark, SF_SMOKE)),
         output_mode="append",
     )
     cols = ["user_id", "content_hash"]
@@ -136,7 +182,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
             .withWatermark("ts", "10 minutes")
         )
         drain(
-            TR.tumbling_5m_counts(stream),
+            _tumbling_5m_counts(stream),
             "append",
             foreach_batch=sink,
             checkpoint=ckpt,
@@ -247,7 +293,7 @@ def test_native_parquet_sink_exactly_once(spark, tmp_path):
 
     def run():
         q = (
-            TR.dedup_content(read_events_stream(spark, SF_SMOKE))
+            _dedup_content(read_events_stream(spark, SF_SMOKE))
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)
