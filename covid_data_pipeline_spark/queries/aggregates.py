@@ -9,7 +9,7 @@ what makes these safe at 100 TB even on skewed group keys).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load
@@ -2417,6 +2417,33 @@ def agg_ratio_metric_delta_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ranked_price_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(l_returnflag, cents, rn, n)``: each line's extended price in
+    exact BIGINT cents, its 1-based rank ``rn`` in ascending cents within
+    its return flag, and the flag's line count ``n``."""
+    li = load(spark, sf_dir, "lineitem")
+    cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
+    w = Window.partitionBy("l_returnflag").orderBy("cents")
+    wp = Window.partitionBy("l_returnflag")
+    return li.select("l_returnflag", cents.alias("cents")).select(
+        "l_returnflag",
+        "cents",
+        F.row_number().over(w).alias("rn"),
+        F.count(F.lit(1)).over(wp).alias("n"),
+    )
+
+
+def _nearest_rank(q: float) -> Column:
+    """The nearest-rank ``q`` quantile of ``cents`` over a group of
+    ``_ranked_price_cents`` rows: the value at rank ceil(q·n)."""
+    return F.max(
+        F.when(
+            F.col("rn") == F.ceil(F.lit(q) * F.col("n")).cast("long"),
+            F.col("cents"),
+        )
+    ).cast("long")
+
+
 @query(
     "agg_tukey_fences_outliers",
     oracle="""
@@ -2471,26 +2498,11 @@ def agg_tukey_fences_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one per-group rank window (exact-median cost class) + one
     broadcast-back of the 3-row quartile dim; GK-bracket the quartiles
     at unbounded group sizes."""
-    li = load(spark, sf_dir, "lineitem")
-    cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
-    w = Window.partitionBy("l_returnflag").orderBy("cents")
-    wp = Window.partitionBy("l_returnflag")
-    ranked = li.select("l_returnflag", cents.alias("cents")).select(
-        "l_returnflag",
-        "cents",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(wp).alias("n"),
-    )
-    pick = lambda qq: F.max(
-        F.when(
-            F.col("rn") == F.ceil(F.lit(qq) * F.col("n")).cast("long"),
-            F.col("cents"),
-        )
-    ).cast("long")
+    ranked = _ranked_price_cents(spark, sf_dir)
     q = ranked.groupBy("l_returnflag").agg(
         F.max("n").cast("long").alias("n"),
-        pick(0.25).alias("q1"),
-        pick(0.75).alias("q3"),
+        _nearest_rank(0.25).alias("q1"),
+        _nearest_rank(0.75).alias("q3"),
     )
     j = ranked.select("l_returnflag", "cents").join(
         F.broadcast(q), "l_returnflag"
@@ -2565,27 +2577,10 @@ def agg_cvar_expected_shortfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-back threshold join; GK-bracket the threshold at
     unbounded group sizes and CVaR becomes a one-pass conditional
     aggregate."""
-    li = load(spark, sf_dir, "lineitem")
-    cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
-    w = Window.partitionBy("l_returnflag").orderBy("cents")
-    wp = Window.partitionBy("l_returnflag")
-    ranked = li.select("l_returnflag", cents.alias("cents")).select(
-        "l_returnflag",
-        "cents",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(wp).alias("n"),
-    )
+    ranked = _ranked_price_cents(spark, sf_dir)
     var = ranked.groupBy("l_returnflag").agg(
         F.max("n").cast("long").alias("n"),
-        F.max(
-            F.when(
-                F.col("rn")
-                == F.ceil(F.lit(0.95) * F.col("n")).cast("long"),
-                F.col("cents"),
-            )
-        )
-        .cast("long")
-        .alias("var95_cents"),
+        _nearest_rank(0.95).alias("var95_cents"),
     )
     tail = ranked.select("l_returnflag", "cents").join(
         F.broadcast(var), "l_returnflag"

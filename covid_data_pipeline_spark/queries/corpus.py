@@ -13,7 +13,7 @@ reproducible run-to-run and resumable after partial failure.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from ..io import load
@@ -181,7 +181,13 @@ def ts_gapfill_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side cross of each user partition with ~30 dates, never a
     shuffle of the fact table; the fill is one window per user ordered
     by day (``last(ignorenulls)``), partition-parallel at any scale."""
-    e = load(spark, sf_dir, "events")
+    return _gap_fill(spark, sf_dir, ahead=False)
+
+
+def _daily_spine(e: DataFrame) -> DataFrame:
+    """Each user's daily mean ``v`` densified onto the full date spine:
+    ``(user_id, day, v)``, ``v`` NULL on a day without events.  The day
+    list is a 1-row aggregate exploded and broadcast."""
     day = F.date_trunc("day", "ts").alias("day")
     daily = e.groupBy("user_id", day).agg(davg("value").alias("v"))
     days = (
@@ -192,19 +198,26 @@ def ts_gapfill_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.explode(F.expr("sequence(lo, hi, interval 1 day)")).alias("day"))
     )
     spine = e.select("user_id").distinct().crossJoin(F.broadcast(days))
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        spine.join(daily, ["user_id", "day"], "left")
-        .select(
-            "user_id",
-            "day",
-            F.last("v", ignorenulls=True).over(w).alias("v_filled"),
-        )
-    )
+    return spine.join(daily, ["user_id", "day"], "left")
+
+
+def _day_frame(ahead: bool) -> WindowSpec:
+    """Per-user frame ordered by day: the current row and every later day
+    (``ahead``), or every earlier day and the current row."""
+    w = Window.partitionBy("user_id").orderBy("day")
+    if ahead:
+        return w.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    return w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+
+def _gap_fill(spark: SparkSession, sf_dir: str, ahead: bool) -> DataFrame:
+    """``(user_id, day, v_filled)``: each spine day takes the nearest
+    observation at or after it (``ahead``, bfill) or at or before it
+    (ffill)."""
+    nearest = F.first if ahead else F.last
+    fill = nearest("v", ignorenulls=True).over(_day_frame(ahead))
+    spine = _daily_spine(load(spark, sf_dir, "events"))
+    return spine.select("user_id", "day", fill.alias("v_filled"))
 
 
 _PACK_BUDGET = 2048  # approx-LLM-token budget per packed sequence
@@ -332,30 +345,7 @@ def ts_backfill_bfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     its first measurement).  Same densify-then-window plan: broadcast
     day spine, one window per user ordered by day with a FOLLOWING
     frame; partition-parallel at any scale."""
-    e = load(spark, sf_dir, "events")
-    day = F.date_trunc("day", "ts").alias("day")
-    daily = e.groupBy("user_id", day).agg(davg("value").alias("v"))
-    days = (
-        e.agg(
-            F.min(F.date_trunc("day", "ts")).alias("lo"),
-            F.max(F.date_trunc("day", "ts")).alias("hi"),
-        )
-        .select(F.explode(F.expr("sequence(lo, hi, interval 1 day)")).alias("day"))
-    )
-    spine = e.select("user_id").distinct().crossJoin(F.broadcast(days))
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("day")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    return (
-        spine.join(daily, ["user_id", "day"], "left")
-        .select(
-            "user_id",
-            "day",
-            F.first("v", ignorenulls=True).over(w).alias("v_filled"),
-        )
-    )
+    return _gap_fill(spark, sf_dir, ahead=True)
 
 
 @query(
@@ -657,39 +647,16 @@ def ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines (daily means go through the exact-decimal trick first), so
     ROUND(...,6) is belt-and-braces, not a crutch; the is_interp gate is
     cast to int per the repo's nullable-boolean doctrine."""
-    e = load(spark, sf_dir, "events")
-    day = F.date_trunc("day", "ts").alias("day")
-    daily = e.groupBy("user_id", day).agg(davg("value").alias("v"))
-    days = (
-        e.agg(
-            F.min(F.date_trunc("day", "ts")).alias("lo"),
-            F.max(F.date_trunc("day", "ts")).alias("hi"),
-        )
-        .select(F.explode(F.expr("sequence(lo, hi, interval 1 day)")).alias("day"))
-    )
-    spine = e.select("user_id").distinct().crossJoin(F.broadcast(days))
-    wb = (
-        Window.partitionBy("user_id")
-        .orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wf = (
-        Window.partitionBy("user_id")
-        .orderBy("day")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
+    wb, wf = _day_frame(ahead=False), _day_frame(ahead=True)
     obs_day = F.when(F.col("v").isNotNull(), F.col("day"))
-    ctx = (
-        spine.join(daily, ["user_id", "day"], "left")
-        .select(
-            "user_id",
-            "day",
-            "v",
-            F.last("v", ignorenulls=True).over(wb).alias("prev_v"),
-            F.last(obs_day, ignorenulls=True).over(wb).alias("prev_day"),
-            F.first("v", ignorenulls=True).over(wf).alias("next_v"),
-            F.first(obs_day, ignorenulls=True).over(wf).alias("next_day"),
-        )
+    ctx = _daily_spine(load(spark, sf_dir, "events")).select(
+        "user_id",
+        "day",
+        "v",
+        F.last("v", ignorenulls=True).over(wb).alias("prev_v"),
+        F.last(obs_day, ignorenulls=True).over(wb).alias("prev_day"),
+        F.first("v", ignorenulls=True).over(wf).alias("next_v"),
+        F.first(obs_day, ignorenulls=True).over(wf).alias("next_day"),
     )
     dd = F.datediff(F.col("day"), F.col("prev_day")).cast("double")
     span = F.datediff(F.col("next_day"), F.col("prev_day")).cast("double")
@@ -1000,6 +967,45 @@ def ts_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _lag_products(
+    e: DataFrame, nd: str = "nd", den_type: str = "long"
+) -> DataFrame:
+    """``(event_type, <nd>, den, n1..n7)`` over each event type's daily
+    event counts ``x``: with ``nd`` days and total ``T``, the centered
+    series is carried as the exact BIGINT ``y = nd·x - T``; ``den`` is
+    Σ y_t² cast to ``den_type`` and ``n_k`` is the BIGINT Σ y_t·y_{t-k}.
+    The lag windows partition per event_type over one row per day, and
+    the 7 lag products ride one window pass and one small aggregate."""
+    daily = e.groupBy(
+        "event_type", F.to_date("ts").alias("d")
+    ).agg(F.count(F.lit(1)).alias("x"))
+    stats = daily.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("nd"), F.sum("x").alias("tot")
+    )
+    yd = daily.join(F.broadcast(stats), "event_type").select(
+        "event_type",
+        "d",
+        (F.col("x") * F.col("nd") - F.col("tot")).alias("y"),
+        "nd",
+    )
+    # per-type day series: bounded by the calendar, never the corpus
+    w = Window.partitionBy("event_type").orderBy("d")
+    lagged = yd.select(
+        "event_type",
+        "nd",
+        "y",
+        *[F.lag("y", k).over(w).alias(f"y{k}") for k in range(1, 8)],
+    )
+    return lagged.groupBy("event_type").agg(
+        F.max("nd").alias(nd),
+        F.sum(F.col("y") * F.col("y")).cast(den_type).alias("den"),
+        *[
+            F.sum(F.col("y") * F.col(f"y{k}")).alias(f"n{k}")
+            for k in range(1, 8)
+        ],
+    )
+
+
 @query(
     "ts_autocorrelation",
     oracle="""
@@ -1075,35 +1081,7 @@ def ts_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     one daily aggregate; the lag windows partition per event_type over
     ~one row per DAY (calendar-bounded, the windows.py:193 doctrine);
     the 7 lag products ride ONE window pass and one final small agg."""
-    e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.to_date("ts").alias("d")
-    ).agg(F.count(F.lit(1)).alias("x"))
-    stats = daily.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("nd"), F.sum("x").alias("tot")
-    )
-    yd = daily.join(F.broadcast(stats), "event_type").select(
-        "event_type",
-        "d",
-        (F.col("x") * F.col("nd") - F.col("tot")).alias("y"),
-        "nd",
-    )
-    # per-type day series: bounded by the calendar, never the corpus
-    w = Window.partitionBy("event_type").orderBy("d")
-    lagged = yd.select(
-        "event_type",
-        "nd",
-        "y",
-        *[F.lag("y", k).over(w).alias(f"y{k}") for k in range(1, 8)],
-    )
-    agg = lagged.groupBy("event_type").agg(
-        F.max("nd").cast("long").alias("n_days"),
-        F.sum(F.col("y") * F.col("y")).alias("den"),
-        *[
-            F.sum(F.col("y") * F.col(f"y{k}")).alias(f"n{k}")
-            for k in range(1, 8)
-        ],
-    )
+    agg = _lag_products(load(spark, sf_dir, "events"), nd="n_days")
     lags = F.array(
         *[
             F.struct(
@@ -1504,36 +1482,8 @@ def ts_partial_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ACF formulation (y = n·x − T centering; the scale factors cancel in
     the correlation ratios).  Corpus-sized work = the one daily
     aggregate; everything after runs on one row per type."""
-    e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.to_date("ts").alias("d")
-    ).agg(F.count(F.lit(1)).alias("x"))
-    stats = daily.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("nd"), F.sum("x").alias("tot")
-    )
-    yd = daily.join(F.broadcast(stats), "event_type").select(
-        "event_type",
-        "d",
-        (F.col("x") * F.col("nd") - F.col("tot")).alias("y"),
-        "nd",
-    )
-    w = Window.partitionBy("event_type").orderBy("d")
-    lagged = yd.select(
-        "event_type",
-        "nd",
-        "y",
-        *[F.lag("y", k).over(w).alias(f"y{k}") for k in range(1, 8)],
-    )
     base = (
-        lagged.groupBy("event_type")
-        .agg(
-            F.max("nd").cast("long").alias("nd"),
-            F.sum(F.col("y") * F.col("y")).alias("den"),
-            *[
-                F.sum(F.col("y") * F.col(f"y{k}")).alias(f"n{k}")
-                for k in range(1, 8)
-            ],
-        )
+        _lag_products(load(spark, sf_dir, "events"))
         .filter(F.col("den") > 0)
         .select(
             "event_type",
@@ -2412,31 +2362,47 @@ def ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily aggregate; the pair join is per-key quadratic in
     calendar-bounded DAYS, the median window partitions per key over
     ~n^2/2 slope rows (n <= 366), and nothing crosses keys."""
-    e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
+    slope = (F.col("b.x") - F.col("a.x")).cast("double") / (
+        F.col("b.t") - F.col("a.t")
+    ).cast("double")
+    return _pairwise_median(
+        _daily_counts(load(spark, sf_dir, "events")),
+        F.col("a.t") < F.col("b.t"),
+        slope.alias("slope"),
+        "slope_micro",
+    )
+
+
+def _daily_counts(e: DataFrame) -> DataFrame:
+    """``(event_type, t, x)``: each event type's event count ``x`` per day,
+    ``t`` the BIGINT day number since 2024-01-01."""
+    return e.groupBy(
         "event_type",
         F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
         .cast("long")
         .alias("t"),
     ).agg(F.count(F.lit(1)).alias("x"))
-    a = daily.alias("a")
-    b = daily.alias("b")
-    slopes = a.join(
-        b,
-        (F.col("a.event_type") == F.col("b.event_type"))
-        & (F.col("a.t") < F.col("b.t")),
-    ).select(
-        F.col("a.event_type").alias("event_type"),
-        (
-            (F.col("b.x") - F.col("a.x")).cast("double")
-            / (F.col("b.t") - F.col("a.t")).cast("double")
-        ).alias("slope"),
-    )
-    w = Window.partitionBy("event_type").orderBy("slope")
+
+
+def _pairwise_median(
+    daily: DataFrame, pair_pred: Column, value: Column, out: str, halve: bool = False
+) -> DataFrame:
+    """``(event_type, n_pairs, <out>)``: the median of the aliased
+    ``value`` over the same-type day pairs ``a``/``b`` of ``daily`` that
+    satisfy ``pair_pred``, micro-quantized (halved first when
+    ``halve``).  The median is picked by POSITION, rows (np+1)//2 and
+    np//2+1 of the per-type order averaged, so tied values need no
+    tiebreak."""
+    pairs = daily.alias("a").join(
+        daily.alias("b"),
+        (F.col("a.event_type") == F.col("b.event_type")) & pair_pred,
+    ).select(F.col("a.event_type").alias("event_type"), value)
+    name = pairs.columns[1]
+    w = Window.partitionBy("event_type").orderBy(name)
     wc = Window.partitionBy("event_type")
-    ranked = slopes.select(
+    ranked = pairs.select(
         "event_type",
-        "slope",
+        name,
         F.row_number().over(w).alias("rn"),
         F.count(F.lit(1)).over(wc).alias("np"),
     )
@@ -2444,13 +2410,12 @@ def ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("rn") == F.expr("(np + 1) div 2"))
         | (F.col("rn") == F.expr("np div 2 + 1"))
     )
+    micro = F.lit(1000000.0) * F.sum(name) / F.count(F.lit(1))
+    if halve:
+        micro = micro / F.lit(2.0)
     return mid.groupBy("event_type").agg(
         F.max("np").cast("long").alias("n_pairs"),
-        F.floor(
-            F.lit(1000000.0) * F.sum("slope") / F.count(F.lit(1)) + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("slope_micro"),
+        F.floor(micro + F.lit(0.5)).cast("long").alias(out),
     )
 
 
@@ -2531,37 +2496,8 @@ def ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical to ts_autocorrelation — one corpus-sized daily
     aggregate, per-type lag windows over calendar-bounded rows, 7 lag
     products in ONE window pass."""
-    e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.col("ts").cast("date").alias("d")
-    ).agg(F.count(F.lit(1)).alias("x"))
-    stats = daily.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("nd"), F.sum("x").alias("tot")
-    )
-    yd = daily.join(F.broadcast(stats), "event_type").select(
-        "event_type",
-        "d",
-        (F.col("x") * F.col("nd") - F.col("tot")).alias("y"),
-        "nd",
-    )
-    w = Window.partitionBy("event_type").orderBy("d")
-    lagged = yd.select(
-        "event_type",
-        "nd",
-        "y",
-        *[F.lag("y", k).over(w).alias(f"y{k}") for k in range(1, 8)],
-    )
-    agg = (
-        lagged.groupBy("event_type")
-        .agg(
-            F.max("nd").alias("nd"),
-            F.sum(F.col("y") * F.col("y")).cast("double").alias("den"),
-            *[
-                F.sum(F.col("y") * F.col(f"y{k}")).cast("long").alias(f"n{k}")
-                for k in range(1, 8)
-            ],
-        )
-        .filter(F.col("den") > 0)
+    agg = _lag_products(load(spark, sf_dir, "events"), den_type="double").filter(
+        F.col("den") > 0
     )
     term = lambda k: (
         (F.col(f"n{k}").cast("double") / F.col("den"))
@@ -2774,43 +2710,12 @@ def agg_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-key quadratic in calendar-bounded days (the
     ts_mann_kendall pair argument, here n(n+1)/2 pairs including
     i = j), one equi-key shuffle, per-key median window."""
-    e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type",
-        F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
-        .cast("long")
-        .alias("t"),
-    ).agg(F.count(F.lit(1)).alias("x"))
-    a = daily.alias("a")
-    b = daily.alias("b")
-    walsh = a.join(
-        b,
-        (F.col("a.event_type") == F.col("b.event_type"))
-        & (F.col("a.t") <= F.col("b.t")),
-    ).select(
-        F.col("a.event_type").alias("event_type"),
+    return _pairwise_median(
+        _daily_counts(load(spark, sf_dir, "events")),
+        F.col("a.t") <= F.col("b.t"),
         (F.col("a.x") + F.col("b.x")).alias("w2"),
-    )
-    w = Window.partitionBy("event_type").orderBy("w2")
-    wc = Window.partitionBy("event_type")
-    ranked = walsh.select(
-        "event_type",
-        "w2",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(wc).alias("np"),
-    )
-    mid = ranked.filter(
-        (F.col("rn") == F.expr("(np + 1) div 2"))
-        | (F.col("rn") == F.expr("np div 2 + 1"))
-    )
-    return mid.groupBy("event_type").agg(
-        F.max("np").cast("long").alias("n_pairs"),
-        F.floor(
-            F.lit(1000000.0) * F.sum("w2") / F.count(F.lit(1)) / F.lit(2.0)
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("hl_micro"),
+        "hl_micro",
+        halve=True,
     )
 
 
@@ -2986,27 +2891,12 @@ def analytics_chisq_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     row/col/grand totals are cell-grid-sized re-aggregations that
     BROADCAST back — at 100 TB nothing after the first groupBy touches
     corpus-sized data."""
-    e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type",
-        (
-            F.datediff(
-                F.col("ts").cast("date"), F.lit("2024-01-01").cast("date")
-            ).cast("long")
-            % 7
-        ).alias("dow"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("o"))
-    rowt = daily.groupBy("event_type").agg(
-        F.sum("o").cast("long").alias("r")
-    )
-    colt = daily.groupBy("dow").agg(F.sum("o").cast("long").alias("c"))
-    tot = daily.agg(F.sum("o").cast("long").alias("n"))
+    daily, rowt, colt, tot = _contingency(load(spark, sf_dir, "events"))
     j = (
         daily.join(F.broadcast(rowt), "event_type")
         .join(F.broadcast(colt), "dow")
         .crossJoin(F.broadcast(tot))
     )
-    num = (F.col("o") * F.col("n") - F.col("r") * F.col("c"))
     return j.select(
         "event_type",
         "dow",
@@ -3017,15 +2907,49 @@ def analytics_chisq_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("e_micro"),
-        F.floor(
-            F.lit(1000000.0)
-            * (num.cast("double") * num.cast("double"))
-            / (F.col("n").cast("double") * F.col("r") * F.col("c"))
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("chisq_contrib_micro"),
+        _chisq_contrib_micro().alias("chisq_contrib_micro"),
     )
+
+
+def _dow_cells(e: DataFrame) -> DataFrame:
+    """``(event_type, dow, o)``: the BIGINT event count of each observed
+    event_type x day-of-week cell.  Day-of-week is the epoch-day delta
+    % 7, integer arithmetic identical on both engines."""
+    return e.groupBy(
+        "event_type",
+        (
+            F.datediff(
+                F.col("ts").cast("date"), F.lit("2024-01-01").cast("date")
+            ).cast("long")
+            % 7
+        ).alias("dow"),
+    ).agg(F.count(F.lit(1)).cast("long").alias("o"))
+
+
+def _contingency(e: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """The event_type x day-of-week contingency table of ``e``: the
+    observed cells ``(event_type, dow, o)``, the row totals
+    ``(event_type, r)``, the column totals ``(dow, c)`` and the one-row
+    grand total ``(n)``, all BIGINT."""
+    daily = _dow_cells(e)
+    rowt = daily.groupBy("event_type").agg(
+        F.sum("o").cast("long").alias("r")
+    )
+    colt = daily.groupBy("dow").agg(F.sum("o").cast("long").alias("c"))
+    tot = daily.agg(F.sum("o").cast("long").alias("n"))
+    return daily, rowt, colt, tot
+
+
+def _chisq_contrib_micro() -> Column:
+    """A cell's chi-square contribution (o*N - r*c)^2 / (N*r*c),
+    micro-quantized to BIGINT: exact integers until the one division."""
+    num = F.col("o") * F.col("n") - F.col("r") * F.col("c")
+    return F.floor(
+        F.lit(1000000.0)
+        * (num.cast("double") * num.cast("double"))
+        / (F.col("n").cast("double") * F.col("r") * F.col("c"))
+        + F.lit(0.5)
+    ).cast("long")
 
 
 @query(
@@ -4070,21 +3994,7 @@ def agg_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one corpus-sized aggregate to the |types| x 7 grid, then
     grid-sized arithmetic; row/col/grand totals broadcast back."""
-    e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type",
-        (
-            F.datediff(
-                F.col("ts").cast("date"), F.lit("2024-01-01").cast("date")
-            ).cast("long")
-            % 7
-        ).alias("dow"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("o"))
-    rowt = daily.groupBy("event_type").agg(
-        F.sum("o").cast("long").alias("r")
-    )
-    colt = daily.groupBy("dow").agg(F.sum("o").cast("long").alias("c"))
-    tot = daily.agg(F.sum("o").cast("long").alias("n"))
+    daily, rowt, colt, tot = _contingency(load(spark, sf_dir, "events"))
     grid = (
         rowt.crossJoin(F.broadcast(colt))
         .join(F.broadcast(daily), ["event_type", "dow"], "left")
@@ -4097,17 +4007,7 @@ def agg_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     j = grid.crossJoin(F.broadcast(tot))
-    num = F.col("o") * F.col("n") - F.col("r") * F.col("c")
-    cells = j.select(
-        F.floor(
-            F.lit(1000000.0)
-            * (num.cast("double") * num.cast("double"))
-            / (F.col("n").cast("double") * F.col("r") * F.col("c"))
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("contrib_micro")
-    )
+    cells = j.select(_chisq_contrib_micro().alias("contrib_micro"))
     chisq = cells.agg(
         F.sum("contrib_micro").cast("long").alias("chisq_micro")
     )
@@ -5424,16 +5324,7 @@ def agg_chi2_gof(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one corpus aggregate to |types| x 7 cells, then grid-sized
     arithmetic."""
-    e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type",
-        (
-            F.datediff(
-                F.col("ts").cast("date"), F.lit("2024-01-01").cast("date")
-            ).cast("long")
-            % 7
-        ).alias("dow"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("o"))
+    daily = _dow_cells(load(spark, sf_dir, "events"))
     tot = daily.groupBy("event_type").agg(F.sum("o").cast("long").alias("n"))
     dows = spark.range(7).select(F.col("id").cast("long").alias("dow"))
     grid = (

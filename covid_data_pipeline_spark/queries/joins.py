@@ -19,7 +19,7 @@ Scale notes baked into each operator:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load
@@ -260,26 +260,32 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_id) — the tiebreaker makes it deterministic), NOT a self-join:
     the window form is O(n log n) per key and survives 100 TB, while a
     conditional self-join + row_number explodes on hot keys."""
+    return _asof_purchases(spark, sf_dir, prev="prior_view_ts").select(
+        "event_id",
+        "user_id",
+        F.col("ts").alias("purchase_ts"),
+        "prior_view_ts",
+        (F.unix_micros("ts") - F.unix_micros("prior_view_ts")).alias("gap_us"),
+    )
+
+
+def _asof_purchases(
+    spark: SparkSession, sf_dir: str, prev: str | None = None, nxt: str | None = None
+) -> DataFrame:
+    """The purchase events, each with the same user's previous view ``ts``
+    (column ``prev``) and/or next view ``ts`` (column ``nxt``), the row
+    itself excluded, over the ``(ts, event_id)`` order: one window per
+    direction, sharing the one shuffle on user_id."""
     ev = load(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    prior_view = F.last(
-        F.when(F.col("event_type") == "view", F.col("ts")), ignorenulls=True
-    ).over(w)
-    return (
-        ev.withColumn("prior_view_ts", prior_view)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            "event_id",
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-            "prior_view_ts",
-            (F.unix_micros("ts") - F.unix_micros("prior_view_ts")).alias("gap_us"),
-        )
-    )
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    view_ts = F.when(F.col("event_type") == "view", F.col("ts"))
+    if prev:
+        w_prev = w.rowsBetween(Window.unboundedPreceding, -1)
+        ev = ev.withColumn(prev, F.last(view_ts, ignorenulls=True).over(w_prev))
+    if nxt:
+        w_next = w.rowsBetween(1, Window.unboundedFollowing)
+        ev = ev.withColumn(nxt, F.first(view_ts, ignorenulls=True).over(w_next))
+    return ev.filter(F.col("event_type") == "purchase")
 
 
 @query(
@@ -570,20 +576,6 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle total, no self-join, tolerance applied as a map-side CASE.
     At 100 TB identical partitioning discipline applies (shuffle on the
     entity key, sort within)."""
-    ev = load(spark, sf_dir, "events")
-    wb = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    wf = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(1, Window.unboundedFollowing)
-    )
-    view_ts = F.when(F.col("event_type") == "view", F.col("ts"))
-    prev_view = F.last(view_ts, ignorenulls=True).over(wb)
-    next_view = F.first(view_ts, ignorenulls=True).over(wf)
     back_gap = F.unix_micros("ts") - F.unix_micros(F.col("prev_view"))
     fwd_gap = F.unix_micros(F.col("next_view")) - F.unix_micros("ts")
     matched = (
@@ -599,11 +591,8 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(F.lit(None).cast("long"))
     )
-    return (
-        ev.withColumn("prev_view", prev_view)
-        .withColumn("next_view", next_view)
-        .filter(F.col("event_type") == "purchase")
-        .select("event_id", "user_id", matched.alias("matched_view_us"))
+    return _asof_purchases(spark, sf_dir, prev="prev_view", nxt="next_view").select(
+        "event_id", "user_id", matched.alias("matched_view_us")
     )
 
 
@@ -681,25 +670,12 @@ def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin: one shuffle on user_id, a FOLLOWING frame with
     first(ignorenulls) instead of a PRECEDING frame with last — still
     O(n log n) per key, no self-join fan-out on hot users."""
-    ev = load(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(1, Window.unboundedFollowing)
-    )
-    next_view = F.first(
-        F.when(F.col("event_type") == "view", F.col("ts")), ignorenulls=True
-    ).over(w)
-    return (
-        ev.withColumn("next_view_ts", next_view)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            "event_id",
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-            "next_view_ts",
-            (F.unix_micros("next_view_ts") - F.unix_micros("ts")).alias("gap_us"),
-        )
+    return _asof_purchases(spark, sf_dir, nxt="next_view_ts").select(
+        "event_id",
+        "user_id",
+        F.col("ts").alias("purchase_ts"),
+        "next_view_ts",
+        (F.unix_micros("next_view_ts") - F.unix_micros("ts")).alias("gap_us"),
     )
 
 
@@ -745,16 +721,16 @@ def join_shuffle_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "join_asof_tolerance",
-    oracle="""
+    oracle=f"""
     SELECT event_id, user_id, ts AS purchase_ts,
            CASE WHEN prior_view_ts IS NOT NULL
-                     AND epoch_us(ts) - epoch_us(prior_view_ts) <= 1800000000
+                     AND epoch_us(ts) - epoch_us(prior_view_ts) <= {_ASOF_TOL_US}
                 THEN prior_view_ts END AS matched_view_ts,
            CASE WHEN prior_view_ts IS NOT NULL
-                     AND epoch_us(ts) - epoch_us(prior_view_ts) <= 1800000000
+                     AND epoch_us(ts) - epoch_us(prior_view_ts) <= {_ASOF_TOL_US}
                 THEN epoch_us(ts) - epoch_us(prior_view_ts) END AS gap_us,
            CAST(prior_view_ts IS NOT NULL
-                AND epoch_us(ts) - epoch_us(prior_view_ts) > 1800000000
+                AND epoch_us(ts) - epoch_us(prior_view_ts) > {_ASOF_TOL_US}
                 AS INT) AS stale_dropped
     FROM (
         SELECT e.*,
@@ -780,36 +756,75 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same scale shape as join_asof: one window per user (never a
     conditional self-join), with the tolerance applied as a post-window
     projection — zero extra shuffles over the unbounded variant."""
-    ev = load(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    prior_view = F.last(
-        F.when(F.col("event_type") == "view", F.col("ts")), ignorenulls=True
-    ).over(w)
     gap = F.unix_micros("ts") - F.unix_micros("prior_view_ts")
-    fresh = F.col("prior_view_ts").isNotNull() & (gap <= 1800000000)
-    return (
-        ev.withColumn("prior_view_ts", prior_view)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            "event_id",
-            "user_id",
-            F.col("ts").alias("purchase_ts"),
-            F.when(fresh, F.col("prior_view_ts")).alias("matched_view_ts"),
-            F.when(fresh, gap).alias("gap_us"),
-            (
-                F.col("prior_view_ts").isNotNull() & (gap > 1800000000)
-            )
-            .cast("int")
-            .alias("stale_dropped"),
-        )
+    fresh = F.col("prior_view_ts").isNotNull() & (gap <= _ASOF_TOL_US)
+    return _asof_purchases(spark, sf_dir, prev="prior_view_ts").select(
+        "event_id",
+        "user_id",
+        F.col("ts").alias("purchase_ts"),
+        F.when(fresh, F.col("prior_view_ts")).alias("matched_view_ts"),
+        F.when(fresh, gap).alias("gap_us"),
+        (F.col("prior_view_ts").isNotNull() & (gap > _ASOF_TOL_US))
+        .cast("int")
+        .alias("stale_dropped"),
     )
 
 
 _GRID_R = 0.02  # radius for the spatial self-join (first 2 embedding dims)
+
+
+def _grid_pairs(spark: SparkSession, sf_dir: str, pair_pred: Column) -> DataFrame:
+    """``(a_id, b_id, d2)`` for the embedding points within ``_GRID_R``
+    of each other that satisfy ``pair_pred``: r-sized cells, the 5x5
+    probe explode, the cell equi-join, then the exact distance filter."""
+    emb = load(spark, sf_dir, "embeddings")
+    p = emb.select(
+        "vec_id",
+        F.element_at("embedding", 1).cast("double").alias("x"),
+        F.element_at("embedding", 2).cast("double").alias("y"),
+    )
+    r = F.lit(_GRID_R)
+    cell = p.select(
+        "vec_id",
+        "x",
+        "y",
+        F.floor(F.col("x") / r).cast("long").alias("cx"),
+        F.floor(F.col("y") / r).cast("long").alias("cy"),
+    )
+    offs = F.expr("array(-2L, -1L, 0L, 1L, 2L)")
+    probe = (
+        cell.select(
+            F.col("vec_id").alias("a_id"),
+            F.col("x").alias("ax"),
+            F.col("y").alias("ay"),
+            "cx",
+            "cy",
+        )
+        .withColumn("dx", F.explode(offs))
+        .withColumn("dy", F.explode(offs))
+        .select(
+            "a_id",
+            "ax",
+            "ay",
+            (F.col("cx") + F.col("dx")).alias("jx"),
+            (F.col("cy") + F.col("dy")).alias("jy"),
+        )
+    )
+    build = cell.select(
+        F.col("vec_id").alias("b_id"),
+        F.col("x").alias("bx"),
+        F.col("y").alias("by"),
+        F.col("cx").alias("jx"),
+        F.col("cy").alias("jy"),
+    )
+    d2 = (F.col("ax") - F.col("bx")) * (F.col("ax") - F.col("bx")) + (
+        F.col("ay") - F.col("by")
+    ) * (F.col("ay") - F.col("by"))
+    return (
+        probe.join(build, ["jx", "jy"])
+        .filter(pair_pred & (d2 < r * r))
+        .select("a_id", "b_id", d2.alias("d2"))
+    )
 
 
 @query(
@@ -854,61 +869,13 @@ def join_spatial_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     join shuffles on uniform grid keys; density skew (hot cells) takes
     the same salting as any hot equi-join key, and the 25x explode is
     map-side."""
-    emb = load(spark, sf_dir, "embeddings")
-    p = emb.select(
-        "vec_id",
-        F.element_at("embedding", 1).cast("double").alias("x"),
-        F.element_at("embedding", 2).cast("double").alias("y"),
-    )
-    r = F.lit(_GRID_R)
-    cell = p.select(
-        "vec_id",
-        "x",
-        "y",
-        F.floor(F.col("x") / r).cast("long").alias("cx"),
-        F.floor(F.col("y") / r).cast("long").alias("cy"),
-    )
-    offs = F.expr(
-        "array(-2L, -1L, 0L, 1L, 2L)"
-    )
-    probe = (
-        cell.select(
-            F.col("vec_id").alias("a_id"),
-            F.col("x").alias("ax"),
-            F.col("y").alias("ay"),
-            "cx",
-            "cy",
-        )
-        .withColumn("dx", F.explode(offs))
-        .withColumn("dy", F.explode(offs))
-        .select(
-            "a_id",
-            "ax",
-            "ay",
-            (F.col("cx") + F.col("dx")).alias("jx"),
-            (F.col("cy") + F.col("dy")).alias("jy"),
-        )
-    )
-    build = cell.select(
-        F.col("vec_id").alias("b_id"),
-        F.col("x").alias("bx"),
-        F.col("y").alias("by"),
-        F.col("cx").alias("jx"),
-        F.col("cy").alias("jy"),
-    )
-    d2 = (F.col("ax") - F.col("bx")) * (F.col("ax") - F.col("bx")) + (
-        F.col("ay") - F.col("by")
-    ) * (F.col("ay") - F.col("by"))
-    return (
-        probe.join(build, ["jx", "jy"])
-        .filter((F.col("a_id") < F.col("b_id")) & (d2 < r * r))
-        .select(
-            "a_id",
-            "b_id",
-            F.floor(F.lit(1000000000.0) * d2 + F.lit(0.5))
-            .cast("long")
-            .alias("dist2_nano"),
-        )
+    d2 = _grid_pairs(spark, sf_dir, F.col("a_id") < F.col("b_id"))
+    return d2.select(
+        "a_id",
+        "b_id",
+        F.floor(F.lit(1000000000.0) * F.col("d2") + F.lit(0.5))
+        .cast("long")
+        .alias("dist2_nano"),
     )
 
 
@@ -959,54 +926,7 @@ def join_spatial_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode, salting for hot cells); the argmin window partitions by
     probe point over its bounded candidate set — WindowGroupLimit
     pushes the rn = 1 cut into the shuffle."""
-    emb = load(spark, sf_dir, "embeddings")
-    p = emb.select(
-        "vec_id",
-        F.element_at("embedding", 1).cast("double").alias("x"),
-        F.element_at("embedding", 2).cast("double").alias("y"),
-    )
-    r = F.lit(_GRID_R)
-    cell = p.select(
-        "vec_id",
-        "x",
-        "y",
-        F.floor(F.col("x") / r).cast("long").alias("cx"),
-        F.floor(F.col("y") / r).cast("long").alias("cy"),
-    )
-    offs = F.expr("array(-2L, -1L, 0L, 1L, 2L)")
-    probe = (
-        cell.select(
-            F.col("vec_id").alias("a_id"),
-            F.col("x").alias("ax"),
-            F.col("y").alias("ay"),
-            "cx",
-            "cy",
-        )
-        .withColumn("dx", F.explode(offs))
-        .withColumn("dy", F.explode(offs))
-        .select(
-            "a_id",
-            "ax",
-            "ay",
-            (F.col("cx") + F.col("dx")).alias("jx"),
-            (F.col("cy") + F.col("dy")).alias("jy"),
-        )
-    )
-    build = cell.select(
-        F.col("vec_id").alias("b_id"),
-        F.col("x").alias("bx"),
-        F.col("y").alias("by"),
-        F.col("cx").alias("jx"),
-        F.col("cy").alias("jy"),
-    )
-    d2 = (F.col("ax") - F.col("bx")) * (F.col("ax") - F.col("bx")) + (
-        F.col("ay") - F.col("by")
-    ) * (F.col("ay") - F.col("by"))
-    cand = (
-        probe.join(build, ["jx", "jy"])
-        .filter((F.col("a_id") != F.col("b_id")) & (d2 < r * r))
-        .select("a_id", "b_id", d2.alias("d2"))
-    )
+    cand = _grid_pairs(spark, sf_dir, F.col("a_id") != F.col("b_id"))
     w = Window.partitionBy("a_id").orderBy("d2", "b_id")
     return (
         cand.withColumn("rn", F.row_number().over(w))

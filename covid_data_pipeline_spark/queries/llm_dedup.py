@@ -322,16 +322,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # nothing.  On a real corpus whose collision tail is dominated by
     # low-J accidents the same ~30-line change is the standard fix; see
     # SCALE.md "measured dead ends".
-    a = keys.select(F.col("doc_id").alias("a_id"), "lang", "band", "bsig")
-    b = keys.select(F.col("doc_id").alias("b_id"), "lang", "band", "bsig")
-    # keys-only distinct (lang never reaches the output, so carrying it
-    # through a first() aggregate only forced a SortAggregate — r11)
-    cand = (
-        a.join(b, on=["lang", "band", "bsig"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
-    )
+    cand = _band_pairs(keys)
     return jaccard_verify(cand, t, *JACCARD_RATIO).select(
         "a_id", "b_id", F.round("jaccard", 6).alias("jaccard_est")
     )
@@ -369,6 +360,22 @@ def minhash_band_keys(sets: DataFrame, col: str, bands: int) -> DataFrame:
     )
     return sig.select("doc_id", "lang", F.explode(band_arr).alias("b")).select(
         "doc_id", "lang", "b.band", "b.bsig"
+    )
+
+
+def _band_pairs(keys: DataFrame, *cols: str) -> DataFrame:
+    """``(a_id, b_id, *cols)``: the distinct same-lang document pairs,
+    a_id < b_id, whose ``minhash_band_keys`` collide in at least one
+    band.  The distinct runs on these columns only: carrying a column
+    the caller drops through a first() aggregate forced a SortAggregate
+    (r11)."""
+    a = keys.select(F.col("doc_id").alias("a_id"), "lang", "band", "bsig")
+    b = keys.select(F.col("doc_id").alias("b_id"), "lang", "band", "bsig")
+    return (
+        a.join(b, on=["lang", "band", "bsig"])
+        .filter(F.col("a_id") < F.col("b_id"))
+        .select("a_id", "b_id", *cols)
+        .distinct()
     )
 
 
@@ -1323,17 +1330,7 @@ def dedup_containment_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     sh = _containment_shingles(spark, sf_dir)
     keys = minhash_band_keys(sh, "sh", _CONT_BANDS)
-    a = keys.select(F.col("doc_id").alias("a_id"), "lang", "band", "bsig")
-    b = keys.select(F.col("doc_id").alias("b_id"), "lang", "band", "bsig")
-    cand = (
-        a.join(b, on=["lang", "band", "bsig"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id", "lang")
-        # keys-only distinct + single-eval verify barrier: same two
-        # rewrites as the exact twin (see dedup_containment)
-        .distinct()
-    )
-    return containment_verify(cand, sh)
+    return containment_verify(_band_pairs(keys, "lang"), sh)
 
 
 @query(

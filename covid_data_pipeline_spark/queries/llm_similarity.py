@@ -200,6 +200,35 @@ def sim_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _query_pairs(spark: SparkSession, sf_dir: str, id_col: str) -> DataFrame:
+    """``(<id_col>, c_vec, nc, query_id, q_vec, nq)``: each query vector
+    (vec_id < 10) crossed with every other embedding, ``nq``/``nc`` the
+    two norms.
+
+    Norms are computed once per ROW before the pair join (1 fold per
+    pair instead of 3 — the r11 silhouette idiom).  The corpus-side
+    repartition is both the single-file-scan parallelism fix and the
+    projection barrier that stops the optimizer re-inlining the norm
+    into the per-pair projection; the broadcast query side uses the
+    explode(array()) Generate barrier (10 rows).  Callers divide by
+    ``nq * nc`` in that operand order, the oracle's."""
+    e = load(spark, sf_dir, "embeddings").select(
+        "vec_id", _vec("embedding").alias("vec")
+    )
+    q = (
+        e.filter(F.col("vec_id") < 10)
+        .select(F.col("vec_id").alias("query_id"), F.col("vec").alias("q_vec"))
+        .select("query_id", "q_vec", _norm("q_vec").alias("n0"))
+        .select("query_id", "q_vec", F.explode(F.array("n0")).alias("nq"))
+    )
+    c = (
+        e.select(F.col("vec_id").alias(id_col), F.col("vec").alias("c_vec"))
+        .select(id_col, "c_vec", _norm("c_vec").alias("nc"))
+        .repartition(spark.sparkContext.defaultParallelism, id_col)
+    )
+    return c.crossJoin(F.broadcast(q)).filter(F.col("query_id") != F.col(id_col))
+
+
 @query(
     "sim_topk_neighbors",
     oracle=f"""
@@ -225,36 +254,11 @@ def sim_topk_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROUNDED cosine + neighbor_id tiebreaker so rank is deterministic
     cross-engine.  This is the exact baseline; the bucketed ANN below is
     the scale path."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", _vec("embedding").alias("vec")
-    )
-    # r12: norms once per ROW before the pair join (1 fold per pair
-    # instead of 3 — the r11 silhouette idiom).  The
-    # corpus-side repartition is both the single-file-scan parallelism
-    # fix and the projection barrier that stops the optimizer
-    # re-inlining the norm into the per-pair projection; the broadcast
-    # query side uses the explode(array()) Generate barrier (10 rows).
-    # Same fold, same operand order (nq * nc) — bit-identical cosine.
-    par = spark.sparkContext.defaultParallelism
-    q = (
-        e.filter(F.col("vec_id") < 10)
-        .select(F.col("vec_id").alias("query_id"), F.col("vec").alias("q_vec"))
-        .select("query_id", "q_vec", _norm("q_vec").alias("n0"))
-        .select("query_id", "q_vec", F.explode(F.array("n0")).alias("nq"))
-    )
-    c = (
-        e.select(F.col("vec_id").alias("neighbor_id"), F.col("vec").alias("c_vec"))
-        .select("neighbor_id", "c_vec", _norm("c_vec").alias("nc"))
-        .repartition(par, "neighbor_id")
-    )
+    pairs = _query_pairs(spark, sf_dir, "neighbor_id")
     cos = F.round(
         _dot("q_vec", "c_vec") / (F.col("nq") * F.col("nc")), 6
     )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
-    )
+    scored = pairs.select("query_id", "neighbor_id", cos.alias("cosine"))
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
     )
@@ -271,12 +275,19 @@ def sim_topk_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
 # libm disagree by 1 ulp on this lattice (measured: argument 200 —
 # plane 3, dim 8), so computing the plane at runtime would make bucket
 # assignment engine-dependent; a literal decimal string parses to the
-# identical correctly-rounded double everywhere.
+# identical correctly-rounded double everywhere.  The multi-table ANN's
+# table t takes the next 384-argument block of the same lattice, so table
+# 0 is the single-table ANN's planes.
 _N_PLANES = 6
-_PLANES: list[list[float]] = [
-    [math.cos(float(p * 64 + j)) for j in range(64)]
-    for p in range(_N_PLANES)
+_N_TABLES = 2
+_PLANES_T: list[list[list[float]]] = [
+    [
+        [math.cos(float(t * _N_PLANES * 64 + p * 64 + j)) for j in range(64)]
+        for p in range(_N_PLANES)
+    ]
+    for t in range(_N_TABLES)
 ]
+_PLANES = _PLANES_T[0]
 
 _SQL_PLANES = ",\n        ".join(
     "({}, [{}])".format(p, ", ".join(repr(v) for v in _PLANES[p]))
@@ -370,46 +381,61 @@ def sim_ann_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", _vec("embedding").alias("vec")
     )
-    # signature bit p = sign(dot(vec, plane_p)); identical literal plane
-    # constants on both engines (see _PLANES note above).
+    sigged = e.withColumn("bucket", _signature(_PLANES))
+    return _probe_top5(sigged, ["bucket"], distinct=False)
+
+
+def _signature(planes: list[list[float]]) -> Column:
+    """The LSH bucket of ``vec``: bit p = sign(dot(vec, planes[p])), over
+    literal plane constants identical on both engines (see the _PLANES
+    note above)."""
     sig = F.lit(0).cast("long")
-    for p in range(_N_PLANES):
-        plane = F.array(*[F.lit(v) for v in _PLANES[p]])
+    for p, pl in enumerate(planes):
+        plane = F.array(*[F.lit(v) for v in pl])
         proj = F.aggregate(
             F.zip_with("vec", plane, lambda x, y: x * y),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
         sig = sig + F.when(proj > 0, F.lit(1 << p)).otherwise(0)
-    sigged = e.withColumn("bucket", sig)
+    return sig
+
+
+def _probe_top5(sigged: DataFrame, on: list[str], distinct: bool) -> DataFrame:
+    """``(query_id, neighbor_id, cosine, rn)``: each query vector (vec_id
+    < 10) of ``sigged`` ``(vec_id, vec, *on)`` probes its own bucket and
+    every bucket one bit away, meets the corpus in a broadcast equi-join
+    on ``on`` (ending in ``bucket``), and keeps its top 5 by rounded
+    exact cosine.  ``distinct`` collapses a candidate that several
+    tables propose before the re-rank window."""
+    probes = F.array(
+        *[
+            F.col("bucket") if m == 0 else F.col("bucket").bitwiseXOR(F.lit(m))
+            for m in _PROBE_MASKS
+        ]
+    )
     q = sigged.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"),
         F.col("vec").alias("q_vec"),
-        F.explode(
-            F.array(
-                *[
-                    F.col("bucket")
-                    if m == 0
-                    else F.col("bucket").bitwiseXOR(F.lit(m))
-                    for m in _PROBE_MASKS
-                ]
-            )
-        ).alias("bucket"),
+        *on[:-1],
+        F.explode(probes).alias("bucket"),
     )
     c = sigged.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("vec").alias("c_vec"), "bucket"
+        F.col("vec_id").alias("neighbor_id"), F.col("vec").alias("c_vec"), *on
     )
     cos = F.round(_dot("q_vec", "c_vec") / (_norm("q_vec") * _norm("c_vec")), 6)
-    scored = (
-        c.join(F.broadcast(q), on="bucket")
+    cand = (
+        c.join(F.broadcast(q), on=on)
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", cos.alias("cosine"))
     )
+    if distinct:
+        cand = cand.distinct()
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
     )
     return (
-        scored.withColumn("rn", F.row_number().over(w))
+        cand.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 5)
         .select("query_id", "neighbor_id", "cosine", "rn")
     )
@@ -541,18 +567,6 @@ def _emb_dedup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return en
 
 
-# Second-table lattice for the multi-table ANN: the next 384-argument
-# block of the same baked-literal cosine lattice — independent of table
-# 0's planes, identical in both engines by construction.
-_N_TABLES = 2
-_PLANES_T: list[list[list[float]]] = [
-    [
-        [math.cos(float(t * _N_PLANES * 64 + p * 64 + j)) for j in range(64)]
-        for p in range(_N_PLANES)
-    ]
-    for t in range(_N_TABLES)
-]
-
 _SQL_PLANES_T = ",\n        ".join(
     "({}, {}, [{}])".format(t, p, ", ".join(repr(v) for v in _PLANES_T[t][p]))
     for t in range(_N_TABLES)
@@ -643,19 +657,6 @@ def sim_ann_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings").select(
         "vec_id", _vec("embedding").alias("vec")
     )
-
-    def table_sig(t: int):
-        sig = F.lit(0).cast("long")
-        for p in range(_N_PLANES):
-            plane = F.array(*[F.lit(v) for v in _PLANES_T[t][p]])
-            proj = F.aggregate(
-                F.zip_with("vec", plane, lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            sig = sig + F.when(proj > 0, F.lit(1 << p)).otherwise(0)
-        return sig
-
     # one row per (vector, table): F.array of structs — field names
     # must be identical in every element (the r9 gotcha), hence the
     # double alias
@@ -666,49 +667,14 @@ def sim_ann_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array(
                 *[
                     F.struct(
-                        F.lit(t).alias("t"), table_sig(t).alias("bucket")
+                        F.lit(t).alias("t"), _signature(_PLANES_T[t]).alias("bucket")
                     )
                     for t in range(_N_TABLES)
                 ]
             )
         ).alias("tb"),
     ).select("vec_id", "vec", F.col("tb.t").alias("t"), F.col("tb.bucket").alias("bucket"))
-    q = sigged.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("vec").alias("q_vec"),
-        "t",
-        F.explode(
-            F.array(
-                *[
-                    F.col("bucket")
-                    if m == 0
-                    else F.col("bucket").bitwiseXOR(F.lit(m))
-                    for m in _PROBE_MASKS
-                ]
-            )
-        ).alias("bucket"),
-    )
-    c = sigged.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("vec").alias("c_vec"),
-        "t",
-        "bucket",
-    )
-    cos = F.round(_dot("q_vec", "c_vec") / (_norm("q_vec") * _norm("c_vec")), 6)
-    cand = (
-        c.join(F.broadcast(q), on=["t", "bucket"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
-        .distinct()
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("query_id", "neighbor_id", "cosine", "rn")
-    )
+    return _probe_top5(sigged, ["t", "bucket"], distinct=True)
 
 
 _IVF_NPROBE = 2
@@ -1669,34 +1635,15 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-query scoring pass, identical to sim_topk_neighbors.
     At 100 TB the candidates come from the ANN path (sim_ann_ivf) and
     this rerank costs O(queries * k^2) — nothing."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id", _vec("embedding").alias("vec")
-    )
-    # r12: norms once per row before the scoring join (sim_topk idiom —
-    # repartition doubles as barrier + parallelism; identical operand
-    # order keeps simq_micro bit-identical)
-    par = spark.sparkContext.defaultParallelism
-    q = (
-        e.filter(F.col("vec_id") < 10)
-        .select(F.col("vec_id").alias("query_id"), F.col("vec").alias("q_vec"))
-        .select("query_id", "q_vec", _norm("q_vec").alias("n0"))
-        .select("query_id", "q_vec", F.explode(F.array("n0")).alias("nq"))
-    )
-    c = (
-        e.select(F.col("vec_id").alias("id"), F.col("vec").alias("c_vec"))
-        .select("id", "c_vec", _norm("c_vec").alias("nc"))
-        .repartition(par, "id")
-    )
+    pairs = _query_pairs(spark, sf_dir, "id")
     simq = F.floor(
         F.lit(1000000.0)
         * _dot("q_vec", "c_vec")
         / (F.col("nq") * F.col("nc"))
         + F.lit(0.5)
     ).cast("long")
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("query_id") != F.col("id"))
-        .select("query_id", "id", simq.alias("simq_micro"), F.col("c_vec").alias("vec"))
+    scored = pairs.select(
+        "query_id", "id", simq.alias("simq_micro"), F.col("c_vec").alias("vec")
     )
     wq = Window.partitionBy("query_id").orderBy(
         F.col("simq_micro").desc(), "id"

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -141,6 +141,17 @@ def text_lang_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _bigrams(toks: Column) -> Column:
+    """The array of "a b" strings, one per adjacent token pair of the
+    string array ``toks``, from one zip_with pass."""
+    n = F.size(toks)
+    return F.zip_with(
+        F.slice(toks, 1, n - 1),
+        F.slice(toks, 2, n - 1),
+        lambda x, y: F.concat_ws(" ", x, y),
+    )
+
+
 @query(
     "text_ngrams",
     oracle="""
@@ -157,13 +168,7 @@ def text_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup): zip the token array with its own tail — no explode-join,
     one pass per document."""
     d = load(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    n = F.size(toks)
-    bigrams = F.zip_with(
-        F.slice(toks, 1, n - 1),
-        F.slice(toks, 2, n - 1),
-        lambda x, y: F.concat_ws(" ", x, y),
-    )
+    bigrams = _bigrams(F.split("text", " "))
     return (
         d.select(F.explode(bigrams).alias("bigram"))
         .groupBy("bigram")
@@ -2862,11 +2867,7 @@ def text_bigram_lm_crossentropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     n = F.size(toks)
-    bigrams = F.zip_with(
-        F.slice(toks, 1, n - 1),
-        F.slice(toks, 2, n - 1),
-        lambda x, y: F.concat_ws(" ", x, y),
-    )
+    bigrams = _bigrams(toks)
     train = d.filter(F.col("doc_id") % 2 == 0)
     test = d.filter(F.col("doc_id") % 2 == 1)
     uni_counts = (

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import query
+from .streaming_batch import _corpus_flag, _ingest_corpus, _ingest_flags
 
 
 @query(
@@ -2169,7 +2170,9 @@ def pipeline_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_vs_corpus = dedup_incremental_exact's anti-join against the
     corpus hash index; merge = merge_upsert_latest's latest-wins
     semantics, here reported as counts (merged_total = corpus + new:
-    updates REPLACE rows, never add).
+    updates REPLACE rows, never add).  The feeds, clean, gate flags and
+    corpus-index join are the stages stream_incremental_ingest runs in
+    flight (streaming_batch._ingest_flagged).
 
     Fixture framing (the dedup_incremental_exact convention): the
     accumulated corpus is the ``doc_id % 5 == 0`` slice; the increment
@@ -2201,50 +2204,11 @@ def pipeline_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     smaller), and the report is 9 rows.  Every stage inherits its
     standalone operator's partitioning discipline."""
     d = load(spark, sf_dir, "documents")
-    clean = lambda c: F.trim(F.regexp_replace(c, r"\s+", " "))  # noqa: E731
-    corpus = d.filter(F.col("doc_id") % 5 == 0).select(
-        "doc_id", F.sha2(clean(F.col("text")), 256).alias("h")
-    )
-    corpus_hashes = corpus.select("h").distinct()
-    inc = d.filter(
-        (F.col("doc_id") % 5 != 0)
-        | (F.col("doc_id") % 20 == 0)
-        | (F.col("doc_id") % 20 == 10)
-    ).select(
-        "doc_id",
-        clean(
-            F.when(
-                F.col("doc_id") % 20 == 0,
-                F.concat(F.upper("text"), F.lit(" UPDATE")),
-            ).otherwise(F.col("text"))
-        ).alias("cleaned"),
-    ).unionByName(
-        # seeded verbatim-duplicate feed in the negative id space (the
-        # multimodal_blockhash doctrine): a syndicated re-post of every
-        # doc_id % 15 == 1 document, so dedup_intra does witnessed work
-        # at every sf (the raw fixture has intra-increment dups only at
-        # sf0.1)
-        d.filter(F.col("doc_id") % 15 == 1).select(
-            (-F.col("doc_id") - 1).alias("doc_id"),
-            clean(F.col("text")).alias("cleaned"),
-        )
-    )
-    flags = inc.select(
-        "doc_id",
-        F.sha2("cleaned", 256).alias("h"),
-        (F.length("cleaned") >= 1).alias("ok_clean"),
-        F.length("cleaned").between(50, 1000).alias("ok_quality"),
-        (F.col("doc_id") % 5 == 0).alias("id_in_corpus"),
-    )
+    corpus = _ingest_corpus(d)
     w = Window.partitionBy("h", "ok_quality").orderBy("doc_id")
-    ranked = (
-        flags.withColumn("rn", F.row_number().over(w))
-        .join(
-            F.broadcast(corpus_hashes.withColumn("hic", F.lit(True))),
-            "h",
-            "left",
-        )
-        .withColumn("hash_in_corpus", F.coalesce("hic", F.lit(False)))
+    ranked = _corpus_flag(
+        _ingest_flags(d).withColumn("rn", F.row_number().over(w)),
+        corpus.select("h").distinct(),
     )
     ok_q = F.col("ok_quality")
     first = ok_q & (F.col("rn") == 1)
@@ -2659,44 +2623,17 @@ def pipeline_merged_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     window runs over the increment only (a day's data), never the
     corpus."""
     d = load(spark, sf_dir, "documents")
-    clean = lambda c: F.trim(F.regexp_replace(c, r"\s+", " "))  # noqa: E731
-    corpus = d.filter(F.col("doc_id") % 5 == 0).select(
-        "doc_id", F.sha2(clean(F.col("text")), 256).alias("h")
-    )
-    corpus_hashes = corpus.select("h").distinct()
-    inc = d.filter(
-        (F.col("doc_id") % 5 != 0)
-        | (F.col("doc_id") % 20 == 0)
-        | (F.col("doc_id") % 20 == 10)
-    ).select(
-        "doc_id",
-        clean(
-            F.when(
-                F.col("doc_id") % 20 == 0,
-                F.concat(F.upper("text"), F.lit(" UPDATE")),
-            ).otherwise(F.col("text"))
-        ).alias("cleaned"),
-    ).unionByName(
-        d.filter(F.col("doc_id") % 15 == 1).select(
-            (-F.col("doc_id") - 1).alias("doc_id"),
-            clean(F.col("text")).alias("cleaned"),
-        )
-    )
-    qual = inc.filter(F.length("cleaned").between(50, 1000)).select(
-        "doc_id",
-        F.sha2("cleaned", 256).alias("h"),
-        (F.col("doc_id") % 5 == 0).alias("id_in_corpus"),
-    )
+    corpus = _ingest_corpus(d)
     w = Window.partitionBy("h").orderBy("doc_id")
-    admitted = (
-        qual.withColumn("rn", F.row_number().over(w))
+    first = (
+        _ingest_flags(d)
+        .filter(F.col("ok_quality"))
+        .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
-        .join(
-            F.broadcast(corpus_hashes.withColumn("hic", F.lit(True))),
-            "h",
-            "left",
-        )
-        .filter(F.col("hic").isNull())
+    )
+    admitted = (
+        _corpus_flag(first, corpus.select("h").distinct())
+        .filter(~F.col("hash_in_corpus"))
         .select("doc_id", "h", "id_in_corpus")
     )
     # admitted feeds BOTH merge arms (updates + news); without truncation

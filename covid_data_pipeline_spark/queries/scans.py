@@ -61,16 +61,24 @@ def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns, so the read-back aggregate equals the direct aggregate —
     which makes the filesystem side effect fully ORACLE-CHECKABLE (a
     dropped or duplicated row would break the count)."""
-    path = scratch_path("csv_roundtrip")
+    return _csv_roundtrip(spark, sf_dir, "csv_roundtrip")
+
+
+def _csv_roundtrip(
+    spark: SparkSession, sf_dir: str, name: str, **write_opts: str
+) -> DataFrame:
+    """Write events to CSV in scratch dir ``name`` (extra writer options
+    ``write_opts``), read them back with the explicit ``EVENTS`` schema
+    and count by event_type."""
+    path = scratch_path(name)
+    ts_fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
     ev = load(spark, sf_dir, "events")
-    (
-        ev.write.mode("overwrite")
-        .options(header=True, timestampFormat="yyyy-MM-dd HH:mm:ss.SSSSSS")
-        .csv(path)
-    )
+    ev.write.mode("overwrite").options(
+        header=True, timestampFormat=ts_fmt, **write_opts
+    ).csv(path)
     back = (
         spark.read.schema(EVENTS)
-        .options(header=True, timestampFormat="yyyy-MM-dd HH:mm:ss.SSSSSS")
+        .options(header=True, timestampFormat=ts_fmt)
         .csv(path)
     )
     return back.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
@@ -1310,23 +1318,7 @@ def scan_csv_gz_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
     correct shape: parallelism = file count.  Prefer zstd/parquet for
     anything produced in-house; this operator exists for the files you
     DIDN'T produce."""
-    path = scratch_path("csv_gz_codec")
-    ev = load(spark, sf_dir, "events")
-    (
-        ev.write.mode("overwrite")
-        .options(
-            header=True,
-            timestampFormat="yyyy-MM-dd HH:mm:ss.SSSSSS",
-            compression="gzip",
-        )
-        .csv(path)
-    )
-    back = (
-        spark.read.schema(EVENTS)
-        .options(header=True, timestampFormat="yyyy-MM-dd HH:mm:ss.SSSSSS")
-        .csv(path)
-    )
-    return back.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+    return _csv_roundtrip(spark, sf_dir, "csv_gz_codec", compression="gzip")
 
 
 @query(

@@ -21,8 +21,9 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from datetime import datetime
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import NARROW_SHUFFLE, load
@@ -47,7 +48,7 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour tumbling count+sum by event_type (reference: per-scan-cycle
     aggregation).  Same transform the streaming twin runs incrementally;
     window start surfaced as epoch-µs for cross-engine stability."""
-    return TR.tumbling_hourly(load(spark, sf_dir, "events"))
+    return TR.hourly_window(load(spark, sf_dir, "events"))
 
 
 @query(
@@ -67,7 +68,7 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     4 windows (floor-to-15min start minus k*15min, k=0..3, always within
     the hour), which is how the oracle enumerates Spark's window
     assignment without a window function."""
-    return TR.sliding_1h_15m(load(spark, sf_dir, "events"))
+    return TR.hourly_window(load(spark, sf_dir, "events"), "15 minutes")
 
 
 @query(
@@ -223,7 +224,7 @@ def stream_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             "append"
         ).parquet(data)
 
-    stream = TR.tumbling_hourly(read_events_stream(spark, sf_dir))
+    stream = TR.hourly_window(read_events_stream(spark, sf_dir))
     drain(stream, "complete", foreach_batch=write_batch)
     sunk = spark.read.parquet(data)
     last = sunk.agg(F.max("batch_id").alias("m")).collect()[0]["m"]
@@ -401,10 +402,13 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(purchase_view_join(ev), output_mode="append")
 
 
-def purchase_view_join(ev: DataFrame) -> DataFrame:
+def purchase_view_join(
+    ev: DataFrame, how: str = "inner", closable: datetime | None = None
+) -> DataFrame:
     """stream_stream_join's join topology over an events frame (batch OR
     streaming — same logical plan either way): purchases x same-user
-    views in the preceding hour, both sides under 2-hour watermarks.
+    views in the preceding hour, both sides under 2-hour watermarks,
+    joined ``how``; with ``closable``, only purchases at or before it.
     Module-level so the split-feed multi-batch test can drive the
     IDENTICAL expressions through a time-ordered multi-file drain."""
     views = (
@@ -425,15 +429,18 @@ def purchase_view_join(ev: DataFrame) -> DataFrame:
         )
         .withWatermark("p_ts", "2 hours")
     )
-    return purchases.join(
+    joined = purchases.join(
         views,
         F.expr(
             """v_user = user_id
                AND v_ts <= p_ts
                AND v_ts >= p_ts - interval 1 hour"""
         ),
-        "inner",
-    ).select(
+        how,
+    )
+    if closable is not None:
+        joined = joined.filter(F.col("p_ts") <= F.lit(closable))
+    return joined.select(
         "user_id",
         "purchase_id",
         "view_id",
@@ -514,38 +521,7 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()[0]["b"]
     )
     ev = read_events_stream(spark, sf_dir)
-    views = (
-        ev.filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", "2 hours")
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            "user_id",
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
-    joined = purchases.join(
-        views,
-        F.expr(
-            """v_user = user_id
-               AND v_ts <= p_ts
-               AND v_ts >= p_ts - interval 1 hour"""
-        ),
-        "leftOuter",
-    ).filter(F.col("p_ts") <= F.lit(closable)).select(
-        "user_id",
-        "purchase_id",
-        "view_id",
-        (F.unix_micros("p_ts") - F.unix_micros("v_ts")).alias("gap_us"),
-    )
+    joined = purchase_view_join(ev, "leftOuter", closable)
     return run_available_now(joined, output_mode="append")
 
 
@@ -907,7 +883,7 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import read_events_stream
 
     name = f"prog_{uuid.uuid4().hex[:12]}"
-    agg = TR.tumbling_hourly(read_events_stream(spark, sf_dir))
+    agg = TR.hourly_window(read_events_stream(spark, sf_dir))
     q = drain(agg, "complete", memory=name)
     progresses = [p for p in q.recentProgress if p is not None]
     n_batches = len(progresses)
@@ -1073,12 +1049,7 @@ def stream_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import read_documents_stream, run_available_now
 
     d = load(spark, sf_dir, "documents")
-    clean = lambda c: F.trim(F.regexp_replace(c, r"\s+", " "))  # noqa: E731
-    corpus_hashes = (
-        d.filter(F.col("doc_id") % 5 == 0)
-        .select(F.sha2(clean(F.col("text")), 256).alias("h"))
-        .distinct()
-    )
+    corpus_hashes = _ingest_corpus(d).select("h").distinct()
     ds = read_documents_stream(spark, sf_dir)
     decided = _ingest_decisions(
         _ingest_flagged(ds, corpus_hashes)
@@ -1086,20 +1057,44 @@ def stream_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_available_now(decided, output_mode="append")
 
 
+def _clean_ws(c: Column) -> Column:
+    """The ingest clean: every whitespace run folded to one space, then
+    trimmed (no lowercasing, so an update stays distinct from its base
+    text)."""
+    return F.trim(F.regexp_replace(c, r"\s+", " "))
+
+
+def _ingest_corpus(d: DataFrame) -> DataFrame:
+    """``(doc_id, h)``: the accumulated corpus of the ingest fixture (the
+    ``doc_id % 5 == 0`` slice) with the sha256 of each cleaned text."""
+    return d.filter(F.col("doc_id") % 5 == 0).select(
+        "doc_id", F.sha2(_clean_ws(F.col("text")), 256).alias("h")
+    )
+
+
 def _ingest_flagged(docs: DataFrame, corpus_hashes: DataFrame) -> DataFrame:
-    """stream_incremental_ingest's STATELESS in-flight stages — increment
-    feeds, clean, gate flags, stream-static broadcast index join — over a
-    documents-shaped frame (batch or streaming; same logical plan either
-    way, which is what lets tests drive the identical expressions through
-    arbitrary micro-batch splits)."""
-    clean = lambda c: F.trim(F.regexp_replace(c, r"\s+", " "))  # noqa: E731
+    """The ingest's STATELESS in-flight stages — increment feeds, clean,
+    gate flags, broadcast corpus-index join — over a documents-shaped
+    frame, batch or streaming (same logical plan either way, which is
+    what lets tests drive the identical expressions through arbitrary
+    micro-batch splits)."""
+    return _corpus_flag(_ingest_flags(docs), corpus_hashes)
+
+
+def _ingest_flags(docs: DataFrame) -> DataFrame:
+    """``(doc_id, h, ok_clean, ok_quality, id_in_corpus)`` for each
+    document of the increment: the new-document slice (``% 5 != 0``)
+    plus three seeded feeds — ``% 20 == 0`` docs re-arrive with CHANGED
+    content, ``% 20 == 10`` docs re-arrive byte-identical, and
+    ``% 15 == 1`` docs arrive a second time as a verbatim re-post in the
+    negative id space."""
     inc = docs.filter(
         (F.col("doc_id") % 5 != 0)
         | (F.col("doc_id") % 20 == 0)
         | (F.col("doc_id") % 20 == 10)
     ).select(
         "doc_id",
-        clean(
+        _clean_ws(
             F.when(
                 F.col("doc_id") % 20 == 0,
                 F.concat(F.upper("text"), F.lit(" UPDATE")),
@@ -1108,27 +1103,30 @@ def _ingest_flagged(docs: DataFrame, corpus_hashes: DataFrame) -> DataFrame:
     ).unionByName(
         docs.filter(F.col("doc_id") % 15 == 1).select(
             (-F.col("doc_id") - 1).alias("doc_id"),
-            clean(F.col("text")).alias("cleaned"),
+            _clean_ws(F.col("text")).alias("cleaned"),
         )
     )
+    return inc.select(
+        "doc_id",
+        F.sha2("cleaned", 256).alias("h"),
+        (F.length("cleaned") >= 1).alias("ok_clean"),
+        F.length("cleaned").between(50, 1000).alias("ok_quality"),
+        (F.col("doc_id") % 5 == 0).alias("id_in_corpus"),
+    )
+
+
+def _corpus_flag(flags: DataFrame, corpus_hashes: DataFrame) -> DataFrame:
+    """``flags`` plus ``hash_in_corpus``: whether its hash ``h`` is in the
+    distinct ``corpus_hashes`` index, looked up by a broadcast left
+    join."""
     return (
-        inc.select(
-            "doc_id",
-            F.sha2("cleaned", 256).alias("h"),
-            (F.length("cleaned") >= 1).alias("ok_clean"),
-            F.length("cleaned").between(50, 1000).alias("ok_quality"),
-            (F.col("doc_id") % 5 == 0).alias("id_in_corpus"),
-        )
-        .join(
+        flags.join(
             F.broadcast(corpus_hashes.withColumn("hic", F.lit(True))),
             "h",
             "left",
         )
         .withColumn("hash_in_corpus", F.coalesce("hic", F.lit(False)))
-        .select(
-            "doc_id", "h", "ok_clean", "ok_quality",
-            "id_in_corpus", "hash_in_corpus",
-        )
+        .select(*flags.columns, "hash_in_corpus")
     )
 
 

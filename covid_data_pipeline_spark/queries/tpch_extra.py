@@ -875,18 +875,8 @@ def graph_knn_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materializes the sparsified graph once — the operators/graph.py
     # idiom; ~5k rows at sf0.1, k*n rows in general
     edges = _knn_edges(spark, sf_dir).localCheckpoint(eager=False)
-    deg = (
-        edges.select(F.col("a").alias("v"))
-        .unionByName(edges.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    e1 = edges.select(F.col("a").alias("x"), F.col("b").alias("y"))
-    e2 = edges.select(F.col("a").alias("y"), F.col("b").alias("z"))
-    e3 = edges.select(F.col("a").alias("x"), F.col("b").alias("z"))
-    tri = e1.join(e2, "y").join(e3, ["x", "z"]).agg(
-        F.count(F.lit(1)).alias("n_triangles")
-    )
+    deg = _knn_degrees(edges)
+    tri = _knn_triangles(edges).agg(F.count(F.lit(1)).alias("n_triangles"))
     stats = deg.agg(
         F.count(F.lit(1)).alias("n_nodes"),
         (F.sum(F.col("d") * (F.col("d") - 1)) / 2).cast("long").alias("n_wedges"),
@@ -897,6 +887,40 @@ def graph_knn_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(tri))
         .select("n_nodes", "n_edges", "n_wedges", "n_triangles")
     )
+
+
+def _knn_degrees(edges: DataFrame) -> DataFrame:
+    """``(v, d)``: each node's degree in the oriented ``(a, b)`` edges."""
+    return (
+        edges.select(F.col("a").alias("v"))
+        .unionByName(edges.select(F.col("b").alias("v")))
+        .groupBy("v")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+
+
+def _knn_adjacency(edges: DataFrame) -> DataFrame:
+    """``(v, n)``: each oriented ``(a, b)`` edge in both directions."""
+    return edges.select(F.col("a").alias("v"), F.col("b").alias("n")).unionByName(
+        edges.select(F.col("b").alias("v"), F.col("a").alias("n"))
+    )
+
+
+def _knn_wedges(adj: DataFrame) -> DataFrame:
+    """``(n, u, v)``: every pair u < v of neighbours of a common node n,
+    from the adjacency self-join on n (bounded by the sum of deg²)."""
+    x = adj.select(F.col("v").alias("u"), "n")
+    y = adj.select(F.col("v").alias("v"), "n")
+    return x.join(y, "n").filter(F.col("u") < F.col("v"))
+
+
+def _knn_triangles(edges: DataFrame) -> DataFrame:
+    """``(x, y, z)``: every triangle of the oriented ``(a, b)`` edges
+    once, as x < y < z, from the edge ⋈ edge ⋈ edge join."""
+    e1 = edges.select(F.col("a").alias("x"), F.col("b").alias("y"))
+    e2 = edges.select(F.col("a").alias("y"), F.col("b").alias("z"))
+    e3 = edges.select(F.col("a").alias("x"), F.col("b").alias("z"))
+    return e1.join(e2, "y").join(e3, ["x", "z"])
 
 
 @query(
@@ -968,15 +992,10 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     localCheckpoint-truncated once and feeds both the adjacency and
     degree consumers (the graph_knn_triangles idiom)."""
     edges = _knn_edges(spark, sf_dir).localCheckpoint(eager=False)
-    adj = edges.select(F.col("a").alias("v"), F.col("b").alias("n")).unionByName(
-        edges.select(F.col("b").alias("v"), F.col("a").alias("n"))
-    )
+    adj = _knn_adjacency(edges)
     deg = adj.groupBy("v").agg(F.count(F.lit(1)).alias("d"))
-    x = adj.select(F.col("v").alias("u"), "n")
-    y = adj.select(F.col("v").alias("v"), "n")
     common = (
-        x.join(y, "n")
-        .filter(F.col("u") < F.col("v"))
+        _knn_wedges(adj)
         .groupBy("u", "v")
         .agg(F.count(F.lit(1)).alias("common_neighbors"))
     )
@@ -997,6 +1016,22 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.col("jac_micro").desc(), "u", "v")
         .limit(20)
+    )
+
+
+def _nation_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(nation, c_custkey, rev_c)``: each customer's lifetime order
+    revenue in exact BIGINT cents, keyed by the customer's nation."""
+    c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    o = load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
+    return (
+        o.join(c, o["o_custkey"] == c["c_custkey"])
+        .groupBy(F.col("c_nationkey").alias("nation"), "c_custkey")
+        .agg(
+            F.sum(
+                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+            ).alias("rev_c")
+        )
     )
 
 
@@ -1042,17 +1077,7 @@ def agg_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-median cost class; at unbounded group size bracket G from the
     mergeable histogram's Lorenz curve instead).  The per-customer
     revenue rollup is the only corpus-sized stage."""
-    c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    o = load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-    cust = (
-        o.join(c, o["o_custkey"] == c["c_custkey"])
-        .groupBy(F.col("c_nationkey").alias("nation"), "c_custkey")
-        .agg(
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-            ).alias("rev_c")
-        )
-    )
+    cust = _nation_customer_revenue(spark, sf_dir)
     w = Window.partitionBy("nation").orderBy("rev_c", "c_custkey")
     ranked = cust.select(
         "nation",
@@ -1295,17 +1320,7 @@ def agg_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     The two SUM(rev_c) references are the identical expression — one
     aggregate buffer, squared once in the final projection, same shape
     both engines."""
-    c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    o = load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-    cust = (
-        o.join(c, o["o_custkey"] == c["c_custkey"])
-        .groupBy(F.col("c_nationkey").alias("nation"), "c_custkey")
-        .agg(
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-            ).alias("rev_c")
-        )
-    )
+    cust = _nation_customer_revenue(spark, sf_dir)
     rev_dec = F.col("rev_c").cast("decimal(19,0)")
     hhi = F.floor(
         F.lit(10000000000.0)
@@ -1538,19 +1553,14 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sum-of-deg^2, k^2|V| on the sparsified graph); the degree lookup
     joins on the wedge's CENTER — one broadcastable |V|-row dim."""
     edges = _knn_edges(spark, sf_dir).localCheckpoint(eager=False)
-    adj = edges.select(F.col("a").alias("v"), F.col("b").alias("n")).unionByName(
-        edges.select(F.col("b").alias("v"), F.col("a").alias("n"))
-    )
+    adj = _knn_adjacency(edges)
     deg = adj.groupBy("v").agg(F.count(F.lit(1)).alias("d"))
-    x = adj.select(F.col("v").alias("u"), "n")
-    y = adj.select(F.col("v").alias("v"), "n")
     dz = deg.select(F.col("v").alias("n"), F.col("d").alias("dz"))
     contrib = F.floor(
         F.lit(1000000.0) / F.log(F.col("dz").cast("double")) + F.lit(0.5)
     ).cast("long")
     wedges = (
-        x.join(y, "n")
-        .filter(F.col("u") < F.col("v"))
+        _knn_wedges(adj)
         .join(F.broadcast(dz), "n")
         .select("u", "v", contrib.alias("contrib_micro"))
     )
@@ -1618,17 +1628,7 @@ def agg_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-customer rollup is the only corpus-sized stage; the
     group-total dim broadcasts; per-shard (n, S, sum t_micro) partials
     ADD."""
-    c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    o = load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-    cust = (
-        o.join(c, o["o_custkey"] == c["c_custkey"])
-        .groupBy(F.col("c_nationkey").alias("nation"), "c_custkey")
-        .agg(
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-            ).alias("rev_c")
-        )
-    )
+    cust = _nation_customer_revenue(spark, sf_dir)
     tot = cust.groupBy("nation").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("rev_c").cast("long").alias("s"),
@@ -1711,17 +1711,7 @@ def agg_atkinson_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: additive (n, S, sum_ln, sum_sqrt) partials — the index of
     any rollup grain is four-integer arithmetic, no ranked pass."""
-    c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    o = load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-    cust = (
-        o.join(c, o["o_custkey"] == c["c_custkey"])
-        .groupBy(F.col("c_nationkey").alias("nation"), "c_custkey")
-        .agg(
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-            ).alias("rev_c")
-        )
-    )
+    cust = _nation_customer_revenue(spark, sf_dir)
     micro = lambda col: F.floor(F.lit(1000000.0) * col + F.lit(0.5)).cast(
         "long"
     )
@@ -1796,17 +1786,7 @@ def analytics_lorenz_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the ranked pass is per-nation (the Gini cost class); past
     that, swap NTILE for bucketed histogram cut points — the decile
     table itself is O(groups x 10) forever."""
-    c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    o = load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-    cust = (
-        o.join(c, o["o_custkey"] == c["c_custkey"])
-        .groupBy(F.col("c_nationkey").alias("nation"), "c_custkey")
-        .agg(
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-            ).alias("rev_c")
-        )
-    )
+    cust = _nation_customer_revenue(spark, sf_dir)
     wd = Window.partitionBy("nation").orderBy("rev_c", "c_custkey")
     per = (
         cust.select(
@@ -1921,9 +1901,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials — the correlation of any subgraph rollup merges from six
     integers."""
     edges = _knn_edges(spark, sf_dir).localCheckpoint(eager=False)
-    adj = edges.select(F.col("a").alias("v"), F.col("b").alias("n")).unionByName(
-        edges.select(F.col("b").alias("v"), F.col("a").alias("n"))
-    )
+    adj = _knn_adjacency(edges)
     deg = adj.groupBy("v").agg(F.count(F.lit(1)).cast("long").alias("d"))
     da = deg.select(F.col("v").alias("a"), F.col("d").alias("dxa"))
     db = deg.select(F.col("v").alias("b"), F.col("d").alias("dxb"))
@@ -1990,11 +1968,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         eager=True
     )
     for _ in range(50):
-        adj = edges.select(F.col("a").alias("v")).unionByName(
-            edges.select(F.col("b").alias("v"))
-        )
-        deg = adj.groupBy("v").agg(F.count(F.lit(1)).alias("d"))
-        keep = deg.filter(F.col("d") >= k).select("v")
+        keep = _knn_degrees(edges).filter(F.col("d") >= k).select("v")
         nxt = (
             edges.join(keep.withColumnRenamed("v", "a"), "a", "left_semi")
             .join(keep.withColumnRenamed("v", "b"), "b", "left_semi")
@@ -2006,14 +1980,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges = nxt
     else:
         raise RuntimeError("k-core peel failed to converge in 50 rounds")
-    adj = edges.select(F.col("a").alias("v")).unionByName(
-        edges.select(F.col("b").alias("v"))
-    )
-    return (
-        adj.groupBy("v")
-        .agg(F.count(F.lit(1)).cast("long").alias("core_deg"))
-        .orderBy("v")
-    )
+    return _knn_degrees(edges).select("v", F.col("d").alias("core_deg")).orderBy("v")
 
 
 @query(
@@ -2065,17 +2032,7 @@ def analytics_pareto_8020(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one per-nation ranked pass (the Gini cost class); at
     unbounded group size bracket the 80% point from the mergeable
     revenue histogram instead of the exact rank."""
-    c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    o = load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
-    cust = (
-        o.join(c, o["o_custkey"] == c["c_custkey"])
-        .groupBy(F.col("c_nationkey").alias("nation"), "c_custkey")
-        .agg(
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
-            ).alias("rev_c")
-        )
-    )
+    cust = _nation_customer_revenue(spark, sf_dir)
     w = Window.partitionBy("nation").orderBy(
         F.col("rev_c").desc(), "c_custkey"
     )
@@ -2667,16 +2624,8 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds the triangle join at O(k^2) per node; the per-node rollup
     adds two skinny aggregates.  Output is |V|-sized."""
     edges = _knn_edges(spark, sf_dir).localCheckpoint(eager=False)
-    deg = (
-        edges.select(F.col("a").alias("v"))
-        .unionByName(edges.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-    )
-    e1 = edges.select(F.col("a").alias("x"), F.col("b").alias("y"))
-    e2 = edges.select(F.col("a").alias("y"), F.col("b").alias("z"))
-    e3 = edges.select(F.col("a").alias("x"), F.col("b").alias("z"))
-    tri = e1.join(e2, "y").join(e3, ["x", "z"])
+    deg = _knn_degrees(edges)
+    tri = _knn_triangles(edges)
     tpn = (
         tri.select(F.col("x").alias("v"))
         .unionByName(tri.select(F.col("y").alias("v")))

@@ -40,6 +40,8 @@ from .io import tune, warehouse_dir
 # JSON line); route all JVM logging at warning level to stderr instead
 _JVM_LOG = "-Xlog:disable -Xlog:all=warning:stderr"
 _BUILD_TIMEOUT_S = 600
+# the directory holding this package, wherever it was imported from
+_PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _builder(app: str, cpus: int, mem: str) -> SparkSession.Builder:
@@ -50,6 +52,11 @@ def _builder(app: str, cpus: int, mem: str) -> SparkSession.Builder:
         # SQL runtime confs (shuffle width, AQE, time zone) are set by
         # tune() below and before every registered query
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Python workers unpickle package functions by import path; Spark
+        # puts this entry between its own python path and the inherited
+        # $PYTHONPATH, so a driver that found the package only through
+        # sys.path still has workers that can import it
+        .config("spark.executorEnv.PYTHONPATH", _PKG_PARENT)
         # local-mode driver == the only executor.  8g vs 32g was A/B'd at
         # r3 on the heavy dedup queries: no consistent difference (run
         # variance dominates), so the smaller footprint stays the default
@@ -136,9 +143,8 @@ def _build(cache: str, key: str, cpus: int, mem: str) -> str | None:
         if name.endswith(".tmp"):  # left by a builder that was killed
             os.unlink(os.path.join(cache, name))
     tmp = os.path.join(cache, f"{key}.tmp")
-    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = dict(os.environ)
-    env["PYTHONPATH"] = os.pathsep.join(p for p in (pkg_parent, env.get("PYTHONPATH")) if p)
+    env["PYTHONPATH"] = os.pathsep.join(p for p in (_PKG_PARENT, env.get("PYTHONPATH")) if p)
     cmd = [
         sys.executable,
         "-c",

@@ -23,28 +23,12 @@ HOUR_US = 3_600_000_000
 GAP_US = 1_800_000_000  # 30-minute session gap
 
 
-def tumbling_hourly(df: DataFrame) -> DataFrame:
-    """1-hour tumbling count + exact sum of value by event_type."""
+def hourly_window(df: DataFrame, slide: str | None = None) -> DataFrame:
+    """1-hour window count + exact sum of value by event_type: tumbling,
+    or sliding every ``slide`` (with a slide of 15 minutes each event
+    lands in exactly 4 windows, since the slide divides the width)."""
     return (
-        df.groupBy(F.window("ts", "1 hour"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast(DEC)).cast("double").alias("sum_value"),
-        )
-        .select(
-            F.unix_micros(F.col("window.start")).alias("ws_us"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def sliding_1h_15m(df: DataFrame) -> DataFrame:
-    """1-hour window sliding every 15 min: each event lands in exactly 4
-    windows (slide divides the width), counted per event_type."""
-    return (
-        df.groupBy(F.window("ts", "1 hour", "15 minutes"), "event_type")
+        df.groupBy(F.window("ts", "1 hour", slide), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col("value").cast(DEC)).cast("double").alias("sum_value"),

@@ -1,0 +1,167 @@
+"""Boundary witnesses for the shared helpers behind the as-of joins, the
+gap fills, the kNN-graph census and the stream-stream left join: each
+query runs on a few hand-built rows placed exactly on its edges (a gap
+of exactly the tolerance, equidistant neighbours, leading and trailing
+gaps, a degree-1 node, a view exactly one hour before its purchase),
+which the generated fixtures never pin down row by row."""
+
+from __future__ import annotations
+
+from datetime import datetime, timedelta, timezone
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from covid_data_pipeline_spark.queries.joins import _ASOF_TOL_US
+from covid_data_pipeline_spark.registry import load_all
+
+T0 = datetime(2024, 1, 10, 12, tzinfo=timezone.utc)
+TOL = timedelta(microseconds=_ASOF_TOL_US)
+US = timedelta(microseconds=1)
+HOUR = timedelta(hours=1)
+
+
+def _write(sf_dir, table: str, schema: pa.Schema, rows: list[tuple]) -> None:
+    cols = list(zip(*rows)) if rows else [[] for _ in schema]
+    pq.write_table(pa.table(cols, schema=schema), sf_dir / f"{table}.parquet")
+
+
+def _events_dir(tmp_path, rows) -> str:
+    """An sf dir whose events table is ``rows`` of (event_id, ts,
+    user_id, event_type, value); a single file, as the stream reader
+    wants."""
+    schema = pa.schema([
+        ("event_id", pa.int64()), ("ts", pa.timestamp("us", tz="UTC")),
+        ("user_id", pa.int64()), ("event_type", pa.string()),
+        ("value", pa.float64()), ("props", pa.string()),
+    ])
+    _write(tmp_path, "events", schema, [(*r, "{}") for r in rows])
+    return str(tmp_path)
+
+
+def _run(spark, name, sf_dir, key):
+    return {r[key]: r.asDict() for r in load_all()[name].fn(spark, sf_dir).collect()}
+
+
+@pytest.fixture
+def asof_dir(tmp_path):
+    """One purchase per user: user 1's only view is exactly the tolerance
+    before it, user 2's one microsecond more, user 3 has a view equally
+    far before and after, user 4's only view is exactly the tolerance
+    after it."""
+    d = timedelta(minutes=10)
+    return _events_dir(tmp_path, [
+        (1, T0, 1, "view", 1.0), (2, T0 + TOL, 1, "purchase", 1.0),
+        (3, T0, 2, "view", 1.0), (4, T0 + TOL + US, 2, "purchase", 1.0),
+        (5, T0, 3, "view", 1.0), (6, T0 + d, 3, "purchase", 1.0),
+        (7, T0 + 2 * d, 3, "view", 1.0),
+        (8, T0, 4, "purchase", 1.0), (9, T0 + TOL, 4, "view", 1.0),
+    ])
+
+
+def test_asof_backward_matches_any_prior_view(spark, asof_dir):
+    got = _run(spark, "join_asof", asof_dir, "user_id")
+    assert got[1]["gap_us"] == _ASOF_TOL_US
+    assert got[2]["gap_us"] == _ASOF_TOL_US + 1
+    assert got[4]["prior_view_ts"] is None and got[4]["gap_us"] is None
+
+
+def test_asof_tolerance_keeps_exact_tolerance_and_drops_one_more(spark, asof_dir):
+    got = _run(spark, "join_asof_tolerance", asof_dir, "user_id")
+    assert (got[1]["gap_us"], got[1]["stale_dropped"]) == (_ASOF_TOL_US, 0)
+    assert got[1]["matched_view_ts"] is not None
+    assert got[2]["matched_view_ts"] is None and got[2]["gap_us"] is None
+    assert got[2]["stale_dropped"] == 1
+    # no prior view at all is not stale
+    assert got[4]["stale_dropped"] == 0
+
+
+def test_asof_nearest_tolerance_edges_and_tie_goes_backward(spark, asof_dir):
+    got = _run(spark, "join_asof_nearest", asof_dir, "user_id")
+    t0_us = int(T0.timestamp()) * 1_000_000
+    assert got[1]["matched_view_us"] == t0_us
+    assert got[2]["matched_view_us"] is None
+    assert got[3]["matched_view_us"] == t0_us  # the earlier of two equidistant
+    assert got[4]["matched_view_us"] == t0_us + _ASOF_TOL_US
+
+
+@pytest.fixture
+def gap_dir(tmp_path):
+    """User 1 has events on days 2 and 4 of a 5-day spine that user 2's
+    events on days 1 and 5 span."""
+    day = timedelta(days=1)
+    return _events_dir(tmp_path, [
+        (1, T0 + day, 1, "view", 2.0), (2, T0 + 3 * day, 1, "view", 4.0),
+        (3, T0, 2, "view", 9.0), (4, T0 + 4 * day, 2, "view", 9.0),
+    ])
+
+
+def _user1(spark, name, sf_dir):
+    rows = load_all()[name].fn(spark, sf_dir).filter("user_id = 1").orderBy("day")
+    return [r.asDict() for r in rows.collect()]
+
+
+def test_ffill_leaves_leading_gap_null(spark, gap_dir):
+    got = [r["v_filled"] for r in _user1(spark, "ts_gapfill_ffill", gap_dir)]
+    assert got == [None, 2.0, 2.0, 4.0, 4.0]
+
+
+def test_bfill_leaves_trailing_gap_null(spark, gap_dir):
+    got = [r["v_filled"] for r in _user1(spark, "ts_backfill_bfill", gap_dir)]
+    assert got == [2.0, 2.0, 4.0, 4.0, None]
+
+
+def test_interpolation_flags_neither_edge_gap(spark, gap_dir):
+    got = _user1(spark, "ts_interpolate_linear", gap_dir)
+    assert [r["v_interp"] for r in got] == [None, 2.0, 3.0, 4.0, None]
+    assert [r["is_interp"] for r in got] == [0, 0, 1, 0, 0]
+
+
+@pytest.fixture
+def graph_dir(tmp_path):
+    """Customer 1 buys from suppliers 1, 2 and 3 and customer 2 from 1
+    and 4: the kNN graph is the triangle 1-2-3 plus the pendant 1-4."""
+    baskets = [(1, 1, [1, 2, 3]), (2, 2, [1, 4])]  # (order, customer, suppliers)
+    orders = pa.schema([("o_orderkey", pa.int64()), ("o_custkey", pa.int64())])
+    _write(tmp_path, "orders", orders, [(o, c) for o, c, _ in baskets])
+    lineitem = pa.schema([("l_orderkey", pa.int64()), ("l_suppkey", pa.int64())])
+    _write(tmp_path, "lineitem", lineitem, [(o, s) for o, _, ss in baskets for s in ss])
+    return str(tmp_path)
+
+
+def test_clustering_coeff_pendant_is_null_and_clique_is_one(spark, graph_dir):
+    got = _run(spark, "graph_clustering_coeff", graph_dir, "node_id")
+    assert {v: (r["degree"], r["n_triangles"], r["local_coeff_micro"])
+            for v, r in got.items()} == {
+        1: (3, 1, 333333),
+        2: (2, 1, 1000000),
+        3: (2, 1, 1000000),
+        4: (1, 0, None),
+    }
+
+
+def test_knn_triangle_census_of_the_same_graph(spark, graph_dir):
+    (row,) = load_all()["graph_knn_triangles"].fn(spark, graph_dir).collect()
+    assert row.asDict() == {"n_nodes": 4, "n_edges": 4, "n_wedges": 5, "n_triangles": 1}
+
+
+def test_stream_left_join_window_edges_and_closable_bound(spark, tmp_path):
+    """User 1's view is exactly one hour before the purchase (matched),
+    user 2's one microsecond more (NULL view), user 3 has no view (NULL
+    view); user 4's purchase lies past max(ts) - 3 h, where the outer
+    verdict is not final yet, so it is not emitted.  User 5's late view
+    moves the view side's watermark past the unmatched purchases."""
+    sf_dir = _events_dir(tmp_path, [
+        (1, T0, 1, "view", 1.0), (2, T0 + HOUR, 1, "purchase", 1.0),
+        (3, T0, 2, "view", 1.0), (4, T0 + HOUR + US, 2, "purchase", 1.0),
+        (5, T0 + HOUR, 3, "purchase", 1.0),
+        (6, T0 + 7 * HOUR, 4, "purchase", 1.0),
+        (7, T0 + 9 * HOUR, 5, "view", 1.0),
+    ])
+    got = _run(spark, "stream_stream_left_join", sf_dir, "user_id")
+    assert {u: (r["view_id"], r["gap_us"]) for u, r in got.items()} == {
+        1: (1, 3_600_000_000),
+        2: (None, None),
+        3: (None, None),
+    }

@@ -162,3 +162,48 @@ def test_real_conf_dir_starts_without_archive_and_is_honoured(tmp_path):
     assert got == {"cds": [], "marker": "honoured"}
     assert "starting without a class archive" in run.stderr
     assert _archives(home) == []
+
+
+# imports the package through sys.path alone, then runs a package
+# function and a module only the inherited $PYTHONPATH holds in Python
+# workers, and records the workers' PYTHONPATH
+WORKER_PROBE = """
+import json, os, sys
+sys.path.insert(0, sys.argv[2])
+from covid_data_pipeline_spark.queries._helpers import sql_dsum
+from covid_data_pipeline_spark.session import get_spark
+s = get_spark("worker-probe", cpus=1)
+rdd = s.sparkContext.parallelize([1.5], 1)
+got = {
+    "dsum": rdd.map(sql_dsum).collect(),
+    "inherited": rdd.map(lambda _: __import__("inherited_mod").VALUE).collect(),
+    "path": rdd.map(lambda _: os.environ["PYTHONPATH"]).collect()[0].split(os.pathsep),
+}
+with open(sys.argv[1], "w") as f:
+    json.dump(got, f)
+s.stop()
+"""
+
+
+def test_workers_import_the_package_found_only_through_sys_path(built, tmp_path):
+    """A Spark driver run from outside the checkout, with the package on
+    sys.path but not on $PYTHONPATH, still has Python workers that
+    import it; the inherited $PYTHONPATH stays on the workers' path."""
+    from covid_data_pipeline_spark.queries._helpers import sql_dsum
+
+    inherited = tmp_path / "inherited"
+    inherited.mkdir()
+    (inherited / "inherited_mod.py").write_text("VALUE = 7\n")
+    out = tmp_path / "workers.json"
+    env = dict(os.environ, HOME=str(built), SPARK_GRAFT_DRIVER_MEM=MEM, PYTHONPATH=str(inherited))
+    env.pop("PYSPARK_SUBMIT_ARGS", None)
+    run = subprocess.run(
+        [sys.executable, "-c", WORKER_PROBE, str(out), REPO],
+        env=env, cwd=tmp_path, capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    with open(out) as f:
+        got = json.load(f)
+    assert got["dsum"] == [sql_dsum(1.5)]
+    assert got["inherited"] == [7]
+    assert REPO in got["path"] and str(inherited) in got["path"], got["path"]

@@ -78,18 +78,18 @@ def _tumbling_5m_counts(df):
 
 
 def test_stream_tumbling_equals_batch(spark):
-    batch = TR.tumbling_hourly(load(spark, SF_SMOKE, "events"))
+    batch = TR.hourly_window(load(spark, SF_SMOKE, "events"))
     stream = run_available_now(
-        TR.tumbling_hourly(read_events_stream(spark, SF_SMOKE))
+        TR.hourly_window(read_events_stream(spark, SF_SMOKE))
     )
     cols = ["ws_us", "event_type", "n_events", "sum_value"]
     assert _as_sorted_rows(stream, cols) == _as_sorted_rows(batch, cols)
 
 
 def test_stream_sliding_equals_batch(spark):
-    batch = TR.sliding_1h_15m(load(spark, SF_SMOKE, "events"))
+    batch = TR.hourly_window(load(spark, SF_SMOKE, "events"), "15 minutes")
     stream = run_available_now(
-        TR.sliding_1h_15m(read_events_stream(spark, SF_SMOKE))
+        TR.hourly_window(read_events_stream(spark, SF_SMOKE), "15 minutes")
     )
     cols = ["ws_us", "event_type", "n_events", "sum_value"]
     assert _as_sorted_rows(stream, cols) == _as_sorted_rows(batch, cols)
@@ -212,7 +212,7 @@ def test_foreach_sink_matches_batch(spark):
     from covid_data_pipeline_spark.registry import load_all
 
     sunk = load_all()["stream_foreach_sink"].fn(spark, SF_SMOKE)
-    batch = TR.tumbling_hourly(load(spark, SF_SMOKE, "events"))
+    batch = TR.hourly_window(load(spark, SF_SMOKE, "events"))
     cols = ["ws_us", "event_type", "n_events", "sum_value"]
     assert _as_sorted_rows(sunk, cols) == _as_sorted_rows(batch, cols)
 
@@ -1046,7 +1046,7 @@ def test_parquet_sink_drain_matches_memory_sink(spark):
     # the file sink's contract: append mode only
     with pytest.raises(ValueError, match="append"):
         run_available_now(
-            TR.tumbling_hourly(read_events_stream(spark, SF_SMOKE)),
+            TR.hourly_window(read_events_stream(spark, SF_SMOKE)),
             output_mode="complete",
             sink="parquet",
         )
@@ -1082,7 +1082,7 @@ def test_drain_deletes_only_the_checkpoint_it_created(
     on tmpfs; the drain deletes it after termination when it placed it
     in scratch, and keeps one a resumed run passed in."""
     monkeypatch.setenv("SPARK_GRAFT_STREAM_SCRATCH", str(tmp_path))
-    agg = TR.tumbling_hourly(read_events_stream(spark, SF_SMOKE))
+    agg = TR.hourly_window(read_events_stream(spark, SF_SMOKE))
     assert run_available_now(agg).count() > 0
     assert not list(tmp_path.glob("cdp_ckpt_*"))
     ckpt = tmp_path / "resumed"
