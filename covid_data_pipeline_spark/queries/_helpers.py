@@ -1,5 +1,17 @@
 """Cross-engine determinism helpers shared by all query modules.
 
+Two rounding kernels live here, and they round ties differently:
+
+- :func:`round_long` quantizes an OUTPUT value to integer units — every
+  ``*_micro``/``*_milli``/``*_cents`` column a query returns.  It is the
+  oracle's ``CAST(floor(v + 0.5) AS BIGINT)``: ties go toward +inf.
+- :func:`_micro` is the per-row step of the :func:`dsum`/:func:`davg`
+  kernel below: ``CAST(x AS DECIMAL(28,6))``'s HALF_UP, ties away from
+  zero.  Only reductions use it.
+
+:func:`_daily_counts` and :func:`_day_idx` hold the corpus's one daily
+event-count series and its day index.
+
 Double summation is order-dependent, and Spark's partial aggregation
 order differs from DuckDB's — a raw ``SUM(double)`` can drift in the
 last ulps and fail the driver's value-hash.  Fix: sum via exact
@@ -73,7 +85,7 @@ still inside whole-stage codegen with map-side partial aggregation.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # 38 total digits minus 6 fractional leaves 1e31 of headroom — no overflow
@@ -134,6 +146,30 @@ def _micro_sum(c: Column) -> Column:
     # then Decimal.toDouble == BigDecimal.doubleValue — the same final
     # conversion the old decimal(38,6) sum's cast performed.
     return (tot / F.lit(1000000)).cast("double")
+
+
+def round_long(e: Column) -> Column:
+    """``floor(e + 0.5)`` as a long — the oracle's
+    ``CAST(floor(v + 0.5) AS BIGINT)``, so both engines quantize an
+    output to the same integer.  Ties go toward +inf (2.5 -> 3,
+    -2.5 -> -2), unlike :func:`_micro`'s HALF_UP (-2.5 -> -3).  The
+    caller scales ``e`` itself (``1e6 * a / b`` and ``1e6 * (a / b)`` are
+    different doubles); NULL stays NULL."""
+    return F.floor(e + F.lit(0.5)).cast("long")
+
+
+def _day_idx() -> Column:
+    """The day number of ``ts`` since 2024-01-01 — the oracle's
+    ``datediff('day', DATE '2024-01-01', CAST(ts AS DATE))``."""
+    return F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
+
+
+def _daily_counts(e: DataFrame) -> DataFrame:
+    """``(event_type, t, x)``: each event type's event count ``x`` per day,
+    ``t`` the BIGINT day number since 2024-01-01."""
+    return e.groupBy("event_type", _day_idx().cast("long").alias("t")).agg(
+        F.count(F.lit(1)).alias("x")
+    )
 
 
 def dsum(col: Column | str) -> Column:

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import query
-from ._helpers import DEC, davg, dsum, sql_davg, sql_dsum
+from ._helpers import DEC, davg, dsum, round_long, sql_davg, sql_dsum
 
 # --------------------------------------------------------------------------
 # agg_groupby — the flagship (TPC-H-Q1-shaped pricing summary).
@@ -1260,7 +1260,7 @@ def agg_mad_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg_approx_percentile.  At 100 TB run this per bounded group (event
     types, days), never per user."""
     ev = load(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    cents = round_long(F.col("value") * 100)
     c = ev.select("event_type", cents.alias("cents"))
 
     def med2(df: DataFrame, col: str, keep: list[str]) -> DataFrame:
@@ -1441,9 +1441,7 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     cents = li.select(
         F.col("l_returnflag").alias("flag"),
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("price_c"),
+        round_long(F.col("l_extendedprice") * 100).alias("price_c"),
         F.col("l_quantity").cast("long").alias("w"),
     )
     wrun = (
@@ -1515,13 +1513,30 @@ def agg_entropy_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.max("n").cast("long").alias("n_events"),
             F.max("n_types").cast("long").alias("n_types"),
-            F.floor(
-                F.lit(1000000.0) * F.sum(term).cast("double") + F.lit(0.5)
-            )
-            .cast("long")
+            round_long(F.lit(1000000.0) * F.sum(term).cast("double"))
             .alias("entropy_micro"),
         )
     )
+
+
+def _central_moments() -> tuple[Column, list[Column]]:
+    """The mean ``mu`` and the population central moments ``m2, m3, m4``
+    (aliased) over exact integer power sums ``n, s1..s4``, by the
+    closed-form raw->central identities in one IEEE chain per engine."""
+    mu = F.col("s1").cast("double") / F.col("n")
+    r2 = F.col("s2").cast("double") / F.col("n")
+    r3 = F.col("s3").cast("double") / F.col("n")
+    r4 = F.col("s4").cast("double") / F.col("n")
+    return mu, [
+        (r2 - mu * mu).alias("m2"),
+        (r3 - F.lit(3) * mu * r2 + F.lit(2) * mu * mu * mu).alias("m3"),
+        (
+            r4
+            - F.lit(4) * mu * r3
+            + F.lit(6) * mu * mu * r2
+            - F.lit(3) * mu * mu * mu * mu
+        ).alias("m4"),
+    ]
 
 
 @query(
@@ -1595,35 +1610,19 @@ def agg_moments_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("q") * F.col("q") * F.col("q")).alias("s3"),
         F.sum(F.col("q") * F.col("q") * F.col("q") * F.col("q")).alias("s4"),
     )
-    mu = F.col("s1").cast("double") / F.col("n")
-    r2 = F.col("s2").cast("double") / F.col("n")
-    r3 = F.col("s3").cast("double") / F.col("n")
-    r4 = F.col("s4").cast("double") / F.col("n")
-    mom = sums.select(
-        "l_returnflag",
-        "n",
-        mu.alias("mu"),
-        (r2 - mu * mu).alias("m2"),
-        (r3 - F.lit(3) * mu * r2 + F.lit(2) * mu * mu * mu).alias("m3"),
-        (
-            r4
-            - F.lit(4) * mu * r3
-            + F.lit(6) * mu * mu * r2
-            - F.lit(3) * mu * mu * mu * mu
-        ).alias("m4"),
-    )
-    micro = lambda c: F.floor(F.lit(1000000.0) * c + F.lit(0.5)).cast("long")
+    mu, moments = _central_moments()
+    mom = sums.select("l_returnflag", "n", mu.alias("mu"), *moments)
     return mom.filter(F.col("m2") > 0).select(
         "l_returnflag",
         "n",
-        micro(F.col("mu")).alias("mean_micro"),
-        micro(
-            F.col("m3")
-            / (F.sqrt("m2") * F.sqrt("m2") * F.sqrt("m2"))
+        round_long(F.lit(1000000.0) * F.col("mu")).alias("mean_micro"),
+        round_long(
+            F.lit(1000000.0)
+            * (F.col("m3") / (F.sqrt("m2") * F.sqrt("m2") * F.sqrt("m2")))
         ).alias("skew_micro"),
-        micro(F.col("m4") / (F.col("m2") * F.col("m2")) - F.lit(3)).alias(
-            "kurt_micro"
-        ),
+        round_long(
+            F.lit(1000000.0) * (F.col("m4") / (F.col("m2") * F.col("m2")) - F.lit(3))
+        ).alias("kurt_micro"),
     )
 
 
@@ -1781,9 +1780,7 @@ def agg_percentile_cont_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
     cents = o.select(
         F.col("o_orderpriority").alias("prio"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("c"),
+        round_long(F.col("o_totalprice") * 100).alias("c"),
     )
     w = Window.partitionBy("prio").orderBy("c")
     ranked = cents.withColumn("rn", F.row_number().over(w))
@@ -1819,9 +1816,7 @@ def agg_percentile_cont_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("t.frac").alias("frac"),
         )
         .agg(
-            F.floor(F.lit(1000000.0) * v / F.lit(100.0) + F.lit(0.5))
-            .cast("long")
-            .alias("pctl_micro")
+            round_long(F.lit(1000000.0) * v / F.lit(100.0)).alias("pctl_micro")
         )
         .select(
             "prio",
@@ -1887,15 +1882,16 @@ def agg_benford_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
     obs = d.groupBy("d").agg(F.count(F.lit(1)).cast("long").alias("n"))
     tot = obs.agg(F.sum("n").cast("long").alias("t"))
     expected = F.log10(F.lit(1.0) + F.lit(1.0) / F.col("d"))
-    micro = lambda c: F.floor(F.lit(1000000.0) * c + F.lit(0.5)).cast("long")
     return obs.crossJoin(F.broadcast(tot)).select(
         F.col("d").alias("digit"),
         "n",
-        micro(expected).alias("expected_micro"),
-        micro(F.col("n") / F.col("t")).alias("observed_micro"),
-        micro(F.col("n").cast("double") / F.col("t") - expected).alias(
-            "deviation_micro"
+        round_long(F.lit(1000000.0) * expected).alias("expected_micro"),
+        round_long(F.lit(1000000.0) * (F.col("n") / F.col("t"))).alias(
+            "observed_micro"
         ),
+        round_long(
+            F.lit(1000000.0) * (F.col("n").cast("double") / F.col("t") - expected)
+        ).alias("deviation_micro"),
     )
 
 
@@ -2019,9 +2015,7 @@ def agg_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     cents = li.select(
         "l_returnflag",
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("c"),
+        round_long(F.col("l_extendedprice") * 100).alias("c"),
     )
     w = Window.partitionBy("l_returnflag").orderBy("c")
     wc = Window.partitionBy("l_returnflag")
@@ -2038,11 +2032,7 @@ def agg_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kept.groupBy("l_returnflag").agg(
         F.max("n").cast("long").alias("n"),
         F.count(F.lit(1)).cast("long").alias("n_kept"),
-        F.floor(
-            F.lit(1000000.0) * F.sum("c") / F.count(F.lit(1)) / F.lit(100.0)
-            + F.lit(0.5)
-        )
-        .cast("long")
+        round_long(F.lit(1000000.0) * F.sum("c") / F.count(F.lit(1)) / F.lit(100.0))
         .alias("trimmed_mean_micro"),
     )
 
@@ -2089,18 +2079,13 @@ def agg_geo_harmonic_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     (here min ~900: ~8e9 rows) — shard partials by month past that."""
     li = load(spark, sf_dir, "lineitem")
     x = F.col("l_extendedprice")
-    micro = lambda col: F.floor(F.lit(1000000.0) * col + F.lit(0.5)).cast(
-        "long"
-    )
     sums = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(F.floor(x * 100 + F.lit(0.5)).cast("long"))
+        F.sum(round_long(x * 100)).cast("long").alias("cents"),
+        F.sum(round_long(F.lit(1000000.0) * F.log(x)))
         .cast("long")
-        .alias("cents"),
-        F.sum(micro(F.log(x))).cast("long").alias("sum_ln_micro"),
-        F.sum(
-            F.floor(F.lit(1000000000000.0) / x + F.lit(0.5)).cast("long")
-        )
+        .alias("sum_ln_micro"),
+        F.sum(round_long(F.lit(1000000000000.0) / x))
         .cast("long")
         .alias("sum_recip_pico"),
     )
@@ -2108,26 +2093,19 @@ def agg_geo_harmonic_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sums.select(
         "l_returnflag",
         "n",
-        F.floor(
-            F.lit(1000000.0)
-            * F.col("cents").cast("double")
-            / F.lit(100.0)
-            / n
-            + F.lit(0.5)
-        )
-        .cast("long")
+        round_long(F.lit(1000000.0) * F.col("cents").cast("double") / F.lit(100.0) / n)
         .alias("arith_micro"),
-        micro(
-            F.exp(
-                F.col("sum_ln_micro").cast("double")
-                / F.lit(1000000.0)
-                / n
-            )
+        round_long(
+            F.lit(1000000.0)
+            * F.exp(F.col("sum_ln_micro").cast("double") / F.lit(1000000.0) / n)
         ).alias("geo_micro"),
-        micro(
-            n.cast("double")
-            * F.lit(1000000000000.0)
-            / F.col("sum_recip_pico").cast("double")
+        round_long(
+            F.lit(1000000.0)
+            * (
+                n.cast("double")
+                * F.lit(1000000000000.0)
+                / F.col("sum_recip_pico").cast("double")
+            )
         ).alias("harm_micro"),
     )
 
@@ -2202,13 +2180,10 @@ def agg_circular_mean_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.second("ts")
     )
     theta = s * F.lit(2.0) * F.lit(3.141592653589793) / F.lit(86400.0)
-    micro = lambda col: F.floor(F.lit(1000000.0) * col + F.lit(0.5)).cast(
-        "long"
-    )
     sums = e.select(
         "event_type",
-        micro(F.sin(theta)).alias("sin_micro"),
-        micro(F.cos(theta)).alias("cos_micro"),
+        round_long(F.lit(1000000.0) * F.sin(theta)).alias("sin_micro"),
+        round_long(F.lit(1000000.0) * F.cos(theta)).alias("cos_micro"),
     ).groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("sin_micro").cast("long").alias("ssin"),
@@ -2223,17 +2198,13 @@ def agg_circular_mean_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sums.select(
         "event_type",
         "n",
-        F.floor(F.sqrt(ms * ms + mc * mc) + F.lit(0.5))
-        .cast("long")
-        .alias("resultant_micro"),
-        F.floor(
+        round_long(F.sqrt(ms * ms + mc * mc)).alias("resultant_micro"),
+        round_long(
             F.lit(1000000.0)
             * a_wrapped
             * F.lit(24.0)
             / (F.lit(2.0) * F.lit(3.141592653589793))
-            + F.lit(0.5)
         )
-        .cast("long")
         .alias("mean_hour_micro"),
     )
 
@@ -2364,7 +2335,7 @@ def agg_ratio_metric_delta_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combined grouped pass; the six moments are
     additive partials, so segment CIs merge without re-scanning."""
     li = load(spark, sf_dir, "lineitem")
-    xc = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
+    xc = round_long(F.col("l_extendedprice") * 100)
     q = F.col("l_quantity").cast("long")
     base = li.select("l_returnflag", xc.alias("xc"), q.alias("q"))
     m = base.groupBy("l_returnflag").agg(
@@ -2402,18 +2373,19 @@ def agg_ratio_metric_delta_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     var_r = (vx + r * r * vy - F.lit(2.0) * r * cxy) / (ybar * ybar) / F.col(
         "n"
     )
-    micro = lambda c: F.floor(F.lit(1000000.0) * c + F.lit(0.5)).cast("long")
     return stats.select(
         "l_returnflag",
         "n",
-        micro(r).alias("ratio_micro"),
-        F.when(var_r > 0, micro(F.sqrt(var_r))).alias("se_micro"),
-        F.when(var_r > 0, micro(r - F.lit(1.96) * F.sqrt(var_r))).alias(
-            "ci_lo_micro"
+        round_long(F.lit(1000000.0) * r).alias("ratio_micro"),
+        F.when(var_r > 0, round_long(F.lit(1000000.0) * F.sqrt(var_r))).alias(
+            "se_micro"
         ),
-        F.when(var_r > 0, micro(r + F.lit(1.96) * F.sqrt(var_r))).alias(
-            "ci_hi_micro"
-        ),
+        F.when(
+            var_r > 0, round_long(F.lit(1000000.0) * (r - F.lit(1.96) * F.sqrt(var_r)))
+        ).alias("ci_lo_micro"),
+        F.when(
+            var_r > 0, round_long(F.lit(1000000.0) * (r + F.lit(1.96) * F.sqrt(var_r)))
+        ).alias("ci_hi_micro"),
     )
 
 
@@ -2422,7 +2394,7 @@ def _ranked_price_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact BIGINT cents, its 1-based rank ``rn`` in ascending cents within
     its return flag, and the flag's line count ``n``."""
     li = load(spark, sf_dir, "lineitem")
-    cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
+    cents = round_long(F.col("l_extendedprice") * 100)
     w = Window.partitionBy("l_returnflag").orderBy("cents")
     wp = Window.partitionBy("l_returnflag")
     return li.select("l_returnflag", cents.alias("cents")).select(
@@ -2520,11 +2492,7 @@ def agg_tukey_fences_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("q3").alias("q3_cents"),
         (F.col("q3") - F.col("q1")).cast("long").alias("iqr_cents"),
         "n_outliers",
-        F.floor(
-            F.lit(1000000.0) * F.col("n_outliers").cast("double") / F.col("n")
-            + F.lit(0.5)
-        )
-        .cast("long")
+        round_long(F.lit(1000000.0) * F.col("n_outliers").cast("double") / F.col("n"))
         .alias("outlier_share_micro"),
     )
 
@@ -2587,13 +2555,11 @@ def agg_cvar_expected_shortfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("cents") >= F.col("var95_cents"))
     return tail.groupBy("l_returnflag", "n", "var95_cents").agg(
         F.count(F.lit(1)).cast("long").alias("n_tail"),
-        F.floor(
+        round_long(
             F.lit(1000000.0)
             * F.sum("cents").cast("double")
             / F.lit(100.0)
             / F.count(F.lit(1))
-            + F.lit(0.5)
         )
-        .cast("long")
         .alias("cvar95_micro"),
     )

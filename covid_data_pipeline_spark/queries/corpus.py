@@ -18,7 +18,17 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import query
-from ._helpers import KNUTH_MOD, KNUTH_MULT, davg, sql_davg
+from .aggregates import _central_moments
+from .pipeline import _side_moments
+from ._helpers import (
+    KNUTH_MOD,
+    KNUTH_MULT,
+    _daily_counts,
+    _day_idx,
+    davg,
+    round_long,
+    sql_davg,
+)
 
 _LANG_PCT = {"en": 37, "es": 61, "zh": 23, "de": 50, "fr": 80}
 
@@ -1097,13 +1107,11 @@ def ts_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             "n_days",
             F.col("u.k").alias("lag"),
-            F.floor(
+            round_long(
                 F.lit(1000000.0)
                 * F.col("u.num").cast("double")
                 / F.col("den").cast("double")
-                + F.lit(0.5)
             )
-            .cast("long")
             .alias("acf_micro"),
         )
     )
@@ -1243,18 +1251,16 @@ def ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.aggregate(rest, acc0, _step).alias("f"),
     )
 
-    def micro(expr):
-        return F.floor(F.lit(1000000.0) * expr + F.lit(0.5)).cast("long")
-
     f = F.col("f")
     return folded.select(
         "event_type",
         "n_days",
-        micro(F.element_at(f, 1)).alias("level_micro"),
-        micro(F.element_at(f, 2)).alias("trend_micro"),
-        micro(F.element_at(f, 3)).alias("season_next_micro"),
-        micro(
-            F.element_at(f, 1) + F.element_at(f, 2) + F.element_at(f, 3)
+        round_long(F.lit(1000000.0) * F.element_at(f, 1)).alias("level_micro"),
+        round_long(F.lit(1000000.0) * F.element_at(f, 2)).alias("trend_micro"),
+        round_long(F.lit(1000000.0) * F.element_at(f, 3)).alias("season_next_micro"),
+        round_long(
+            F.lit(1000000.0)
+            * (F.element_at(f, 1) + F.element_at(f, 2) + F.element_at(f, 3))
         ).alias("forecast1_micro"),
     )
 
@@ -1518,9 +1524,7 @@ def ts_partial_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             "n_days",
             F.col("u.k").alias("lag"),
-            F.floor(F.lit(1000000.0) * F.col("u.p") + F.lit(0.5))
-            .cast("long")
-            .alias("pacf_micro"),
+            round_long(F.lit(1000000.0) * F.col("u.p")).alias("pacf_micro"),
         )
     )
 
@@ -1590,12 +1594,11 @@ def win_rolling_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("t") * F.col("y")).over(w).alias("sty"),
         F.sum(F.col("t") * F.col("t")).over(w).alias("stt"),
     )
-    slope = F.floor(
+    slope = round_long(
         F.lit(1000000.0)
         * (F.col("n") * F.col("sty") - F.col("st") * F.col("sy")).cast("double")
         / (F.col("n") * F.col("stt") - F.col("st") * F.col("st"))
-        + F.lit(0.5)
-    ).cast("long")
+    )
     return (
         sums.filter(F.col("n") == 7)
         .select(
@@ -1661,7 +1664,7 @@ def ts_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "event_id",
         F.unix_micros("ts").alias("t"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias("v_c"),
+        round_long(F.col("value") * 100).alias("v_c"),
     ).withColumn("t_next", F.lead("t").over(w))
     agg = seq.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -1678,12 +1681,10 @@ def ts_twa(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
         F.col("num").cast("long").alias("weighted_centi_us"),
         F.col("span_us").cast("long").alias("span_us"),
-        F.floor(
+        round_long(
             F.lit(1000000.0) * F.col("num").cast("double") / F.col("span_us")
             / 100
-            + F.lit(0.5)
         )
-        .cast("long")
         .alias("twa_micro"),
     )
 
@@ -1753,9 +1754,7 @@ def ts_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.filter(F.col("event_type") == "purchase")
         .groupBy(
             "user_id",
-            F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
-            .cast("long")
-            .alias("di"),
+            _day_idx().cast("long").alias("di"),
         )
         .agg(F.count(F.lit(1)).alias("z"))
     )
@@ -1787,13 +1786,14 @@ def ts_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     folded = arrs.select("user_id", "n_demands", s.alias("s"))
-    micro = lambda c: F.floor(F.lit(1000000.0) * c + F.lit(0.5)).cast("long")
     return folded.select(
         "user_id",
         "n_demands",
-        micro(F.col("s")[0]).alias("z_hat_micro"),
-        micro(F.col("s")[1]).alias("p_hat_micro"),
-        micro(F.col("s")[0] / F.col("s")[1]).alias("forecast_micro"),
+        round_long(F.lit(1000000.0) * F.col("s")[0]).alias("z_hat_micro"),
+        round_long(F.lit(1000000.0) * F.col("s")[1]).alias("p_hat_micro"),
+        round_long(F.lit(1000000.0) * (F.col("s")[0] / F.col("s")[1])).alias(
+            "forecast_micro"
+        ),
     )
 
 
@@ -1936,9 +1936,7 @@ def ts_lttb_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # not the full upstream plan) — r11, the graph-family idiom.
     daily = e.groupBy(
         "event_type",
-        F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
-        .cast("long")
-        .alias("t"),
+        _day_idx().cast("long").alias("t"),
     ).agg(F.count(F.lit(1)).alias("v")).localCheckpoint(eager=False)
     bounds = daily.groupBy("event_type").agg(
         F.min("t").alias("t_lo"),
@@ -2247,13 +2245,7 @@ def ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     per key for n<=366 — the LTTB/ACF bounded-domain argument), and at
     100 TB with per-entity keys the same shape shuffles once on the
     equi-key and never crosses keys."""
-    e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type",
-        F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
-        .cast("long")
-        .alias("t"),
-    ).agg(F.count(F.lit(1)).alias("x"))
+    daily = _daily_counts(load(spark, sf_dir, "events"))
     a = daily.alias("a")
     b = daily.alias("b")
     pairs = (
@@ -2292,16 +2284,19 @@ def ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact BIGINT, mirroring DuckDB's integer n*(n-1)/2
     d0 = F.expr("n * (n - 1) div 2")
     sd = F.col("s").cast("double")
-    micro = lambda c: F.floor(F.lit(1000000.0) * c + F.lit(0.5)).cast("long")
     tau = F.when(
         (n >= 2) & (d0 - F.col("tv") > 0),
-        micro(sd / F.sqrt(((d0 - F.col("tv")) * d0).cast("double"))),
+        round_long(
+            F.lit(1000000.0) * (sd / F.sqrt(((d0 - F.col("tv")) * d0).cast("double")))
+        ),
     )
     var18 = n * (n - 1) * (2 * n + 5) - F.col("tvar")
     cc = F.when(F.col("s") > 0, 1.0).when(F.col("s") < 0, -1.0).otherwise(0.0)
     z = F.when(
         var18 > 0,
-        micro((sd - cc) / F.sqrt(var18.cast("double") / F.lit(18.0))),
+        round_long(
+            F.lit(1000000.0) * ((sd - cc) / F.sqrt(var18.cast("double") / F.lit(18.0)))
+        ),
     )
     return j.select(
         "event_type",
@@ -2373,17 +2368,6 @@ def ts_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _daily_counts(e: DataFrame) -> DataFrame:
-    """``(event_type, t, x)``: each event type's event count ``x`` per day,
-    ``t`` the BIGINT day number since 2024-01-01."""
-    return e.groupBy(
-        "event_type",
-        F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
-        .cast("long")
-        .alias("t"),
-    ).agg(F.count(F.lit(1)).alias("x"))
-
-
 def _pairwise_median(
     daily: DataFrame, pair_pred: Column, value: Column, out: str, halve: bool = False
 ) -> DataFrame:
@@ -2415,7 +2399,7 @@ def _pairwise_median(
         micro = micro / F.lit(2.0)
     return mid.groupBy("event_type").agg(
         F.max("np").cast("long").alias("n_pairs"),
-        F.floor(micro + F.lit(0.5)).cast("long").alias(out),
+        round_long(micro).alias(out),
     )
 
 
@@ -2509,10 +2493,7 @@ def ts_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
         tsum = tsum + term(k)
     q = F.when(
         F.col("nd") > 7,
-        F.floor(
-            F.lit(1000000.0) * F.col("nd") * (F.col("nd") + 2) * tsum
-            + F.lit(0.5)
-        ).cast("long"),
+        round_long(F.lit(1000000.0) * F.col("nd") * (F.col("nd") + 2) * tsum),
     )
     return agg.select(
         "event_type",
@@ -2656,9 +2637,7 @@ def analytics_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         "prev_type",
         "next_type",
         "n",
-        F.floor(F.lit(1000000.0) * F.col("n") / F.col("row_n") + F.lit(0.5))
-        .cast("long")
-        .alias("p_micro"),
+        round_long(F.lit(1000000.0) * F.col("n") / F.col("row_n")).alias("p_micro"),
     )
 
 
@@ -2825,10 +2804,7 @@ def ts_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     mu = F.lit(1.0) + F.lit(2.0) * n1 * n2 / nn
     z = F.when(
         (n1 > 0) & (n2 > 0) & (var > 0),
-        F.floor(
-            F.lit(1000000.0) * (r.cast("double") - mu) / F.sqrt(var)
-            + F.lit(0.5)
-        ).cast("long"),
+        round_long(F.lit(1000000.0) * (r.cast("double") - mu) / F.sqrt(var)),
     )
     return agg.select(
         "event_type",
@@ -2901,11 +2877,7 @@ def analytics_chisq_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "dow",
         "o",
-        F.floor(
-            F.lit(1000000.0) * F.col("r") * F.col("c") / F.col("n")
-            + F.lit(0.5)
-        )
-        .cast("long")
+        round_long(F.lit(1000000.0) * F.col("r") * F.col("c") / F.col("n"))
         .alias("e_micro"),
         _chisq_contrib_micro().alias("chisq_contrib_micro"),
     )
@@ -2917,12 +2889,7 @@ def _dow_cells(e: DataFrame) -> DataFrame:
     % 7, integer arithmetic identical on both engines."""
     return e.groupBy(
         "event_type",
-        (
-            F.datediff(
-                F.col("ts").cast("date"), F.lit("2024-01-01").cast("date")
-            ).cast("long")
-            % 7
-        ).alias("dow"),
+        (_day_idx().cast("long") % 7).alias("dow"),
     ).agg(F.count(F.lit(1)).cast("long").alias("o"))
 
 
@@ -2944,12 +2911,11 @@ def _chisq_contrib_micro() -> Column:
     """A cell's chi-square contribution (o*N - r*c)^2 / (N*r*c),
     micro-quantized to BIGINT: exact integers until the one division."""
     num = F.col("o") * F.col("n") - F.col("r") * F.col("c")
-    return F.floor(
+    return round_long(
         F.lit(1000000.0)
         * (num.cast("double") * num.cast("double"))
         / (F.col("n").cast("double") * F.col("r") * F.col("c"))
-        + F.lit(0.5)
-    ).cast("long")
+    )
 
 
 @query(
@@ -3037,13 +3003,7 @@ def agg_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one corpus-sized daily aggregate; the rank window partitions
     per type over calendar-bounded rows; tie terms re-aggregate the
     same tiny table."""
-    e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type",
-        F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
-        .cast("long")
-        .alias("t"),
-    ).agg(F.count(F.lit(1)).alias("x"))
+    daily = _daily_counts(load(spark, sf_dir, "events"))
     grp = daily.select(
         "event_type",
         "x",
@@ -3095,15 +3055,14 @@ def agg_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     z = F.when(
         (n1 > 0) & (n2 > 0) & (var > 0),
-        F.floor(
+        round_long(
             F.lit(1000000.0)
             * (
                 u1x2.cast("double") / F.lit(2.0)
                 - (n1 * n2).cast("double") / F.lit(2.0)
             )
             / F.sqrt(var)
-            + F.lit(0.5)
-        ).cast("long"),
+        ),
     )
     return j.select(
         "event_type",
@@ -3193,16 +3152,12 @@ def analytics_interarrival_burstiness(spark: SparkSession, sf_dir: str) -> DataF
     )
     b = F.when(
         sigma + mu > 0,
-        F.floor(
-            F.lit(1000000.0) * (sigma - mu) / (sigma + mu) + F.lit(0.5)
-        ).cast("long"),
+        round_long(F.lit(1000000.0) * (sigma - mu) / (sigma + mu)),
     )
     return agg.select(
         "event_type",
         n.alias("n_gaps"),
-        F.floor(F.lit(1000000.0) * s1 / n + F.lit(0.5))
-        .cast("long")
-        .alias("mean_ms_micro"),
+        round_long(F.lit(1000000.0) * s1 / n).alias("mean_ms_micro"),
         b.alias("burstiness_micro"),
     )
 
@@ -3315,13 +3270,11 @@ def analytics_dau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_days",
         "dau_sum",
         "mau",
-        F.floor(
+        round_long(
             F.lit(1000000.0)
             * F.col("dau_sum")
             / (F.col("n_days") * F.col("mau"))
-            + F.lit(0.5)
         )
-        .cast("long")
         .alias("stickiness_micro"),
     )
 
@@ -3390,13 +3343,7 @@ def agg_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     over calendar-bounded rows (<= 366 per type-year); the cumulative
     window partitions per type.  At 100 TB the daily table is still
     tiny — the pattern holds unchanged."""
-    e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type",
-        F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
-        .cast("long")
-        .alias("t"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("x"))
+    daily = _daily_counts(load(spark, sf_dir, "events"))
     grp = daily.select(
         "event_type",
         "x",
@@ -3422,20 +3369,22 @@ def agg_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     n1d = F.col("n1").cast("double")
     d = F.col("d_num").cast("double") / (n1d * F.col("n2"))
     ok = (F.col("n1") > 0) & (F.col("n2") > 0)
-    micro = lambda c: F.floor(F.lit(1000000.0) * c + F.lit(0.5)).cast("long")
     return agg.select(
         "event_type",
         F.col("n1").alias("n_weekend"),
         F.col("n2").alias("n_weekday"),
         "d_num",
-        F.when(ok, micro(d)).alias("d_micro"),
+        F.when(ok, round_long(F.lit(1000000.0) * d)).alias("d_micro"),
         F.when(
             ok,
-            micro(
-                d
-                * F.sqrt(
-                    (F.col("n1") * F.col("n2")).cast("double")
-                    / (F.col("n1") + F.col("n2"))
+            round_long(
+                F.lit(1000000.0)
+                * (
+                    d
+                    * F.sqrt(
+                        (F.col("n1") * F.col("n2")).cast("double")
+                        / (F.col("n1") + F.col("n2"))
+                    )
                 )
             ),
         ).alias("lambda_micro"),
@@ -3502,13 +3451,7 @@ def agg_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily rows; the moment sums are additive partials — per-shard
     (n, sx, st, sxx, stt, sxt) tuples ADD, so rollups to coarser grains
     never re-rank (within a fixed ranking grain)."""
-    e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type",
-        F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
-        .cast("long")
-        .alias("t"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("x"))
+    daily = _daily_counts(load(spark, sf_dir, "events"))
     wx = Window.partitionBy("event_type").orderBy("x")
     wtie = Window.partitionBy("event_type", "x")
     wt = Window.partitionBy("event_type").orderBy("t")
@@ -3539,12 +3482,11 @@ def agg_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         F.when(
             (vx > 0) & (vt > 0),
-            F.floor(
+            round_long(
                 F.lit(1000000.0)
                 * (n * F.col("sxt") - sx * st).cast("double")
                 / F.sqrt(vx.cast("double") * vt.cast("double"))
-                + F.lit(0.5)
-            ).cast("long"),
+            ),
         ).alias("rho_micro"),
     )
 
@@ -3625,13 +3567,7 @@ def agg_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     shards merge by adding, the test statistic is O(groups) driver-free
     arithmetic.  x <= ~1e5/day keeps x^2 sums int64-safe past 1000x
     this fixture; beyond that, shard the power sums by month first."""
-    e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type",
-        F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
-        .cast("long")
-        .alias("t"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("x"))
+    daily = _daily_counts(load(spark, sf_dir, "events"))
     wk = (F.col("t") % 7).isin(5, 6)
     x = F.col("x")
     sums = daily.groupBy("event_type").agg(
@@ -3642,28 +3578,7 @@ def agg_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(wk, 0).otherwise(x)).cast("long").alias("s2"),
         F.sum(F.when(wk, 0).otherwise(x * x)).cast("long").alias("ss2"),
     )
-    n1, n2 = F.col("n1"), F.col("n2")
-    mv = sums.filter((n1 >= 2) & (n2 >= 2)).select(
-        "event_type",
-        "n1",
-        "n2",
-        (F.col("s1").cast("double") / n1).alias("m1"),
-        (F.col("s2").cast("double") / n2).alias("m2"),
-        (
-            (
-                F.col("ss1").cast("double")
-                - (F.col("s1") * F.col("s1")).cast("double") / n1
-            )
-            / (n1 - 1)
-        ).alias("v1"),
-        (
-            (
-                F.col("ss2").cast("double")
-                - (F.col("s2") * F.col("s2")).cast("double") / n2
-            )
-            / (n2 - 1)
-        ).alias("v2"),
-    )
+    mv = _side_moments(sums, "event_type")
     n1, n2 = F.col("n1"), F.col("n2")
     m1, m2, v1, v2 = F.col("m1"), F.col("m2"), F.col("v1"), F.col("v2")
     se2 = v1 / n1 + v2 / n2
@@ -3671,16 +3586,19 @@ def agg_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
         n2 - 1
     )
     pooled = ((n1 - 1) * v1 + (n2 - 1) * v2) / (n1 + n2 - 2)
-    micro = lambda c: F.floor(F.lit(1000000.0) * c + F.lit(0.5)).cast("long")
     return mv.select(
         "event_type",
         n1.alias("n_weekend"),
         n2.alias("n_weekday"),
-        F.when(se2 > 0, micro((m1 - m2) / F.sqrt(se2))).alias("t_micro"),
-        F.when(df_den > 0, micro((se2 * se2) / df_den)).alias("df_micro"),
-        F.when(pooled > 0, micro((m1 - m2) / F.sqrt(pooled))).alias(
-            "cohens_d_micro"
+        F.when(se2 > 0, round_long(F.lit(1000000.0) * ((m1 - m2) / F.sqrt(se2)))).alias(
+            "t_micro"
         ),
+        F.when(df_den > 0, round_long(F.lit(1000000.0) * ((se2 * se2) / df_den))).alias(
+            "df_micro"
+        ),
+        F.when(
+            pooled > 0, round_long(F.lit(1000000.0) * ((m1 - m2) / F.sqrt(pooled)))
+        ).alias("cohens_d_micro"),
     )
 
 
@@ -3765,34 +3683,22 @@ def agg_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(x * x * x).cast("long").alias("s3"),
         F.sum(x * x * x * x).cast("long").alias("s4"),
     )
-    mu = F.col("s1").cast("double") / F.col("n")
-    r2 = F.col("s2").cast("double") / F.col("n")
-    r3 = F.col("s3").cast("double") / F.col("n")
-    r4 = F.col("s4").cast("double") / F.col("n")
-    mom = sums.select(
-        "event_type",
-        "n",
-        (r2 - mu * mu).alias("m2"),
-        (r3 - F.lit(3) * mu * r2 + F.lit(2) * mu * mu * mu).alias("m3"),
-        (
-            r4
-            - F.lit(4) * mu * r3
-            + F.lit(6) * mu * mu * r2
-            - F.lit(3) * mu * mu * mu * mu
-        ).alias("m4"),
-    )
+    _, moments = _central_moments()
+    mom = sums.select("event_type", "n", *moments)
     m2, m3, m4 = F.col("m2"), F.col("m3"), F.col("m4")
     skew = m3 / (F.sqrt(m2) * F.sqrt(m2) * F.sqrt(m2))
     kurt = m4 / (m2 * m2) - F.lit(3)
-    micro = lambda c: F.floor(F.lit(1000000.0) * c + F.lit(0.5)).cast("long")
     return mom.filter(m2 > 0).select(
         "event_type",
         "n",
-        micro(skew).alias("skew_micro"),
-        micro(kurt).alias("kurt_micro"),
-        micro(
-            (F.col("n").cast("double") / F.lit(6.0))
-            * (skew * skew + kurt * kurt / F.lit(4.0))
+        round_long(F.lit(1000000.0) * skew).alias("skew_micro"),
+        round_long(F.lit(1000000.0) * kurt).alias("kurt_micro"),
+        round_long(
+            F.lit(1000000.0)
+            * (
+                (F.col("n").cast("double") / F.lit(6.0))
+                * (skew * skew + kurt * kurt / F.lit(4.0))
+            )
         ).alias("jb_micro"),
     )
 
@@ -3878,16 +3784,19 @@ def agg_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(x).cast("long").alias("s_i"),
         F.sum(x * x).cast("long").alias("ss_i"),
     )
-    micro = lambda c: F.floor(F.lit(1000000.0) * c + F.lit(0.5)).cast("long")
     terms = per_group.select(
         "n_i",
         "s_i",
-        micro(
-            F.col("ss_i").cast("double")
-            - (F.col("s_i") * F.col("s_i")).cast("double") / F.col("n_i")
+        round_long(
+            F.lit(1000000.0)
+            * (
+                F.col("ss_i").cast("double")
+                - (F.col("s_i") * F.col("s_i")).cast("double") / F.col("n_i")
+            )
         ).alias("within_micro"),
-        micro(
-            (F.col("s_i") * F.col("s_i")).cast("double") / F.col("n_i")
+        round_long(
+            F.lit(1000000.0)
+            * ((F.col("s_i") * F.col("s_i")).cast("double") / F.col("n_i"))
         ).alias("meansq_micro"),
     )
     tot = terms.agg(
@@ -3898,8 +3807,8 @@ def agg_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("meansq_micro").cast("long").alias("sum_meansq_micro"),
     )
     k, n_total = F.col("k"), F.col("n_total")
-    grand_micro = micro(
-        (F.col("s_all") * F.col("s_all")).cast("double") / n_total
+    grand_micro = round_long(
+        F.lit(1000000.0) * ((F.col("s_all") * F.col("s_all")).cast("double") / n_total)
     )
     ssb_micro = (F.col("sum_meansq_micro") - grand_micro).cast("long")
     return tot.select(
@@ -3909,9 +3818,12 @@ def agg_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
         ssb_micro.alias("ssb_micro"),
         F.when(
             (F.col("ssw_micro") > 0) & (k > 1) & (n_total > k),
-            micro(
-                (ssb_micro.cast("double") / (k - 1))
-                / (F.col("ssw_micro").cast("double") / (n_total - k))
+            round_long(
+                F.lit(1000000.0)
+                * (
+                    (ssb_micro.cast("double") / (k - 1))
+                    / (F.col("ssw_micro").cast("double") / (n_total - k))
+                )
             ),
         ).alias("f_micro"),
     )
@@ -4026,7 +3938,7 @@ def agg_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
         "chisq_micro",
         F.when(
             (nr > 1) & (nc > 1),
-            F.floor(
+            round_long(
                 F.lit(1000000.0)
                 * F.sqrt(
                     (F.col("chisq_micro").cast("double") / F.lit(1000000.0))
@@ -4035,8 +3947,7 @@ def agg_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
                         * F.least(nr - 1, nc - 1)
                     )
                 )
-                + F.lit(0.5)
-            ).cast("long"),
+            ),
         ).alias("cramers_v_micro"),
     )
 
@@ -4098,13 +4009,7 @@ def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the join input is the calendar-bounded daily table (|types|
     x |days|); the 7-lag fan-out multiplies THAT, not the corpus.
     Moment tuples are additive partials per (pair, lag)."""
-    e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type",
-        F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
-        .cast("long")
-        .alias("t"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("x"))
+    daily = _daily_counts(load(spark, sf_dir, "events"))
     lags = spark.range(-3, 4).select(F.col("id").cast("long").alias("lag"))
     a = daily.select(
         F.col("event_type").alias("type_a"),
@@ -4142,12 +4047,11 @@ def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         F.when(
             (vx > 0) & (vy > 0),
-            F.floor(
+            round_long(
                 F.lit(1000000.0)
                 * (nn * F.col("sxy") - sx * sy).cast("double")
                 / (F.sqrt(vx.cast("double")) * F.sqrt(vy.cast("double")))
-                + F.lit(0.5)
-            ).cast("long"),
+            ),
         ).alias("r_micro"),
     )
 
@@ -4223,21 +4127,51 @@ def profile_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("f").cast("long").alias("n_rows"),
         F.count(F.lit(1)).cast("long").alias("n_keys"),
         F.max("f").cast("long").alias("max_freq"),
-        F.floor(
-            F.lit(1000000.0) * F.max("f").cast("double") / F.sum("f")
-            + F.lit(0.5)
-        )
-        .cast("long")
+        round_long(F.lit(1000000.0) * F.max("f").cast("double") / F.sum("f"))
         .alias("top1_share_micro"),
-        F.floor(
+        round_long(
             F.lit(1000000.0)
             * F.max("f").cast("double")
             * F.count(F.lit(1))
             / F.sum("f")
-            + F.lit(0.5)
+        )
+        .alias("skew_ratio_micro"),
+    )
+
+
+def _milli_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The additive weekly decomposition of each event type's daily
+    counts, milli-quantized: the interior days (a full 7-day centered
+    window) with ``det_milli`` (1000x minus the window's mean) and the
+    day-of-week's seasonal component ``s_milli`` (the mean of its
+    ``det_milli``), keyed (event_type, dow) with ``t`` and ``x``."""
+    daily = _daily_counts(load(spark, sf_dir, "events"))
+    w = Window.partitionBy("event_type").orderBy("t").rowsBetween(-3, 3)
+    trended = daily.select(
+        "event_type",
+        "t",
+        "x",
+        F.count(F.lit(1)).over(w).alias("nw"),
+        F.sum("x").over(w).cast("long").alias("s7"),
+    )
+    interior = trended.filter(F.col("nw") == 7).select(
+        "event_type",
+        "t",
+        "x",
+        (
+            F.lit(1000) * F.col("x")
+            - round_long(F.lit(1000.0) * F.col("s7") / F.lit(7.0))
         )
         .cast("long")
-        .alias("skew_ratio_micro"),
+        .alias("det_milli"),
+    )
+    seasonal = interior.groupBy("event_type", (F.col("t") % 7).alias("dow")).agg(
+        round_long(F.sum("det_milli").cast("double") / F.count(F.lit(1))).alias(
+            "s_milli"
+        )
+    )
+    return interior.withColumn("dow", F.col("t") % 7).join(
+        F.broadcast(seasonal), ["event_type", "dow"]
     )
 
 
@@ -4334,60 +4268,11 @@ def ts_seasonality_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one daily rollup, one per-type window, one dow-grain
     broadcast-back; moment tuples are additive partials."""
-    e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
+    parts = _milli_decomposition(spark, sf_dir).select(
         "event_type",
-        F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
-        .cast("long")
-        .alias("t"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("x"))
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("t")
-        .rowsBetween(-3, 3)
-    )
-    trended = daily.select(
-        "event_type",
-        "t",
-        "x",
-        F.count(F.lit(1)).over(w).alias("nw"),
-        F.sum("x").over(w).cast("long").alias("s7"),
-    )
-    interior = trended.filter(F.col("nw") == 7).select(
-        "event_type",
-        "t",
-        "x",
-        (
-            F.lit(1000) * F.col("x")
-            - F.floor(
-                F.lit(1000.0) * F.col("s7") / F.lit(7.0) + F.lit(0.5)
-            ).cast("long")
-        )
-        .cast("long")
-        .alias("det_milli"),
-    )
-    seasonal = interior.groupBy(
-        "event_type", (F.col("t") % 7).alias("dow")
-    ).agg(
-        F.floor(
-            F.sum("det_milli").cast("double") / F.count(F.lit(1)) + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("s_milli")
-    )
-    parts = (
-        interior.withColumn("dow", F.col("t") % 7)
-        .join(F.broadcast(seasonal), ["event_type", "dow"])
-        .select(
-            "event_type",
-            "det_milli",
-            (F.col("det_milli") - F.col("s_milli")).cast("long").alias(
-                "res_milli"
-            ),
-            (F.lit(1000) * F.col("x") - F.col("s_milli")).cast("long").alias(
-                "des_milli"
-            ),
-        )
+        "det_milli",
+        (F.col("det_milli") - F.col("s_milli")).cast("long").alias("res_milli"),
+        (F.lit(1000) * F.col("x") - F.col("s_milli")).cast("long").alias("des_milli"),
     )
     sums = parts.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -4402,14 +4287,13 @@ def ts_seasonality_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     vres = n * F.col("srr") - F.col("sr") * F.col("sr")
     vdet = n * F.col("sdd") - F.col("sd") * F.col("sd")
     vdes = n * F.col("see") - F.col("se") * F.col("se")
-    strength = lambda vden: F.floor(
+    strength = lambda vden: round_long(
         F.lit(1000000.0)
         * F.when(
             F.lit(1.0) - vres.cast("double") / vden > 0.0,
             F.lit(1.0) - vres.cast("double") / vden,
         ).otherwise(F.lit(0.0))
-        + F.lit(0.5)
-    ).cast("long")
+    )
     return sums.select(
         "event_type",
         n.alias("n_days"),
@@ -4556,13 +4440,12 @@ def agg_survival_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_i",
         F.when(
             F.col("d_i") < F.col("n_i"),
-            F.floor(
+            round_long(
                 F.lit(1000000.0)
                 * F.log(
                     F.lit(1.0) - F.col("d_i").cast("double") / F.col("n_i")
                 )
-                + F.lit(0.5)
-            ).cast("long"),
+            ),
         )
         .otherwise(F.lit(0).cast("long"))
         .alias("q_micro"),
@@ -4577,14 +4460,13 @@ def agg_survival_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("w_i").alias("n_censored"),
         F.when(F.max("killed").over(wc) == 1, F.lit(0).cast("long"))
         .otherwise(
-            F.floor(
+            round_long(
                 F.lit(1000000.0)
                 * F.exp(
                     F.sum("q_micro").over(wc).cast("double")
                     / F.lit(1000000.0)
                 )
-                + F.lit(0.5)
-            ).cast("long")
+            )
         )
         .alias("survival_micro"),
     )
@@ -4680,16 +4562,12 @@ def corpus_length_bucket_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     share = F.col("bucket_total").cast("double") / F.col("corpus_total")
     weights = glob.join(F.broadcast(tgt), "bucket").select(
         "bucket",
-        F.floor(F.lit(1000000.0) * share + F.lit(0.5))
-        .cast("long")
-        .alias("actual_share_micro"),
-        F.floor(
+        round_long(F.lit(1000000.0) * share).alias("actual_share_micro"),
+        round_long(
             F.lit(1000000.0)
             * (F.col("pct").cast("double") / F.lit(100.0))
             / share
-            + F.lit(0.5)
         )
-        .cast("long")
         .alias("weight_micro"),
     )
     return per.join(F.broadcast(weights), "bucket").select(
@@ -4745,13 +4623,7 @@ def ts_local_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: three frames over one per-type sort of the calendar-bounded
     daily rollup — fused by Spark into a single window stage."""
-    e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type",
-        F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
-        .cast("long")
-        .alias("t"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("x"))
+    daily = _daily_counts(load(spark, sf_dir, "events"))
     wl = Window.partitionBy("event_type").orderBy("t").rowsBetween(-3, -1)
     wr = Window.partitionBy("event_type").orderBy("t").rowsBetween(1, 3)
     wb = Window.partitionBy("event_type").orderBy("t").rowsBetween(-3, 3)
@@ -4775,13 +4647,11 @@ def ts_local_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("t").alias("day_idx"),
         "x",
         "wmin",
-        F.floor(
+        round_long(
             F.lit(1000000.0)
             * (F.col("x") - F.col("wmin")).cast("double")
             / F.col("x")
-            + F.lit(0.5)
         )
-        .cast("long")
         .alias("prominence_micro"),
     )
 
@@ -4853,29 +4723,17 @@ def sample_stratified_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = m.filter(n >= 2).select(
         "lang",
         "n_docs",
-        F.floor(F.lit(1000000.0) * sd + F.lit(0.5)).cast("long").alias(
-            "sd_micro"
-        ),
-        F.floor(F.lit(1000000.0) * n * sd + F.lit(0.5)).cast("long").alias(
-            "w_micro"
-        ),
+        round_long(F.lit(1000000.0) * sd).alias("sd_micro"),
+        round_long(F.lit(1000000.0) * n * sd).alias("w_micro"),
     )
     tot = w.agg(F.sum("w_micro").cast("long").alias("tw"))
     return w.crossJoin(F.broadcast(tot)).select(
         "lang",
         "n_docs",
         "sd_micro",
-        F.floor(
-            F.lit(1000.0) * F.col("w_micro").cast("double") / F.col("tw")
-            + F.lit(0.5)
-        )
-        .cast("long")
+        round_long(F.lit(1000.0) * F.col("w_micro").cast("double") / F.col("tw"))
         .alias("alloc_n"),
-        F.floor(
-            F.lit(1000000.0) * F.col("w_micro").cast("double") / F.col("tw")
-            + F.lit(0.5)
-        )
-        .cast("long")
+        round_long(F.lit(1000000.0) * F.col("w_micro").cast("double") / F.col("tw"))
         .alias("alloc_share_micro"),
     )
 
@@ -4919,12 +4777,7 @@ def analytics_dow_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     cells = e.groupBy(
         "event_type",
-        (
-            F.datediff(
-                F.col("ts").cast("date"), F.lit("2024-01-01").cast("date")
-            ).cast("long")
-            % 7
-        ).alias("dow"),
+        (_day_idx().cast("long") % 7).alias("dow"),
         F.hour("ts").cast("long").alias("hour"),
     ).agg(F.count(F.lit(1)).cast("long").alias("n"))
     tot = cells.groupBy("event_type").agg(
@@ -4935,11 +4788,7 @@ def analytics_dow_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dow",
         "hour",
         "n",
-        F.floor(
-            F.lit(1000000.0) * F.col("n").cast("double") / F.col("t")
-            + F.lit(0.5)
-        )
-        .cast("long")
+        round_long(F.lit(1000000.0) * F.col("n").cast("double") / F.col("t"))
         .alias("share_micro"),
     )
 
@@ -5079,54 +4928,11 @@ def ts_stl_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one daily rollup, one per-type trend window, a dow-grain
     broadcast-back, and one per-type rank window over <= 24 interior
     days — calendar-bounded throughout."""
-    e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type",
-        F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
-        .cast("long")
-        .alias("t"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("x"))
-    w = Window.partitionBy("event_type").orderBy("t").rowsBetween(-3, 3)
-    trended = daily.select(
+    resid = _milli_decomposition(spark, sf_dir).select(
         "event_type",
         "t",
         "x",
-        F.count(F.lit(1)).over(w).alias("nw"),
-        F.sum("x").over(w).cast("long").alias("s7"),
-    )
-    interior = trended.filter(F.col("nw") == 7).select(
-        "event_type",
-        "t",
-        "x",
-        (
-            F.lit(1000) * F.col("x")
-            - F.floor(
-                F.lit(1000.0) * F.col("s7") / F.lit(7.0) + F.lit(0.5)
-            ).cast("long")
-        )
-        .cast("long")
-        .alias("det_milli"),
-    )
-    seasonal = interior.groupBy(
-        "event_type", (F.col("t") % 7).alias("dow")
-    ).agg(
-        F.floor(
-            F.sum("det_milli").cast("double") / F.count(F.lit(1)) + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("s_milli")
-    )
-    resid = (
-        interior.withColumn("dow", F.col("t") % 7)
-        .join(F.broadcast(seasonal), ["event_type", "dow"])
-        .select(
-            "event_type",
-            "t",
-            "x",
-            (F.col("det_milli") - F.col("s_milli")).cast("long").alias(
-                "res_milli"
-            ),
-        )
+        (F.col("det_milli") - F.col("s_milli")).cast("long").alias("res_milli"),
     )
     wr = Window.partitionBy("event_type").orderBy(F.abs(F.col("res_milli")))
     wp = Window.partitionBy("event_type")
@@ -5163,12 +4969,7 @@ def ts_stl_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("is_anomaly"),
         F.when(
             F.col("mad_milli") > 0,
-            F.floor(
-                F.lit(1000000.0)
-                * ares
-                / (F.lit(1.4826) * F.col("mad_milli"))
-                + F.lit(0.5)
-            ).cast("long"),
+            round_long(F.lit(1000000.0) * ares / (F.lit(1.4826) * F.col("mad_milli"))),
         ).alias("score_micro"),
     )
 
@@ -5235,13 +5036,7 @@ def agg_wilcoxon_signed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one corpus-sized daily aggregate; the 7-day self-join and
     rank window live on the calendar-bounded daily table."""
-    e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type",
-        F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
-        .cast("long")
-        .alias("t"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("x"))
+    daily = _daily_counts(load(spark, sf_dir, "events"))
     prv = daily.select(
         "event_type", (F.col("t") + 7).alias("t"), F.col("x").alias("px")
     )
@@ -5268,15 +5063,14 @@ def agg_wilcoxon_signed(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = F.col("n_pairs")
     z = F.when(
         n > 0,
-        F.floor(
+        round_long(
             F.lit(1000000.0)
             * (
                 F.col("w_plus_x2").cast("double") / F.lit(2.0)
                 - (n * (n + 1)).cast("double") / F.lit(4.0)
             )
             / F.sqrt((n * (n + 1) * (2 * n + 1)).cast("double") / F.lit(24.0))
-            + F.lit(0.5)
-        ).cast("long"),
+        ),
     )
     return agg.select("event_type", "n_pairs", "w_plus_x2", z.alias("z_micro"))
 
@@ -5338,10 +5132,9 @@ def agg_chi2_gof(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     num = 7 * F.col("o") - F.col("n")
-    contrib = F.floor(
+    contrib = round_long(
         F.lit(1000000.0) * (num * num).cast("double") / (F.lit(7.0) * F.col("n"))
-        + F.lit(0.5)
-    ).cast("long")
+    )
     return grid.groupBy("event_type").agg(
         F.any_value("n").alias("n"),
         F.lit(6).cast("long").alias("dof"),
@@ -5385,11 +5178,7 @@ def agg_binomial_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combined aggregate per type; the z arithmetic
     runs on |types| rows."""
     e = load(spark, sf_dir, "events")
-    dow = (
-        F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
-        .cast("long")
-        % 7
-    )
+    dow = _day_idx().cast("long") % 7
     c = e.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(F.when(dow.isin(5, 6), 1).otherwise(0)).cast("long").alias("k"),
@@ -5399,12 +5188,11 @@ def agg_binomial_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     q0 = F.lit(5.0) / F.lit(7.0)
     z = F.when(
         n > 0,
-        F.floor(
+        round_long(
             F.lit(1000000.0)
             * (k.cast("double") - n * p0)
             / F.sqrt(n * p0 * q0)
-            + F.lit(0.5)
-        ).cast("long"),
+        ),
     )
     return c.select("event_type", "n", k.alias("k_weekend"), z.alias("z_micro"))
 
@@ -5469,9 +5257,7 @@ def agg_poisson_rate_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two corpus-sized aggregates (per-type counts + one global
     day census, broadcast back); arithmetic on |types| rows."""
     e = load(spark, sf_dir, "events")
-    t = F.datediff(
-        F.col("ts").cast("date"), F.lit("2024-01-01").cast("date")
-    ).cast("long")
+    t = _day_idx().cast("long")
     tagged = e.select("event_type", t.alias("t"))
     is_wk = (F.col("t") % 7).isin(5, 6)
     days = tagged.agg(
@@ -5486,23 +5272,21 @@ def agg_poisson_rate_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     k1, k2, d1, d2 = F.col("k1"), F.col("k2"), F.col("d1"), F.col("d2")
     rr = F.when(
         (k2 > 0) & (d1 > 0) & (d2 > 0),
-        F.floor(
+        round_long(
             F.lit(1000000.0)
             * (k1.cast("double") / d1)
             / (k2.cast("double") / d2)
-            + F.lit(0.5)
-        ).cast("long"),
+        ),
     )
     z = F.when(
         (k1 + k2 > 0) & (d1 > 0) & (d2 > 0),
-        F.floor(
+        round_long(
             F.lit(1000000.0)
             * (k1.cast("double") / d1 - k2.cast("double") / d2)
             / F.sqrt(
                 k1.cast("double") / (d1 * d1) + k2.cast("double") / (d2 * d2)
             )
-            + F.lit(0.5)
-        ).cast("long"),
+        ),
     )
     return j.select(
         "event_type",
@@ -5573,10 +5357,7 @@ def analytics_ab_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
     a, b = F.col("a"), F.col("b")
     chisq = F.when(
         a + b > 0,
-        F.floor(
-            F.lit(1000000.0) * ((a - b) * (a - b)).cast("double") / (a + b)
-            + F.lit(0.5)
-        ).cast("long"),
+        round_long(F.lit(1000000.0) * ((a - b) * (a - b)).cast("double") / (a + b)),
     )
     flag = (
         F.when(
@@ -5753,13 +5534,7 @@ def agg_fisher_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one corpus-sized daily aggregate; the combinatorics run on
     |types| x <=9 candidate tables — constant work at any corpus size
     (the margins are calendar days, not rows)."""
-    e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type",
-        F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
-        .cast("long")
-        .alias("t"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("x"))
+    daily = _daily_counts(load(spark, sf_dir, "events"))
     tot = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("x").cast("long").alias("s"),
@@ -5817,7 +5592,7 @@ def agg_fisher_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.any_value("c1").alias("n_weekend_days"),
         F.any_value("r1").alias("n_above_avg_days"),
         F.any_value("a").alias("a_obs"),
-        F.floor(
+        round_long(
             F.lit(1000000.0)
             * F.sum(
                 F.when(F.col("num") <= F.col("a_num"), F.col("num")).otherwise(
@@ -5825,9 +5600,7 @@ def agg_fisher_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).cast("double")
             / F.col("denom")
-            + F.lit(0.5)
         )
-        .cast("long")
         .alias("p_two_sided_micro"),
     ).drop("denom")
 
@@ -5930,13 +5703,7 @@ def agg_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     here), built AFTER the one corpus-sized daily rollup; the rank
     windows partition per (type, rep).  Raising K to 9999 scales the
     small table linearly and the corpus cost not at all."""
-    e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type",
-        F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
-        .cast("long")
-        .alias("t"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("x"))
+    daily = _daily_counts(load(spark, sf_dir, "events"))
     is_wk = (F.col("t") % 7).isin(5, 6)
     obs = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -5980,11 +5747,10 @@ def agg_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     n, n1, s1, s2 = F.col("n"), F.col("n1"), F.col("s1"), F.col("s2")
 
     def dmicro(sa, sb):
-        return F.floor(
+        return round_long(
             F.lit(1000000.0)
             * (sa.cast("double") / n1 - sb.cast("double") / (n - n1))
-            + F.lit(0.5)
-        ).cast("long")
+        )
 
     scored = rep_stats.filter((n1 > 0) & (n - n1 > 0)).select(
         "event_type",
@@ -6009,12 +5775,10 @@ def agg_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         dmicro(s1, s2).alias("d_obs_micro"),
         F.lit(_PERM_REPS).cast("long").alias("k_reps"),
         "n_extreme",
-        F.floor(
+        round_long(
             F.lit(1000000.0)
             * (1 + F.col("n_extreme")).cast("double")
             / (1 + _PERM_REPS)
-            + F.lit(0.5)
         )
-        .cast("long")
         .alias("p_micro"),
     )

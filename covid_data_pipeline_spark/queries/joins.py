@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import query
-from ._helpers import DEC, dsum, sql_dsum
+from ._helpers import DEC, dsum, round_long, sql_dsum
 
 
 @query(
@@ -873,9 +873,7 @@ def join_spatial_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d2.select(
         "a_id",
         "b_id",
-        F.floor(F.lit(1000000000.0) * F.col("d2") + F.lit(0.5))
-        .cast("long")
-        .alias("dist2_nano"),
+        round_long(F.lit(1000000000.0) * F.col("d2")).alias("dist2_nano"),
     )
 
 
@@ -934,9 +932,7 @@ def join_spatial_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "a_id",
             F.col("b_id").alias("nn_id"),
-            F.floor(F.lit(1000000000.0) * F.col("d2") + F.lit(0.5))
-            .cast("long")
-            .alias("dist2_nano"),
+            round_long(F.lit(1000000000.0) * F.col("d2")).alias("dist2_nano"),
         )
     )
 

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from ..io import NARROW_SHUFFLE, load
 from ..operators import connected_components
 from ..registry import query
-from ._helpers import KNUTH_MOD, KNUTH_MULT
+from ._helpers import KNUTH_MOD, KNUTH_MULT, round_long
 
 
 @query(
@@ -1614,11 +1614,7 @@ def dedup_source_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("n_sources") > 1, 1).otherwise(0))
         .cast("long")
         .alias("n_cross_source"),
-        F.floor(
-            F.lit(1000000.0) * dup.cast("double") / F.count(F.lit(1))
-            + F.lit(0.5)
-        )
-        .cast("long")
+        round_long(F.lit(1000000.0) * dup.cast("double") / F.count(F.lit(1)))
         .alias("dup_rate_micro"),
     )
 

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from ..io import data_bytes, load, table_path
 from ..registry import query
-from ._helpers import KNUTH_MOD, KNUTH_MULT, davg
+from ._helpers import KNUTH_MOD, KNUTH_MULT, davg, round_long
 
 
 def _corpus_par(spark: SparkSession, sf_dir: str) -> int:
@@ -1529,9 +1529,7 @@ def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
             "neighbor_id",
             "r_cos",
             "r_dot",
-            F.floor(F.lit(1000000.0) * F.col("rrf") + F.lit(0.5))
-            .cast("long")
-            .alias("rrf_micro"),
+            round_long(F.lit(1000000.0) * F.col("rrf")).alias("rrf_micro"),
             F.col("rn").cast("long").alias("rn"),
         )
     )
@@ -1636,12 +1634,11 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the candidates come from the ANN path (sim_ann_ivf) and
     this rerank costs O(queries * k^2) — nothing."""
     pairs = _query_pairs(spark, sf_dir, "id")
-    simq = F.floor(
+    simq = round_long(
         F.lit(1000000.0)
         * _dot("q_vec", "c_vec")
         / (F.col("nq") * F.col("nc"))
-        + F.lit(0.5)
-    ).cast("long")
+    )
     scored = pairs.select(
         "query_id", "id", simq.alias("simq_micro"), F.col("c_vec").alias("vec")
     )
@@ -1657,12 +1654,11 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     picked = cand.withColumn("rn", F.row_number().over(wq)).filter(
         F.col("rn") == 1
     ).drop("rn").withColumn("pick_idx", F.lit(1).cast("long"))
-    pair = F.floor(
+    pair = round_long(
         F.lit(1000000.0)
         * _dot("vec", "p_vec")
         / (_norm("vec") * _norm("p_vec"))
-        + F.lit(0.5)
-    ).cast("long")
+    )
     for t in range(2, _MMR_K + 1):
         pvecs = picked.select(
             "query_id", F.col("id").alias("p_id"), F.col("vec").alias("p_vec")
@@ -1825,13 +1821,7 @@ def sim_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     return winner.groupBy(F.col("true_label").alias("label")).agg(
         F.count(F.lit(1)).cast("long").alias("n_queries"),
         correct.alias("n_correct"),
-        F.floor(
-            F.lit(1000000.0)
-            * correct.cast("double")
-            / F.count(F.lit(1))
-            + F.lit(0.5)
-        )
-        .cast("long")
+        round_long(F.lit(1000000.0) * correct.cast("double") / F.count(F.lit(1)))
         .alias("accuracy_micro"),
     )
 
@@ -1932,14 +1922,13 @@ def sim_silhouette_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec").alias("c_vec"),
         _norm("vec").alias("c_nrm"),
     ).repartition(par, "cid")
-    dist = F.floor(
+    dist = round_long(
         F.lit(1000000.0)
         * (
             F.lit(1.0)
             - _dot("p_vec", "c_vec") / (F.col("p_nrm") * F.col("c_nrm"))
         )
-        + F.lit(0.5)
-    ).cast("long")
+    )
     grouped = (
         F.broadcast(panel)
         .crossJoin(corpus)
@@ -1964,15 +1953,10 @@ def sim_silhouette_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     mx = F.when(a > b, a).otherwise(b)
     s = ab.filter(a.isNotNull() & b.isNotNull() & (mx > 0)).select(
         F.col("plabel").alias("label"),
-        F.floor(F.lit(1000000.0) * (b - a) / mx + F.lit(0.5))
-        .cast("long")
-        .alias("s_micro"),
+        round_long(F.lit(1000000.0) * (b - a) / mx).alias("s_micro"),
     )
     return s.groupBy("label").agg(
         F.count(F.lit(1)).cast("long").alias("n_panel"),
-        F.floor(
-            F.sum("s_micro").cast("double") / F.count(F.lit(1)) + F.lit(0.5)
-        )
-        .cast("long")
+        round_long(F.sum("s_micro").cast("double") / F.count(F.lit(1)))
         .alias("mean_silhouette_micro"),
     )

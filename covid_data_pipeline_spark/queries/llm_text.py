@@ -23,6 +23,7 @@ from pyspark.sql import types as T
 
 from ..io import load
 from ..registry import query
+from ._helpers import round_long
 
 
 @query(
@@ -1406,9 +1407,7 @@ def quality_percentile_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = scored.join(d, "doc_id").select(
         "lang",
         "doc_id",
-        F.floor(F.col("avg_logprob") * 1000 + F.lit(0.5))
-        .cast("long")
-        .alias("score_milli"),
+        round_long(F.col("avg_logprob") * 1000).alias("score_milli"),
     )
     hist = docs.groupBy("lang", "score_milli").agg(F.count(F.lit(1)).alias("c"))
     # bounded window: one row per (lang, milli-grain score) — closed
@@ -1567,9 +1566,7 @@ def text_keyphrase_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
             "phrase",
             "n_words",
             "phrase_freq",
-            F.floor(F.lit(1000000.0) * F.col("score") + F.lit(0.5))
-            .cast("long")
-            .alias("score_micro"),
+            round_long(F.lit(1000000.0) * F.col("score")).alias("score_micro"),
         )
         .orderBy(F.col("score_micro").desc(), "phrase")
         .limit(15)
@@ -1674,12 +1671,10 @@ def text_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         grid.select("source", term.alias("term"))
         .groupBy("source")
         .agg(
-            F.floor(
+            round_long(
                 F.lit(1000000.0)
                 * F.sum(F.col("term").cast("decimal(28,6)")).cast("double")
-                + F.lit(0.5)
             )
-            .cast("long")
             .alias("js_micro")
         )
     )
@@ -1728,20 +1723,17 @@ def text_hapax_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
     tc = tok.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("c"))
 
-    def micro(expr):
-        return F.floor(F.lit(1000000.0) * expr + F.lit(0.5)).cast("long")
-
     hapax = F.sum(F.when(F.col("c") == 1, 1).otherwise(0))
     return tc.groupBy("doc_id").agg(
         F.sum("c").cast("long").alias("n_tokens"),
         F.count(F.lit(1)).alias("vocab"),
         hapax.cast("long").alias("hapax"),
-        micro(hapax.cast("double") / F.count(F.lit(1))).alias(
-            "hapax_ratio_micro"
-        ),
-        micro(F.count(F.lit(1)).cast("double") / F.sum("c")).alias(
-            "type_token_micro"
-        ),
+        round_long(
+            F.lit(1000000.0) * (hapax.cast("double") / F.count(F.lit(1)))
+        ).alias("hapax_ratio_micro"),
+        round_long(
+            F.lit(1000000.0) * (F.count(F.lit(1)).cast("double") / F.sum("c"))
+        ).alias("type_token_micro"),
     )
 
 
@@ -1862,7 +1854,6 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     num = n * F.col("s")[2] - F.col("s")[0] * F.col("s")[1]
     denx = n * F.col("s")[3] - F.col("s")[0] * F.col("s")[0]
     deny = n * F.col("s")[4] - F.col("s")[1] * F.col("s")[1]
-    micro = lambda c: F.floor(F.lit(1000000.0) * c + F.lit(0.5)).cast("long")
     # Degenerate languages (a single ranked term → denx = 0, or all
     # top-K counts identical → deny = 0) must be NULL on BOTH engines:
     # Spark's x/0 is NULL but DuckDB's IEEE division yields inf, whose
@@ -1871,10 +1862,13 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return folded.select(
         "lang",
         "n_terms",
-        F.when(denx > 0, micro(num / denx)).alias("slope_micro"),
-        F.when((denx > 0) & (deny > 0), micro((num * num) / (denx * deny))).alias(
-            "r2_micro"
+        F.when(denx > 0, round_long(F.lit(1000000.0) * (num / denx))).alias(
+            "slope_micro"
         ),
+        F.when(
+            (denx > 0) & (deny > 0),
+            round_long(F.lit(1000000.0) * ((num * num) / (denx * deny))),
+        ).alias("r2_micro"),
     )
 
 
@@ -1925,11 +1919,7 @@ def text_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         "n_bytes",
         "comp_bytes",
-        F.floor(
-            F.lit(1000000.0) * F.col("comp_bytes") / F.col("n_bytes")
-            + F.lit(0.5)
-        )
-        .cast("long")
+        round_long(F.lit(1000000.0) * F.col("comp_bytes") / F.col("n_bytes"))
         .alias("ratio_micro"),
     )
 
@@ -1991,10 +1981,7 @@ def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         "labeled_lang",
         "detected",
         "n",
-        F.floor(
-            F.lit(1000000.0) * F.col("n") / F.col("n_lang") + F.lit(0.5)
-        )
-        .cast("long")
+        round_long(F.lit(1000000.0) * F.col("n") / F.col("n_lang"))
         .alias("share_micro"),
     )
 
@@ -2092,10 +2079,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         "n_shingles",
         n_novel.alias("n_novel"),
-        F.floor(
-            F.lit(1000000.0) * n_novel / F.col("n_shingles") + F.lit(0.5)
-        )
-        .cast("long")
+        round_long(F.lit(1000000.0) * n_novel / F.col("n_shingles"))
         .alias("novelty_micro"),
     )
 
@@ -2185,9 +2169,7 @@ def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_words",
         "n_sentences",
         "n_syllables",
-        F.floor(F.lit(1000000.0) * flesch + F.lit(0.5))
-        .cast("long")
-        .alias("flesch_micro"),
+        round_long(F.lit(1000000.0) * flesch).alias("flesch_micro"),
     )
 
 
@@ -2267,11 +2249,7 @@ def text_sttr_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         "n_chunks",
         total.alias("distinct_total"),
-        F.floor(
-            F.lit(1000000.0) * total / (F.lit(_STTR_CHUNK) * F.col("n_chunks"))
-            + F.lit(0.5)
-        )
-        .cast("long")
+        round_long(F.lit(1000000.0) * total / (F.lit(_STTR_CHUNK) * F.col("n_chunks")))
         .alias("sttr_micro"),
     )
 
@@ -2335,8 +2313,7 @@ def text_case_pattern_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         allcaps.alias("n_allcaps"),
         n_match("[A-Z][a-z]+").alias("n_titlecase"),
         n_match("[a-z]+").alias("n_lower"),
-        F.floor(F.lit(1000000.0) * allcaps / F.size("ws") + F.lit(0.5))
-        .cast("long")
+        round_long(F.lit(1000000.0) * allcaps / F.size("ws"))
         .alias("allcaps_ratio_micro"),
     )
 
@@ -2504,24 +2481,22 @@ def text_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_tokens",
         F.when(
             nt > 1,
-            F.floor(
+            round_long(
                 F.lit(1000000.0)
                 * (
                     F.lit(1.0)
                     - F.col("coll").cast("double")
                     / (nt.cast("double") * (nt - 1))
                 )
-                + F.lit(0.5)
-            ).cast("long"),
+            ),
         ).alias("simpson_diversity_micro"),
         F.when(
             F.col("coll") > 0,
-            F.floor(
+            round_long(
                 F.lit(1000000.0)
                 * (nt.cast("double") * (nt - 1))
                 / F.col("coll").cast("double")
-                + F.lit(0.5)
-            ).cast("long"),
+            ),
         ).alias("inv_simpson_micro"),
     )
 
@@ -2597,13 +2572,11 @@ def text_vocab_jaccard_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_a",
             "n_b",
             "n_common",
-            F.floor(
+            round_long(
                 F.lit(1000000.0)
                 * F.col("n_common").cast("double")
                 / (F.col("n_a") + F.col("n_b") - F.col("n_common"))
-                + F.lit(0.5)
             )
-            .cast("long")
             .alias("jaccard_micro"),
         )
     )
@@ -2742,13 +2715,10 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("f").over(w).cast("long").alias("v_p"),
         )
     )
-    micro = lambda col: F.floor(F.lit(1000000.0) * col + F.lit(0.5)).cast(
-        "long"
-    )
     terms = curve.select(
         "lang",
-        micro(F.log(F.col("n_p").cast("double"))).alias("x"),
-        micro(F.log(F.col("v_p").cast("double"))).alias("y"),
+        round_long(F.lit(1000000.0) * F.log(F.col("n_p").cast("double"))).alias("x"),
+        round_long(F.lit(1000000.0) * F.log(F.col("v_p").cast("double"))).alias("y"),
     )
     sums = terms.groupBy("lang").agg(
         F.count(F.lit(1)).cast("long").alias("np"),
@@ -2769,15 +2739,17 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sums.select(
         "lang",
         F.col("np").alias("n_points"),
-        F.when(denx > 0, micro(slope)).alias("beta_micro"),
+        F.when(denx > 0, round_long(F.lit(1000000.0) * slope)).alias("beta_micro"),
         F.when(
             denx > 0,
-            micro(
-                F.exp((syd - slope * sxd) / F.col("np") / F.lit(1000000.0))
+            round_long(
+                F.lit(1000000.0)
+                * F.exp((syd - slope * sxd) / F.col("np") / F.lit(1000000.0))
             ),
         ).alias("k_micro"),
         F.when(
-            (denx > 0) & (deny > 0), micro((num * num) / (denx * deny))
+            (denx > 0) & (deny > 0),
+            round_long(F.lit(1000000.0) * ((num * num) / (denx * deny))),
         ).alias("r2_micro"),
     )
 
@@ -2899,15 +2871,13 @@ def text_bigram_lm_crossentropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(uni_counts.withColumnRenamed("w", "w1"), ["lang", "w1"], "left")
         .select(
             "lang",
-            F.floor(
+            round_long(
                 F.lit(1000000.0)
                 * F.log(
                     (F.coalesce(F.col("cb"), F.lit(0)) + 1).cast("double")
                     / (F.coalesce(F.col("cu"), F.lit(0)) + F.col("v"))
                 )
-                + F.lit(0.5)
             )
-            .cast("long")
             .alias("lnp_micro"),
         )
     )
@@ -2917,22 +2887,16 @@ def text_bigram_lm_crossentropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_test_bigrams"),
             F.max("v").cast("long").alias("vocab"),
-            F.floor(
-                -F.sum("lnp_micro").cast("double") / F.count(F.lit(1))
-                + F.lit(0.5)
-            )
-            .cast("long")
+            round_long(-F.sum("lnp_micro").cast("double") / F.count(F.lit(1)))
             .alias("h_micro"),
-            F.floor(
+            round_long(
                 F.lit(1000000.0)
                 * F.exp(
                     -F.sum("lnp_micro").cast("double")
                     / F.lit(1000000.0)
                     / F.count(F.lit(1))
                 )
-                + F.lit(0.5)
             )
-            .cast("long")
             .alias("ppl_micro"),
         )
     )
@@ -3059,12 +3023,11 @@ def analytics_qq_length_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ref_val",
         F.when(
             F.col("ref_val") > 0,
-            F.floor(
+            round_long(
                 F.lit(1000000.0)
                 * F.col("src_val").cast("double")
                 / F.col("ref_val")
-                + F.lit(0.5)
-            ).cast("long"),
+            ),
         ).alias("ratio_micro"),
     )
 
@@ -3177,7 +3140,7 @@ def text_keyness_loglik(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).otherwise(F.lit(0.0))
 
-    g2 = F.floor(
+    g2 = round_long(
         F.lit(1000000.0)
         * F.lit(2.0)
         * (
@@ -3186,8 +3149,7 @@ def text_keyness_loglik(spark: SparkSession, sf_dir: str) -> DataFrame:
             + cell(c, ns, n - ct)
             + cell(dd, n - ns, n - ct)
         )
-        + F.lit(0.5)
-    ).cast("long")
+    )
     overused = a * n.cast("double") > ns.cast("double") * ct
     scored = cells.select(
         "source", "term", "a", g2.alias("g2_micro"), overused.alias("over")

@@ -511,7 +511,7 @@ def analytics_brand_revenue_or(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- round-2 additions: the remaining expressible TPC-H query shapes ----
 
-from ._helpers import DEC, KNUTH_MOD, KNUTH_MULT, davg, dsum, sql_davg, sql_dsum  # noqa: E402
+from ._helpers import DEC, KNUTH_MOD, KNUTH_MULT, _day_idx, davg, dsum, round_long, sql_davg, sql_dsum  # noqa: E402
 
 
 @query(
@@ -1451,13 +1451,11 @@ def analytics_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFr
     return counts.select(
         "channel",
         "n_conversions",
-        F.floor(
+        round_long(
             F.lit(1000000.0)
             * F.col("n_conversions").cast("double")
             / F.sum("n_conversions").over(wt)
-            + F.lit(0.5)
         )
-        .cast("long")
         .alias("share_micro"),
     )
 
@@ -1578,9 +1576,7 @@ def quality_calendar_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     daily = e.select(
         "event_type",
-        F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
-        .cast("long")
-        .alias("t"),
+        _day_idx().cast("long").alias("t"),
     ).distinct()
     span = daily.agg(
         F.min("t").cast("long").alias("lo"),
@@ -1604,13 +1600,11 @@ def quality_calendar_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         expected.alias("expected_days"),
         "present_days",
         (expected - F.col("present_days")).cast("long").alias("missing_days"),
-        F.floor(
+        round_long(
             F.lit(1000000.0)
             * F.col("present_days").cast("double")
             / (F.col("hi") - F.col("lo") + 1)
-            + F.lit(0.5)
         )
-        .cast("long")
         .alias("coverage_micro"),
         "longest_gap_days",
     )
@@ -1716,12 +1710,11 @@ def quality_null_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pct = F.when(
         F.col("n_rows") > 0,
-        F.floor(
+        round_long(
             F.lit(1000000.0)
             * (F.col("n_null") + F.col("n_blank")).cast("double")
             / F.col("n_rows")
-            + F.lit(0.5)
-        ).cast("long"),
+        ),
     )
     return rows.select(
         "col_name", "n_rows", "n_null", "n_blank",
@@ -1820,7 +1813,7 @@ def pipeline_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     c = load(spark, sf_dir, "customer")
     d = load(spark, sf_dir, "documents")
-    day = F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
+    day = _day_idx()
     ev = e.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         (F.count(F.lit(1)) - F.count_distinct("event_id"))
@@ -1910,6 +1903,31 @@ def pipeline_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(
             emit(orphan_l, check(2, "orphan_fk", "lineitem->orders", F.col("n")))
         )
+    )
+
+
+def _side_moments(sums: DataFrame, *keys: str) -> DataFrame:
+    """Each side's mean and sample variance from its exact integer power
+    sums: ``sums`` carries ``n1, s1, ss1`` and ``n2, s2, ss2`` (count,
+    sum x, sum x^2); rows with a side under 2 are dropped, and the rest
+    become ``(*keys, n1, n2, m1, m2, v1, v2)`` through the raw->central
+    identity, one IEEE expression shape per engine."""
+    n1, n2 = F.col("n1"), F.col("n2")
+    s1, s2 = F.col("s1"), F.col("s2")
+    return sums.filter((n1 >= 2) & (n2 >= 2)).select(
+        *keys,
+        "n1",
+        "n2",
+        (s1.cast("double") / n1).alias("m1"),
+        (s2.cast("double") / n2).alias("m2"),
+        (
+            (F.col("ss1").cast("double") - (s1 * s1).cast("double") / n1)
+            / (n1 - 1)
+        ).alias("v1"),
+        (
+            (F.col("ss2").cast("double") - (s2 * s2).cast("double") / n2)
+            / (n2 - 1)
+        ).alias("v2"),
     )
 
 
@@ -2032,24 +2050,9 @@ def pipeline_experiment_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(a == 0, x).otherwise(0)).cast("long").alias("s2"),
         F.sum(F.when(a == 0, x * x).otherwise(0)).cast("long").alias("ss2"),
     )
+    mv = _side_moments(arms)
     n1, n2 = F.col("n1"), F.col("n2")
-    s1, s2 = F.col("s1"), F.col("s2")
-    mv = arms.filter((n1 >= 2) & (n2 >= 2)).select(
-        "n1",
-        "n2",
-        (s1.cast("double") / n1).alias("m1"),
-        (s2.cast("double") / n2).alias("m2"),
-        (
-            (F.col("ss1").cast("double") - (s1 * s1).cast("double") / n1)
-            / (n1 - 1)
-        ).alias("v1"),
-        (
-            (F.col("ss2").cast("double") - (s2 * s2).cast("double") / n2)
-            / (n2 - 1)
-        ).alias("v2"),
-    )
     m1, m2, v1, v2 = F.col("m1"), F.col("m2"), F.col("v1"), F.col("v2")
-    micro = lambda c: F.floor(F.lit(1000000.0) * c + F.lit(0.5)).cast("long")
     se = F.sqrt(v1 / n1 + v2 / n2)
     dfn = (v1 / n1 + v2 / n2) * (v1 / n1 + v2 / n2)
     dfd = (v1 / n1) * (v1 / n1) / (n1 - 1) + (v2 / n2) * (v2 / n2) / (n2 - 1)
@@ -2060,9 +2063,9 @@ def pipeline_experiment_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mv.select(
         n1.alias("n_users_a"),
         n2.alias("n_users_b"),
-        micro(((n1 - n2) * (n1 - n2)).cast("double") / (n1 + n2)).alias(
-            "srm_chisq_micro"
-        ),
+        round_long(
+            F.lit(1000000.0) * (((n1 - n2) * (n1 - n2)).cast("double") / (n1 + n2))
+        ).alias("srm_chisq_micro"),
         F.when(
             F.lit(1000000) * (n1 - n2) * (n1 - n2) > F.lit(3841459) * (n1 + n2),
             1,
@@ -2070,17 +2073,19 @@ def pipeline_experiment_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0)
         .cast("int")
         .alias("srm_flag"),
-        micro(m1).alias("mean_a_micro"),
-        micro(m2).alias("mean_b_micro"),
-        F.when(v1 / n1 + v2 / n2 > 0, micro((m2 - m1) / se)).alias("t_micro"),
-        F.when(dfd > 0, micro(dfn / dfd)).alias("df_micro"),
-        F.when(m1 > 0, micro(lift)).alias("lift_micro"),
-        F.when(m1 > 0, micro(lift - F.lit(1.96) * lift_se)).alias(
-            "lift_ci_lo_micro"
-        ),
-        F.when(m1 > 0, micro(lift + F.lit(1.96) * lift_se)).alias(
-            "lift_ci_hi_micro"
-        ),
+        round_long(F.lit(1000000.0) * m1).alias("mean_a_micro"),
+        round_long(F.lit(1000000.0) * m2).alias("mean_b_micro"),
+        F.when(
+            v1 / n1 + v2 / n2 > 0, round_long(F.lit(1000000.0) * ((m2 - m1) / se))
+        ).alias("t_micro"),
+        F.when(dfd > 0, round_long(F.lit(1000000.0) * (dfn / dfd))).alias("df_micro"),
+        F.when(m1 > 0, round_long(F.lit(1000000.0) * lift)).alias("lift_micro"),
+        F.when(
+            m1 > 0, round_long(F.lit(1000000.0) * (lift - F.lit(1.96) * lift_se))
+        ).alias("lift_ci_lo_micro"),
+        F.when(
+            m1 > 0, round_long(F.lit(1000000.0) * (lift + F.lit(1.96) * lift_se))
+        ).alias("lift_ci_hi_micro"),
     )
 
 
@@ -2530,7 +2535,7 @@ def pipeline_daily_series_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("new_cases") < 0, 1).otherwise(0).alias("is_restatement"),
         F.when(
             c7 > 0,
-            F.floor(F.lit(1000000.0) * F.col("s7") / c7 + F.lit(0.5)).cast("long"),
+            round_long(F.lit(1000000.0) * F.col("s7") / c7),
         ).alias("trail7_avg_micro"),
         F.when(c7 <= 0, F.lit(None).cast("int"))
         .when(F.col("new_cases") * c7 > 2 * F.col("s7"), 1)

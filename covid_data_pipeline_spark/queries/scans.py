@@ -17,7 +17,7 @@ from pyspark.sql import types as T
 from ..io import NARROW_SHUFFLE, load, process_scratch
 from ..registry import query
 from ..schemas import DOCUMENTS, EVENTS
-from ._helpers import dsum, sql_dsum
+from ._helpers import dsum, round_long, sql_dsum
 
 
 def scratch_path(name: str) -> str:
@@ -1096,7 +1096,7 @@ def scan_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return parsed.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.floor(F.col("val") * 100 + F.lit(0.5)).cast("long"))
+        F.sum(round_long(F.col("val") * 100))
         .cast("long")
         .alias("value_centi"),
     )
@@ -1356,9 +1356,7 @@ def scan_nested_struct_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey",
         F.struct(
             F.col("l_linenumber").alias("linenumber"),
-            F.floor(F.col("l_quantity") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("qty_cents"),
+            round_long(F.col("l_quantity") * 100).alias("qty_cents"),
         ).alias("line"),
     )
     nested = (

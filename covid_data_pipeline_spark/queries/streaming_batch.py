@@ -21,6 +21,7 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from collections.abc import Callable
 from datetime import datetime
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -481,7 +482,17 @@ def stream_bitmap_partials(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "stream_stream_left_join",
     oracle="""
-    WITH bound AS (SELECT MAX(ts) - INTERVAL 3 HOUR AS closable FROM events)
+    WITH bound AS (
+        SELECT LEAST(
+            MAX(ts) - INTERVAL 3 HOUR,
+            date_trunc('millisecond', MAX(ts) FILTER (WHERE event_type = 'view'))
+                - INTERVAL 2 HOUR - INTERVAL 1 MILLISECOND,
+            date_trunc('millisecond',
+                       MAX(ts) FILTER (WHERE event_type = 'purchase'))
+                - INTERVAL 2 HOUR - INTERVAL 1 MILLISECOND
+        ) AS closable
+        FROM events
+    )
     SELECT p.user_id, p.event_id AS purchase_id, v.event_id AS view_id,
            epoch_us(p.ts) - epoch_us(v.ts) AS gap_us
     FROM events p
@@ -501,23 +512,40 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     drops unattributed conversions).  Semantics the inner twin doesn't
     exercise: an unmatched left row is NOT emittable when first seen; it
     parks in the state store until the WATERMARK proves no matching view
-    can still arrive (wm > p_ts), at which point the no-data batch that
+    can still arrive (p_ts <= wm - 1 ms), when the no-data batch that
     availableNow appends after the drain evicts-and-emits it.
 
-    The CLOSABLE-REGION bound (p_ts <= max_ts - 3h = 2h watermark + 1h
-    range margin, computed batch-side as one scalar) is what makes a
-    genuine streaming run hash-equal to the batch oracle: purchases
-    inside the final watermark window are still legitimately OPEN when
-    the drain ends — measured here, 7 of 1941 unmatched rows at sf0.01
-    sit in that tail — so both engines score only rows whose outer
-    verdict is final.  That is the correct mental model at 100 TB too:
-    outer results are only ever final past the watermark horizon.
-    State bounds and salting guidance match stream_stream_join."""
+    The CLOSABLE-REGION bound (computed batch-side as one scalar) is
+    what makes a genuine streaming run hash-equal to the batch oracle:
+    purchases inside the final watermark window are still legitimately
+    OPEN when the drain ends — measured here, 7 of 1941 unmatched rows
+    at sf0.01 sit in that tail — so both engines score only rows whose
+    outer verdict is final.  The bound is the earlier of max_ts - 3h
+    (2h watermark + 1h range margin) and the join's own eviction edge:
+    the global watermark is the MIN over the two sides of (side's max
+    event time, truncated to ms, - 2h), and an unmatched purchase is
+    emitted only when p_ts <= that watermark - 1 ms (pinned with
+    hand-built rows).  The second term binds when the feed ends on
+    neither side, e.g. on a click.  That is the correct mental model at
+    100 TB too: outer results are only ever final past the watermark
+    horizon.  State bounds and salting guidance match stream_stream_join."""
     from ..streaming import read_events_stream, run_available_now
+
+    def evict_edge(side: str) -> Column:
+        last = F.max(F.when(F.col("event_type") == side, F.col("ts")))
+        return F.date_trunc("millisecond", last) - F.expr(
+            "INTERVAL 2 HOUR 1 MILLISECOND"
+        )
 
     closable = (
         load(spark, sf_dir, "events")
-        .agg((F.max("ts") - F.expr("INTERVAL 3 HOUR")).alias("b"))
+        .agg(
+            F.least(
+                F.max("ts") - F.expr("INTERVAL 3 HOUR"),
+                evict_edge("view"),
+                evict_edge("purchase"),
+            ).alias("b")
+        )
         .collect()[0]["b"]
     )
     ev = read_events_stream(spark, sf_dir)
@@ -1210,57 +1238,89 @@ def stream_watermark_drop_witness(spark: SparkSession, sf_dir: str) -> DataFrame
     state bounded by the 30-day calendar (720 hourly windows), and the
     final join is window-grain — both sides tiny.  The two min/max
     scalars are metadata-sized collects by construction."""
+    genuine, day1, _ = _events_day1(spark, sf_dir)
+    echoes = day1.withColumn("event_id", F.col("event_id") + F.lit(10_000_000))
+    fed = genuine.unionByName(echoes).groupBy(
+        (F.unix_micros("ts") - F.unix_micros("ts") % TR.HOUR_US).alias("ws_us")
+    ).agg(F.count(F.lit(1)).alias("n_fed"))
+
+    def hourly(stream: DataFrame) -> DataFrame:
+        return (
+            stream.withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "1 hour").alias("w"))
+            .agg(F.count(F.lit(1)).alias("n_kept"))
+            .select(F.unix_micros(F.col("w.start")).alias("ws_us"), "n_kept")
+        )
+
+    # run 1 commits watermark = max - 10 min and emits the closed
+    # windows; on the resumed run every echo is late, its window closed
+    return _resumed_feed(
+        spark,
+        "wm",
+        genuine,
+        echoes,
+        hourly,
+        lambda kept: kept.join(fed, "ws_us").select(
+            "ws_us",
+            "n_kept",
+            "n_fed",
+            (F.col("n_fed") - F.col("n_kept")).alias("n_dropped"),
+        ),
+    )
+
+
+def _events_day1(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, int]:
+    """The events feed in schema column order, its rows of the first
+    calendar day (event time < min + 24 h), and its max event time in
+    epoch micros; the min/max are one metadata-sized collect."""
     from ..schemas import EVENTS
-    from ..streaming import pin_feed_mtimes, read_feed
 
     ev = load(spark, sf_dir, "events")
     bounds = ev.agg(
         F.min(F.unix_micros("ts")).alias("mn"),
         F.max(F.unix_micros("ts")).alias("m"),
     ).collect()[0]
-    echo_cut = bounds["mn"] + 86_400_000_000  # first calendar day
     genuine = ev.select(*[f.name for f in EVENTS.fields])
-    echoes = genuine.filter(F.unix_micros("ts") < echo_cut).withColumn(
-        "event_id", F.col("event_id") + F.lit(10_000_000)
+    day1 = genuine.filter(F.unix_micros("ts") < bounds["mn"] + 86_400_000_000)
+    return genuine, day1, bounds["m"]
+
+
+def _resumed_feed(
+    spark: SparkSession,
+    tag: str,
+    b1: DataFrame,
+    b2: DataFrame,
+    stream_out: Callable[[DataFrame], DataFrame],
+    finish: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Two availableNow drains over one checkpoint: the first over a feed
+    holding batch ``b1``, the second resumed after ``b2`` is added.
+    ``stream_out`` maps the streaming feed to the appended sink frame;
+    ``finish`` maps the sink's rows to the result, which is materialized
+    (small by the callers' construction) so the feed, sink and checkpoint
+    scratch dirs are deleted instead of leaking one events-sized parquet
+    copy per invocation."""
+    from ..schemas import EVENTS
+    from ..streaming import pin_feed_mtimes, read_feed
+
+    src, sink, ckpt = (
+        scratch_dir(f"cdp_{tag}{d}_") for d in ("feed", "sink", "ckpt")
     )
 
-    src = scratch_dir("cdp_wmfeed_")
-    sink = scratch_dir("cdp_wmsink_")
-    ckpt = scratch_dir("cdp_wmckpt_")
-
     def run() -> None:
-        stream = read_feed(spark, EVENTS, src).withWatermark("ts", "10 minutes")
-        agg = (
-            stream.groupBy(F.window("ts", "1 hour").alias("w"))
-            .agg(F.count(F.lit(1)).alias("n_kept"))
-            .select(F.unix_micros(F.col("w.start")).alias("ws_us"), "n_kept")
-        )
-        drain(agg, "append", path=sink, checkpoint=ckpt)
+        out = stream_out(read_feed(spark, EVENTS, src))
+        drain(out, "append", path=sink, checkpoint=ckpt)
 
     try:
-        genuine.coalesce(1).write.parquet(os.path.join(src, "b1"))
+        b1.coalesce(1).write.parquet(os.path.join(src, "b1"))
         pin_feed_mtimes(src, ["b1"])
-        run()  # commits watermark = max - 10 min; emits closed windows
-        echoes.coalesce(1).write.parquet(os.path.join(src, "b2"))
+        run()
+        b2.coalesce(1).write.parquet(os.path.join(src, "b2"))
         pin_feed_mtimes(src, ["b1", "b2"])
-        run()  # resumed watermark: every echo is late, window closed
-
-        kept = spark.read.parquet(sink)
-        fed = genuine.unionByName(echoes).groupBy(
-            (F.unix_micros("ts") - F.unix_micros("ts") % TR.HOUR_US).alias(
-                "ws_us"
-            )
-        ).agg(F.count(F.lit(1)).alias("n_fed"))
-        result = kept.join(fed, "ws_us").select(
-            "ws_us",
-            "n_kept",
-            "n_fed",
-            (F.col("n_fed") - F.col("n_kept")).alias("n_dropped"),
-        )
-        # window-grain rows (calendar-bounded, <= 720): materialize so
-        # the feed/sink/checkpoint scratch dirs can be deleted instead
-        # of leaking one events-sized parquet copy per invocation
-        return result.localCheckpoint(eager=True)
+        run()
+        return finish(spark.read.parquet(sink)).localCheckpoint(eager=True)
     finally:
         for d in (src, sink, ckpt):
             shutil.rmtree(d, ignore_errors=True)
@@ -1325,16 +1385,8 @@ def stream_dedup_ttl_evict_witness(spark: SparkSession, sf_dir: str) -> DataFram
     doctored slices are calendar-bounded (day 1); the min/max scalars
     are metadata-sized collects."""
     from ..schemas import EVENTS
-    from ..streaming import pin_feed_mtimes, read_feed
 
-    ev = load(spark, sf_dir, "events")
-    bounds = ev.agg(
-        F.min(F.unix_micros("ts")).alias("mn"),
-        F.max(F.unix_micros("ts")).alias("m"),
-    ).collect()[0]
-    day1_cut = bounds["mn"] + 86_400_000_000
-    genuine = ev.select(*[f.name for f in EVENTS.fields])
-    day1 = genuine.filter(F.unix_micros("ts") < day1_cut)
+    genuine, day1, max_us = _events_day1(spark, sf_dir)
     late_echoes = day1.withColumn(
         "event_id", F.col("event_id") + F.lit(10_000_000)
     )
@@ -1351,7 +1403,7 @@ def stream_dedup_ttl_evict_witness(spark: SparkSession, sf_dir: str) -> DataFram
         )
         .select(
             (F.col("base_id") + F.lit(20_000_000)).alias("event_id"),
-            F.timestamp_micros(F.lit(bounds["m"])).alias("ts"),
+            F.timestamp_micros(F.lit(max_us)).alias("ts"),
             "user_id",
             F.lit("redup").alias("event_type"),
             F.lit(0.0).alias("value"),
@@ -1360,12 +1412,7 @@ def stream_dedup_ttl_evict_witness(spark: SparkSession, sf_dir: str) -> DataFram
         .select(*[f.name for f in EVENTS.fields])
     )
 
-    src = scratch_dir("cdp_ttlfeed_")
-    sink = scratch_dir("cdp_ttlsink_")
-    ckpt = scratch_dir("cdp_ttlckpt_")
-
-    def run() -> None:
-        stream = read_feed(spark, EVENTS, src)
+    def first_arrivals(stream: DataFrame) -> DataFrame:
         keyed = stream.select(
             "event_id",
             "user_id",
@@ -1375,38 +1422,23 @@ def stream_dedup_ttl_evict_witness(spark: SparkSession, sf_dir: str) -> DataFram
         out = keyed.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark(
             ["user_id", "content_hash"]
         )
-        drain(
-            out.select("event_id", "user_id", "content_hash"),
-            "append",
-            path=sink,
-            checkpoint=ckpt,
-        )
+        return out.select("event_id", "user_id", "content_hash")
 
-    try:
-        genuine.coalesce(1).write.parquet(os.path.join(src, "b1"))
-        pin_feed_mtimes(src, ["b1"])
-        run()  # first arrivals emit; terminal commit evicts day-1 keys
-        late_echoes.unionByName(fresh_redups).coalesce(1).write.parquet(
-            os.path.join(src, "b2")
-        )
-        pin_feed_mtimes(src, ["b1", "b2"])
-        run()  # echoes dropped as late; re-dups re-admitted (evicted)
-
-        sunk = spark.read.parquet(sink)
-        result = sunk.select(
+    # run 1 emits first arrivals and its terminal commit evicts the day-1
+    # keys; on the resumed run echoes drop as late, re-dups are re-admitted
+    return _resumed_feed(
+        spark,
+        "ttl",
+        genuine,
+        late_echoes.unionByName(fresh_redups),
+        first_arrivals,
+        lambda sunk: sunk.select(
             "event_id",
             "user_id",
             "content_hash",
-            F.when(
-                F.col("event_id") >= 20_000_000, F.lit("post_evict_readmit")
-            )
+            F.when(F.col("event_id") >= 20_000_000, F.lit("post_evict_readmit"))
             .when(F.col("event_id") >= 10_000_000, F.lit("late_echo_leaked"))
             .otherwise(F.lit("first_arrival"))
             .alias("src"),
-        )
-        # first-arrival-sized rows (distinct keys + day-1 re-dups):
-        # materialize so the scratch dirs can be deleted, not leaked
-        return result.localCheckpoint(eager=True)
-    finally:
-        for d in (src, sink, ckpt):
-            shutil.rmtree(d, ignore_errors=True)
+        ),
+    )

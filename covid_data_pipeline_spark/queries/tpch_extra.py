@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import query
-from ._helpers import DEC, dsum, sql_dsum
+from ._helpers import DEC, dsum, round_long, sql_dsum
 
 
 @query(
@@ -328,9 +328,7 @@ def analytics_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "s_name",
             "n_name",
             "p_partkey",
-            F.floor(F.col("unit_cost") * 1_000_000 + F.lit(0.5))
-            .cast("long")
-            .alias("unit_cost_micro"),
+            round_long(F.col("unit_cost") * 1_000_000).alias("unit_cost_micro"),
         )
     )
 
@@ -739,7 +737,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         pr = _pr_step(pr, edges, deg, q).localCheckpoint(eager=False)
     out = pr.select(
         F.col("id").alias("node_id"),
-        F.floor(F.col("pr") * q + 0.5).alias("pr_q"),
+        round_long(F.col("pr") * q).alias("pr_q"),
     )
     return out.orderBy(F.col("pr_q").desc(), "node_id").limit(20)
 
@@ -1001,12 +999,11 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     du = deg.select(F.col("v").alias("u"), F.col("d").alias("deg_u"))
     dv = deg.select(F.col("v").alias("v"), F.col("d").alias("deg_v"))
-    jac = F.floor(
+    jac = round_long(
         F.lit(1000000.0)
         * F.col("common_neighbors").cast("double")
         / (F.col("deg_u") + F.col("deg_v") - F.col("common_neighbors"))
-        + F.lit(0.5)
-    ).cast("long")
+    )
     return (
         common.join(du, "u")
         .join(dv, "v")
@@ -1029,7 +1026,7 @@ def _nation_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("c_nationkey").alias("nation"), "c_custkey")
         .agg(
             F.sum(
-                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+                round_long(F.col("o_totalprice") * 100)
             ).alias("rev_c")
         )
     )
@@ -1085,15 +1082,14 @@ def agg_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(w).alias("i"),
         F.count(F.lit(1)).over(Window.partitionBy("nation")).alias("n"),
     )
-    gini = F.floor(
+    gini = round_long(
         F.lit(1000000.0)
         * (
             2 * F.sum(F.col("i") * F.col("rev_c"))
             - (F.max("n") + 1) * F.sum("rev_c")
         ).cast("double")
         / (F.max("n") * F.sum("rev_c"))
-        + F.lit(0.5)
-    ).cast("long")
+    )
     return ranked.groupBy("nation").agg(
         F.max("n").cast("long").alias("n_customers"),
         gini.alias("gini_micro"),
@@ -1196,9 +1192,7 @@ def analytics_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("freq"),
             F.floor(
                 F.sum(
-                    F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast(
-                        "long"
-                    )
+                    round_long(F.col("o_totalprice") * 100)
                 )
                 / 10000
             )
@@ -1322,12 +1316,11 @@ def agg_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines."""
     cust = _nation_customer_revenue(spark, sf_dir)
     rev_dec = F.col("rev_c").cast("decimal(19,0)")
-    hhi = F.floor(
+    hhi = round_long(
         F.lit(10000000000.0)
         * F.sum(rev_dec * rev_dec).cast("double")
         / (F.sum("rev_c").cast("double") * F.sum("rev_c"))
-        + F.lit(0.5)
-    ).cast("long")
+    )
     return cust.groupBy("nation").agg(
         F.count(F.lit(1)).alias("n_customers"),
         hhi.alias("hhi_e10"),
@@ -1387,9 +1380,7 @@ def analytics_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("p_brand").alias("brand"), "p_partkey")
         .agg(
             F.sum(
-                F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast(
-                    "long"
-                )
+                round_long(F.col("l_extendedprice") * 100)
             ).alias("rev_c")
         )
     )
@@ -1461,9 +1452,7 @@ def analytics_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
         "p_partkey",
         "p_brand",
         "p_size",
-        F.floor(F.col("p_retailprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("price_c"),
+        round_long(F.col("p_retailprice") * 100).alias("price_c"),
     )
     hist = pts.groupBy("p_size").agg(F.min("price_c").alias("minp"))
     w_ge = Window.orderBy(F.col("p_size").desc()).rowsBetween(
@@ -1556,9 +1545,7 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     adj = _knn_adjacency(edges)
     deg = adj.groupBy("v").agg(F.count(F.lit(1)).alias("d"))
     dz = deg.select(F.col("v").alias("n"), F.col("d").alias("dz"))
-    contrib = F.floor(
-        F.lit(1000000.0) / F.log(F.col("dz").cast("double")) + F.lit(0.5)
-    ).cast("long")
+    contrib = round_long(F.lit(1000000.0) / F.log(F.col("dz").cast("double")))
     wedges = (
         _knn_wedges(adj)
         .join(F.broadcast(dz), "n")
@@ -1634,26 +1621,16 @@ def agg_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("rev_c").cast("long").alias("s"),
     )
     ratio = (F.col("rev_c") * F.col("n")).cast("double") / F.col("s")
-    micro = lambda col: F.floor(F.lit(1000000.0) * col + F.lit(0.5)).cast(
-        "long"
-    )
     terms = cust.join(F.broadcast(tot), "nation").select(
         "nation",
         "n",
-        micro(ratio * F.log(ratio)).alias("t_micro"),
-        micro(F.log(ratio)).alias("m_micro"),
+        round_long(F.lit(1000000.0) * (ratio * F.log(ratio))).alias("t_micro"),
+        round_long(F.lit(1000000.0) * F.log(ratio)).alias("m_micro"),
     )
     return terms.groupBy("nation").agg(
         F.max("n").cast("long").alias("n_customers"),
-        F.floor(
-            F.sum("t_micro").cast("double") / F.max("n") + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("theil_t_micro"),
-        F.floor(
-            -F.sum("m_micro").cast("double") / F.max("n") + F.lit(0.5)
-        )
-        .cast("long")
+        round_long(F.sum("t_micro").cast("double") / F.max("n")).alias("theil_t_micro"),
+        round_long(-F.sum("m_micro").cast("double") / F.max("n"))
         .alias("theil_l_micro"),
     )
 
@@ -1712,15 +1689,16 @@ def agg_atkinson_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: additive (n, S, sum_ln, sum_sqrt) partials — the index of
     any rollup grain is four-integer arithmetic, no ranked pass."""
     cust = _nation_customer_revenue(spark, sf_dir)
-    micro = lambda col: F.floor(F.lit(1000000.0) * col + F.lit(0.5)).cast(
-        "long"
-    )
     x = F.col("rev_c").cast("double")
     sums = cust.groupBy("nation").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("rev_c").cast("long").alias("s"),
-        F.sum(micro(F.log(x))).cast("long").alias("sum_ln_micro"),
-        F.sum(micro(F.sqrt(x))).cast("long").alias("sum_sq_micro"),
+        F.sum(round_long(F.lit(1000000.0) * F.log(x)))
+        .cast("long")
+        .alias("sum_ln_micro"),
+        F.sum(round_long(F.lit(1000000.0) * F.sqrt(x)))
+        .cast("long")
+        .alias("sum_sq_micro"),
     )
     n = F.col("n")
     mean = F.col("s").cast("double") / n
@@ -1729,10 +1707,10 @@ def agg_atkinson_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sums.select(
         "nation",
         n.alias("n_customers"),
-        micro(F.lit(1.0) - F.exp(mean_ln) / mean).alias(
+        round_long(F.lit(1000000.0) * (F.lit(1.0) - F.exp(mean_ln) / mean)).alias(
             "atkinson_e1_micro"
         ),
-        micro(F.lit(1.0) - mean_sq * mean_sq / mean).alias(
+        round_long(F.lit(1000000.0) * (F.lit(1.0) - mean_sq * mean_sq / mean)).alias(
             "atkinson_e05_micro"
         ),
     )
@@ -1805,13 +1783,11 @@ def analytics_lorenz_points(spark: SparkSession, sf_dir: str) -> DataFrame:
         "decile",
         "n_i",
         "cents_i",
-        F.floor(
+        round_long(
             F.lit(1000000.0)
             * F.sum("cents_i").over(wc).cast("double")
             / F.sum("cents_i").over(wp)
-            + F.lit(0.5)
         )
-        .cast("long")
         .alias("cum_share_micro"),
     )
 
@@ -1927,12 +1903,11 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         (m / 2).cast("long").alias("n_edges"),
         F.when(
             (vx > 0) & (vy > 0),
-            F.floor(
+            round_long(
                 F.lit(1000000.0)
                 * (m * F.col("sxy") - sx * sy).cast("double")
                 / (F.sqrt(vx.cast("double")) * F.sqrt(vy.cast("double")))
-                + F.lit(0.5)
-            ).cast("long"),
+            ),
         ).alias("assortativity_micro"),
     )
 
@@ -2054,11 +2029,7 @@ def analytics_pareto_8020(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranked.groupBy("nation").agg(
         F.max("n").cast("long").alias("n_customers"),
         F.min(hit).cast("long").alias("k_80"),
-        F.floor(
-            F.lit(1000000.0) * F.min(hit).cast("double") / F.max("n")
-            + F.lit(0.5)
-        )
-        .cast("long")
+        round_long(F.lit(1000000.0) * F.min(hit).cast("double") / F.max("n"))
         .alias("k_share_micro"),
     )
 
@@ -2130,7 +2101,7 @@ def analytics_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_orders"),
             F.sum(
-                F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+                round_long(F.col("o_totalprice") * 100)
             )
             .cast("long")
             .alias("cents"),
@@ -2146,14 +2117,12 @@ def analytics_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_orders",
             "cohort_size",
             cum.alias("cum_cents"),
-            F.floor(
+            round_long(
                 F.lit(1000000.0)
                 * cum.cast("double")
                 / F.lit(100.0)
                 / F.col("cohort_size")
-                + F.lit(0.5)
             )
-            .cast("long")
             .alias("ltv_per_customer_micro"),
         )
     )
@@ -2290,13 +2259,11 @@ def analytics_state_dwell_time(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "n_intervals",
         "dwell_us_total",
-        F.floor(
+        round_long(
             F.lit(1000000.0)
             * F.col("dwell_us_total").cast("double")
             / F.col("t")
-            + F.lit(0.5)
         )
-        .cast("long")
         .alias("share_micro"),
     )
 
@@ -2386,11 +2353,7 @@ def analytics_priority_mix_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     shares = monthly.join(F.broadcast(tot), "m").select(
         "m",
         "pri",
-        F.floor(
-            F.lit(1000000.0) * F.col("n").cast("double") / F.col("t")
-            + F.lit(0.5)
-        )
-        .cast("long")
+        round_long(F.lit(1000000.0) * F.col("n").cast("double") / F.col("t"))
         .alias("share_micro"),
     )
     prev = shares.select(
@@ -2416,21 +2379,11 @@ def analytics_priority_mix_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     term = (
         F.when(
             p > 0,
-            F.floor(
-                F.lit(0.5)
-                * p
-                * F.log(F.lit(2.0) * p.cast("double") / (p + q))
-                + F.lit(0.5)
-            ).cast("long"),
+            round_long(F.lit(0.5) * p * F.log(F.lit(2.0) * p.cast("double") / (p + q))),
         ).otherwise(F.lit(0))
         + F.when(
             q > 0,
-            F.floor(
-                F.lit(0.5)
-                * q
-                * F.log(F.lit(2.0) * q.cast("double") / (p + q))
-                + F.lit(0.5)
-            ).cast("long"),
+            round_long(F.lit(0.5) * q * F.log(F.lit(2.0) * q.cast("double") / (p + q))),
         ).otherwise(F.lit(0))
     ).cast("long")
     return paired.select(
@@ -2502,7 +2455,7 @@ def analytics_shift_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer")
     n = load(spark, sf_dir, "nation")
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("long")
+    cents = round_long(F.col("o_totalprice") * 100)
     rev = (
         o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
         .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
@@ -2527,11 +2480,10 @@ def analytics_shift_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev_c, cur_c = F.col("prev_cents"), F.col("cur_cents")
     nat = F.when(
         F.col("prev_total") > 0,
-        F.floor(
+        round_long(
             prev_c
             * (F.col("cur_total").cast("double") / F.col("prev_total") - F.lit(1.0))
-            + F.lit(0.5)
-        ).cast("long"),
+        ),
     )
     return paired.select(
         "y",
@@ -2639,12 +2591,11 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce(F.col("t"), F.lit(0)).cast("long").alias("n_triangles"),
         F.when(
             F.col("d") >= 2,
-            F.floor(
+            round_long(
                 F.lit(1000000.0)
                 * (2 * F.coalesce(F.col("t"), F.lit(0))).cast("double")
                 / (F.col("d") * (F.col("d") - 1))
-                + F.lit(0.5)
-            ).cast("long"),
+            ),
         ).alias("local_coeff_micro"),
     )
     return j
@@ -2706,17 +2657,9 @@ def analytics_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(p), li["l_partkey"] == p["p_partkey"])
         .select(
             "p_type",
-            F.floor(
-                F.lit(10000.0) * F.log(F.lit(1.0) - F.col("l_discount"))
-                + F.lit(0.5)
-            )
-            .cast("long")
+            round_long(F.lit(10000.0) * F.log(F.lit(1.0) - F.col("l_discount")))
             .alias("x4"),
-            F.floor(
-                F.lit(10000.0) * F.log(F.col("l_quantity")) + F.lit(0.5)
-            )
-            .cast("long")
-            .alias("y4"),
+            round_long(F.lit(10000.0) * F.log(F.col("l_quantity"))).alias("y4"),
         )
     )
     sums = pts.groupBy("p_type").agg(
@@ -2734,9 +2677,6 @@ def analytics_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         F.when(
             den > 0,
-            F.floor(
-                F.lit(1000000.0) * num.cast("double") / den.cast("double")
-                + F.lit(0.5)
-            ).cast("long"),
+            round_long(F.lit(1000000.0) * num.cast("double") / den.cast("double")),
         ).alias("elasticity_micro"),
     )

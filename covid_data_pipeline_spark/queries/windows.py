@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import query
-from ._helpers import DEC
+from ._helpers import DEC, _daily_counts, round_long
 
 
 @query(
@@ -998,11 +998,7 @@ def win_week_over_week(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         "n_prev",
         (F.col("n") - F.col("n_prev")).alias("delta"),
-        F.floor(
-            F.lit(1000000.0) * (F.col("n") - F.col("n_prev")) / F.col("n_prev")
-            + F.lit(0.5)
-        )
-        .cast("long")
+        round_long(F.lit(1000000.0) * (F.col("n") - F.col("n_prev")) / F.col("n_prev"))
         .alias("wow_micro"),
     )
 
@@ -1075,16 +1071,13 @@ def win_bollinger_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
          - F.col("s1").cast("double") * F.col("s1"))
         / (nD * F.col("n"))
     )
-    micro = lambda c: F.floor(F.lit(1000000.0) * c + F.lit(0.5)).cast("long")
     return sums.select(
         "event_type",
         F.date_format("d", "yyyy-MM-dd").alias("day"),
         "x",
-        F.floor(F.lit(1000000.0) * F.col("s1") / F.col("n") + F.lit(0.5))
-        .cast("long")
-        .alias("mid_micro"),
-        micro(mean + F.lit(2) * sigma).alias("upper_micro"),
-        micro(mean - F.lit(2) * sigma).alias("lower_micro"),
+        round_long(F.lit(1000000.0) * F.col("s1") / F.col("n")).alias("mid_micro"),
+        round_long(F.lit(1000000.0) * (mean + F.lit(2) * sigma)).alias("upper_micro"),
+        round_long(F.lit(1000000.0) * (mean - F.lit(2) * sigma)).alias("lower_micro"),
     )
 
 
@@ -1163,13 +1156,12 @@ def win_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("n") == 14)
     rsi = F.when(
         F.col("g") + F.col("l") > 0,
-        F.floor(
+        round_long(
             F.lit(1000000.0)
             * F.lit(100.0)
             * F.col("g").cast("double")
             / (F.col("g") + F.col("l")).cast("double")
-            + F.lit(0.5)
-        ).cast("long"),
+        ),
     )
     return sums.select(
         "event_type",
@@ -1233,13 +1225,11 @@ def win_seasonal_naive_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fc.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_obs"),
         F.sum(err).cast("long").alias("abs_err_sum"),
-        F.floor(F.lit(1000000.0) * F.sum(err) / F.count(F.lit(1)) + F.lit(0.5))
-        .cast("long")
+        round_long(F.lit(1000000.0) * F.sum(err) / F.count(F.lit(1)))
         .alias("mae_micro"),
         F.when(
             F.sum("x") > 0,
-            F.floor(F.lit(1000000.0) * F.sum(err) / F.sum("x") + F.lit(0.5))
-            .cast("long"),
+            round_long(F.lit(1000000.0) * F.sum(err) / F.sum("x")),
         ).alias("wape_micro"),
     )
 
@@ -1321,12 +1311,7 @@ def win_stochastic_oscillator(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lo",
         F.when(
             hi > lo,
-            F.floor(
-                F.lit(1000000.0)
-                * (F.col("x") - lo).cast("double")
-                / (hi - lo)
-                + F.lit(0.5)
-            ).cast("long"),
+            round_long(F.lit(1000000.0) * (F.col("x") - lo).cast("double") / (hi - lo)),
         ).alias("k_micro"),
     )
     wk = Window.partitionBy("event_type").orderBy("d")
@@ -1337,16 +1322,14 @@ def win_stochastic_oscillator(spark: SparkSession, sf_dir: str) -> DataFrame:
         "hi",
         "lo",
         "k_micro",
-        F.floor(
+        round_long(
             (
                 F.col("k_micro").cast("double")
                 + F.lag("k_micro", 1).over(wk)
                 + F.lag("k_micro", 2).over(wk)
             )
             / F.lit(3.0)
-            + F.lit(0.5)
         )
-        .cast("long")
         .alias("d_micro"),
     )
 
@@ -1412,13 +1395,7 @@ def win_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "d",
         "x",
-        F.floor(
-            F.lit(1000000.0)
-            * (F.col("x") - runmax).cast("double")
-            / runmax
-            + F.lit(0.5)
-        )
-        .cast("long")
+        round_long(F.lit(1000000.0) * (F.col("x") - runmax).cast("double") / runmax)
         .alias("dd_micro"),
     )
     w = (
@@ -1441,8 +1418,7 @@ def win_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("d", "yyyy-MM-dd").alias("day"),
         "x",
         "dd_micro",
-        F.floor(F.sqrt(F.col("sum_sq").cast("double") / F.lit(7.0)) + F.lit(0.5))
-        .cast("long")
+        round_long(F.sqrt(F.col("sum_sq").cast("double") / F.lit(7.0)))
         .alias("ulcer_micro"),
     )
 
@@ -1495,13 +1471,7 @@ def win_seasonal_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one per-(type, dow) window over the calendar-bounded daily
     rollup — seven interleaved expanding windows per type, one sort."""
-    e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type",
-        F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
-        .cast("long")
-        .alias("t"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("x"))
+    daily = _daily_counts(load(spark, sf_dir, "events"))
     w = (
         Window.partitionBy("event_type", F.col("t") % 7)
         .orderBy("t")
@@ -1525,12 +1495,11 @@ def win_seasonal_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         nh.alias("n_history"),
         F.when(
             (nh >= 2) & (var_num > 0),
-            F.floor(
+            round_long(
                 F.lit(1000000.0)
                 * (F.col("x").cast("double") - s1d / nh)
                 / F.sqrt(var_num / (nh.cast("double") * nh))
-                + F.lit(0.5)
-            ).cast("long"),
+            ),
         ).alias("seasonal_z_micro"),
     )
 
@@ -1598,13 +1567,7 @@ def win_xmr_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one lag window + one |types|-sized limit dim broadcast back
     — the bollinger cost class with an O(types) second stage."""
-    e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type",
-        F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
-        .cast("long")
-        .alias("t"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("x"))
+    daily = _daily_counts(load(spark, sf_dir, "events"))
     w = Window.partitionBy("event_type").orderBy("t")
     mr = daily.select(
         "event_type",
@@ -1620,10 +1583,9 @@ def win_xmr_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     center = F.col("sx").cast("double") / F.col("n_days")
     spread = F.lit(2.66) * F.col("smr").cast("double") / F.col("nmr")
-    micro = lambda c: F.floor(F.lit(1000000.0) * c + F.lit(0.5)).cast("long")
     j = mr.join(F.broadcast(lims), "event_type").filter(F.col("nmr") >= 1)
-    ucl = micro(center + spread)
-    lcl = micro(center - spread)
+    ucl = round_long(F.lit(1000000.0) * (center + spread))
+    lcl = round_long(F.lit(1000000.0) * (center - spread))
     return j.select(
         "event_type",
         F.col("t").alias("day_idx"),
@@ -1692,10 +1654,8 @@ def win_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey",
         "l_linenumber",
         "l_partkey",
-        F.floor(F.col("l_quantity") + F.lit(0.5)).cast("long").alias("qty"),
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("price_cents"),
+        round_long(F.col("l_quantity")).alias("qty"),
+        round_long(F.col("l_extendedprice") * 100).alias("price_cents"),
     )
     w = (
         Window.partitionBy("l_suppkey")
@@ -1705,12 +1665,11 @@ def win_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    vwap = F.floor(
+    vwap = round_long(
         F.lit(1000000.0)
         * F.sum(F.col("price_cents") * F.col("qty")).over(w).cast("double")
         / F.sum("qty").over(w)
-        + F.lit(0.5)
-    ).cast("long")
+    )
     return t.select(
         "l_suppkey",
         "l_shipdate",

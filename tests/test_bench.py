@@ -27,10 +27,13 @@ CITED_PATH = re.compile(
 
 # Near-twin scan: two top-level function bodies are near twins when they
 # share >= MIN_SHARED shingles of SHINGLE consecutive tokens, and those
-# are >= MIN_SHARE of the smaller body's shingles.
+# are >= MIN_SHARE of the smaller body's shingles -- or when they share
+# >= MIN_SHARED_BLOCK shingles whatever the share (a dozen or so dense
+# lines pasted between two long functions).
 SHINGLE = 12
 MIN_SHARED = 60
 MIN_SHARE = 0.5
+MIN_SHARED_BLOCK = 150
 _SKIPPED_TOKENS = {tokenize.COMMENT, tokenize.NL, tokenize.INDENT}
 # The near-twin pairs the package still holds, as (module:function,
 # module:function) under covid_data_pipeline_spark/.  A pair not listed
@@ -154,7 +157,9 @@ def near_twins(root: pathlib.Path) -> set[tuple[str, str]]:
     for a, b in itertools.combinations(sorted(shingles), 2):
         shared = len(shingles[a] & shingles[b])
         smaller = min(len(shingles[a]), len(shingles[b]))
-        if shared >= MIN_SHARED and shared >= MIN_SHARE * smaller:
+        if shared >= MIN_SHARED_BLOCK or (
+            shared >= MIN_SHARED and shared >= MIN_SHARE * smaller
+        ):
             pairs.add((a, b))
     return pairs
 
@@ -164,9 +169,19 @@ def test_package_holds_no_new_near_twin_functions():
     assert not new, f"near-twin function bodies, fold them: {sorted(new)}"
 
 
+def _long_host(name: str, block: list[str], pad: int) -> str:
+    """A function of ``pad`` distinct filler lines around ``block``."""
+    filler = [f"    {name}_{i} = x * {i} + {pad * i + 7}" for i in range(pad)]
+    half = pad // 2
+    body = filler[:half] + block + filler[half:]
+    return "\n".join([f"def {name}(x):", *body, f"    return {name}_0"]) + "\n"
+
+
 def test_near_twin_scan_flags_a_copied_function(tmp_path):
     """A query copied into another module under a new name is a pair;
-    the scan skips the copy's docstring and comments."""
+    the scan skips the copy's docstring and comments.  A 25-line block
+    pasted between two long functions is a pair too, although it is far
+    under half of either body."""
     src = REPO / "covid_data_pipeline_spark" / "queries" / "joins.py"
     body = ast.get_source_segment(
         src.read_text(),
@@ -179,4 +194,82 @@ def test_near_twin_scan_flags_a_copied_function(tmp_path):
     copy.insert(-1, "    # a comment the scan skips")
     (tmp_path / "b.py").write_text("\n".join(copy) + "\n")
     (tmp_path / "c.py").write_text("def small():\n    return 1\n")
-    assert near_twins(tmp_path) == {("a.py:join_asof_nearest", "b.py:nearest_copy")}
+    block = [
+        f'    s{i} = F.sum(F.when(F.col("t") % 7 == {i % 7}, F.col("x{i}")))'
+        for i in range(25)
+    ]
+    (tmp_path / "d.py").write_text(_long_host("host_a", block, 120))
+    (tmp_path / "e.py").write_text(_long_host("host_b", block, 120))
+    shingles = {
+        **_function_shingles(tmp_path / "d.py", tmp_path),
+        **_function_shingles(tmp_path / "e.py", tmp_path),
+    }
+    shared = shingles["d.py:host_a"] & shingles["e.py:host_b"]
+    assert MIN_SHARED_BLOCK <= len(shared) < MIN_SHARE * len(shingles["d.py:host_a"])
+    assert near_twins(tmp_path) == {
+        ("a.py:join_asof_nearest", "b.py:nearest_copy"),
+        ("d.py:host_a", "e.py:host_b"),
+    }
+
+
+def _is_half(node: ast.AST) -> bool:
+    """``0.5`` or ``F.lit(0.5)``."""
+    if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute) \
+            and node.func.attr == "lit" and len(node.args) == 1:
+        node = node.args[0]
+    return isinstance(node, ast.Constant) and node.value == 0.5
+
+
+def rounding_copies(root: pathlib.Path) -> list[str]:
+    """Every ``F.floor(<e> + 0.5).cast("long")`` under ``root`` outside
+    ``queries/_helpers.py``, as ``path:line``: the output rounding is
+    ``_helpers.round_long`` and is spelled nowhere else."""
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "queries/_helpers.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "cast" and len(node.args) == 1
+                    and isinstance(node.args[0], ast.Constant)
+                    and node.args[0].value in ("long", "bigint")):
+                continue
+            fl = node.func.value
+            if (isinstance(fl, ast.Call) and isinstance(fl.func, ast.Attribute)
+                    and fl.func.attr == "floor" and len(fl.args) == 1
+                    and isinstance(fl.args[0], ast.BinOp)
+                    and isinstance(fl.args[0].op, ast.Add)
+                    and _is_half(fl.args[0].right)):
+                found.append(f"{rel}:{node.lineno}")
+    return found
+
+
+def test_package_spells_the_output_rounding_once():
+    copies = rounding_copies(REPO / "covid_data_pipeline_spark")
+    assert not copies, f"call _helpers.round_long instead: {copies}"
+
+
+def test_rounding_scan_flags_a_planted_copy(tmp_path):
+    """Inline, split over lines, with a bare 0.5, or inside a local
+    helper: each spelling is a copy; the one in _helpers is not."""
+    (tmp_path / "queries").mkdir()
+    (tmp_path / "queries" / "_helpers.py").write_text(
+        "def round_long(e):\n"
+        "    return F.floor(e + F.lit(0.5)).cast(\"long\")\n"
+    )
+    (tmp_path / "queries" / "q.py").write_text(
+        "def q(df):\n"
+        "    micro = lambda c: F.floor(F.lit(1e6) * c + F.lit(0.5)).cast(\"long\")\n"
+        "    return df.select(\n"
+        "        F.floor(F.col(\"x\") * 100 + 0.5).cast(\"long\"),\n"
+        "        F.floor(\n"
+        "            F.lit(1e6) * F.col(\"a\") / F.col(\"b\")\n"
+        "            + F.lit(0.5)\n"
+        "        )\n"
+        "        .cast(\"long\"),\n"
+        "        F.floor(F.col(\"y\") + F.lit(0.25)).cast(\"long\"),\n"
+        "        micro(F.col(\"z\")),\n"
+        "    )\n"
+    )
+    assert rounding_copies(tmp_path) == ["queries/q.py:2", "queries/q.py:4", "queries/q.py:5"]

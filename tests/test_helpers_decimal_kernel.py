@@ -1,4 +1,5 @@
-"""Pin the r12 two-long exact-sum kernel to the old decimal(28,6) path.
+"""Pin the r12 two-long exact-sum kernel to the old decimal(28,6) path,
+and the output rounding ``round_long`` to the oracle's.
 
 ``_helpers.dsum``/``davg`` replaced ``SUM(CAST(x AS DECIMAL(28,6)))``
 with a two-long split sum (module doc in _helpers.py).  These tests pin
@@ -13,14 +14,22 @@ few thousand rows each.
 
 from __future__ import annotations
 
+import math
 import random
 import struct
 from decimal import ROUND_HALF_UP, Decimal
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from covid_data_pipeline_spark.queries._helpers import DEC, _micro, davg, dsum
+from covid_data_pipeline_spark.queries._helpers import (
+    DEC,
+    _micro,
+    davg,
+    dsum,
+    round_long,
+)
 
 
 def _old_dsum(c):
@@ -153,3 +162,41 @@ def test_dsum_aggregates_with_primitive_buffers(spark):
         plan.count("sum(") >= 2
     ), plan
     assert "decimal(38,6)" not in plan, f"decimal sum buffer survived:\n{plan}"
+
+
+def test_round_long_matches_duckdb_floor_half_on_ties(spark):
+    """``round_long`` is the oracle's ``CAST(floor(v + 0.5) AS BIGINT)``
+    bit for bit: exact ties at both signs go toward +inf (-2.5 -> -2),
+    a value one ulp either side of a tie rounds to its side, and NULL
+    stays NULL.  The scaled column is the queries' micro quantization,
+    spelled as the oracle SQL spells it.  ``_micro`` (the dsum kernel's
+    HALF_UP on the decimal value) parts from it on negative ties
+    (-2.5e-6 -> -3, not -2) and where the double product 1e6 * x rounds
+    onto a tie the decimal value is below (2.4999999999999998e-6)."""
+    ties = [2.5, -2.5, 0.5, -0.5, 1.5, -1.5, 5e-7, -5e-7, 2.5e-6, -2.5e-6]
+    vals = ties + [
+        math.nextafter(t, side) for t in ties for side in (-math.inf, math.inf)
+    ]
+    vals += [0.0, -0.0, 4.4e9 + 0.5, -4.4e9 - 0.5, None]
+    rows = list(enumerate(vals))
+    got = spark.createDataFrame(rows, "id long, x double").select(
+        "id",
+        "x",
+        round_long(F.col("x")).alias("r"),
+        round_long(F.lit(1000000.0) * F.col("x")).alias("m"),
+        _micro(F.col("x")).alias("half_up"),
+    ).collect()
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (id BIGINT, x DOUBLE)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    want = con.execute(
+        "SELECT id, CAST(floor(x + 0.5) AS BIGINT),"
+        " CAST(floor(1000000.0 * x + 0.5) AS BIGINT) FROM t"
+    ).fetchall()
+    con.close()
+    assert sorted((r.id, r.r, r.m) for r in got) == sorted(want)
+    by_x = {r.x: (r.r, r.m) for r in got if r.x is not None}
+    assert by_x[-2.5] == (-2, -2500000) and by_x[-0.5] == (0, -500000)
+    assert [r for r in got if r.x is None][0][2:4] == (None, None)
+    parted = {r.x for r in got if r.half_up is not None and r.half_up != r.m}
+    assert parted == {-2.5e-6, -5e-7, math.nextafter(2.5e-6, -math.inf)}, parted

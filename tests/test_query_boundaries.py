@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta, timezone
 
+import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
@@ -42,6 +43,21 @@ def _events_dir(tmp_path, rows) -> str:
 
 def _run(spark, name, sf_dir, key):
     return {r[key]: r.asDict() for r in load_all()[name].fn(spark, sf_dir).collect()}
+
+
+def _oracle(name, sf_dir, key):
+    """The query's oracle SQL run by DuckDB over the events in ``sf_dir``."""
+    con = duckdb.connect()
+    try:
+        con.execute(
+            "CREATE VIEW events AS SELECT * FROM "
+            f"read_parquet('{sf_dir}/events.parquet')"
+        )
+        cur = con.execute(load_all()[name].oracle)
+        cols = [c[0] for c in cur.description]
+        return {r[cols.index(key)]: dict(zip(cols, r)) for r in cur.fetchall()}
+    finally:
+        con.close()
 
 
 @pytest.fixture
@@ -151,7 +167,12 @@ def test_stream_left_join_window_edges_and_closable_bound(spark, tmp_path):
     user 2's one microsecond more (NULL view), user 3 has no view (NULL
     view); user 4's purchase lies past max(ts) - 3 h, where the outer
     verdict is not final yet, so it is not emitted.  User 5's late view
-    moves the view side's watermark past the unmatched purchases."""
+    moves the view side's watermark past the unmatched purchases.
+
+    A feed that ends on a click leaves the join's watermark (the earlier
+    side's max event time, truncated to ms, - 2 h) before max(ts) - 3 h:
+    an unmatched purchase exactly 1 ms before that watermark is emitted,
+    one a microsecond later stays parked, and the oracle agrees."""
     sf_dir = _events_dir(tmp_path, [
         (1, T0, 1, "view", 1.0), (2, T0 + HOUR, 1, "purchase", 1.0),
         (3, T0, 2, "view", 1.0), (4, T0 + HOUR + US, 2, "purchase", 1.0),
@@ -165,3 +186,19 @@ def test_stream_left_join_window_edges_and_closable_bound(spark, tmp_path):
         2: (None, None),
         3: (None, None),
     }
+
+    ms = timedelta(milliseconds=1)
+    click_dir = tmp_path / "click"
+    click_dir.mkdir()
+    sf_dir = _events_dir(click_dir, [
+        (1, T0, 1, "view", 1.0), (2, T0 + HOUR, 1, "purchase", 1.0),
+        (3, T0 + HOUR, 2, "purchase", 1.0),
+        (4, T0 + 2 * HOUR - ms, 3, "purchase", 1.0),
+        (5, T0 + 2 * HOUR - ms + US, 4, "purchase", 1.0),
+        (6, T0 + 4 * HOUR + 700 * US, 5, "view", 1.0),
+        (7, T0 + 9 * HOUR, 6, "purchase", 1.0),
+        (8, T0 + 10 * HOUR, 7, "click", 1.0),
+    ])
+    got = _run(spark, "stream_stream_left_join", sf_dir, "user_id")
+    assert {u: r["view_id"] for u, r in got.items()} == {1: 1, 2: None, 3: None}
+    assert got == _oracle("stream_stream_left_join", sf_dir, "user_id")
