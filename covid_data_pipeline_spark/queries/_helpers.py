@@ -10,7 +10,12 @@ Two rounding kernels live here, and they round ties differently:
   zero.  Only reductions use it.
 
 :func:`_daily_counts` and :func:`_day_idx` hold the corpus's one daily
-event-count series and its day index.
+event-count series and its day index, and :func:`_day_diffs` its
+day-over-day change; :func:`_full_frames` is the trailing k-day frame
+over such a series, complete frames only.  :func:`_power_sums` and
+:func:`_pearson_micro` are the exact-integer Pearson r, and
+:func:`_ngram_hits` the eval n-gram overlap of the contamination check
+and the decontamination pipeline.
 
 Double summation is order-dependent, and Spark's partial aggregation
 order differs from DuckDB's — a raw ``SUM(double)`` can drift in the
@@ -85,7 +90,7 @@ still inside whole-stage codegen with map-side partial aggregation.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 # 38 total digits minus 6 fractional leaves 1e31 of headroom — no overflow
@@ -164,12 +169,116 @@ def _day_idx() -> Column:
     return F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date"))
 
 
-def _daily_counts(e: DataFrame) -> DataFrame:
-    """``(event_type, t, x)``: each event type's event count ``x`` per day,
-    ``t`` the BIGINT day number since 2024-01-01."""
-    return e.groupBy("event_type", _day_idx().cast("long").alias("t")).agg(
-        F.count(F.lit(1)).alias("x")
+def _daily_counts(e: DataFrame, *keys: str, x: str = "x") -> DataFrame:
+    """``(event_type, *keys, x)``: each event type's event count ``x`` per
+    day of ``ts``.  The day keys, in the order given, are ``t``, the
+    BIGINT day number since 2024-01-01 (the default), and ``d``, the
+    oracle's ``CAST(ts AS DATE)``.  A missing calendar day has no row."""
+    day = {"t": _day_idx().cast("long"), "d": F.to_date("ts")}
+    return e.groupBy("event_type", *(day[k].alias(k) for k in keys or ("t",))).agg(
+        F.count(F.lit(1)).alias(x)
     )
+
+
+def _day_diffs(e: DataFrame) -> DataFrame:
+    """``(event_type, d, diff)``: the day-over-day change of each event
+    type's daily count, ``x - LAG(x)`` over its days in date order; its
+    first day, which has no previous row, is dropped."""
+    wl = Window.partitionBy("event_type").orderBy("d")
+    return _daily_counts(e, "d").select(
+        "event_type", "d", (F.col("x") - F.lag("x").over(wl)).alias("diff")
+    ).filter(F.col("diff").isNotNull())
+
+
+def _full_frames(
+    daily: DataFrame, k: int, keep: list[str], cast: str | None = None, **aggs: Column
+) -> DataFrame:
+    """``(event_type, d, *keep, n, *aggs)`` over a per-type daily series:
+    each aggregate in ``aggs`` runs over the trailing frame of ``k`` rows
+    ending at the day (``ROWS k-1 PRECEDING``), cast to ``cast`` when it
+    is given; ``n`` counts the frame, and only complete frames
+    (``n = k``) are kept, the oracle's ``WHERE n = k``: a type with
+    fewer than ``k`` days emits no row."""
+    w = (
+        Window.partitionBy("event_type")
+        .orderBy("d")
+        .rowsBetween(1 - k, Window.currentRow)
+    )
+    framed = {name: a.over(w) for name, a in aggs.items()}
+    return daily.select(
+        "event_type",
+        "d",
+        *keep,
+        F.count(F.lit(1)).over(w).alias("n"),
+        *((c.cast(cast) if cast else c).alias(name) for name, c in framed.items()),
+    ).filter(F.col("n") == k)
+
+
+def _power_sums(x: str, y: str, n: str = "n") -> list[Column]:
+    """The aggregates behind a Pearson r or an OLS fit of ``y`` on ``x``:
+    the count ``n`` and the exact BIGINT sums ``sx, sy, sxy, sxx, syy``
+    (both columns BIGINT, so every sum is an integer and order-free)."""
+    cx, cy = F.col(x), F.col(y)
+    return [
+        F.count(F.lit(1)).alias(n),
+        F.sum(cx).alias("sx"),
+        F.sum(cy).alias("sy"),
+        F.sum(cx * cy).alias("sxy"),
+        F.sum(cx * cx).alias("sxx"),
+        F.sum(cy * cy).alias("syy"),
+    ]
+
+
+def _pearson_micro(n: str = "n") -> Column:
+    """Pearson r from :func:`_power_sums`' columns, micro-quantized: the
+    spreads are exact integers and r is one IEEE expression against two
+    sqrts.  NULL when either side has zero variance (or ``n`` is 1)."""
+    m, sx, sy = F.col(n), F.col("sx"), F.col("sy")
+    vx = m * F.col("sxx") - sx * sx
+    vy = m * F.col("syy") - sy * sy
+    return F.when(
+        (vx > 0) & (vy > 0),
+        round_long(
+            F.lit(1000000.0)
+            * (m * F.col("sxy") - sx * sy).cast("double")
+            / (F.sqrt(vx.cast("double")) * F.sqrt(vy.cast("double")))
+        ),
+    )
+
+
+def _ngram_hits(
+    docs: DataFrame, n: int, is_eval: Column, is_train: Column, *keep: str
+) -> DataFrame:
+    """``(eval_id, train_id, shared, n_eval_grams)``: for each pair of an
+    eval document (``is_eval``) and a training document (``is_train``)
+    of ``docs`` ``(doc_id, text, *keep)`` that share any word n-gram
+    (``n`` space-split tokens), the number of distinct n-grams they share
+    and the eval document's distinct n-gram count.  The eval side's
+    distinct n-grams are broadcast, so the corpus never shuffles by
+    n-gram."""
+    toks = F.split("text", " ")
+    grams_arr = F.transform(
+        F.sequence(F.lit(0), F.size(toks) - n),
+        lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
+    )
+    grams = docs.filter(F.size(toks) >= n).select(
+        "doc_id", *keep, F.explode(grams_arr).alias("gram")
+    )
+    eval_grams = (
+        grams.filter(is_eval)
+        .select(F.col("doc_id").alias("eval_id"), "gram")
+        .distinct()
+    )
+    eval_sizes = eval_grams.groupBy("eval_id").agg(
+        F.count(F.lit(1)).alias("n_eval_grams")
+    )
+    hits = (
+        grams.filter(is_train)
+        .join(F.broadcast(eval_grams), "gram")
+        .groupBy(F.col("doc_id").alias("train_id"), "eval_id")
+        .agg(F.countDistinct("gram").alias("shared"))
+    )
+    return hits.join(F.broadcast(eval_sizes), "eval_id")
 
 
 def dsum(col: Column | str) -> Column:

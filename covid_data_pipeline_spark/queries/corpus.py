@@ -19,12 +19,16 @@ from pyspark.sql import functions as F
 from ..io import load
 from ..registry import query
 from .aggregates import _central_moments
-from .pipeline import _side_moments
+from .pipeline import _side_moments, _welch_t_df
 from ._helpers import (
     KNUTH_MOD,
     KNUTH_MULT,
     _daily_counts,
+    _day_diffs,
     _day_idx,
+    _full_frames,
+    _pearson_micro,
+    _power_sums,
     davg,
     round_long,
     sql_davg,
@@ -931,10 +935,7 @@ def ts_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     that, rescale counts (e.g. to thousands) before folding.  DuckDB
     twin folds the identical recurrence with list_reduce."""
     ev = load(spark, sf_dir, "events")
-    daily = (
-        ev.groupBy("event_type", F.col("ts").cast("date").alias("d"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    daily = _daily_counts(ev, "d", x="n")
     series = (
         daily.groupBy("event_type")
         .agg(
@@ -986,9 +987,7 @@ def _lag_products(
     Σ y_t² cast to ``den_type`` and ``n_k`` is the BIGINT Σ y_t·y_{t-k}.
     The lag windows partition per event_type over one row per day, and
     the 7 lag products ride one window pass and one small aggregate."""
-    daily = e.groupBy(
-        "event_type", F.to_date("ts").alias("d")
-    ).agg(F.count(F.lit(1)).alias("x"))
+    daily = _daily_counts(e, "d")
     stats = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("nd"), F.sum("x").alias("tot")
     )
@@ -1202,8 +1201,8 @@ def ts_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale split, same as the ts siblings: corpus-sized work = the one
     daily aggregate; the fold runs over ~one value per day per type."""
     e = load(spark, sf_dir, "events")
-    daily = e.groupBy("event_type", F.to_date("ts").alias("d")).agg(
-        F.count(F.lit(1)).cast("double").alias("x")
+    daily = _daily_counts(e, "d").select(
+        "event_type", "d", F.col("x").cast("double").alias("x")
     )
     series = daily.groupBy("event_type").agg(
         F.transform(
@@ -1305,9 +1304,7 @@ def win_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     (calendar-bounded, the ts-family doctrine); corpus-sized work is
     the single daily aggregate."""
     e = load(spark, sf_dir, "events")
-    daily = e.groupBy("event_type", F.to_date("ts").alias("d")).agg(
-        F.count(F.lit(1)).alias("v")
-    )
+    daily = _daily_counts(e, "d", x="v")
     w = (
         Window.partitionBy("event_type")
         .orderBy("d")
@@ -1572,40 +1569,24 @@ def win_rolling_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     ts_seasonal_decompose edge policy.  The window partitions per
     event_type over ~one row per day (calendar-bounded); corpus-sized
     work is the one daily aggregate."""
-    e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type",
-        F.to_date("ts").alias("d"),
-        F.datediff(F.to_date("ts"), F.lit("2024-01-01").cast("date"))
-        .cast("long")
-        .alias("t"),
-    ).agg(F.count(F.lit(1)).alias("y"))
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("d")
-        .rowsBetween(-6, Window.currentRow)
-    )
-    sums = daily.select(
-        "event_type",
-        "d",
-        F.count(F.lit(1)).over(w).alias("n"),
-        F.sum("t").over(w).alias("st"),
-        F.sum("y").over(w).alias("sy"),
-        F.sum(F.col("t") * F.col("y")).over(w).alias("sty"),
-        F.sum(F.col("t") * F.col("t")).over(w).alias("stt"),
+    sums = _full_frames(
+        _daily_counts(load(spark, sf_dir, "events"), "d", "t", x="y"),
+        7,
+        [],
+        st=F.sum("t"),
+        sy=F.sum("y"),
+        sty=F.sum(F.col("t") * F.col("y")),
+        stt=F.sum(F.col("t") * F.col("t")),
     )
     slope = round_long(
         F.lit(1000000.0)
         * (F.col("n") * F.col("sty") - F.col("st") * F.col("sy")).cast("double")
         / (F.col("n") * F.col("stt") - F.col("st") * F.col("st"))
     )
-    return (
-        sums.filter(F.col("n") == 7)
-        .select(
-            "event_type",
-            F.date_format("d", "yyyy-MM-dd").alias("day"),
-            slope.alias("slope_micro"),
-        )
+    return sums.select(
+        "event_type",
+        F.date_format("d", "yyyy-MM-dd").alias("day"),
+        slope.alias("slope_micro"),
     )
 
 
@@ -1934,10 +1915,7 @@ def ts_lttb_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # algebra hangs off checkpoint leaves instead of replaying it (and
     # so the 15 stacked per-step projections analyze against a leaf,
     # not the full upstream plan) — r11, the graph-family idiom.
-    daily = e.groupBy(
-        "event_type",
-        _day_idx().cast("long").alias("t"),
-    ).agg(F.count(F.lit(1)).alias("v")).localCheckpoint(eager=False)
+    daily = _daily_counts(e, x="v").localCheckpoint(eager=False)
     bounds = daily.groupBy("event_type").agg(
         F.min("t").alias("t_lo"),
         F.max("t").alias("t_hi"),
@@ -2764,14 +2742,8 @@ def ts_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two window passes sharing the (event_type, d) sort over the
     calendar-bounded daily rollup (the win_rsi shape), then a tiny
     per-type aggregate."""
-    e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.col("ts").cast("date").alias("d")
-    ).agg(F.count(F.lit(1)).alias("x"))
+    diffs = _day_diffs(load(spark, sf_dir, "events")).filter(F.col("diff") != 0)
     wl = Window.partitionBy("event_type").orderBy("d")
-    diffs = daily.select(
-        "event_type", "d", (F.col("x") - F.lag("x").over(wl)).alias("diff")
-    ).filter(F.col("diff").isNotNull() & (F.col("diff") != 0))
     signs = diffs.select(
         "event_type",
         "d",
@@ -2918,6 +2890,20 @@ def _chisq_contrib_micro() -> Column:
     )
 
 
+def _midrank_x2(v: Column) -> Column:
+    """``r2``: twice the midrank of ``v`` within its event type, ties
+    sharing one value -- min rank + max rank of the tie group,
+    ``2 * RANK + (tie size - 1)`` -- so the half ranks stay an exact
+    BIGINT."""
+    w = Window.partitionBy("event_type").orderBy(v)
+    wt = Window.partitionBy("event_type", v)
+    return (
+        (F.rank().over(w) + (F.count(F.lit(1)).over(wt) - 1) + F.rank().over(w))
+        .cast("long")
+        .alias("r2")
+    )
+
+
 @query(
     "agg_mannwhitney_u",
     oracle="""
@@ -3009,20 +2995,7 @@ def agg_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
         "x",
         F.when((F.col("t") % 7).isin(5, 6), 1).otherwise(0).alias("is_wkend"),
     )
-    w = Window.partitionBy("event_type").orderBy("x")
-    wt = Window.partitionBy("event_type", "x")
-    ranked = grp.select(
-        "event_type",
-        "x",
-        "is_wkend",
-        (
-            F.rank().over(w)
-            + (F.count(F.lit(1)).over(wt) - 1)
-            + F.rank().over(w)
-        )
-        .cast("long")
-        .alias("r2"),
-    )
+    ranked = grp.select("event_type", "x", "is_wkend", _midrank_x2(F.col("x")))
     agg = ranked.groupBy("event_type").agg(
         F.sum(F.when(F.col("is_wkend") == 1, 1).otherwise(0))
         .cast("long")
@@ -3578,26 +3551,16 @@ def agg_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(wk, 0).otherwise(x)).cast("long").alias("s2"),
         F.sum(F.when(wk, 0).otherwise(x * x)).cast("long").alias("ss2"),
     )
-    mv = _side_moments(sums, "event_type")
-    n1, n2 = F.col("n1"), F.col("n2")
-    m1, m2, v1, v2 = F.col("m1"), F.col("m2"), F.col("v1"), F.col("v2")
-    se2 = v1 / n1 + v2 / n2
-    df_den = (v1 / n1) * (v1 / n1) / (n1 - 1) + (v2 / n2) * (v2 / n2) / (
-        n2 - 1
-    )
+    n1, n2, v1, v2 = F.col("n1"), F.col("n2"), F.col("v1"), F.col("v2")
+    diff = F.col("m1") - F.col("m2")
     pooled = ((n1 - 1) * v1 + (n2 - 1) * v2) / (n1 + n2 - 2)
-    return mv.select(
+    return _side_moments(sums, "event_type").select(
         "event_type",
         n1.alias("n_weekend"),
         n2.alias("n_weekday"),
-        F.when(se2 > 0, round_long(F.lit(1000000.0) * ((m1 - m2) / F.sqrt(se2)))).alias(
-            "t_micro"
-        ),
-        F.when(df_den > 0, round_long(F.lit(1000000.0) * ((se2 * se2) / df_den))).alias(
-            "df_micro"
-        ),
+        *_welch_t_df(diff),
         F.when(
-            pooled > 0, round_long(F.lit(1000000.0) * ((m1 - m2) / F.sqrt(pooled)))
+            pooled > 0, round_long(F.lit(1000000.0) * (diff / F.sqrt(pooled)))
         ).alias("cohens_d_micro"),
     )
 
@@ -3672,9 +3635,7 @@ def agg_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: additive partials — per-shard (n, s1..s4) tuples ADD, so the
     normality score of any rollup grain is five-integer arithmetic."""
     e = load(spark, sf_dir, "events")
-    daily = e.groupBy("event_type", F.col("ts").cast("date")).agg(
-        F.count(F.lit(1)).cast("long").alias("x")
-    )
+    daily = _daily_counts(e, "d")
     x = F.col("x")
     sums = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -3775,9 +3736,7 @@ def agg_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     the (n_i, s_i, ss_i) tuples are additive partials that merge across
     shards without re-scanning."""
     e = load(spark, sf_dir, "events")
-    daily = e.groupBy("event_type", F.col("ts").cast("date")).agg(
-        F.count(F.lit(1)).cast("long").alias("x")
-    )
+    daily = _daily_counts(e, "d")
     x = F.col("x")
     per_group = daily.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_i"),
@@ -4029,30 +3988,9 @@ def ts_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("tb") == F.col("ta") + F.col("lag")),
         )
     )
-    sums = pairs.groupBy("type_a", "type_b", "lag").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("xa").cast("long").alias("sx"),
-        F.sum("xb").cast("long").alias("sy"),
-        F.sum(F.col("xa") * F.col("xb")).cast("long").alias("sxy"),
-        F.sum(F.col("xa") * F.col("xa")).cast("long").alias("sxx"),
-        F.sum(F.col("xb") * F.col("xb")).cast("long").alias("syy"),
-    )
-    nn, sx, sy = F.col("n"), F.col("sx"), F.col("sy")
-    vx = nn * F.col("sxx") - sx * sx
-    vy = nn * F.col("syy") - sy * sy
+    sums = pairs.groupBy("type_a", "type_b", "lag").agg(*_power_sums("xa", "xb"))
     return sums.select(
-        "type_a",
-        "type_b",
-        "lag",
-        "n",
-        F.when(
-            (vx > 0) & (vy > 0),
-            round_long(
-                F.lit(1000000.0)
-                * (nn * F.col("sxy") - sx * sy).cast("double")
-                / (F.sqrt(vx.cast("double")) * F.sqrt(vy.cast("double")))
-            ),
-        ).alias("r_micro"),
+        "type_a", "type_b", "lag", "n", _pearson_micro().alias("r_micro")
     )
 
 
@@ -5045,15 +4983,7 @@ def agg_wilcoxon_signed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_type", (F.col("x") - F.col("px")).alias("d"))
         .filter(F.col("d") != 0)
     )
-    w = Window.partitionBy("event_type").orderBy(F.abs("d"))
-    wt = Window.partitionBy("event_type", F.abs("d"))
-    ranked = pairs.select(
-        "event_type",
-        "d",
-        (F.rank().over(w) + (F.count(F.lit(1)).over(wt) - 1) + F.rank().over(w))
-        .cast("long")
-        .alias("r2"),
-    )
+    ranked = pairs.select("event_type", "d", _midrank_x2(F.abs("d")))
     agg = ranked.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs"),
         F.sum(F.when(F.col("d") > 0, F.col("r2")).otherwise(0))

@@ -382,7 +382,7 @@ def sim_ann_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", _vec("embedding").alias("vec")
     )
     sigged = e.withColumn("bucket", _signature(_PLANES))
-    return _probe_top5(sigged, ["bucket"], distinct=False)
+    return _probe_top5(sigged, ["bucket"])
 
 
 def _signature(planes: list[list[float]]) -> Column:
@@ -401,13 +401,14 @@ def _signature(planes: list[list[float]]) -> Column:
     return sig
 
 
-def _probe_top5(sigged: DataFrame, on: list[str], distinct: bool) -> DataFrame:
+def _probe_top5(
+    sigged: DataFrame, on: list[str], dedup: list[str] | None = None
+) -> DataFrame:
     """``(query_id, neighbor_id, cosine, rn)``: each query vector (vec_id
     < 10) of ``sigged`` ``(vec_id, vec, *on)`` probes its own bucket and
     every bucket one bit away, meets the corpus in a broadcast equi-join
     on ``on`` (ending in ``bucket``), and keeps its top 5 by rounded
-    exact cosine.  ``distinct`` collapses a candidate that several
-    tables propose before the re-rank window."""
+    exact cosine (:func:`_rerank_top5`, which ``dedup`` is passed to)."""
     probes = F.array(
         *[
             F.col("bucket") if m == 0 else F.col("bucket").bitwiseXOR(F.lit(m))
@@ -423,14 +424,26 @@ def _probe_top5(sigged: DataFrame, on: list[str], distinct: bool) -> DataFrame:
     c = sigged.select(
         F.col("vec_id").alias("neighbor_id"), F.col("vec").alias("c_vec"), *on
     )
+    return _rerank_top5(c, q, on, dedup)
+
+
+def _rerank_top5(
+    c: DataFrame, q: DataFrame, on: str | list[str], dedup: list[str] | None
+) -> DataFrame:
+    """``(query_id, neighbor_id, cosine, rn)``: the corpus side ``c``
+    ``(neighbor_id, c_vec, *on)`` meets the broadcast query side ``q``
+    ``(query_id, q_vec, *on)`` in an equi-join on ``on``; each candidate
+    other than the query itself scores its exact cosine rounded to 6
+    places, ``dedup`` (when given) collapses a candidate proposed more
+    than once, and each query keeps its top 5 (cosine desc, then id)."""
     cos = F.round(_dot("q_vec", "c_vec") / (_norm("q_vec") * _norm("c_vec")), 6)
     cand = (
         c.join(F.broadcast(q), on=on)
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", cos.alias("cosine"))
     )
-    if distinct:
-        cand = cand.distinct()
+    if dedup:
+        cand = cand.dropDuplicates(dedup)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
     )
@@ -674,7 +687,11 @@ def sim_ann_multitable(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("tb"),
     ).select("vec_id", "vec", F.col("tb.t").alias("t"), F.col("tb.bucket").alias("bucket"))
-    return _probe_top5(sigged, ["t", "bucket"], distinct=True)
+    # a candidate that both tables propose is one row: the whole
+    # (query_id, neighbor_id, cosine) row is the key, a plain distinct
+    return _probe_top5(
+        sigged, ["t", "bucket"], dedup=["query_id", "neighbor_id", "cosine"]
+    )
 
 
 _IVF_NPROBE = 2
@@ -792,20 +809,8 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         ranked.filter((F.col("vec_id") < 10) & (F.col("crank") <= _IVF_NPROBE))
         .select(F.col("vec_id").alias("query_id"), F.col("vec").alias("q_vec"), "cell")
     )
-    cos = F.round(_dot("q_vec", "c_vec") / (_norm("q_vec") * _norm("c_vec")), 6)
-    cand = (
-        corpus_cells.join(F.broadcast(query_cells), on="cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", cos.alias("cosine"))
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        cand.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= 5)
-        .select("query_id", "neighbor_id", "cosine", "rn")
+    return _rerank_top5(
+        corpus_cells, query_cells, "cell", ["query_id", "neighbor_id"]
     )
 
 
@@ -870,13 +875,7 @@ def sim_normalize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     expansion, DuckDB via a 1e6-scaled multiply, and ~1 in 5k values
     lands on opposite sides of a half-boundary.)"""
     e = load(spark, sf_dir, "embeddings")
-    v = _vec("embedding")
-    l2 = F.sqrt(
-        F.aggregate(
-            F.zip_with(v, v, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-        )
-    )
-    withn = e.select("vec_id", "embedding", l2.alias("l2"))
+    withn = e.select("vec_id", "embedding", _norm(_vec("embedding")).alias("l2"))
     return withn.select(
         "vec_id",
         "l2",
@@ -917,15 +916,8 @@ def embed_matryoshka_truncate(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded; no rounding applied)."""
     e = load(spark, sf_dir, "embeddings")
     head = F.slice(_vec("embedding"), 1, _MRL_DIM)
-    l2 = F.sqrt(
-        F.aggregate(
-            F.zip_with(head, head, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
     return (
-        e.select("vec_id", head.alias("head"), l2.alias("l2"))
+        e.select("vec_id", head.alias("head"), _norm(head).alias("l2"))
         .select("vec_id", "l2", F.posexplode("head").alias("pos", "comp"))
         .select("vec_id", "pos", (F.col("comp") / F.col("l2")).alias("unit"))
     )
@@ -1034,6 +1026,56 @@ def _l2(a: Column | str, b: Column | str) -> Column:
     return F.aggregate(d, F.lit(0.0), lambda acc, x: acc + x)
 
 
+# Deterministic k-means (sim_pq_adc_rerank's codebooks,
+# dedup_semdedup_kmeans' clusters): Knuth-hash-seeded init, Lloyd
+# rounds of a map-side argmin and exact-decimal centroid means.
+
+
+def _knuth_seeds(en: DataFrame, k: int, key: str) -> DataFrame:
+    """``(vec_id, <key>)``: the first ``k`` vec_ids of ``en`` in Knuth-hash
+    order, numbered 1..k in that order -- the k-means initial centroids."""
+    return (
+        en.select("vec_id", ((F.col("vec_id") * KNUTH_MULT) % KNUTH_MOD).alias("h"))
+        .orderBy("h", "vec_id")
+        .limit(k)
+        .select(
+            "vec_id",
+            F.row_number().over(Window.orderBy("h", "vec_id")).alias(key),
+        )
+    )
+
+
+def _nearest(cands: Column, v: Column | str, key: str) -> Column:
+    """The ``key`` of the centroid in ``cands`` (an array of ``(key, cv)``
+    structs) nearest to ``v`` by :func:`_l2`, ties to the lower key:
+    ``array_min`` over ``(d, key)`` structs, the lexicographic
+    dist-then-id order of ``min(struct(d, key))``, evaluated map-side."""
+    return F.array_min(
+        F.transform(
+            cands,
+            lambda c: F.struct(
+                _l2(v, c.getField("cv")).alias("d"),
+                c.getField(key).alias(key),
+            ),
+        )
+    ).getField(key)
+
+
+def _mean_vec(v: str, dim: int) -> Column:
+    """The elementwise mean of a group's ``dim``-wide vectors ``v``, each
+    component an exact decimal sum, so the centroid is the same on any
+    partitioning."""
+    return F.array(
+        *[
+            (
+                F.sum(F.col(v)[i].cast("decimal(28,12)")).cast("double")
+                / F.count(F.lit(1))
+            )
+            for i in range(dim)
+        ]
+    )
+
+
 @query("sim_pq_adc_rerank", oracle=None)  # rows-only: ANN is approximate
 def sim_pq_adc_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN with asymmetric-distance shortlist and
@@ -1104,15 +1146,7 @@ def sim_pq_adc_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # -- train: deterministic init (first K vec_ids in Knuth-hash order,
     # the same K vectors seed every subspace), then Lloyd rounds
-    seed_ids = (
-        en.select("vec_id", ((F.col("vec_id") * KNUTH_MULT) % KNUTH_MOD).alias("h"))
-        .orderBy("h", "vec_id")
-        .limit(_PQ_K)
-        .select(
-            "vec_id",
-            F.row_number().over(Window.orderBy("h", "vec_id")).alias("code"),
-        )
-    )
+    seed_ids = _knuth_seeds(en, _PQ_K, "code")
     centroids = subs.join(F.broadcast(seed_ids), "vec_id").select(
         "s", "code", F.col("sv").alias("cv")
     )
@@ -1130,28 +1164,6 @@ def sim_pq_adc_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # groupBy(s, code) carrying _PQ_SUB decimal-sum buffers (the same
     # order-free addends the posexplode path summed).  One exchange per
     # round, none in encode.
-    def _nearest(cands: Column, sv: Column | str) -> Column:
-        return F.array_min(
-            F.transform(
-                cands,
-                lambda c: F.struct(
-                    _l2(sv, c.getField("cv")).alias("d"),
-                    c.getField("code").alias("code"),
-                ),
-            )
-        )
-
-    def _mean_cv(vcol: str) -> Column:
-        return F.array(
-            *[
-                (
-                    F.sum(F.col(vcol)[i].cast("decimal(28,12)")).cast("double")
-                    / F.count(F.lit(1))
-                )
-                for i in range(_PQ_SUB)
-            ]
-        )
-
     for _ in range(_PQ_ITERS):
         cands = centroids.groupBy("s").agg(
             F.collect_list(F.struct("code", "cv")).alias("cands")
@@ -1160,9 +1172,9 @@ def sim_pq_adc_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "s",
             "sv",
-            _nearest(F.col("cands"), "sv").getField("code").alias("code"),
+            _nearest(F.col("cands"), "sv", "code").alias("code"),
         )
-        centroids = best.groupBy("s", "code").agg(_mean_cv("sv").alias("cv"))
+        centroids = best.groupBy("s", "code").agg(_mean_vec("sv", _PQ_SUB).alias("cv"))
     # codebook = model state: 256 entries to the driver, re-broadcast —
     # truncates the unrolled training lineage out of the scoring plan
     book = spark.createDataFrame(
@@ -1177,7 +1189,7 @@ def sim_pq_adc_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes = subs.join(F.broadcast(book_arr), "s").select(
         "vec_id",
         "s",
-        _nearest(F.col("cands"), "sv").getField("code").alias("code"),
+        _nearest(F.col("cands"), "sv", "code").alias("code"),
     )
 
     # -- per-query ADC tables (query x codebook, corpus untouched)
@@ -1273,7 +1285,7 @@ def dedup_semdedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     en = (
         _emb_dedup_corpus(spark, sf_dir)
         .select("vec_id", "nvec")
-        # mean_cv below indexes nvec[0.._EMB_DIM): any other width would
+        # _mean_vec below indexes nvec[0.._EMB_DIM): any other width would
         # give null or truncated centroids, so the first job fails instead
         .filter(
             F.assert_true(
@@ -1289,15 +1301,7 @@ def dedup_semdedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (r11 single-file trap)
     par = _corpus_par(spark, sf_dir)
     en = en.repartition(par, "vec_id").localCheckpoint(eager=False)
-    seeds = (
-        en.select("vec_id", ((F.col("vec_id") * KNUTH_MULT) % KNUTH_MOD).alias("h"))
-        .orderBy("h", "vec_id")
-        .limit(_SEM_K)
-        .select(
-            "vec_id",
-            F.row_number().over(Window.orderBy("h", "vec_id")).alias("cid"),
-        )
-    )
+    seeds = _knuth_seeds(en, _SEM_K, "cid")
     cent = en.join(F.broadcast(seeds), "vec_id").select(
         "cid", F.col("nvec").alias("cv")
     )
@@ -1311,38 +1315,18 @@ def dedup_semdedup_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one groupBy(cid) carrying 64 decimal-sum buffers (the same
     # order-free addends).  One exchange per round, none in the final
     # assignment.
-    def _nearest_cid(cands: Column, vcol: str) -> Column:
-        return F.array_min(
-            F.transform(
-                cands,
-                lambda c: F.struct(
-                    _l2(vcol, c.getField("cv")).alias("d"),
-                    c.getField("cid").alias("cid"),
-                ),
-            )
-        ).getField("cid")
-
-    mean_cv = F.array(
-        *[
-            (
-                F.sum(F.col("nvec")[i].cast("decimal(28,12)")).cast("double")
-                / F.count(F.lit(1))
-            )
-            for i in range(_EMB_DIM)
-        ]
-    )
     for _ in range(_SEM_ITERS):
         cands = cent.agg(F.collect_list(F.struct("cid", "cv")).alias("cands"))
         best = en.crossJoin(F.broadcast(cands)).select(
-            "vec_id", "nvec", _nearest_cid(F.col("cands"), "nvec").alias("cid")
+            "vec_id", "nvec", _nearest(F.col("cands"), "nvec", "cid").alias("cid")
         )
-        cent = best.groupBy("cid").agg(mean_cv.alias("cv"))
+        cent = best.groupBy("cid").agg(_mean_vec("nvec", _EMB_DIM).alias("cv"))
     book = spark.createDataFrame(
         [(r["cid"], r["cv"]) for r in cent.collect()], "cid int, cv array<double>"
     )
     book_arr = book.agg(F.collect_list(F.struct("cid", "cv")).alias("cands"))
     clustered = en.crossJoin(F.broadcast(book_arr)).select(
-        "vec_id", "nvec", _nearest_cid(F.col("cands"), "nvec").alias("cid")
+        "vec_id", "nvec", _nearest(F.col("cands"), "nvec", "cid").alias("cid")
     )
     a = clustered.select(F.col("vec_id").alias("a_id"), "cid", F.col("nvec").alias("a_vec"))
     b = clustered.select(F.col("vec_id").alias("b_id"), "cid", F.col("nvec").alias("b_vec"))

@@ -23,7 +23,7 @@ from pyspark.sql import types as T
 
 from ..io import load
 from ..registry import query
-from ._helpers import round_long
+from ._helpers import _ngram_hits, _power_sums, round_long
 
 
 @query(
@@ -457,6 +457,31 @@ def quality_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ols_fit(
+    n: Column, sx: Column, sy: Column, sxy: Column, sxx: Column, syy: Column
+) -> tuple[Column, Column, Column, Column]:
+    """``(slope, denx, slope_micro, r2_micro)`` of the OLS fit of y on x
+    from its double power sums, in one IEEE expression shape per engine.
+    A degenerate fit (x without spread, ``denx = 0``; for R^2 also y
+    without spread) is NULL on both engines: Spark's x/0 is NULL, but
+    DuckDB's IEEE division yields inf, whose BIGINT cast errors -- the
+    cross-engine divergence class the Durbin-Levinson v>0 gate closed
+    (corpus.py)."""
+    num = n * sxy - sx * sy
+    denx = n * sxx - sx * sx
+    deny = n * syy - sy * sy
+    slope = num / denx
+    return (
+        slope,
+        denx,
+        F.when(denx > 0, round_long(F.lit(1000000.0) * slope)),
+        F.when(
+            (denx > 0) & (deny > 0),
+            round_long(F.lit(1000000.0) * ((num * num) / (denx * deny))),
+        ),
+    )
+
+
 _CONTAM_N = 3          # n-gram length (fixture demo; production uses 8+)
 _CONTAM_EVAL_MOD = 97  # doc_id % 97 == 0 -> held-out "eval" doc
 _CONTAM_MIN_RATIO = 0.04  # fixture demo; production uses ~0.3
@@ -528,33 +553,10 @@ def corpus_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism, "doc_id"
     )
-    toks = F.split("text", " ")
-    grams_arr = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - _CONTAM_N),
-        lambda i: F.array_join(F.slice(toks, i + 1, _CONTAM_N), " "),
-    )
-    grams = (
-        d.filter(F.size(toks) >= _CONTAM_N)
-        .select("doc_id", F.explode(grams_arr).alias("gram"))
-    )
     is_eval = F.col("doc_id") % _CONTAM_EVAL_MOD == 0
-    eval_grams = (
-        grams.filter(is_eval)
-        .select(F.col("doc_id").alias("eval_id"), "gram")
-        .distinct()
-    )
-    eval_sizes = eval_grams.groupBy("eval_id").agg(
-        F.count(F.lit(1)).alias("n_eval_grams")
-    )
-    hits = (
-        grams.filter(~is_eval)
-        .join(F.broadcast(eval_grams), "gram")
-        .groupBy(F.col("doc_id").alias("train_id"), "eval_id")
-        .agg(F.countDistinct("gram").alias("shared"))
-    )
     contamination = F.col("shared").cast("double") / F.col("n_eval_grams")
     return (
-        hits.join(F.broadcast(eval_sizes), "eval_id")
+        _ngram_hits(d, _CONTAM_N, is_eval, ~is_eval)
         .filter(contamination >= _CONTAM_MIN_RATIO)
         .select(
             "train_id",
@@ -1850,25 +1852,15 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     folded = arrs.select("lang", "n_terms", s.alias("s"))
-    n = F.col("n_terms").cast("double")
-    num = n * F.col("s")[2] - F.col("s")[0] * F.col("s")[1]
-    denx = n * F.col("s")[3] - F.col("s")[0] * F.col("s")[0]
-    deny = n * F.col("s")[4] - F.col("s")[1] * F.col("s")[1]
-    # Degenerate languages (a single ranked term → denx = 0, or all
-    # top-K counts identical → deny = 0) must be NULL on BOTH engines:
-    # Spark's x/0 is NULL but DuckDB's IEEE division yields inf, whose
-    # BIGINT cast errors — the same cross-engine divergence class the
-    # Durbin-Levinson v>0 gate closed (corpus.py).
+    sx, sy, sxy, sxx, syy = (F.col("s")[i] for i in range(5))
+    _, _, slope_micro, r2_micro = _ols_fit(
+        F.col("n_terms").cast("double"), sx, sy, sxy, sxx, syy
+    )
     return folded.select(
         "lang",
         "n_terms",
-        F.when(denx > 0, round_long(F.lit(1000000.0) * (num / denx))).alias(
-            "slope_micro"
-        ),
-        F.when(
-            (denx > 0) & (deny > 0),
-            round_long(F.lit(1000000.0) * ((num * num) / (denx * deny))),
-        ).alias("r2_micro"),
+        slope_micro.alias("slope_micro"),
+        r2_micro.alias("r2_micro"),
     )
 
 
@@ -2720,26 +2712,20 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         round_long(F.lit(1000000.0) * F.log(F.col("n_p").cast("double"))).alias("x"),
         round_long(F.lit(1000000.0) * F.log(F.col("v_p").cast("double"))).alias("y"),
     )
-    sums = terms.groupBy("lang").agg(
-        F.count(F.lit(1)).cast("long").alias("np"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-    )
-    npd = F.col("np").cast("double")
+    sums = terms.groupBy("lang").agg(*_power_sums("x", "y", n="np"))
     sxd, syd = F.col("sx").cast("double"), F.col("sy").cast("double")
-    sxyd = F.col("sxy").cast("double")
-    sxxd, syyd = F.col("sxx").cast("double"), F.col("syy").cast("double")
-    num = npd * sxyd - sxd * syd
-    denx = npd * sxxd - sxd * sxd
-    deny = npd * syyd - syd * syd
-    slope = num / denx
+    slope, denx, slope_micro, r2_micro = _ols_fit(
+        F.col("np").cast("double"),
+        sxd,
+        syd,
+        F.col("sxy").cast("double"),
+        F.col("sxx").cast("double"),
+        F.col("syy").cast("double"),
+    )
     return sums.select(
         "lang",
         F.col("np").alias("n_points"),
-        F.when(denx > 0, round_long(F.lit(1000000.0) * slope)).alias("beta_micro"),
+        slope_micro.alias("beta_micro"),
         F.when(
             denx > 0,
             round_long(
@@ -2747,10 +2733,7 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
                 * F.exp((syd - slope * sxd) / F.col("np") / F.lit(1000000.0))
             ),
         ).alias("k_micro"),
-        F.when(
-            (denx > 0) & (deny > 0),
-            round_long(F.lit(1000000.0) * ((num * num) / (denx * deny))),
-        ).alias("r2_micro"),
+        r2_micro.alias("r2_micro"),
     )
 
 

@@ -12,7 +12,7 @@ exactly one shuffle for the window and one for the report aggregation.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load
@@ -511,7 +511,7 @@ def analytics_brand_revenue_or(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- round-2 additions: the remaining expressible TPC-H query shapes ----
 
-from ._helpers import DEC, KNUTH_MOD, KNUTH_MULT, _day_idx, davg, dsum, round_long, sql_davg, sql_dsum  # noqa: E402
+from ._helpers import DEC, KNUTH_MOD, KNUTH_MULT, _daily_counts, _day_idx, _ngram_hits, davg, dsum, round_long, sql_davg, sql_dsum  # noqa: E402
 
 
 @query(
@@ -1931,6 +1931,25 @@ def _side_moments(sums: DataFrame, *keys: str) -> DataFrame:
     )
 
 
+def _welch_t_df(diff: Column) -> tuple[Column, Column]:
+    """``t_micro`` and ``df_micro`` over :func:`_side_moments`' columns:
+    Welch's t of the mean difference ``diff`` and its
+    Welch-Satterthwaite degrees of freedom, micro-quantized; each is NULL
+    where its denominator (the squared standard error, or the df
+    denominator) is not positive."""
+    n1, n2, v1, v2 = F.col("n1"), F.col("n2"), F.col("v1"), F.col("v2")
+    se2 = v1 / n1 + v2 / n2
+    df_den = (v1 / n1) * (v1 / n1) / (n1 - 1) + (v2 / n2) * (v2 / n2) / (n2 - 1)
+    return (
+        F.when(se2 > 0, round_long(F.lit(1000000.0) * (diff / F.sqrt(se2)))).alias(
+            "t_micro"
+        ),
+        F.when(df_den > 0, round_long(F.lit(1000000.0) * ((se2 * se2) / df_den))).alias(
+            "df_micro"
+        ),
+    )
+
+
 @query(
     "pipeline_experiment_readout",
     oracle=f"""
@@ -2053,9 +2072,6 @@ def pipeline_experiment_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     mv = _side_moments(arms)
     n1, n2 = F.col("n1"), F.col("n2")
     m1, m2, v1, v2 = F.col("m1"), F.col("m2"), F.col("v1"), F.col("v2")
-    se = F.sqrt(v1 / n1 + v2 / n2)
-    dfn = (v1 / n1 + v2 / n2) * (v1 / n1 + v2 / n2)
-    dfd = (v1 / n1) * (v1 / n1) / (n1 - 1) + (v2 / n2) * (v2 / n2) / (n2 - 1)
     lift = (m2 - m1) / m1
     lift_se = F.sqrt(
         v2 / n2 / (m1 * m1) + (m2 * m2) * (v1 / n1) / (m1 * m1 * m1 * m1)
@@ -2075,10 +2091,7 @@ def pipeline_experiment_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("srm_flag"),
         round_long(F.lit(1000000.0) * m1).alias("mean_a_micro"),
         round_long(F.lit(1000000.0) * m2).alias("mean_b_micro"),
-        F.when(
-            v1 / n1 + v2 / n2 > 0, round_long(F.lit(1000000.0) * ((m2 - m1) / se))
-        ).alias("t_micro"),
-        F.when(dfd > 0, round_long(F.lit(1000000.0) * (dfn / dfd))).alias("df_micro"),
+        *_welch_t_df(m2 - m1),
         F.when(m1 > 0, round_long(F.lit(1000000.0) * lift)).alias("lift_micro"),
         F.when(
             m1 > 0, round_long(F.lit(1000000.0) * (lift - F.lit(1.96) * lift_se))
@@ -2343,37 +2356,14 @@ def pipeline_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     b = (F.col("doc_id") * KNUTH_MULT) % KNUTH_MOD % 100
     base = d.select("doc_id", "text", b.alias("b"))
-    toks = F.split("text", " ")
-    grams_arr = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - _DECON_N),
-        lambda i: F.array_join(F.slice(toks, i + 1, _DECON_N), " "),
-    )
-    grams = (
-        base.filter(F.size(toks) >= _DECON_N)
-        .select("doc_id", "b", F.explode(grams_arr).alias("gram"))
-        # r11 A/B NOTE: a lazy localCheckpoint here (grams feeds both
-        # the eval side and the train-side hits join) measured a clear
-        # LOSS interleaved at sf0.1 (4.13 vs 3.11 s median) — unlike
-        # pipeline_corpus_build's fan-out, materializing ~500k exploded
-        # gram STRINGS costs more than recomputing the explode twice.
-        # Left un-truncated.
-    )
-    eval_grams = (
-        grams.filter(F.col("b") >= 90)
-        .select(F.col("doc_id").alias("eval_id"), "gram")
-        .distinct()
-    )
-    eval_sizes = eval_grams.groupBy("eval_id").agg(
-        F.count(F.lit(1)).alias("n_eval_grams")
-    )
-    hits = (
-        grams.filter(F.col("b") < 80)
-        .join(F.broadcast(eval_grams), "gram")
-        .groupBy(F.col("doc_id").alias("train_id"), "eval_id")
-        .agg(F.countDistinct("gram").alias("shared"))
-    )
+    # r11 A/B NOTE: a lazy localCheckpoint of the exploded n-grams (they
+    # feed both the eval side and the train-side hits join) measured a
+    # clear LOSS interleaved at sf0.1 (4.13 vs 3.11 s median) — unlike
+    # pipeline_corpus_build's fan-out, materializing ~500k exploded
+    # gram STRINGS costs more than recomputing the explode twice.  Left
+    # un-truncated.
     killed = (
-        hits.join(F.broadcast(eval_sizes), "eval_id")
+        _ngram_hits(base, _DECON_N, F.col("b") >= 90, F.col("b") < 80, "b")
         .filter(
             F.col("shared").cast("double") / F.col("n_eval_grams")
             >= _DECON_RATIO
@@ -2485,9 +2475,7 @@ def pipeline_daily_series_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     sharing the (event_type, di) sort — at 100 TB the corpus-sized
     stage is the daily aggregate, the report is dashboard-sized."""
     e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.col("ts").cast("date").alias("d")
-    ).agg(F.count(F.lit(1)).alias("n"))
+    daily = _daily_counts(e, "d", x="n")
     wcum = (
         Window.partitionBy("event_type")
         .orderBy("d")

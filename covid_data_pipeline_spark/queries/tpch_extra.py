@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import query
-from ._helpers import DEC, dsum, round_long, sql_dsum
+from ._helpers import DEC, _pearson_micro, _power_sums, dsum, round_long, sql_dsum
 
 
 @query(
@@ -1885,30 +1885,12 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = ed.select(
         F.col("dxa").alias("x"), F.col("dxb").alias("y")
     ).unionByName(ed.select(F.col("dxb").alias("x"), F.col("dxa").alias("y")))
-    sums = pairs.agg(
-        F.count(F.lit(1)).cast("long").alias("m"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-    )
+    sums = pairs.agg(*_power_sums("x", "y", n="m"))
     nn = deg.agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
-    j = sums.crossJoin(F.broadcast(nn))
-    m, sx, sy = F.col("m"), F.col("sx"), F.col("sy")
-    vx = m * F.col("sxx") - sx * sx
-    vy = m * F.col("syy") - sy * sy
-    return j.select(
+    return sums.crossJoin(F.broadcast(nn)).select(
         "n_nodes",
-        (m / 2).cast("long").alias("n_edges"),
-        F.when(
-            (vx > 0) & (vy > 0),
-            round_long(
-                F.lit(1000000.0)
-                * (m * F.col("sxy") - sx * sy).cast("double")
-                / (F.sqrt(vx.cast("double")) * F.sqrt(vy.cast("double")))
-            ),
-        ).alias("assortativity_micro"),
+        (F.col("m") / 2).cast("long").alias("n_edges"),
+        _pearson_micro("m").alias("assortativity_micro"),
     )
 
 

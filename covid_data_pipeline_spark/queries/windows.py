@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import query
-from ._helpers import DEC, _daily_counts, round_long
+from ._helpers import DEC, _daily_counts, _day_diffs, _full_frames, round_long
 
 
 @query(
@@ -905,9 +905,7 @@ def win_hampel_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     linear-interpolate.  Flag emitted as INT (nullable-boolean
     doctrine)."""
     e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.col("ts").cast("date").alias("d")
-    ).agg(F.count(F.lit(1)).alias("n_day"))
+    daily = _daily_counts(e, "d", x="n_day")
     b = daily.select(
         F.col("event_type").alias("bt"),
         F.col("d").alias("bd"),
@@ -983,9 +981,7 @@ def win_week_over_week(spark: SparkSession, sf_dir: str) -> DataFrame:
     window, no global sort; at 100 TB the corpus-sized stage is the
     one daily aggregate."""
     e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.col("ts").cast("date").alias("d")
-    ).agg(F.count(F.lit(1)).alias("n"))
+    daily = _daily_counts(e, "d", x="n")
     prev = daily.select(
         "event_type",
         F.date_add("d", 7).alias("d"),
@@ -1048,22 +1044,13 @@ def win_bollinger_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded daily rollup — no global sort, corpus-sized work
     is the one daily aggregate."""
     e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.col("ts").cast("date").alias("d")
-    ).agg(F.count(F.lit(1)).alias("x"))
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("d")
-        .rowsBetween(-6, Window.currentRow)
+    sums = _full_frames(
+        _daily_counts(e, "d"),
+        7,
+        ["x"],
+        s1=F.sum("x"),
+        s2=F.sum(F.col("x") * F.col("x")),
     )
-    sums = daily.select(
-        "event_type",
-        "d",
-        "x",
-        F.count(F.lit(1)).over(w).alias("n"),
-        F.sum("x").over(w).alias("s1"),
-        F.sum(F.col("x") * F.col("x")).over(w).alias("s2"),
-    ).filter(F.col("n") == 7)
     nD = F.col("n").cast("double")
     mean = F.col("s1").cast("double") / F.col("n")
     sigma = F.sqrt(
@@ -1132,28 +1119,14 @@ def win_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst fuses them into sequential Window nodes over ONE
     exchange."""
     e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.col("ts").cast("date").alias("d")
-    ).agg(F.count(F.lit(1)).alias("x"))
-    wl = Window.partitionBy("event_type").orderBy("d")
-    diffs = daily.select(
-        "event_type", "d", (F.col("x") - F.lag("x").over(wl)).alias("diff")
-    ).filter(F.col("diff").isNotNull())
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("d")
-        .rowsBetween(-13, Window.currentRow)
+    sums = _full_frames(
+        _day_diffs(e),
+        14,
+        [],
+        cast="long",
+        g=F.sum(F.greatest("diff", F.lit(0))),
+        l=F.sum(F.greatest(-F.col("diff"), F.lit(0))),
     )
-    sums = diffs.select(
-        "event_type",
-        "d",
-        F.count(F.lit(1)).over(w).alias("n"),
-        F.sum(F.greatest("diff", F.lit(0))).over(w).cast("long").alias("g"),
-        F.sum(F.greatest(-F.col("diff"), F.lit(0)))
-        .over(w)
-        .cast("long")
-        .alias("l"),
-    ).filter(F.col("n") == 14)
     rsi = F.when(
         F.col("g") + F.col("l") > 0,
         round_long(
@@ -1214,9 +1187,7 @@ def win_seasonal_naive_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one corpus-sized daily aggregate, one per-type lag window
     over calendar-bounded rows, one tiny final aggregate."""
     e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.col("ts").cast("date").alias("d")
-    ).agg(F.count(F.lit(1)).alias("x"))
+    daily = _daily_counts(e, "d")
     w = Window.partitionBy("event_type").orderBy("d")
     fc = daily.select(
         "event_type", "x", F.lag("x", 7).over(w).alias("xhat")
@@ -1286,22 +1257,9 @@ def win_stochastic_oscillator(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-type windows over the calendar-bounded daily rollup —
     the win_bollinger_exact cost class exactly."""
     e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.col("ts").cast("date").alias("d")
-    ).agg(F.count(F.lit(1)).cast("long").alias("x"))
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("d")
-        .rowsBetween(-6, Window.currentRow)
+    framed = _full_frames(
+        _daily_counts(e, "d"), 7, ["x"], cast="long", hi=F.max("x"), lo=F.min("x")
     )
-    framed = daily.select(
-        "event_type",
-        "d",
-        "x",
-        F.count(F.lit(1)).over(w).alias("n"),
-        F.max("x").over(w).cast("long").alias("hi"),
-        F.min("x").over(w).cast("long").alias("lo"),
-    ).filter(F.col("n") == 7)
     hi, lo = F.col("hi"), F.col("lo")
     k = framed.select(
         "event_type",
@@ -1382,9 +1340,7 @@ def win_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded daily rollup, fused into the same sort order —
     one partition-local sort, no extra shuffle."""
     e = load(spark, sf_dir, "events")
-    daily = e.groupBy(
-        "event_type", F.col("ts").cast("date").alias("d")
-    ).agg(F.count(F.lit(1)).cast("long").alias("x"))
+    daily = _daily_counts(e, "d")
     wrun = (
         Window.partitionBy("event_type")
         .orderBy("d")
@@ -1398,21 +1354,13 @@ def win_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         round_long(F.lit(1000000.0) * (F.col("x") - runmax).cast("double") / runmax)
         .alias("dd_micro"),
     )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("d")
-        .rowsBetween(-6, Window.currentRow)
+    rolled = _full_frames(
+        dd,
+        7,
+        ["x", "dd_micro"],
+        cast="long",
+        sum_sq=F.sum(F.col("dd_micro") * F.col("dd_micro")),
     )
-    rolled = dd.select(
-        "event_type",
-        "d",
-        "x",
-        "dd_micro",
-        F.count(F.lit(1)).over(w).alias("n"),
-        F.sum(F.col("dd_micro") * F.col("dd_micro")).over(w)
-        .cast("long")
-        .alias("sum_sq"),
-    ).filter(F.col("n") == 7)
     return rolled.select(
         "event_type",
         F.date_format("d", "yyyy-MM-dd").alias("day"),

@@ -28,18 +28,21 @@ CITED_PATH = re.compile(
 # Near-twin scan: two top-level function bodies are near twins when they
 # share >= MIN_SHARED shingles of SHINGLE consecutive tokens, and those
 # are >= MIN_SHARE of the smaller body's shingles -- or when they share
-# >= MIN_SHARED_BLOCK shingles whatever the share (a dozen or so dense
+# >= MIN_SHARED_BLOCK shingles whatever the share (eight or so dense
 # lines pasted between two long functions).
 SHINGLE = 12
 MIN_SHARED = 60
 MIN_SHARE = 0.5
-MIN_SHARED_BLOCK = 150
+MIN_SHARED_BLOCK = 100
 _SKIPPED_TOKENS = {tokenize.COMMENT, tokenize.NL, tokenize.INDENT}
 # The near-twin pairs the package still holds, as (module:function,
 # module:function) under covid_data_pipeline_spark/.  A pair not listed
-# here is a new copy: fold it into a shared helper instead of adding it.
+# here is a new copy: fold it into a shared helper instead of adding it;
+# a pair belongs here only when that helper would have to branch on
+# which query it serves.
 NEAR_TWINS_ALLOWED = {
-    # distinct TPC-H queries (Q5 / Q10, Q8 / Q9) whose join chains share a prefix
+    # distinct TPC-H queries (Q5 / Q10, Q8 / Q9) whose join chains share a
+    # prefix: one builder for both would branch on the query's own joins
     ("queries/pipeline.py:analytics_local_supplier_volume",
      "queries/pipeline.py:analytics_returned_items"),
     ("queries/tpch_extra.py:analytics_market_share",
@@ -273,3 +276,105 @@ def test_rounding_scan_flags_a_planted_copy(tmp_path):
         "    )\n"
     )
     assert rounding_copies(tmp_path) == ["queries/q.py:2", "queries/q.py:4", "queries/q.py:5"]
+
+
+def _unwrapped(node: ast.AST) -> ast.AST:
+    """``node`` without its trailing ``.alias(..)`` and non-date
+    ``.cast(..)`` calls."""
+    while (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+           and (node.func.attr == "alias"
+                or (node.func.attr == "cast"
+                    and not (node.args and isinstance(node.args[0], ast.Constant)
+                             and node.args[0].value == "date")))):
+        node = node.func.value
+    return node
+
+
+def _call_name(node: ast.AST) -> str | None:
+    if not isinstance(node, ast.Call):
+        return None
+    f = node.func
+    return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+
+def _is_ts(node: ast.AST) -> bool:
+    """``"ts"`` or ``F.col("ts")``."""
+    if _call_name(node) == "col" and len(node.args) == 1:
+        node = node.args[0]
+    return isinstance(node, ast.Constant) and node.value == "ts"
+
+
+def _is_day_of_ts(node: ast.AST) -> bool:
+    """The calendar day of ``ts`` as a DATE (``F.to_date(ts)``,
+    ``ts.cast("date")``) or as a day number (``_day_idx()``, or a
+    ``datediff`` from such a DATE)."""
+    node = _unwrapped(node)
+    name = _call_name(node)
+    if name == "cast":
+        return _is_ts(node.func.value)
+    if name == "to_date":
+        return bool(node.args) and _is_ts(node.args[0])
+    if name == "datediff":
+        return bool(node.args) and _is_day_of_ts(node.args[0])
+    return name == "_day_idx"
+
+
+def daily_series_copies(root: pathlib.Path) -> list[str]:
+    """Every per-event-type daily count under ``root`` outside
+    ``queries/_helpers.py``, as ``path:line``: a ``groupBy`` on
+    ``event_type`` and the day of ``ts`` only, aggregated by one bare
+    ``count``.  That series is ``_helpers._daily_counts`` and is spelled
+    nowhere else."""
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "queries/_helpers.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if _call_name(node) != "agg" or len(node.args) != 1:
+                continue
+            gb = node.func.value
+            if _call_name(gb) not in ("groupBy", "groupby"):
+                continue
+            keys = [k for k in gb.args
+                    if not (isinstance(k, ast.Constant) and k.value == "event_type")]
+            if (len(keys) < len(gb.args) and keys and all(map(_is_day_of_ts, keys))
+                    and _call_name(_unwrapped(node.args[0])) == "count"):
+                found.append(f"{rel}:{gb.lineno}")
+    return found
+
+
+def test_package_spells_the_daily_series_once():
+    copies = daily_series_copies(REPO / "covid_data_pipeline_spark")
+    assert not copies, f"call _helpers._daily_counts instead: {copies}"
+
+
+def test_daily_series_scan_flags_a_planted_copy(tmp_path):
+    """Inline, split over lines, with ``to_date`` or the day number:
+    each spelling is a copy.  A second aggregate, a day of week, another
+    key beside the day, and the copy in _helpers are not."""
+    (tmp_path / "queries").mkdir()
+    (tmp_path / "queries" / "_helpers.py").write_text(
+        "def _daily_counts(e):\n"
+        "    return e.groupBy(\"event_type\", _day_idx().alias(\"t\")).agg(F.count(F.lit(1)))\n"
+    )
+    (tmp_path / "queries" / "q.py").write_text(
+        "def q(e):\n"
+        "    a = e.groupBy(\"event_type\", F.col(\"ts\").cast(\"date\").alias(\"d\")).agg(F.count(F.lit(1)).alias(\"x\"))\n"
+        "    b = e.groupBy(\n"
+        "        \"event_type\",\n"
+        "        F.col(\"ts\").cast(\"date\"),\n"
+        "    ).agg(\n"
+        "        F.count(F.lit(1)).cast(\"long\").alias(\"n\")\n"
+        "    )\n"
+        "    c = e.groupBy(\"event_type\", F.to_date(\"ts\").alias(\"d\")).agg(F.count(\"*\"))\n"
+        "    d = e.groupBy(\"event_type\", _day_idx().cast(\"long\").alias(\"t\")).agg(F.count(F.lit(1)))\n"
+        "    f = e.groupBy(\"event_type\", F.to_date(\"ts\")).agg(F.count(F.lit(1)), F.sum(\"value\"))\n"
+        "    g = e.groupBy(\"event_type\", (_day_idx() % 7).alias(\"dow\")).agg(F.count(F.lit(1)))\n"
+        "    h = e.groupBy(\"event_type\", F.to_date(\"ts\"), \"user_id\").agg(F.count(F.lit(1)))\n"
+        "    i = e.groupBy(\"user_id\", F.to_date(\"ts\")).agg(F.count(F.lit(1)))\n"
+        "    return a, b, c, d, f, g, h, i\n"
+    )
+    assert daily_series_copies(tmp_path) == [
+        "queries/q.py:2", "queries/q.py:3", "queries/q.py:9", "queries/q.py:10",
+    ]

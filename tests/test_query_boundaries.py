@@ -1,9 +1,12 @@
 """Boundary witnesses for the shared helpers behind the as-of joins, the
-gap fills, the kNN-graph census and the stream-stream left join: each
-query runs on a few hand-built rows placed exactly on its edges (a gap
-of exactly the tolerance, equidistant neighbours, leading and trailing
-gaps, a degree-1 node, a view exactly one hour before its purchase),
-which the generated fixtures never pin down row by row."""
+gap fills, the kNN-graph census, the stream-stream left join and the
+daily event-count series (its trailing frames, calendar gaps, Pearson r
+and midranks): each query runs on a few hand-built rows placed exactly
+on its edges (a gap of exactly the tolerance, equidistant neighbours,
+leading and trailing gaps, a degree-1 node, a view exactly one hour
+before its purchase, a type one day short of a full frame, a missing
+day, a constant series, tied counts), which the generated fixtures
+never pin down row by row."""
 
 from __future__ import annotations
 
@@ -14,6 +17,11 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from pyspark.sql import functions as F
+
+from covid_data_pipeline_spark.io import load
+from covid_data_pipeline_spark.queries._helpers import _daily_counts
+from covid_data_pipeline_spark.queries.corpus import _midrank_x2
 from covid_data_pipeline_spark.queries.joins import _ASOF_TOL_US
 from covid_data_pipeline_spark.registry import load_all
 
@@ -45,7 +53,7 @@ def _run(spark, name, sf_dir, key):
     return {r[key]: r.asDict() for r in load_all()[name].fn(spark, sf_dir).collect()}
 
 
-def _oracle(name, sf_dir, key):
+def _oracle_rows(name, sf_dir) -> list[dict]:
     """The query's oracle SQL run by DuckDB over the events in ``sf_dir``."""
     con = duckdb.connect()
     try:
@@ -55,9 +63,21 @@ def _oracle(name, sf_dir, key):
         )
         cur = con.execute(load_all()[name].oracle)
         cols = [c[0] for c in cur.description]
-        return {r[cols.index(key)]: dict(zip(cols, r)) for r in cur.fetchall()}
+        return [dict(zip(cols, r)) for r in cur.fetchall()]
     finally:
         con.close()
+
+
+def _oracle(name, sf_dir, key):
+    return {r[key]: r for r in _oracle_rows(name, sf_dir)}
+
+
+def _both(spark, name, sf_dir) -> tuple[list[dict], list[dict]]:
+    """The query's rows and its oracle's on ``sf_dir``, in one order."""
+    def order(rows):
+        return sorted(rows, key=lambda r: [str(r[c]) for c in sorted(r)])
+    got = [r.asDict() for r in load_all()[name].fn(spark, sf_dir).collect()]
+    return order(got), order(_oracle_rows(name, sf_dir))
 
 
 @pytest.fixture
@@ -202,3 +222,93 @@ def test_stream_left_join_window_edges_and_closable_bound(spark, tmp_path):
     got = _run(spark, "stream_stream_left_join", sf_dir, "user_id")
     assert {u: r["view_id"] for u, r in got.items()} == {1: 1, 2: None, 3: None}
     assert got == _oracle("stream_stream_left_join", sf_dir, "user_id")
+
+
+DAY = timedelta(days=1)
+D0 = datetime(2024, 1, 1, 12, tzinfo=timezone.utc)  # day number 0, a Monday
+
+
+def _daily_dir(tmp_path, counts: dict[str, list[int]]) -> str:
+    """An sf dir whose events give each type ``counts[type][i]`` events
+    on day ``i``; a 0 leaves the day out of the series."""
+    rows = []
+    for etype, xs in counts.items():
+        for day, x in enumerate(xs):
+            rows += [(len(rows) + j + 1, D0 + day * DAY, 1, etype, 1.0) for j in range(x)]
+    return _events_dir(tmp_path, rows)
+
+
+def _day(i: int) -> str:
+    return (D0 + i * DAY).strftime("%Y-%m-%d")
+
+
+@pytest.mark.parametrize("name, days", [
+    ("win_bollinger_exact", 7),
+    ("win_stochastic_oscillator", 7),
+    ("win_ulcer_index", 7),
+    ("win_rsi", 15),  # a 14-row frame of day-over-day diffs
+])
+def test_trailing_frame_needs_all_its_days(spark, tmp_path, name, days):
+    """A type one day short of a complete frame emits nothing; a type with
+    exactly enough days emits one row, on its last day."""
+    xs = [3, 1, 4, 1, 5, 9, 2, 6, 5, 3, 5, 8, 9, 7, 9]
+    sf_dir = _daily_dir(tmp_path, {"full": xs[:days], "short": xs[:days - 1]})
+    got, want = _both(spark, name, sf_dir)
+    assert got == want
+    assert [(r["event_type"], r["day"]) for r in got] == [("full", _day(days - 1))]
+
+
+def test_missing_day_is_absent_and_week_over_week_skips_it(spark, tmp_path):
+    """Day 7 has no events: the series has no row for it (not a 0), and
+    week-over-week emits neither day 7 nor day 14, whose week-ago day it
+    is, while every other day from 8 on meets its week-ago day."""
+    xs = [2, 3, 4, 5, 6, 7, 8, 0, 9, 10, 11, 12, 13, 14, 15]
+    sf_dir = _daily_dir(tmp_path, {"view": xs})
+    series = _daily_counts(load(spark, sf_dir, "events"), "d").collect()
+    assert sorted((r["d"].isoformat(), r["x"]) for r in series) == [
+        (_day(i), x) for i, x in enumerate(xs) if x
+    ]
+    got, want = _both(spark, "win_week_over_week", sf_dir)
+    assert got == want
+    assert [(r["day"], r["n"], r["n_prev"]) for r in got] == [
+        (_day(i), xs[i], xs[i - 7]) for i in range(8, 14)
+    ]
+
+
+def test_pearson_r_is_null_without_variance_or_with_one_pair(spark, tmp_path):
+    """``b`` is constant, so every r against it is NULL; lags of 2 days
+    overlap three-day series in one pair, whose r is NULL too; ``a`` and
+    ``c`` correlate 0.5 at lag 0 and -1 at lag 1 (two pairs)."""
+    sf_dir = _daily_dir(tmp_path, {"a": [1, 2, 3], "b": [2, 2, 2], "c": [1, 3, 2]})
+    got, want = _both(spark, "ts_cross_correlation", sf_dir)
+    assert got == want
+    r = {(x["type_a"], x["type_b"], x["lag"]): (x["n"], x["r_micro"]) for x in got}
+    assert r[("a", "b", 0)] == (3, None) and r[("b", "c", 0)] == (3, None)
+    assert r[("a", "c", 0)] == (3, 500000)
+    assert r[("a", "c", 1)] == (2, -1000000)
+    assert r[("a", "c", 2)] == r[("a", "c", -2)] == (1, None)
+    assert ("a", "c", 3) not in r
+
+
+def test_tied_values_share_one_midrank(spark, tmp_path):
+    """Ranks 2-4 tie at midrank 3 and ranks 5-7 at 6 (doubled: 6 and 12).
+    Mann-Whitney's weekend days (t % 7 in 5, 6) hold one value of each
+    tie group, so 2*U1 = (6 + 12) - 2*3 = 12; Wilcoxon's week-over-week
+    diffs +1, -1, +2 tie on |d| = 1 (doubled midrank 3 each), so
+    2*W+ = 3 + 6 = 9."""
+    xs = [1, 2, 2, 3, 3, 2, 3]
+    df = spark.createDataFrame([("v", x) for x in xs], "event_type string, x long")
+    assert sorted(
+        tuple(r) for r in df.select("x", _midrank_x2(F.col("x"))).collect()
+    ) == [(1, 2), (2, 6), (2, 6), (2, 6), (3, 12), (3, 12), (3, 12)]
+
+    got, want = _both(spark, "agg_mannwhitney_u", _daily_dir(tmp_path, {"v": xs}))
+    assert got == want
+    assert [(r["n_weekend"], r["n_weekday"], r["u1_x2"]) for r in got] == [(2, 5, 12)]
+
+    paired = tmp_path / "paired"
+    paired.mkdir()
+    sf_dir = _daily_dir(paired, {"v": [5, 5, 5, 1, 1, 1, 1, 6, 4, 7]})
+    got, want = _both(spark, "agg_wilcoxon_signed", sf_dir)
+    assert got == want
+    assert [(r["n_pairs"], r["w_plus_x2"]) for r in got] == [(3, 9)]
