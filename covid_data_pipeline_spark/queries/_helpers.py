@@ -180,6 +180,22 @@ def _daily_counts(e: DataFrame, *keys: str, x: str = "x") -> DataFrame:
     )
 
 
+# The SQL twins of _daily_counts(e) and _daily_counts(e, "d"): the oracle
+# CTE daily(event_type, t, x), and daily(event_type, d, x).
+DAILY_SQL_CTE = """daily AS (
+        SELECT event_type,
+               CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE))
+                    AS BIGINT) AS t,
+               CAST(COUNT(*) AS BIGINT) AS x
+        FROM events GROUP BY 1, 2
+    )"""
+DAILY_D_SQL_CTE = """daily AS (
+        SELECT event_type, CAST(ts AS DATE) AS d,
+               CAST(COUNT(*) AS BIGINT) AS x
+        FROM events GROUP BY 1, 2
+    )"""
+
+
 def _day_diffs(e: DataFrame) -> DataFrame:
     """``(event_type, d, diff)``: the day-over-day change of each event
     type's daily count, ``x - LAG(x)`` over its days in date order; its
@@ -190,27 +206,23 @@ def _day_diffs(e: DataFrame) -> DataFrame:
     ).filter(F.col("diff").isNotNull())
 
 
-def _full_frames(
-    daily: DataFrame, k: int, keep: list[str], cast: str | None = None, **aggs: Column
-) -> DataFrame:
+def _full_frames(daily: DataFrame, k: int, keep: list[str], **aggs: Column) -> DataFrame:
     """``(event_type, d, *keep, n, *aggs)`` over a per-type daily series:
     each aggregate in ``aggs`` runs over the trailing frame of ``k`` rows
-    ending at the day (``ROWS k-1 PRECEDING``), cast to ``cast`` when it
-    is given; ``n`` counts the frame, and only complete frames
-    (``n = k``) are kept, the oracle's ``WHERE n = k``: a type with
-    fewer than ``k`` days emits no row."""
+    ending at the day (``ROWS k-1 PRECEDING``); ``n`` counts the frame,
+    and only complete frames (``n = k``) are kept, the oracle's
+    ``WHERE n = k``: a type with fewer than ``k`` days emits no row."""
     w = (
         Window.partitionBy("event_type")
         .orderBy("d")
         .rowsBetween(1 - k, Window.currentRow)
     )
-    framed = {name: a.over(w) for name, a in aggs.items()}
     return daily.select(
         "event_type",
         "d",
         *keep,
         F.count(F.lit(1)).over(w).alias("n"),
-        *((c.cast(cast) if cast else c).alias(name) for name, c in framed.items()),
+        *(a.over(w).alias(name) for name, a in aggs.items()),
     ).filter(F.col("n") == k)
 
 
@@ -279,6 +291,19 @@ def _ngram_hits(
         .agg(F.countDistinct("gram").alias("shared"))
     )
     return hits.join(F.broadcast(eval_sizes), "eval_id")
+
+
+def _ngram_hits_sql(is_train: str) -> str:
+    """The oracle CTE of :func:`_ngram_hits`' pair stage: hits(train_id,
+    eval_id, shared) over the CTEs grams ``g`` and eval_grams ``e``, for
+    the training n-grams where ``is_train`` holds."""
+    return f"""hits AS (
+        SELECT g.doc_id AS train_id, e.eval_id,
+               COUNT(DISTINCT g.gram) AS shared
+        FROM grams g JOIN eval_grams e ON g.gram = e.gram
+        WHERE {is_train}
+        GROUP BY g.doc_id, e.eval_id
+    )"""
 
 
 def dsum(col: Column | str) -> Column:

@@ -1306,9 +1306,9 @@ def agg_mad_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "agg_decay_weighted",
-    oracle=f"""
+# agg_decay_weighted's oracle, also stream_decay_weighted's: the
+# streaming query's final snapshot equals the batch aggregate.
+_DECAY_WEIGHTED_SQL = f"""
     WITH anchor AS (SELECT MAX(epoch_us(ts)) AS max_us FROM events)
     SELECT user_id,
            CAST(COUNT(*) AS BIGINT) AS n_events,
@@ -1318,7 +1318,12 @@ def agg_mad_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
                      " / 604800000000))")} AS decayed_count
     FROM events CROSS JOIN anchor
     GROUP BY user_id
-    """,
+    """
+
+
+@query(
+    "agg_decay_weighted",
+    oracle=_DECAY_WEIGHTED_SQL,
 )
 def agg_decay_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-decay-weighted per-user aggregates — the feature-store /
@@ -1539,24 +1544,9 @@ def _central_moments() -> tuple[Column, list[Column]]:
     ]
 
 
-@query(
-    "agg_moments_exact",
-    oracle="""
-    WITH sums AS (
-        SELECT l_returnflag,
-               CAST(COUNT(*) AS BIGINT) AS n,
-               CAST(SUM(q) AS BIGINT) AS s1,
-               CAST(SUM(q * q) AS BIGINT) AS s2,
-               CAST(SUM(q * q * q) AS BIGINT) AS s3,
-               CAST(SUM(q * q * q * q) AS BIGINT) AS s4
-        FROM (SELECT l_returnflag, CAST(l_quantity AS BIGINT) AS q
-              FROM lineitem)
-        GROUP BY l_returnflag
-    ),
-    mom AS (
-        SELECT l_returnflag, n,
-               CAST(s1 AS DOUBLE) / n AS mu,
-               CAST(s2 AS DOUBLE) / n
+# The SQL twin of _central_moments: the m2, m3, m4 select items over
+# the power sums n, s1..s4.
+_CENTRAL_MOMENTS_SQL = """CAST(s2 AS DOUBLE) / n
                    - (CAST(s1 AS DOUBLE) / n) * (CAST(s1 AS DOUBLE) / n)
                    AS m2,
                CAST(s3 AS DOUBLE) / n
@@ -1572,7 +1562,27 @@ def _central_moments() -> tuple[Column, list[Column]]:
                    - 3 * (CAST(s1 AS DOUBLE) / n)
                        * (CAST(s1 AS DOUBLE) / n)
                        * (CAST(s1 AS DOUBLE) / n)
-                       * (CAST(s1 AS DOUBLE) / n) AS m4
+                       * (CAST(s1 AS DOUBLE) / n) AS m4"""
+
+
+@query(
+    "agg_moments_exact",
+    oracle=f"""
+    WITH sums AS (
+        SELECT l_returnflag,
+               CAST(COUNT(*) AS BIGINT) AS n,
+               CAST(SUM(q) AS BIGINT) AS s1,
+               CAST(SUM(q * q) AS BIGINT) AS s2,
+               CAST(SUM(q * q * q) AS BIGINT) AS s3,
+               CAST(SUM(q * q * q * q) AS BIGINT) AS s4
+        FROM (SELECT l_returnflag, CAST(l_quantity AS BIGINT) AS q
+              FROM lineitem)
+        GROUP BY l_returnflag
+    ),
+    mom AS (
+        SELECT l_returnflag, n,
+               CAST(s1 AS DOUBLE) / n AS mu,
+               {_CENTRAL_MOMENTS_SQL}
         FROM sums
     )
     SELECT l_returnflag, n,
@@ -2209,9 +2219,10 @@ def agg_circular_mean_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "sql_aggregate_filter_clause",
-    oracle="""
+def _filter_clause_sql(lineitem: str) -> str:
+    """sql_aggregate_filter_clause's query over the table named
+    ``lineitem``: Spark and DuckDB run the same text."""
+    return f"""
     SELECT l_returnflag,
            CAST(COUNT(*) AS BIGINT) AS n_total,
            CAST(COUNT(*) FILTER (WHERE l_discount > 0.05) AS BIGINT)
@@ -2222,8 +2233,13 @@ def agg_circular_mean_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(COUNT(DISTINCT l_suppkey)
                     FILTER (WHERE l_quantity >= 25) AS BIGINT)
                AS n_bulk_suppliers
-    FROM lineitem GROUP BY l_returnflag
-    """,
+    FROM {lineitem} GROUP BY l_returnflag
+    """
+
+
+@query(
+    "sql_aggregate_filter_clause",
+    oracle=_filter_clause_sql("lineitem"),
 )
 def sql_aggregate_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SQL-standard FILTER (WHERE ...) aggregate modifier — four
@@ -2242,21 +2258,7 @@ def sql_aggregate_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     adds the usual expand-or-two-phase plan Catalyst picks for mixed
     distinct/non-distinct aggregates."""
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("sqlf_lineitem")
-    return spark.sql(
-        """
-        SELECT l_returnflag,
-               CAST(COUNT(*) AS BIGINT) AS n_total,
-               CAST(COUNT(*) FILTER (WHERE l_discount > 0.05) AS BIGINT)
-                   AS n_high_discount,
-               CAST(SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT))
-                        FILTER (WHERE l_linestatus = 'F') AS BIGINT)
-                   AS finished_cents,
-               CAST(COUNT(DISTINCT l_suppkey)
-                        FILTER (WHERE l_quantity >= 25) AS BIGINT)
-                   AS n_bulk_suppliers
-        FROM sqlf_lineitem GROUP BY l_returnflag
-        """
-    )
+    return spark.sql(_filter_clause_sql("sqlf_lineitem"))
 
 
 @query(

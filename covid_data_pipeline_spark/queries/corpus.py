@@ -18,9 +18,11 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import query
-from .aggregates import _central_moments
-from .pipeline import _side_moments, _welch_t_df
+from .aggregates import _CENTRAL_MOMENTS_SQL, _central_moments
+from .pipeline import _SIDE_MOMENTS_SQL, _side_moments, _welch_t_df, _welch_t_df_sql
 from ._helpers import (
+    DAILY_D_SQL_CTE,
+    DAILY_SQL_CTE,
     KNUTH_MOD,
     KNUTH_MULT,
     _daily_counts,
@@ -215,6 +217,26 @@ def _daily_spine(e: DataFrame) -> DataFrame:
     return spine.join(daily, ["user_id", "day"], "left")
 
 
+# The oracle CTEs of _daily_spine: each user's daily mean (daily) and
+# the dense user x day spine over the events' day range (bounds, spine).
+_SPINE_SQL_CTES = """daily AS (
+        SELECT user_id, date_trunc('day', ts) AS day,
+               CAST(SUM(CAST(value AS DECIMAL(28,6))) AS DOUBLE)
+                   / COUNT(value) AS v
+        FROM events GROUP BY user_id, date_trunc('day', ts)
+    ),
+    bounds AS (
+        SELECT MIN(date_trunc('day', ts)) AS lo, MAX(date_trunc('day', ts)) AS hi
+        FROM events
+    ),
+    spine AS (
+        SELECT u.user_id, d.day
+        FROM (SELECT DISTINCT user_id FROM events) u
+        CROSS JOIN (SELECT unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS day
+                    FROM bounds) d
+    )"""
+
+
 def _day_frame(ahead: bool) -> WindowSpec:
     """Per-user frame ordered by day: the current row and every later day
     (``ahead``), or every earlier day and the current row."""
@@ -327,23 +349,8 @@ def sample_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_backfill_bfill",
-    oracle="""
-    WITH daily AS (
-        SELECT user_id, date_trunc('day', ts) AS day,
-               CAST(SUM(CAST(value AS DECIMAL(28,6))) AS DOUBLE)
-                   / COUNT(value) AS v
-        FROM events GROUP BY user_id, date_trunc('day', ts)
-    ),
-    bounds AS (
-        SELECT MIN(date_trunc('day', ts)) AS lo, MAX(date_trunc('day', ts)) AS hi
-        FROM events
-    ),
-    spine AS (
-        SELECT u.user_id, d.day
-        FROM (SELECT DISTINCT user_id FROM events) u
-        CROSS JOIN (SELECT unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS day
-                    FROM bounds) d
-    )
+    oracle=f"""
+    WITH {_SPINE_SQL_CTES}
     SELECT s.user_id, s.day,
            FIRST_VALUE(d.v IGNORE NULLS)
                OVER (PARTITION BY s.user_id ORDER BY s.day
@@ -598,23 +605,8 @@ def corpus_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_interpolate_linear",
-    oracle="""
-    WITH daily AS (
-        SELECT user_id, date_trunc('day', ts) AS day,
-               CAST(SUM(CAST(value AS DECIMAL(28,6))) AS DOUBLE)
-                   / COUNT(value) AS v
-        FROM events GROUP BY user_id, date_trunc('day', ts)
-    ),
-    bounds AS (
-        SELECT MIN(date_trunc('day', ts)) AS lo, MAX(date_trunc('day', ts)) AS hi
-        FROM events
-    ),
-    spine AS (
-        SELECT u.user_id, d.day
-        FROM (SELECT DISTINCT user_id FROM events) u
-        CROSS JOIN (SELECT unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS day
-                    FROM bounds) d
-    ),
+    oracle=f"""
+    WITH {_SPINE_SQL_CTES},
     ctx AS (
         SELECT s.user_id, s.day, d.v,
                last_value(d.v IGNORE NULLS) OVER wb AS prev_v,
@@ -1015,14 +1007,9 @@ def _lag_products(
     )
 
 
-@query(
-    "ts_autocorrelation",
-    oracle="""
-    WITH daily AS (
-        SELECT event_type, CAST(ts AS DATE) AS d,
-               CAST(COUNT(*) AS BIGINT) AS x
-        FROM events GROUP BY 1, 2
-    ),
+# The SQL twin of _lag_products up to its lag window: CTEs daily ..
+# lagged(event_type, nd, y, y1..y7) over the centered daily series.
+_LAGGED_SQL_CTES = f"""{DAILY_D_SQL_CTE},
     stats AS (
         SELECT event_type, CAST(COUNT(*) AS BIGINT) AS nd,
                CAST(SUM(x) AS BIGINT) AS tot
@@ -1040,28 +1027,38 @@ def _lag_products(
                LAG(y, 5) OVER w AS y5, LAG(y, 6) OVER w AS y6,
                LAG(y, 7) OVER w AS y7
         FROM yd WINDOW w AS (PARTITION BY event_type ORDER BY d)
-    ),
-    agg AS (
-        SELECT event_type, MAX(nd) AS nd,
-               CAST(SUM(y * y) AS BIGINT) AS den,
-               CAST(SUM(y * y1) AS BIGINT) AS n1,
+    )"""
+
+
+# _lag_products' lag sums n1..n7 over lagged, as the tail of a SELECT list.
+_LAG_SUMS_SQL = """CAST(SUM(y * y1) AS BIGINT) AS n1,
                CAST(SUM(y * y2) AS BIGINT) AS n2,
                CAST(SUM(y * y3) AS BIGINT) AS n3,
                CAST(SUM(y * y4) AS BIGINT) AS n4,
                CAST(SUM(y * y5) AS BIGINT) AS n5,
                CAST(SUM(y * y6) AS BIGINT) AS n6,
-               CAST(SUM(y * y7) AS BIGINT) AS n7
+               CAST(SUM(y * y7) AS BIGINT) AS n7"""
+
+
+@query(
+    "ts_autocorrelation",
+    oracle=f"""
+    WITH {_LAGGED_SQL_CTES},
+    agg AS (
+        SELECT event_type, MAX(nd) AS nd,
+               CAST(SUM(y * y) AS BIGINT) AS den,
+               {_LAG_SUMS_SQL}
         FROM lagged GROUP BY event_type
     ),
     exploded AS (
         SELECT event_type, CAST(nd AS BIGINT) AS n_days, den,
-               unnest([{'k': CAST(1 AS BIGINT), 'num': n1},
-                       {'k': CAST(2 AS BIGINT), 'num': n2},
-                       {'k': CAST(3 AS BIGINT), 'num': n3},
-                       {'k': CAST(4 AS BIGINT), 'num': n4},
-                       {'k': CAST(5 AS BIGINT), 'num': n5},
-                       {'k': CAST(6 AS BIGINT), 'num': n6},
-                       {'k': CAST(7 AS BIGINT), 'num': n7}]) AS u
+               unnest([{{'k': CAST(1 AS BIGINT), 'num': n1}},
+                       {{'k': CAST(2 AS BIGINT), 'num': n2}},
+                       {{'k': CAST(3 AS BIGINT), 'num': n3}},
+                       {{'k': CAST(4 AS BIGINT), 'num': n4}},
+                       {{'k': CAST(5 AS BIGINT), 'num': n5}},
+                       {{'k': CAST(6 AS BIGINT), 'num': n6}},
+                       {{'k': CAST(7 AS BIGINT), 'num': n7}}]) AS u
         FROM agg
     )
     SELECT event_type, n_days, u.k AS lag,
@@ -1420,29 +1417,7 @@ def _durbin_levinson_spark(base: DataFrame) -> DataFrame:
 @query(
     "ts_partial_autocorrelation",
     oracle=f"""
-    WITH daily AS (
-        SELECT event_type, CAST(ts AS DATE) AS d,
-               CAST(COUNT(*) AS BIGINT) AS x
-        FROM events GROUP BY 1, 2
-    ),
-    stats AS (
-        SELECT event_type, CAST(COUNT(*) AS BIGINT) AS nd,
-               CAST(SUM(x) AS BIGINT) AS tot
-        FROM daily GROUP BY event_type
-    ),
-    yd AS (
-        SELECT daily.event_type, daily.d,
-               daily.x * stats.nd - stats.tot AS y, stats.nd
-        FROM daily JOIN stats USING (event_type)
-    ),
-    lagged AS (
-        SELECT event_type, nd, y,
-               LAG(y, 1) OVER w AS y1, LAG(y, 2) OVER w AS y2,
-               LAG(y, 3) OVER w AS y3, LAG(y, 4) OVER w AS y4,
-               LAG(y, 5) OVER w AS y5, LAG(y, 6) OVER w AS y6,
-               LAG(y, 7) OVER w AS y7
-        FROM yd WINDOW w AS (PARTITION BY event_type ORDER BY d)
-    ),
+    WITH {_LAGGED_SQL_CTES},
     base AS (
         SELECT event_type, MAX(nd) AS nd,
                CAST(SUM(y * y1) AS DOUBLE) / CAST(SUM(y * y) AS BIGINT) AS r1,
@@ -2148,14 +2123,8 @@ def sample_bottomk_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_mann_kendall",
-    oracle="""
-    WITH daily AS (
-        SELECT event_type,
-               CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE))
-                    AS BIGINT) AS t,
-               CAST(COUNT(*) AS BIGINT) AS x
-        FROM events GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {DAILY_SQL_CTE},
     pairs AS (
         SELECT a.event_type,
                CAST(SUM(CASE WHEN b.x > a.x THEN 1
@@ -2287,14 +2256,8 @@ def ts_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_theil_sen",
-    oracle="""
-    WITH daily AS (
-        SELECT event_type,
-               CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE))
-                    AS BIGINT) AS t,
-               CAST(COUNT(*) AS BIGINT) AS x
-        FROM events GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {DAILY_SQL_CTE},
     slopes AS (
         SELECT a.event_type,
                CAST(b.x - a.x AS DOUBLE) / CAST(b.t - a.t AS DOUBLE)
@@ -2395,39 +2358,11 @@ def _ljung_terms_sql() -> str:
 @query(
     "ts_ljung_box",
     oracle=f"""
-    WITH daily AS (
-        SELECT event_type, CAST(ts AS DATE) AS d,
-               CAST(COUNT(*) AS BIGINT) AS x
-        FROM events GROUP BY 1, 2
-    ),
-    stats AS (
-        SELECT event_type, CAST(COUNT(*) AS BIGINT) AS nd,
-               CAST(SUM(x) AS BIGINT) AS tot
-        FROM daily GROUP BY event_type
-    ),
-    yd AS (
-        SELECT daily.event_type, daily.d,
-               daily.x * stats.nd - stats.tot AS y, stats.nd
-        FROM daily JOIN stats USING (event_type)
-    ),
-    lagged AS (
-        SELECT event_type, nd, y,
-               LAG(y, 1) OVER w AS y1, LAG(y, 2) OVER w AS y2,
-               LAG(y, 3) OVER w AS y3, LAG(y, 4) OVER w AS y4,
-               LAG(y, 5) OVER w AS y5, LAG(y, 6) OVER w AS y6,
-               LAG(y, 7) OVER w AS y7
-        FROM yd WINDOW w AS (PARTITION BY event_type ORDER BY d)
-    ),
+    WITH {_LAGGED_SQL_CTES},
     agg AS (
         SELECT event_type, MAX(nd) AS nd,
                CAST(SUM(y * y) AS DOUBLE) AS den,
-               CAST(SUM(y * y1) AS BIGINT) AS n1,
-               CAST(SUM(y * y2) AS BIGINT) AS n2,
-               CAST(SUM(y * y3) AS BIGINT) AS n3,
-               CAST(SUM(y * y4) AS BIGINT) AS n4,
-               CAST(SUM(y * y5) AS BIGINT) AS n5,
-               CAST(SUM(y * y6) AS BIGINT) AS n6,
-               CAST(SUM(y * y7) AS BIGINT) AS n7
+               {_LAG_SUMS_SQL}
         FROM lagged GROUP BY event_type
         HAVING SUM(y * y) > 0
     )
@@ -2621,14 +2556,8 @@ def analytics_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_hodges_lehmann",
-    oracle="""
-    WITH daily AS (
-        SELECT event_type,
-               CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE))
-                    AS BIGINT) AS t,
-               CAST(COUNT(*) AS BIGINT) AS x
-        FROM events GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {DAILY_SQL_CTE},
     walsh AS (
         SELECT a.event_type, a.x + b.x AS w2
         FROM daily a JOIN daily b
@@ -2678,12 +2607,8 @@ def agg_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_runs_test",
-    oracle="""
-    WITH daily AS (
-        SELECT event_type, CAST(ts AS DATE) AS d,
-               CAST(COUNT(*) AS BIGINT) AS x
-        FROM events GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {DAILY_D_SQL_CTE},
     diffs AS (
         SELECT event_type, d,
                x - LAG(x) OVER (PARTITION BY event_type ORDER BY d)
@@ -2787,16 +2712,16 @@ def ts_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "analytics_chisq_cells",
-    oracle="""
-    WITH daily AS (
+# The SQL twins of _dow_cells (daily) and of _contingency (daily, rowt,
+# colt, tot): the event_type x day-of-week contingency table.
+_DOW_CELLS_SQL_CTE = """daily AS (
         SELECT event_type,
                CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE))
                     AS BIGINT) % 7 AS dow,
                CAST(COUNT(*) AS BIGINT) AS o
         FROM events GROUP BY 1, 2
-    ),
+    )"""
+_CONTINGENCY_SQL_CTES = f"""{_DOW_CELLS_SQL_CTE},
     rowt AS (
         SELECT event_type, CAST(SUM(o) AS BIGINT) AS r
         FROM daily GROUP BY event_type
@@ -2805,7 +2730,13 @@ def ts_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT dow, CAST(SUM(o) AS BIGINT) AS c
         FROM daily GROUP BY dow
     ),
-    tot AS (SELECT CAST(SUM(o) AS BIGINT) AS n FROM daily)
+    tot AS (SELECT CAST(SUM(o) AS BIGINT) AS n FROM daily)"""
+
+
+@query(
+    "analytics_chisq_cells",
+    oracle=f"""
+    WITH {_CONTINGENCY_SQL_CTES}
     SELECT d.event_type, d.dow, d.o,
            CAST(floor(1000000.0 * rt.r * ct.c / t.n + 0.5) AS BIGINT)
                AS e_micro,
@@ -2906,14 +2837,8 @@ def _midrank_x2(v: Column) -> Column:
 
 @query(
     "agg_mannwhitney_u",
-    oracle="""
-    WITH daily AS (
-        SELECT event_type,
-               CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE))
-                    AS BIGINT) AS t,
-               CAST(COUNT(*) AS BIGINT) AS x
-        FROM events GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {DAILY_SQL_CTE},
     grp AS (
         SELECT event_type, x,
                CASE WHEN t % 7 IN (5, 6) THEN 1 ELSE 0 END AS is_wkend
@@ -3254,14 +3179,8 @@ def analytics_dau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_ks_test",
-    oracle="""
-    WITH daily AS (
-        SELECT event_type,
-               CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE))
-                    AS BIGINT) AS t,
-               CAST(COUNT(*) AS BIGINT) AS x
-        FROM events GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {DAILY_SQL_CTE},
     grp AS (
         SELECT event_type, x,
                CASE WHEN t % 7 IN (5, 6) THEN 1 ELSE 0 END AS is_wkend
@@ -3366,14 +3285,8 @@ def agg_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_spearman_rho",
-    oracle="""
-    WITH daily AS (
-        SELECT event_type,
-               CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE))
-                    AS BIGINT) AS t,
-               CAST(COUNT(*) AS BIGINT) AS x
-        FROM events GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {DAILY_SQL_CTE},
     ranked AS (
         SELECT event_type,
                -- doubled mid-ranks stay exact BIGINT under ties
@@ -3466,14 +3379,8 @@ def agg_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_welch_ttest",
-    oracle="""
-    WITH daily AS (
-        SELECT event_type,
-               CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE))
-                    AS BIGINT) AS t,
-               CAST(COUNT(*) AS BIGINT) AS x
-        FROM events GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {DAILY_SQL_CTE},
     sums AS (
         SELECT event_type,
                CAST(SUM(CASE WHEN t % 7 IN (5, 6) THEN 1 ELSE 0 END)
@@ -3492,27 +3399,11 @@ def agg_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     mv AS (
         SELECT event_type, n1, n2,
-               CAST(s1 AS DOUBLE) / n1 AS m1,
-               CAST(s2 AS DOUBLE) / n2 AS m2,
-               (CAST(ss1 AS DOUBLE) - CAST(s1 * s1 AS DOUBLE) / n1)
-                   / (n1 - 1) AS v1,
-               (CAST(ss2 AS DOUBLE) - CAST(s2 * s2 AS DOUBLE) / n2)
-                   / (n2 - 1) AS v2
+               {_SIDE_MOMENTS_SQL}
         FROM sums WHERE n1 >= 2 AND n2 >= 2
     )
     SELECT event_type, n1 AS n_weekend, n2 AS n_weekday,
-           CASE WHEN v1 / n1 + v2 / n2 > 0 THEN
-               CAST(floor(1000000.0 * (m1 - m2) / sqrt(v1 / n1 + v2 / n2)
-                    + 0.5) AS BIGINT)
-           END AS t_micro,
-           CASE WHEN (v1 / n1) * (v1 / n1) / (n1 - 1)
-                     + (v2 / n2) * (v2 / n2) / (n2 - 1) > 0 THEN
-               CAST(floor(1000000.0
-                    * ((v1 / n1 + v2 / n2) * (v1 / n1 + v2 / n2))
-                    / ((v1 / n1) * (v1 / n1) / (n1 - 1)
-                       + (v2 / n2) * (v2 / n2) / (n2 - 1))
-                    + 0.5) AS BIGINT)
-           END AS df_micro,
+           {_welch_t_df_sql("(m1 - m2)")},
            CASE WHEN ((n1 - 1) * v1 + (n2 - 1) * v2) / (n1 + n2 - 2) > 0
            THEN
                CAST(floor(1000000.0 * (m1 - m2)
@@ -3567,7 +3458,7 @@ def agg_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_jarque_bera",
-    oracle="""
+    oracle=f"""
     WITH daily AS (
         SELECT event_type,
                CAST(COUNT(*) AS BIGINT) AS x
@@ -3585,23 +3476,7 @@ def agg_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     mom AS (
         SELECT event_type, n,
-               CAST(s2 AS DOUBLE) / n
-                   - (CAST(s1 AS DOUBLE) / n) * (CAST(s1 AS DOUBLE) / n)
-                   AS m2,
-               CAST(s3 AS DOUBLE) / n
-                   - 3 * (CAST(s1 AS DOUBLE) / n) * (CAST(s2 AS DOUBLE) / n)
-                   + 2 * (CAST(s1 AS DOUBLE) / n)
-                       * (CAST(s1 AS DOUBLE) / n)
-                       * (CAST(s1 AS DOUBLE) / n) AS m3,
-               CAST(s4 AS DOUBLE) / n
-                   - 4 * (CAST(s1 AS DOUBLE) / n) * (CAST(s3 AS DOUBLE) / n)
-                   + 6 * (CAST(s1 AS DOUBLE) / n)
-                       * (CAST(s1 AS DOUBLE) / n)
-                       * (CAST(s2 AS DOUBLE) / n)
-                   - 3 * (CAST(s1 AS DOUBLE) / n)
-                       * (CAST(s1 AS DOUBLE) / n)
-                       * (CAST(s1 AS DOUBLE) / n)
-                       * (CAST(s1 AS DOUBLE) / n) AS m4
+               {_CENTRAL_MOMENTS_SQL}
         FROM sums
     )
     SELECT event_type, n,
@@ -3790,23 +3665,8 @@ def agg_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_cramers_v",
-    oracle="""
-    WITH daily AS (
-        SELECT event_type,
-               CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE))
-                    AS BIGINT) % 7 AS dow,
-               CAST(COUNT(*) AS BIGINT) AS o
-        FROM events GROUP BY 1, 2
-    ),
-    rowt AS (
-        SELECT event_type, CAST(SUM(o) AS BIGINT) AS r
-        FROM daily GROUP BY event_type
-    ),
-    colt AS (
-        SELECT dow, CAST(SUM(o) AS BIGINT) AS c
-        FROM daily GROUP BY dow
-    ),
-    tot AS (SELECT CAST(SUM(o) AS BIGINT) AS n FROM daily),
+    oracle=f"""
+    WITH {_CONTINGENCY_SQL_CTES},
     grid AS (
         SELECT rt.event_type, rt.r, ct.dow, ct.c,
                COALESCE(d.o, CAST(0 AS BIGINT)) AS o
@@ -3913,14 +3773,8 @@ def agg_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_cross_correlation",
-    oracle="""
-    WITH daily AS (
-        SELECT event_type,
-               CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE))
-                    AS BIGINT) AS t,
-               CAST(COUNT(*) AS BIGINT) AS x
-        FROM events GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {DAILY_SQL_CTE},
     lags(lag) AS (VALUES (-3), (-2), (-1), (0), (1), (2), (3)),
     pairs AS (
         SELECT a.event_type AS type_a, b.event_type AS type_b, l.lag,
@@ -4113,16 +3967,10 @@ def _milli_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "ts_seasonality_strength",
-    oracle="""
-    WITH daily AS (
-        SELECT event_type,
-               CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE))
-                    AS BIGINT) AS t,
-               CAST(COUNT(*) AS BIGINT) AS x
-        FROM events GROUP BY 1, 2
-    ),
+# The SQL twins of _milli_decomposition's stages: the 7-day centered
+# window sums (CTEs daily, trended) and the per-dow seasonal component
+# of an interior(event_type, t, det_milli) CTE (seasonal).
+_MILLI_TRENDED_SQL_CTES = f"""{DAILY_SQL_CTE},
     trended AS (
         SELECT event_type, t, x,
                COUNT(*) OVER w AS nw,
@@ -4130,7 +3978,19 @@ def _milli_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM daily
         WINDOW w AS (PARTITION BY event_type ORDER BY t
                      ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
-    ),
+    )"""
+_MILLI_SEASONAL_SQL_CTE = """seasonal AS (
+        SELECT event_type, t % 7 AS dow,
+               CAST(floor(CAST(SUM(det_milli) AS DOUBLE) / COUNT(*) + 0.5)
+                    AS BIGINT) AS s_milli
+        FROM interior GROUP BY event_type, t % 7
+    )"""
+
+
+@query(
+    "ts_seasonality_strength",
+    oracle=f"""
+    WITH {_MILLI_TRENDED_SQL_CTES},
     interior AS (
         SELECT event_type, t, x,
                -- milli-quantized detrended value (micro overflows the
@@ -4139,12 +3999,7 @@ def _milli_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
                                     AS BIGINT) AS BIGINT) AS det_milli
         FROM trended WHERE nw = 7
     ),
-    seasonal AS (
-        SELECT event_type, t % 7 AS dow,
-               CAST(floor(CAST(SUM(det_milli) AS DOUBLE) / COUNT(*) + 0.5)
-                    AS BIGINT) AS s_milli
-        FROM interior GROUP BY event_type, t % 7
-    ),
+    {_MILLI_SEASONAL_SQL_CTE},
     parts AS (
         SELECT i.event_type,
                i.det_milli,
@@ -4515,14 +4370,8 @@ def corpus_length_bucket_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_local_peaks",
-    oracle="""
-    WITH daily AS (
-        SELECT event_type,
-               CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE))
-                    AS BIGINT) AS t,
-               CAST(COUNT(*) AS BIGINT) AS x
-        FROM events GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {DAILY_SQL_CTE},
     framed AS (
         SELECT event_type, t, x,
                COUNT(*) OVER wl AS nl,
@@ -4788,34 +4637,15 @@ def sample_balanced_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_stl_anomalies",
-    oracle="""
-    WITH daily AS (
-        SELECT event_type,
-               CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE))
-                    AS BIGINT) AS t,
-               CAST(COUNT(*) AS BIGINT) AS x
-        FROM events GROUP BY 1, 2
-    ),
-    trended AS (
-        SELECT event_type, t, x,
-               COUNT(*) OVER w AS nw,
-               CAST(SUM(x) OVER w AS BIGINT) AS s7
-        FROM daily
-        WINDOW w AS (PARTITION BY event_type ORDER BY t
-                     ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
-    ),
+    oracle=f"""
+    WITH {_MILLI_TRENDED_SQL_CTES},
     interior AS (
         SELECT event_type, t, x,
                CAST(1000 * x - CAST(floor(1000.0 * s7 / 7.0 + 0.5)
                                     AS BIGINT) AS BIGINT) AS det_milli
         FROM trended WHERE nw = 7
     ),
-    seasonal AS (
-        SELECT event_type, t % 7 AS dow,
-               CAST(floor(CAST(SUM(det_milli) AS DOUBLE) / COUNT(*) + 0.5)
-                    AS BIGINT) AS s_milli
-        FROM interior GROUP BY event_type, t % 7
-    ),
+    {_MILLI_SEASONAL_SQL_CTE},
     resid AS (
         SELECT i.event_type, i.t, i.x,
                CAST(i.det_milli - s.s_milli AS BIGINT) AS res_milli
@@ -4914,14 +4744,8 @@ def ts_stl_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_wilcoxon_signed",
-    oracle="""
-    WITH daily AS (
-        SELECT event_type,
-               CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE))
-                    AS BIGINT) AS t,
-               CAST(COUNT(*) AS BIGINT) AS x
-        FROM events GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {DAILY_SQL_CTE},
     pairs AS (
         SELECT cur.event_type, cur.x - prv.x AS d
         FROM daily cur JOIN daily prv
@@ -5007,14 +4831,8 @@ def agg_wilcoxon_signed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_chi2_gof",
-    oracle="""
-    WITH daily AS (
-        SELECT event_type,
-               CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE))
-                    AS BIGINT) % 7 AS dow,
-               CAST(COUNT(*) AS BIGINT) AS o
-        FROM events GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {_DOW_CELLS_SQL_CTE},
     tot AS (
         SELECT event_type, CAST(SUM(o) AS BIGINT) AS n FROM daily
         GROUP BY event_type
@@ -5376,14 +5194,8 @@ def corpus_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_fisher_exact",
-    oracle="""
-    WITH daily AS (
-        SELECT event_type,
-               CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE))
-                    AS BIGINT) AS t,
-               CAST(COUNT(*) AS BIGINT) AS x
-        FROM events GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {DAILY_SQL_CTE},
     tot AS (
         SELECT event_type,
                CAST(COUNT(*) AS BIGINT) AS n,
@@ -5541,13 +5353,7 @@ _PERM_REPS = 199  # standard K for a 0.005-resolution permutation p-value
 @query(
     "agg_permutation_test",
     oracle=f"""
-    WITH daily AS (
-        SELECT event_type,
-               CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE))
-                    AS BIGINT) AS t,
-               CAST(COUNT(*) AS BIGINT) AS x
-        FROM events GROUP BY 1, 2
-    ),
+    WITH {DAILY_SQL_CTE},
     obs AS (
         SELECT event_type,
                CAST(COUNT(*) AS BIGINT) AS n,

@@ -497,16 +497,20 @@ def join_bloom_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "join_lateral",
-    oracle="""
+# join_lateral's query: Spark and DuckDB run the same text.
+_LATERAL_SQL = """
     SELECT c.c_custkey, c.c_mktsegment, t.n_orders, t.max_price
     FROM customer c, LATERAL (
         SELECT COUNT(*) AS n_orders, MAX(o.o_totalprice) AS max_price
         FROM orders o WHERE o.o_custkey = c.c_custkey
     ) t
     WHERE c.c_mktsegment = 'MACHINERY' AND t.n_orders >= 3
-    """,
+    """
+
+
+@query(
+    "join_lateral",
+    oracle=_LATERAL_SQL,
 )
 def join_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated LATERAL subquery — the SQL surface for per-row
@@ -517,16 +521,7 @@ def join_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs one shuffle, nothing per-row.  Same SQL text runs on DuckDB."""
     load(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(
-        """
-        SELECT c.c_custkey, c.c_mktsegment, t.n_orders, t.max_price
-        FROM customer c, LATERAL (
-            SELECT COUNT(*) AS n_orders, MAX(o.o_totalprice) AS max_price
-            FROM orders o WHERE o.o_custkey = c.c_custkey
-        ) t
-        WHERE c.c_mktsegment = 'MACHINERY' AND t.n_orders >= 3
-        """
-    )
+    return spark.sql(_LATERAL_SQL)
 
 
 _ASOF_TOL_US = 1_800_000_000  # 30-minute nearest-match tolerance
@@ -773,6 +768,16 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
 _GRID_R = 0.02  # radius for the spatial self-join (first 2 embedding dims)
 
 
+# The oracle side of _grid_pairs: the points p(vec_id, x, y), and the
+# squared distance of a pair of them aliased a and b.
+_POINTS_SQL_CTE = """p AS (
+        SELECT vec_id, CAST(embedding[1] AS DOUBLE) AS x,
+               CAST(embedding[2] AS DOUBLE) AS y
+        FROM embeddings
+    )"""
+_D2_SQL = "(a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)"
+
+
 def _grid_pairs(spark: SparkSession, sf_dir: str, pair_pred: Column) -> DataFrame:
     """``(a_id, b_id, d2)`` for the embedding points within ``_GRID_R``
     of each other that satisfy ``pair_pred``: r-sized cells, the 5x5
@@ -830,18 +835,14 @@ def _grid_pairs(spark: SparkSession, sf_dir: str, pair_pred: Column) -> DataFram
 @query(
     "join_spatial_grid",
     oracle=f"""
-    WITH p AS (
-        SELECT vec_id, CAST(embedding[1] AS DOUBLE) AS x,
-               CAST(embedding[2] AS DOUBLE) AS y
-        FROM embeddings
-    )
+    WITH {_POINTS_SQL_CTE}
     SELECT a.vec_id AS a_id, b.vec_id AS b_id,
            CAST(floor(1000000000.0 *
-                ((a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y))
+                ({_D2_SQL})
                 + 0.5) AS BIGINT) AS dist2_nano
     FROM p a JOIN p b
       ON a.vec_id < b.vec_id
-     AND (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
+     AND {_D2_SQL}
          < {_GRID_R} * {_GRID_R}
     """,
 )
@@ -880,18 +881,14 @@ def join_spatial_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "join_spatial_nearest",
     oracle=f"""
-    WITH p AS (
-        SELECT vec_id, CAST(embedding[1] AS DOUBLE) AS x,
-               CAST(embedding[2] AS DOUBLE) AS y
-        FROM embeddings
-    ),
+    WITH {_POINTS_SQL_CTE},
     cand AS (
         SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-               (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
+               {_D2_SQL}
                    AS d2
         FROM p a JOIN p b
           ON a.vec_id <> b.vec_id
-         AND (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
+         AND {_D2_SQL}
              < {_GRID_R} * {_GRID_R}
     ),
     ranked AS (

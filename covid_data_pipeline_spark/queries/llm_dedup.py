@@ -58,6 +58,11 @@ JACCARD_RATIO = (7, 10)
 JACCARD_THRESHOLD = JACCARD_RATIO[0] / JACCARD_RATIO[1]
 
 
+# The token-set intersection size of a document pair aliased a and b, in
+# the Jaccard oracles: |A ∩ B| over their distinct-token lists toks.
+_SHARED_TOKENS_SQL = "len(list_intersect(a.toks, b.toks))"
+
+
 @query(
     "dedup_near_jaccard",
     oracle=f"""
@@ -66,12 +71,12 @@ JACCARD_THRESHOLD = JACCARD_RATIO[0] / JACCARD_RATIO[1]
         FROM documents
     )
     SELECT a.doc_id AS a_id, b.doc_id AS b_id, a.lang AS lang,
-           ROUND(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-                 / (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks))),
+           ROUND(CAST({_SHARED_TOKENS_SQL} AS DOUBLE)
+                 / (len(a.toks) + len(b.toks) - {_SHARED_TOKENS_SQL}),
                  6) AS jaccard
     FROM t a JOIN t b ON a.lang = b.lang AND a.doc_id < b.doc_id
-    WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-          / (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)))
+    WHERE CAST({_SHARED_TOKENS_SQL} AS DOUBLE)
+          / (len(a.toks) + len(b.toks) - {_SHARED_TOKENS_SQL})
           > {JACCARD_THRESHOLD}
     """,
 )
@@ -888,8 +893,8 @@ def dedup_paragraph_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT a.doc_id AS a_id, b.doc_id AS b_id
         FROM exact_kept a JOIN exact_kept b
           ON a.lang = b.lang AND a.doc_id < b.doc_id
-        WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-              / (len(a.toks) + len(b.toks) - len(list_intersect(a.toks, b.toks)))
+        WHERE CAST({_SHARED_TOKENS_SQL} AS DOUBLE)
+              / (len(a.toks) + len(b.toks) - {_SHARED_TOKENS_SQL})
               > {JACCARD_THRESHOLD}
     ),
     near_dropped AS (SELECT DISTINCT b_id AS doc_id FROM near_pairs)
@@ -1333,10 +1338,10 @@ def dedup_containment_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return containment_verify(_band_pairs(keys, "lang"), sh)
 
 
-@query(
-    "dedup_span_ngram",
-    oracle="""
-    WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+# The oracle CTEs of dedup_span_ngram up to its islands: the 5-token
+# shingles seen in >= 2 documents, marked per position (d .. marked),
+# and the gaps-and-islands key of each run of marked positions (isl).
+_SPAN_ISLANDS_SQL_CTES = """d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
     pos AS (
         SELECT doc_id,
                unnest(generate_series(1, greatest(len(toks) - 4, 0))) AS pos,
@@ -1358,7 +1363,13 @@ def dedup_containment_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
                pos - ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos)
                    AS anchor
         FROM marked
-    )
+    )"""
+
+
+@query(
+    "dedup_span_ngram",
+    oracle=f"""
+    WITH {_SPAN_ISLANDS_SQL_CTES}
     SELECT doc_id, MIN(pos) AS span_start, MAX(pos) + 4 AS span_end,
            CAST(COUNT(*) AS BIGINT) AS n_dup_shingles
     FROM isl GROUP BY doc_id, anchor
@@ -1429,30 +1440,8 @@ def dedup_span_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_span_removal",
-    oracle="""
-    WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-    pos AS (
-        SELECT doc_id,
-               unnest(generate_series(1, greatest(len(toks) - 4, 0))) AS pos,
-               toks
-        FROM d
-    ),
-    sh AS (
-        SELECT doc_id, pos,
-               array_to_string(list_slice(toks, pos, pos + 4), ' ') AS shingle
-        FROM pos
-    ),
-    dup AS (
-        SELECT shingle FROM sh GROUP BY shingle
-        HAVING COUNT(DISTINCT doc_id) >= 2
-    ),
-    marked AS (SELECT s.doc_id, s.pos FROM sh s JOIN dup USING (shingle)),
-    isl AS (
-        SELECT doc_id, pos,
-               pos - ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos)
-                   AS anchor
-        FROM marked
-    ),
+    oracle=f"""
+    WITH {_SPAN_ISLANDS_SQL_CTES},
     spans AS (
         SELECT doc_id, MIN(pos) AS span_start, MAX(pos) + 4 AS span_end
         FROM isl GROUP BY doc_id, anchor
@@ -1464,13 +1453,13 @@ def dedup_span_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_spans,
                list_reduce(
                    list_prepend(
-                       {'s': CAST(0 AS BIGINT), 'e': CAST(0 AS BIGINT)},
-                       list_sort(list({'s': span_start, 'e': span_end}))
+                       {{'s': CAST(0 AS BIGINT), 'e': CAST(0 AS BIGINT)}},
+                       list_sort(list({{'s': span_start, 'e': span_end}}))
                    ),
-                   (a, x) -> {'s': a.s + greatest(CAST(0 AS BIGINT),
+                   (a, x) -> {{'s': a.s + greatest(CAST(0 AS BIGINT),
                                                   x.e - greatest(a.e,
                                                                  x.s - 1)),
-                              'e': greatest(a.e, x.e)}
+                              'e': greatest(a.e, x.e)}}
                ).s AS n_removed
         FROM spans GROUP BY doc_id
     ),

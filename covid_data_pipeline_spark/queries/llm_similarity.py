@@ -229,6 +229,17 @@ def _query_pairs(spark: SparkSession, sf_dir: str, id_col: str) -> DataFrame:
     return c.crossJoin(F.broadcast(q)).filter(F.col("query_id") != F.col(id_col))
 
 
+def _top5_sql(scored: str) -> str:
+    """The SQL twin of the cut in :func:`_rerank_top5`: each query's top 5
+    rows of the CTE ``scored`` (query_id, neighbor_id, cosine), cosine
+    desc, then neighbor id, with their rank rn."""
+    return f"""SELECT query_id, neighbor_id, cosine, rn FROM (
+        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                                     ORDER BY cosine DESC, neighbor_id) AS rn
+        FROM {scored}
+    ) WHERE rn <= 5"""
+
+
 @query(
     "sim_topk_neighbors",
     oracle=f"""
@@ -240,11 +251,7 @@ def _query_pairs(spark: SparkSession, sf_dir: str, id_col: str) -> DataFrame:
                         * {_SQL_NORM.format(a='c.embedding')}), 6) AS cosine
         FROM q JOIN embeddings c ON q.vec_id <> c.vec_id
     )
-    SELECT query_id, neighbor_id, cosine, rn FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY cosine DESC, neighbor_id) AS rn
-        FROM scored
-    ) WHERE rn <= 5
+    {_top5_sql("scored")}
     """,
 )
 def sim_topk_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -304,40 +311,50 @@ _SQL_PROBES = ", ".join(
     "bucket" if m == 0 else f"xor(bucket, {m})" for m in _PROBE_MASKS
 )
 
-_ANN_BUCKETED_ORACLE = f"""
-    WITH planes(p, pl) AS (VALUES
-        {_SQL_PLANES}
+def _ann_probes_sql(planes: str, keys: tuple[str, ...] = ()) -> str:
+    """The SQL twin of _signature and of _probe_top5's query side: CTEs
+    planes .. probes(query_id, q_vec, *keys, bucket), one signature per
+    vector and signature table; ``keys`` names the table key (``("t",)``
+    for several tables) and ``planes`` holds the ``VALUES`` rows."""
+    pre = "".join(f"{k}, " for k in keys)
+    post = "".join(f", {k}" for k in keys)
+    return f"""planes({pre}p, pl) AS (VALUES
+        {planes}
     ),
     v AS (
         SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS vec
         FROM embeddings
     ),
     proj AS (
-        SELECT vec_id, p,
+        SELECT vec_id, {pre}p,
                list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
                    [vec[i] * pl[i] FOR i IN range(1, 65)]),
                    (acc, x) -> acc + x) AS pr
         FROM v CROSS JOIN planes
     ),
     sig AS (
-        SELECT vec_id,
+        SELECT vec_id{post},
                CAST(SUM(CASE WHEN pr > 0
                              THEN CAST(1 AS BIGINT) << p ELSE 0 END)
                     AS BIGINT) AS bucket
-        FROM proj GROUP BY vec_id
+        FROM proj GROUP BY vec_id{post}
     ),
     sigged AS (
-        SELECT v.vec_id, v.vec, s.bucket
+        SELECT v.vec_id, v.vec, {"".join(f"s.{k}, " for k in keys)}s.bucket
         FROM v JOIN sig s ON v.vec_id = s.vec_id
     ),
     q AS (
-        SELECT vec_id AS query_id, vec AS q_vec, bucket
+        SELECT vec_id AS query_id, vec AS q_vec, {pre}bucket
         FROM sigged WHERE vec_id < 10
     ),
     probes AS (
-        SELECT query_id, q_vec, unnest([{_SQL_PROBES}]) AS bucket
+        SELECT query_id, q_vec, {pre}unnest([{_SQL_PROBES}]) AS bucket
         FROM q
-    ),
+    )"""
+
+
+_ANN_BUCKETED_ORACLE = f"""
+    WITH {_ann_probes_sql(_SQL_PLANES)},
     scored AS (
         SELECT p.query_id, c.vec_id AS neighbor_id,
                ROUND({_SQL_DOT.format(a='p.q_vec', b='c.vec')}
@@ -346,11 +363,7 @@ _ANN_BUCKETED_ORACLE = f"""
         FROM sigged c JOIN probes p
           ON c.bucket = p.bucket AND p.query_id <> c.vec_id
     )
-    SELECT query_id, neighbor_id, cosine, rn FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY cosine DESC, neighbor_id) AS rn
-        FROM scored
-    ) WHERE rn <= 5
+    {_top5_sql("scored")}
     """
 
 
@@ -587,39 +600,7 @@ _SQL_PLANES_T = ",\n        ".join(
 )
 
 _ANN_MULTITABLE_ORACLE = f"""
-    WITH planes(t, p, pl) AS (VALUES
-        {_SQL_PLANES_T}
-    ),
-    v AS (
-        SELECT vec_id, [CAST(x AS DOUBLE) FOR x IN embedding] AS vec
-        FROM embeddings
-    ),
-    proj AS (
-        SELECT vec_id, t, p,
-               list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                   [vec[i] * pl[i] FOR i IN range(1, 65)]),
-                   (acc, x) -> acc + x) AS pr
-        FROM v CROSS JOIN planes
-    ),
-    sig AS (
-        SELECT vec_id, t,
-               CAST(SUM(CASE WHEN pr > 0
-                             THEN CAST(1 AS BIGINT) << p ELSE 0 END)
-                    AS BIGINT) AS bucket
-        FROM proj GROUP BY vec_id, t
-    ),
-    sigged AS (
-        SELECT v.vec_id, v.vec, s.t, s.bucket
-        FROM v JOIN sig s ON v.vec_id = s.vec_id
-    ),
-    q AS (
-        SELECT vec_id AS query_id, vec AS q_vec, t, bucket
-        FROM sigged WHERE vec_id < 10
-    ),
-    probes AS (
-        SELECT query_id, q_vec, t, unnest([{_SQL_PROBES}]) AS bucket
-        FROM q
-    ),
+    WITH {_ann_probes_sql(_SQL_PLANES_T, ("t",))},
     cand AS (
         SELECT DISTINCT p.query_id, c.vec_id AS neighbor_id,
                ROUND({_SQL_DOT.format(a='p.q_vec', b='c.vec')}
@@ -629,11 +610,7 @@ _ANN_MULTITABLE_ORACLE = f"""
           ON c.t = p.t AND c.bucket = p.bucket
          AND p.query_id <> c.vec_id
     )
-    SELECT query_id, neighbor_id, cosine, rn FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY cosine DESC, neighbor_id) AS rn
-        FROM cand
-    ) WHERE rn <= 5
+    {_top5_sql("cand")}
     """
 
 
@@ -743,11 +720,7 @@ _ANN_IVF_ORACLE = f"""
         FROM corpus_cells cc JOIN query_cells qc ON cc.cell = qc.cell
         WHERE qc.query_id <> cc.neighbor_id
     )
-    SELECT query_id, neighbor_id, cosine, rn FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY cosine DESC, neighbor_id) AS rn
-        FROM cand
-    ) WHERE rn <= 5
+    {_top5_sql("cand")}
     """
 
 

@@ -23,7 +23,7 @@ from pyspark.sql import types as T
 
 from ..io import load
 from ..registry import query
-from ._helpers import _ngram_hits, _power_sums, round_long
+from ._helpers import _ngram_hits, _ngram_hits_sql, _power_sums, round_long
 
 
 @query(
@@ -512,13 +512,7 @@ _CONTAM_MIN_RATIO = 0.04  # fixture demo; production uses ~0.3
     eval_sizes AS (
         SELECT eval_id, COUNT(*) AS n_eval_grams FROM eval_grams GROUP BY eval_id
     ),
-    hits AS (
-        SELECT g.doc_id AS train_id, e.eval_id,
-               COUNT(DISTINCT g.gram) AS shared
-        FROM grams g JOIN eval_grams e ON g.gram = e.gram
-        WHERE g.doc_id % {_CONTAM_EVAL_MOD} <> 0
-        GROUP BY g.doc_id, e.eval_id
-    )
+    {_ngram_hits_sql(f"g.doc_id % {_CONTAM_EVAL_MOD} <> 0")}
     SELECT h.train_id, h.eval_id, h.shared,
            ROUND(CAST(h.shared AS DOUBLE) / s.n_eval_grams, 6) AS contamination
     FROM hits h JOIN eval_sizes s ON h.eval_id = s.eval_id
@@ -567,10 +561,10 @@ def corpus_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "text_perplexity_proxy",
-    oracle="""
-    WITH tok AS (
+# The oracle CTEs of text_perplexity_proxy's unigram model: tok .. packed
+# (doc_id, cs, n_tokens), each document's tf * ln(p) contributions in
+# token order with its token count.
+_UNIGRAM_SQL_CTES = """tok AS (
         SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
     ),
     tf AS (
@@ -588,7 +582,13 @@ def corpus_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
                list(contrib ORDER BY token) AS cs,
                CAST(SUM(tf) AS BIGINT) AS n_tokens
         FROM contrib GROUP BY doc_id
-    )
+    )"""
+
+
+@query(
+    "text_perplexity_proxy",
+    oracle=f"""
+    WITH {_UNIGRAM_SQL_CTES}
     SELECT doc_id, n_tokens,
            ROUND(list_reduce(list_prepend(CAST(0 AS DOUBLE), cs),
                              (a, x) -> a + x) / n_tokens, 6) AS avg_logprob
@@ -1325,26 +1325,8 @@ def text_collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "quality_percentile_buckets",
-    oracle="""
-    WITH tok AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
-    ),
-    tf AS (
-        SELECT doc_id, token, COUNT(*) AS tf FROM tok GROUP BY doc_id, token
-    ),
-    vocab AS (SELECT token, COUNT(*) AS c FROM tok GROUP BY token),
-    tot AS (SELECT COUNT(*) AS n FROM tok),
-    contrib AS (
-        SELECT tf.doc_id, tf.token, tf.tf,
-               tf.tf * ln(CAST(vocab.c AS DOUBLE) / tot.n) AS contrib
-        FROM tf JOIN vocab USING (token) CROSS JOIN tot
-    ),
-    packed AS (
-        SELECT doc_id,
-               list(contrib ORDER BY token) AS cs,
-               CAST(SUM(tf) AS BIGINT) AS n_tokens
-        FROM contrib GROUP BY doc_id
-    ),
+    oracle=f"""
+    WITH {_UNIGRAM_SQL_CTES},
     scored AS (
         SELECT doc_id,
                ROUND(list_reduce(list_prepend(CAST(0 AS DOUBLE), cs),

@@ -17,7 +17,14 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import query
-from .streaming_batch import _corpus_flag, _ingest_corpus, _ingest_flags
+from .streaming_batch import (
+    _INGEST_FLAGS_SQL_CTES,
+    _INGEST_SQL_CTES,
+    _LAST_TOUCH_SQL,
+    _corpus_flag,
+    _ingest_corpus,
+    _ingest_flags,
+)
 
 
 @query(
@@ -511,7 +518,7 @@ def analytics_brand_revenue_or(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- round-2 additions: the remaining expressible TPC-H query shapes ----
 
-from ._helpers import DEC, KNUTH_MOD, KNUTH_MULT, _daily_counts, _day_idx, _ngram_hits, davg, dsum, round_long, sql_davg, sql_dsum  # noqa: E402
+from ._helpers import DEC, KNUTH_MOD, KNUTH_MULT, _daily_counts, _day_idx, _ngram_hits, _ngram_hits_sql, davg, dsum, round_long, sql_davg, sql_dsum  # noqa: E402
 
 
 @query(
@@ -1359,18 +1366,10 @@ def pipeline_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "analytics_last_touch_attribution",
-    oracle="""
+    oracle=f"""
     WITH ordered AS (
         SELECT user_id, ts, event_id, event_type,
-               LAST_VALUE(CASE WHEN event_type <> 'purchase'
-                               THEN epoch_us(ts) END IGNORE NULLS)
-                   OVER w AS last_touch_us,
-               LAST_VALUE(CASE WHEN event_type <> 'purchase'
-                               THEN event_type END IGNORE NULLS)
-                   OVER w AS last_touch_type
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+               {_LAST_TOUCH_SQL}
     ),
     conv AS (
         SELECT CASE WHEN last_touch_us IS NOT NULL
@@ -1950,6 +1949,33 @@ def _welch_t_df(diff: Column) -> tuple[Column, Column]:
     )
 
 
+# The SQL twin of _side_moments' select list: m1, m2, v1, v2 from the
+# side power sums n1, s1, ss1 and n2, s2, ss2.
+_SIDE_MOMENTS_SQL = """CAST(s1 AS DOUBLE) / n1 AS m1,
+               CAST(s2 AS DOUBLE) / n2 AS m2,
+               (CAST(ss1 AS DOUBLE) - CAST(s1 * s1 AS DOUBLE) / n1)
+                   / (n1 - 1) AS v1,
+               (CAST(ss2 AS DOUBLE) - CAST(s2 * s2 AS DOUBLE) / n2)
+                   / (n2 - 1) AS v2"""
+
+
+def _welch_t_df_sql(diff: str) -> str:
+    """The SQL twin of :func:`_welch_t_df`: the ``t_micro`` and
+    ``df_micro`` select items for the mean difference ``diff``."""
+    return f"""CASE WHEN v1 / n1 + v2 / n2 > 0 THEN
+               CAST(floor(1000000.0 * {diff} / sqrt(v1 / n1 + v2 / n2)
+                    + 0.5) AS BIGINT)
+           END AS t_micro,
+           CASE WHEN (v1 / n1) * (v1 / n1) / (n1 - 1)
+                     + (v2 / n2) * (v2 / n2) / (n2 - 1) > 0 THEN
+               CAST(floor(1000000.0
+                    * ((v1 / n1 + v2 / n2) * (v1 / n1 + v2 / n2))
+                    / ((v1 / n1) * (v1 / n1) / (n1 - 1)
+                       + (v2 / n2) * (v2 / n2) / (n2 - 1))
+                    + 0.5) AS BIGINT)
+           END AS df_micro"""
+
+
 @query(
     "pipeline_experiment_readout",
     oracle=f"""
@@ -1974,12 +2000,7 @@ def _welch_t_df(diff: Column) -> tuple[Column, Column]:
     ),
     mv AS (
         SELECT n1, n2, s1, s2,
-               CAST(s1 AS DOUBLE) / n1 AS m1,
-               CAST(s2 AS DOUBLE) / n2 AS m2,
-               (CAST(ss1 AS DOUBLE) - CAST(s1 * s1 AS DOUBLE) / n1)
-                   / (n1 - 1) AS v1,
-               (CAST(ss2 AS DOUBLE) - CAST(s2 * s2 AS DOUBLE) / n2)
-                   / (n2 - 1) AS v2
+               {_SIDE_MOMENTS_SQL}
         FROM arms WHERE n1 >= 2 AND n2 >= 2
     )
     SELECT n1 AS n_users_a, n2 AS n_users_b,
@@ -1991,18 +2012,7 @@ def _welch_t_df(diff: Column) -> tuple[Column, Column]:
                 THEN 1 ELSE 0 END AS INT) AS srm_flag,
            CAST(floor(1000000.0 * m1 + 0.5) AS BIGINT) AS mean_a_micro,
            CAST(floor(1000000.0 * m2 + 0.5) AS BIGINT) AS mean_b_micro,
-           CASE WHEN v1 / n1 + v2 / n2 > 0 THEN
-               CAST(floor(1000000.0 * (m2 - m1) / sqrt(v1 / n1 + v2 / n2)
-                    + 0.5) AS BIGINT)
-           END AS t_micro,
-           CASE WHEN (v1 / n1) * (v1 / n1) / (n1 - 1)
-                     + (v2 / n2) * (v2 / n2) / (n2 - 1) > 0 THEN
-               CAST(floor(1000000.0
-                    * ((v1 / n1 + v2 / n2) * (v1 / n1 + v2 / n2))
-                    / ((v1 / n1) * (v1 / n1) / (n1 - 1)
-                       + (v2 / n2) * (v2 / n2) / (n2 - 1))
-                    + 0.5) AS BIGINT)
-           END AS df_micro,
+           {_welch_t_df_sql("(m2 - m1)")},
            CASE WHEN m1 > 0 THEN
                CAST(floor(1000000.0 * (m2 - m1) / m1 + 0.5) AS BIGINT)
            END AS lift_micro,
@@ -2109,39 +2119,8 @@ def pipeline_experiment_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "pipeline_incremental_ingest",
-    oracle="""
-    WITH corpus AS (
-        SELECT doc_id,
-               sha256(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS h
-        FROM documents WHERE doc_id % 5 = 0
-    ),
-    corpus_hashes AS (SELECT DISTINCT h FROM corpus),
-    inc AS (
-        SELECT doc_id,
-               trim(regexp_replace(
-                   CASE WHEN doc_id % 20 = 0 THEN upper(text) || ' UPDATE'
-                        ELSE text END, '\\s+', ' ', 'g')) AS cleaned
-        FROM documents
-        WHERE doc_id % 5 <> 0 OR doc_id % 20 = 0 OR doc_id % 20 = 10
-        UNION ALL
-        SELECT -doc_id - 1 AS doc_id,
-               trim(regexp_replace(text, '\\s+', ' ', 'g')) AS cleaned
-        FROM documents WHERE doc_id % 15 = 1
-    ),
-    flags AS (
-        SELECT doc_id, sha256(cleaned) AS h,
-               (length(cleaned) >= 1) AS ok_clean,
-               (length(cleaned) BETWEEN 50 AND 1000) AS ok_quality,
-               (doc_id % 5 = 0) AS id_in_corpus
-        FROM inc
-    ),
-    ranked AS (
-        SELECT f.doc_id, f.ok_clean, f.ok_quality, f.id_in_corpus,
-               ROW_NUMBER() OVER (PARTITION BY f.h, f.ok_quality
-                                  ORDER BY f.doc_id) AS rn,
-               (ch.h IS NOT NULL) AS hash_in_corpus
-        FROM flags f LEFT JOIN corpus_hashes ch ON f.h = ch.h
-    ),
+    oracle=f"""
+    WITH {_INGEST_FLAGS_SQL_CTES},
     agg AS (
         SELECT COUNT(*) AS n_offered,
                COUNT(CASE WHEN ok_clean THEN 1 END) AS n_clean,
@@ -2305,13 +2284,7 @@ _DECON_RATIO = 0.04    # overlap kill threshold (fixture demo; prod ~0.3)
         SELECT eval_id, COUNT(*) AS n_eval_grams FROM eval_grams
         GROUP BY eval_id
     ),
-    hits AS (
-        SELECT g.doc_id AS train_id, e.eval_id,
-               COUNT(DISTINCT g.gram) AS shared
-        FROM grams g JOIN eval_grams e ON g.gram = e.gram
-        WHERE g.b < 80
-        GROUP BY g.doc_id, e.eval_id
-    ),
+    {_ngram_hits_sql("g.b < 80")},
     killed AS (
         SELECT DISTINCT train_id
         FROM hits h JOIN eval_sizes s ON h.eval_id = s.eval_id
@@ -2539,25 +2512,8 @@ def pipeline_daily_series_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "pipeline_merged_snapshot",
-    oracle="""
-    WITH corpus AS (
-        SELECT doc_id,
-               sha256(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS h
-        FROM documents WHERE doc_id % 5 = 0
-    ),
-    corpus_hashes AS (SELECT DISTINCT h FROM corpus),
-    inc AS (
-        SELECT doc_id,
-               trim(regexp_replace(
-                   CASE WHEN doc_id % 20 = 0 THEN upper(text) || ' UPDATE'
-                        ELSE text END, '\\s+', ' ', 'g')) AS cleaned
-        FROM documents
-        WHERE doc_id % 5 <> 0 OR doc_id % 20 = 0 OR doc_id % 20 = 10
-        UNION ALL
-        SELECT -doc_id - 1 AS doc_id,
-               trim(regexp_replace(text, '\\s+', ' ', 'g')) AS cleaned
-        FROM documents WHERE doc_id % 15 = 1
-    ),
+    oracle=f"""
+    WITH {_INGEST_SQL_CTES},
     qual AS (
         SELECT doc_id, sha256(cleaned) AS h, (doc_id % 5 = 0) AS id_in_corpus
         FROM inc WHERE length(cleaned) BETWEEN 50 AND 1000

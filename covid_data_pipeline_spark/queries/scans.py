@@ -50,9 +50,16 @@ def scan_projected(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
 
 
+# The oracle of every events round trip through files: the count per
+# event_type of the events the query wrote and read back.
+_EVENT_TYPE_COUNTS_SQL = (
+    "SELECT event_type, COUNT(*) AS n FROM events GROUP BY event_type"
+)
+
+
 @query(
     "scan_csv_roundtrip",
-    oracle="SELECT event_type, COUNT(*) AS n FROM events GROUP BY event_type",
+    oracle=_EVENT_TYPE_COUNTS_SQL,
 )
 def scan_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write events to CSV, read back with an explicit schema (never
@@ -314,13 +321,19 @@ def _registry_rows(shard: int, n_shards: int = 4):
             yield (st, f"https://{st}.example.gov/covid", _DS_KINDS[i % 3], shard)
 
 
+# The whole registry, shard by shard, its schema, and the same rows as
+# the oracles' VALUES table t.
+_REGISTRY = [r for sh in range(4) for r in _registry_rows(sh)]
+_REGISTRY_SCHEMA = "state string, url string, kind string, shard int"
+_REGISTRY_SQL = f"""(VALUES {", ".join(
+    f"('{st}', '{url}', '{kind}', {shard})" for st, url, kind, shard in _REGISTRY
+)}) AS t(state, url, kind, shard)"""
+
+
 @query(
     "source_python_datasource",
     oracle=f"""
-    SELECT * FROM (VALUES {", ".join(
-        f"('{r[0]}', '{r[1]}', '{r[2]}', {r[3]})"
-        for sh in range(4) for r in _registry_rows(sh)
-    )}) AS t(state, url, kind, shard)
+    SELECT * FROM {_REGISTRY_SQL}
     """,
 )
 def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -350,7 +363,7 @@ def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             return "cdp_registry"
 
         def schema(self):
-            return "state string, url string, kind string, shard int"
+            return _REGISTRY_SCHEMA
 
         def reader(self, schema):
             return _RegistryReader()
@@ -409,10 +422,7 @@ def sink_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "sink_python_datasource",
     oracle=f"""
-    SELECT kind, COUNT(*) AS n_sources FROM (VALUES {", ".join(
-        f"('{r[0]}', '{r[1]}', '{r[2]}', {r[3]})"
-        for sh in range(4) for r in _registry_rows(sh)
-    )}) AS t(state, url, kind, shard)
+    SELECT kind, COUNT(*) AS n_sources FROM {_REGISTRY_SQL}
     GROUP BY kind
     """,
 )
@@ -484,16 +494,15 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             return "cdp_jsonl_sink"
 
         def schema(self):
-            return "state string, url string, kind string, shard int"
+            return _REGISTRY_SCHEMA
 
         def writer(self, schema, overwrite):
             return _JsonlWriter(self.options["path"])
 
     spark.dataSource.register(JsonlSinkDataSource)
-    registry = spark.createDataFrame(
-        [r for sh in range(4) for r in _registry_rows(sh)],
-        "state string, url string, kind string, shard int",
-    ).repartition(4, "shard")
+    registry = spark.createDataFrame(_REGISTRY, _REGISTRY_SCHEMA).repartition(
+        4, "shard"
+    )
     (
         registry.write.format("cdp_jsonl_sink")
         .option("path", out_dir)
@@ -507,9 +516,7 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert os.path.exists(manifest)
     with open(manifest) as f:
         committed = [line.split("\t", 1)[0] for line in f if line.strip()]
-    back = spark.read.schema(
-        "state string, url string, kind string, shard int"
-    ).json(committed)
+    back = spark.read.schema(_REGISTRY_SCHEMA).json(committed)
     return back.groupBy("kind").agg(F.count(F.lit(1)).alias("n_sources"))
 
 
@@ -517,10 +524,7 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     "source_python_stream",
     oracle=f"""
     SELECT kind, COUNT(*) AS n_sources, MAX(shard) AS max_shard
-    FROM (VALUES {", ".join(
-        f"('{r[0]}', '{r[1]}', '{r[2]}', {r[3]})"
-        for sh in range(4) for r in _registry_rows(sh)
-    )}) AS t(state, url, kind, shard)
+    FROM {_REGISTRY_SQL}
     GROUP BY kind
     """,
     # few state groups (kinds): narrow sharding — the stream_foreach_sink
@@ -583,7 +587,7 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             return "cdp_registry_stream"
 
         def schema(self):
-            return "state string, url string, kind string, shard int"
+            return _REGISTRY_SCHEMA
 
         def streamReader(self, schema):
             return _RegistryStreamReader()
@@ -1302,7 +1306,7 @@ def scan_parquet_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "scan_csv_gz_codec",
-    oracle="SELECT event_type, COUNT(*) AS n FROM events GROUP BY event_type",
+    oracle=_EVENT_TYPE_COUNTS_SQL,
 )
 def scan_csv_gz_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write events to GZIP-compressed CSV and read them back with the
@@ -1381,7 +1385,7 @@ def scan_nested_struct_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "scan_recursive_directory",
-    oracle="SELECT event_type, COUNT(*) AS n FROM events GROUP BY event_type",
+    oracle=_EVENT_TYPE_COUNTS_SQL,
 )
 def scan_recursive_directory(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recursiveFileLookup ingest: two disjoint halves of events land at

@@ -32,18 +32,33 @@ from ..registry import query
 from ..streaming import transforms as TR
 from ..streaming.runner import drain, scratch_dir, take_memory_sink
 from ._helpers import DEC, sql_dsum
+from .aggregates import _DECAY_WEIGHTED_SQL
 
 
-@query(
-    "stream_tumbling",
-    oracle=f"""
+# The batch oracles of the streaming queries that share a result: each
+# hour's count and value sum per event_type (tumbling windows), and the
+# earliest event of each (user_id, content hash) (dedup state).
+_HOURLY_SQL = f"""
     SELECT (epoch_us(ts) // 3600000000) * 3600000000 AS ws_us,
            event_type,
            COUNT(*) AS n_events,
            {sql_dsum('value')} AS sum_value
     FROM events
     GROUP BY 1, 2
-    """,
+    """
+_FIRST_CONTENT_SQL = """
+    SELECT event_id, user_id, content_hash FROM (
+        SELECT event_id, user_id, sha256(props) AS content_hash,
+               ROW_NUMBER() OVER (PARTITION BY user_id, sha256(props)
+                                  ORDER BY ts, event_id) AS rn
+        FROM events
+    ) WHERE rn = 1
+    """
+
+
+@query(
+    "stream_tumbling",
+    oracle=_HOURLY_SQL,
 )
 def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour tumbling count+sum by event_type (reference: per-scan-cycle
@@ -163,14 +178,7 @@ def stream_watermark_late(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_dedup_state",
-    oracle="""
-    SELECT event_id, user_id, content_hash FROM (
-        SELECT event_id, user_id, sha256(props) AS content_hash,
-               ROW_NUMBER() OVER (PARTITION BY user_id, sha256(props)
-                                  ORDER BY ts, event_id) AS rn
-        FROM events
-    ) WHERE rn = 1
-    """,
+    oracle=_FIRST_CONTENT_SQL,
 )
 def stream_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful dedup on (source, content-hash) — the reference's
@@ -193,14 +201,7 @@ def stream_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_foreach_sink",
-    oracle=f"""
-    SELECT (epoch_us(ts) // 3600000000) * 3600000000 AS ws_us,
-           event_type,
-           COUNT(*) AS n_events,
-           {sql_dsum('value')} AS sum_value
-    FROM events
-    GROUP BY 1, 2
-    """,
+    oracle=_HOURLY_SQL,
     # narrow state/output sharding: the complete-mode snapshot is
     # windows x types rows (~3.6k at sf0.1), so 32 shuffle partitions
     # meant 32 state-store instances AND 32 near-empty parquet files
@@ -647,17 +648,7 @@ def decay_agg(df: DataFrame, anchor_us: int) -> DataFrame:
 
 @query(
     "stream_decay_weighted",
-    oracle=f"""
-    WITH anchor AS (SELECT MAX(epoch_us(ts)) AS max_us FROM events)
-    SELECT user_id,
-           CAST(COUNT(*) AS BIGINT) AS n_events,
-           {sql_dsum("value * pow(0.5, floor((anchor.max_us - epoch_us(ts))"
-                     " / 604800000000))")} AS decayed_value,
-           {sql_dsum("pow(0.5, floor((anchor.max_us - epoch_us(ts))"
-                     " / 604800000000))")} AS decayed_count
-    FROM events CROSS JOIN anchor
-    GROUP BY user_id
-    """,
+    oracle=_DECAY_WEIGHTED_SQL,
     # few state groups (users): narrow sharding — SCALE.md sizing policy
     conf=NARROW_SHUFFLE,
 )  # oracle-checked: complete-mode final snapshot == the batch decay
@@ -735,14 +726,7 @@ def stream_spacesaving_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_dedup_ttl",
-    oracle="""
-    SELECT event_id, user_id, content_hash FROM (
-        SELECT event_id, user_id, sha256(props) AS content_hash,
-               ROW_NUMBER() OVER (PARTITION BY user_id, sha256(props)
-                                  ORDER BY ts, event_id) AS rn
-        FROM events
-    ) WHERE rn = 1
-    """,
+    oracle=_FIRST_CONTENT_SQL,
     conf=NARROW_SHUFFLE,
 )  # oracle-checked: in-order arrival => first arrival == earliest event
 def stream_dedup_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -936,12 +920,10 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "stream_last_touch_state",
-    oracle="""
-    WITH ordered AS (
-        SELECT user_id, ts, event_type,
-               LAST_VALUE(CASE WHEN event_type <> 'purchase'
+# The last-touch carry of the attribution oracles: the select items
+# last_touch_us and last_touch_type (the latest earlier non-purchase
+# event of the user) and their FROM events WINDOW w clause.
+_LAST_TOUCH_SQL = """LAST_VALUE(CASE WHEN event_type <> 'purchase'
                                THEN epoch_us(ts) END IGNORE NULLS)
                    OVER w AS last_touch_us,
                LAST_VALUE(CASE WHEN event_type <> 'purchase'
@@ -949,7 +931,15 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
                    OVER w AS last_touch_type
         FROM events
         WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)"""
+
+
+@query(
+    "stream_last_touch_state",
+    oracle=f"""
+    WITH ordered AS (
+        SELECT user_id, ts, event_type,
+               {_LAST_TOUCH_SQL}
     )
     SELECT CASE WHEN last_touch_us IS NOT NULL
                  AND epoch_us(ts) - last_touch_us <= 604800000000
@@ -994,10 +984,9 @@ def stream_last_touch_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "stream_incremental_ingest",
-    oracle="""
-    WITH corpus AS (
+# The SQL twin of _ingest_corpus and the increment feeds: CTEs corpus,
+# corpus_hashes and inc(doc_id, cleaned).
+_INGEST_SQL_CTES = """corpus AS (
         SELECT doc_id,
                sha256(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS h
         FROM documents WHERE doc_id % 5 = 0
@@ -1014,7 +1003,11 @@ def stream_last_touch_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT -doc_id - 1 AS doc_id,
                trim(regexp_replace(text, '\\s+', ' ', 'g')) AS cleaned
         FROM documents WHERE doc_id % 15 = 1
-    ),
+    )"""
+
+# _INGEST_SQL_CTES plus the twins of _ingest_flags (flags) and
+# _corpus_flag (ranked: intra-increment rank and corpus-hash hit).
+_INGEST_FLAGS_SQL_CTES = f"""{_INGEST_SQL_CTES},
     flags AS (
         SELECT doc_id, sha256(cleaned) AS h,
                (length(cleaned) >= 1) AS ok_clean,
@@ -1028,7 +1021,13 @@ def stream_last_touch_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                                   ORDER BY f.doc_id) AS rn,
                (ch.h IS NOT NULL) AS hash_in_corpus
         FROM flags f LEFT JOIN corpus_hashes ch ON f.h = ch.h
-    )
+    )"""
+
+
+@query(
+    "stream_incremental_ingest",
+    oracle=f"""
+    WITH {_INGEST_FLAGS_SQL_CTES}
     SELECT doc_id,
            CASE WHEN NOT ok_clean THEN 'rejected_clean'
                 WHEN NOT ok_quality THEN 'rejected_quality'

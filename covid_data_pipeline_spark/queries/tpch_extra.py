@@ -800,10 +800,9 @@ def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
 
 
-@query(
-    "graph_knn_triangles",
-    oracle=f"""
-    WITH sc AS (
+# The SQL twin of _knn_edges, as the oracle CTEs sc .. edges(a, b) that
+# every graph_* oracle over the sparsified graph starts from.
+_KNN_SQL_CTES = f"""sc AS (
         SELECT DISTINCT l.l_suppkey AS s, o.o_custkey AS c
         FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
     ),
@@ -828,7 +827,13 @@ def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges AS (
         SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
         FROM knn
-    ),
+    )"""
+
+
+@query(
+    "graph_knn_triangles",
+    oracle=f"""
+    WITH {_KNN_SQL_CTES},
     deg AS (
         SELECT v, COUNT(*) AS d FROM (
             SELECT a AS v FROM edges UNION ALL SELECT b AS v FROM edges
@@ -904,6 +909,17 @@ def _knn_adjacency(edges: DataFrame) -> DataFrame:
     )
 
 
+# _KNN_SQL_CTES plus the SQL twins of _knn_adjacency (adj) and of its
+# per-node degree (deg).
+_KNN_ADJ_SQL_CTES = f"""{_KNN_SQL_CTES},
+    adj AS (
+        SELECT a AS v, b AS n FROM edges
+        UNION ALL
+        SELECT b AS v, a AS n FROM edges
+    ),
+    deg AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS d FROM adj GROUP BY v)"""
+
+
 def _knn_wedges(adj: DataFrame) -> DataFrame:
     """``(n, u, v)``: every pair u < v of neighbours of a common node n,
     from the adjacency self-join on n (bounded by the sum of deg²)."""
@@ -924,38 +940,7 @@ def _knn_triangles(edges: DataFrame) -> DataFrame:
 @query(
     "graph_jaccard_neighbors",
     oracle=f"""
-    WITH sc AS (
-        SELECT DISTINCT l.l_suppkey AS s, o.o_custkey AS c
-        FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-    ),
-    proj AS (
-        SELECT a.s AS s1, b.s AS s2, COUNT(*) AS shared
-        FROM sc a JOIN sc b ON a.c = b.c AND a.s < b.s
-        GROUP BY 1, 2
-    ),
-    directed AS (
-        SELECT s1 AS src, s2 AS dst, shared FROM proj
-        UNION ALL
-        SELECT s2 AS src, s1 AS dst, shared FROM proj
-    ),
-    knn AS (
-        SELECT src, dst FROM (
-            SELECT src, dst,
-                   ROW_NUMBER() OVER (PARTITION BY src
-                                      ORDER BY shared DESC, dst) AS rn
-            FROM directed
-        ) WHERE rn <= {_KNN_K}
-    ),
-    edges AS (
-        SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-        FROM knn
-    ),
-    adj AS (
-        SELECT a AS v, b AS n FROM edges
-        UNION ALL
-        SELECT b AS v, a AS n FROM edges
-    ),
-    deg AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS d FROM adj GROUP BY v),
+    WITH {_KNN_ADJ_SQL_CTES},
     common AS (
         SELECT x.v AS u, y.v AS v, CAST(COUNT(*) AS BIGINT) AS cn
         FROM adj x JOIN adj y ON x.n = y.n AND x.v < y.v
@@ -1032,16 +1017,21 @@ def _nation_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "agg_gini_coefficient",
-    oracle="""
-    WITH cust AS (
+# The SQL twin of _nation_customer_revenue: the CTE cust(nation,
+# c_custkey, rev_c).
+_CUST_REV_SQL_CTE = """cust AS (
         SELECT c.c_nationkey AS nation, c.c_custkey,
                CAST(SUM(CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT))
                     AS BIGINT) AS rev_c
         FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
         GROUP BY c.c_nationkey, c.c_custkey
-    ),
+    )"""
+
+
+@query(
+    "agg_gini_coefficient",
+    oracle=f"""
+    WITH {_CUST_REV_SQL_CTE},
     ranked AS (
         SELECT nation, rev_c,
                ROW_NUMBER() OVER (PARTITION BY nation
@@ -1277,14 +1267,8 @@ def analytics_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_hhi_concentration",
-    oracle="""
-    WITH cust AS (
-        SELECT c.c_nationkey AS nation, c.c_custkey,
-               CAST(SUM(CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS rev_c
-        FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
-        GROUP BY c.c_nationkey, c.c_custkey
-    )
+    oracle=f"""
+    WITH {_CUST_REV_SQL_CTE}
     SELECT nation,
            CAST(COUNT(*) AS BIGINT) AS n_customers,
            CAST(floor(10000000000.0
@@ -1478,38 +1462,7 @@ def analytics_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "graph_adamic_adar",
     oracle=f"""
-    WITH sc AS (
-        SELECT DISTINCT l.l_suppkey AS s, o.o_custkey AS c
-        FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-    ),
-    proj AS (
-        SELECT a.s AS s1, b.s AS s2, COUNT(*) AS shared
-        FROM sc a JOIN sc b ON a.c = b.c AND a.s < b.s
-        GROUP BY 1, 2
-    ),
-    directed AS (
-        SELECT s1 AS src, s2 AS dst, shared FROM proj
-        UNION ALL
-        SELECT s2 AS src, s1 AS dst, shared FROM proj
-    ),
-    knn AS (
-        SELECT src, dst FROM (
-            SELECT src, dst,
-                   ROW_NUMBER() OVER (PARTITION BY src
-                                      ORDER BY shared DESC, dst) AS rn
-            FROM directed
-        ) WHERE rn <= {_KNN_K}
-    ),
-    edges AS (
-        SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-        FROM knn
-    ),
-    adj AS (
-        SELECT a AS v, b AS n FROM edges
-        UNION ALL
-        SELECT b AS v, a AS n FROM edges
-    ),
-    deg AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS d FROM adj GROUP BY v),
+    WITH {_KNN_ADJ_SQL_CTES},
     wedges AS (
         SELECT x.v AS u, y.v AS v,
                CAST(floor(1000000.0 / ln(dz.d) + 0.5) AS BIGINT)
@@ -1718,14 +1671,8 @@ def agg_atkinson_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "analytics_lorenz_points",
-    oracle="""
-    WITH cust AS (
-        SELECT c.c_nationkey AS nation, c.c_custkey,
-               CAST(SUM(CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS rev_c
-        FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
-        GROUP BY c.c_nationkey, c.c_custkey
-    ),
+    oracle=f"""
+    WITH {_CUST_REV_SQL_CTE},
     deciled AS (
         SELECT nation, rev_c,
                NTILE(10) OVER (PARTITION BY nation
@@ -1795,38 +1742,7 @@ def analytics_lorenz_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "graph_degree_assortativity",
     oracle=f"""
-    WITH sc AS (
-        SELECT DISTINCT l.l_suppkey AS s, o.o_custkey AS c
-        FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-    ),
-    proj AS (
-        SELECT a.s AS s1, b.s AS s2, COUNT(*) AS shared
-        FROM sc a JOIN sc b ON a.c = b.c AND a.s < b.s
-        GROUP BY 1, 2
-    ),
-    directed AS (
-        SELECT s1 AS src, s2 AS dst, shared FROM proj
-        UNION ALL
-        SELECT s2 AS src, s1 AS dst, shared FROM proj
-    ),
-    knn AS (
-        SELECT src, dst FROM (
-            SELECT src, dst,
-                   ROW_NUMBER() OVER (PARTITION BY src
-                                      ORDER BY shared DESC, dst) AS rn
-            FROM directed
-        ) WHERE rn <= {_KNN_K}
-    ),
-    edges AS (
-        SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-        FROM knn
-    ),
-    adj AS (
-        SELECT a AS v, b AS n FROM edges
-        UNION ALL
-        SELECT b AS v, a AS n FROM edges
-    ),
-    deg AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS d FROM adj GROUP BY v),
+    WITH {_KNN_ADJ_SQL_CTES},
     pairs AS (
         SELECT da.d AS x, db.d AS y
         FROM edges e
@@ -1942,14 +1858,8 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "analytics_pareto_8020",
-    oracle="""
-    WITH cust AS (
-        SELECT c.c_nationkey AS nation, c.c_custkey,
-               CAST(SUM(CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT))
-                    AS BIGINT) AS rev_c
-        FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
-        GROUP BY c.c_nationkey, c.c_custkey
-    ),
+    oracle=f"""
+    WITH {_CUST_REV_SQL_CTE},
     ranked AS (
         SELECT nation, rev_c,
                ROW_NUMBER() OVER w AS rk,
@@ -2483,32 +2393,7 @@ def analytics_shift_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "graph_clustering_coeff",
     oracle=f"""
-    WITH sc AS (
-        SELECT DISTINCT l.l_suppkey AS s, o.o_custkey AS c
-        FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-    ),
-    proj AS (
-        SELECT a.s AS s1, b.s AS s2, COUNT(*) AS shared
-        FROM sc a JOIN sc b ON a.c = b.c AND a.s < b.s
-        GROUP BY 1, 2
-    ),
-    directed AS (
-        SELECT s1 AS src, s2 AS dst, shared FROM proj
-        UNION ALL
-        SELECT s2 AS src, s1 AS dst, shared FROM proj
-    ),
-    knn AS (
-        SELECT src, dst FROM (
-            SELECT src, dst,
-                   ROW_NUMBER() OVER (PARTITION BY src
-                                      ORDER BY shared DESC, dst) AS rn
-            FROM directed
-        ) WHERE rn <= {_KNN_K}
-    ),
-    edges AS (
-        SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-        FROM knn
-    ),
+    WITH {_KNN_SQL_CTES},
     deg AS (
         SELECT v, CAST(COUNT(*) AS BIGINT) AS d FROM (
             SELECT a AS v FROM edges UNION ALL SELECT b AS v FROM edges

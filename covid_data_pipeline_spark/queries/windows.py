@@ -21,7 +21,15 @@ from pyspark.sql import functions as F
 
 from ..io import load
 from ..registry import query
-from ._helpers import DEC, _daily_counts, _day_diffs, _full_frames, round_long
+from ._helpers import (
+    DAILY_D_SQL_CTE,
+    DAILY_SQL_CTE,
+    DEC,
+    _daily_counts,
+    _day_diffs,
+    _full_frames,
+    round_long,
+)
 
 
 @query(
@@ -1001,12 +1009,8 @@ def win_week_over_week(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "win_bollinger_exact",
-    oracle="""
-    WITH daily AS (
-        SELECT event_type, CAST(ts AS DATE) AS d,
-               CAST(COUNT(*) AS BIGINT) AS x
-        FROM events GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {DAILY_D_SQL_CTE},
     sums AS (
         SELECT event_type, d, x,
                COUNT(*) OVER w AS n,
@@ -1070,12 +1074,8 @@ def win_bollinger_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "win_rsi",
-    oracle="""
-    WITH daily AS (
-        SELECT event_type, CAST(ts AS DATE) AS d,
-               CAST(COUNT(*) AS BIGINT) AS x
-        FROM events GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {DAILY_D_SQL_CTE},
     diffs AS (
         SELECT event_type, d,
                x - LAG(x) OVER (PARTITION BY event_type ORDER BY d)
@@ -1123,7 +1123,6 @@ def win_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
         _day_diffs(e),
         14,
         [],
-        cast="long",
         g=F.sum(F.greatest("diff", F.lit(0))),
         l=F.sum(F.greatest(-F.col("diff"), F.lit(0))),
     )
@@ -1147,12 +1146,8 @@ def win_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "win_seasonal_naive_error",
-    oracle="""
-    WITH daily AS (
-        SELECT event_type, CAST(ts AS DATE) AS d,
-               CAST(COUNT(*) AS BIGINT) AS x
-        FROM events GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {DAILY_D_SQL_CTE},
     fc AS (
         SELECT event_type, x,
                LAG(x, 7) OVER (PARTITION BY event_type ORDER BY d) AS xhat
@@ -1207,12 +1202,8 @@ def win_seasonal_naive_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "win_stochastic_oscillator",
-    oracle="""
-    WITH daily AS (
-        SELECT event_type, CAST(ts AS DATE) AS d,
-               CAST(COUNT(*) AS BIGINT) AS x
-        FROM events GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {DAILY_D_SQL_CTE},
     framed AS (
         SELECT event_type, d, x,
                COUNT(*) OVER w AS n,
@@ -1258,7 +1249,7 @@ def win_stochastic_oscillator(spark: SparkSession, sf_dir: str) -> DataFrame:
     the win_bollinger_exact cost class exactly."""
     e = load(spark, sf_dir, "events")
     framed = _full_frames(
-        _daily_counts(e, "d"), 7, ["x"], cast="long", hi=F.max("x"), lo=F.min("x")
+        _daily_counts(e, "d"), 7, ["x"], hi=F.max("x"), lo=F.min("x")
     )
     hi, lo = F.col("hi"), F.col("lo")
     k = framed.select(
@@ -1294,12 +1285,8 @@ def win_stochastic_oscillator(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "win_ulcer_index",
-    oracle="""
-    WITH daily AS (
-        SELECT event_type, CAST(ts AS DATE) AS d,
-               CAST(COUNT(*) AS BIGINT) AS x
-        FROM events GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {DAILY_D_SQL_CTE},
     dd AS (
         SELECT event_type, d, x,
                CAST(floor(1000000.0
@@ -1358,7 +1345,6 @@ def win_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         dd,
         7,
         ["x", "dd_micro"],
-        cast="long",
         sum_sq=F.sum(F.col("dd_micro") * F.col("dd_micro")),
     )
     return rolled.select(
@@ -1373,14 +1359,8 @@ def win_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "win_seasonal_zscore",
-    oracle="""
-    WITH daily AS (
-        SELECT event_type,
-               CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE))
-                    AS BIGINT) AS t,
-               CAST(COUNT(*) AS BIGINT) AS x
-        FROM events GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {DAILY_SQL_CTE},
     framed AS (
         SELECT event_type, t, x,
                COUNT(*) OVER w AS nh,
@@ -1454,14 +1434,8 @@ def win_seasonal_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "win_xmr_control_chart",
-    oracle="""
-    WITH daily AS (
-        SELECT event_type,
-               CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE))
-                    AS BIGINT) AS t,
-               CAST(COUNT(*) AS BIGINT) AS x
-        FROM events GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH {DAILY_SQL_CTE},
     mr AS (
         SELECT event_type, t, x,
                abs(x - LAG(x) OVER (PARTITION BY event_type ORDER BY t))

@@ -15,6 +15,7 @@ import tokenize
 import pytest
 
 import bench
+from covid_data_pipeline_spark.queries.tpch_extra import _KNN_SQL_CTES
 from covid_data_pipeline_spark.registry import load_all
 
 REPO = pathlib.Path(__file__).resolve().parents[1]
@@ -25,21 +26,30 @@ CITED_PATH = re.compile(
     r"(?<![\w:/.-])(experiments/[\w-]+\.py|plans/r1\d/[\w.-]*\w)(?![\w.*{<-])"
 )
 
-# Near-twin scan: two top-level function bodies are near twins when they
-# share >= MIN_SHARED shingles of SHINGLE consecutive tokens, and those
-# are >= MIN_SHARE of the smaller body's shingles -- or when they share
-# >= MIN_SHARED_BLOCK shingles whatever the share (eight or so dense
-# lines pasted between two long functions).
+# Near-twin scan: two token sequences -- top-level function bodies in
+# Python tokens, or SQL source literals in SQL tokens -- are near twins
+# when they share >= MIN_SHARED shingles of SHINGLE consecutive tokens,
+# and those are >= MIN_SHARE of the smaller one's shingles -- or when
+# they share >= MIN_SHARED_BLOCK shingles whatever the share (eight or so
+# dense lines pasted between two long functions) -- or when they are one
+# sequence of >= SHINGLE tokens spelled twice.
 SHINGLE = 12
 MIN_SHARED = 60
 MIN_SHARE = 0.5
 MIN_SHARED_BLOCK = 100
 _SKIPPED_TOKENS = {tokenize.COMMENT, tokenize.NL, tokenize.INDENT}
+# SQL tokens: a quoted string, a number, a word, a two-character operator
+# or any other single character; ``--`` comments are matched to be dropped.
+_SQL_TOKEN = re.compile(
+    r"--[^\n]*|'(?:[^']|'')*'|\d+(?:\.\d*)?(?:[eE][-+]?\d+)?|\w+"
+    r"|<>|<=|>=|!=|::|->|\|\||<<|>>|\S"
+)
 # The near-twin pairs the package still holds, as (module:function,
-# module:function) under covid_data_pipeline_spark/.  A pair not listed
-# here is a new copy: fold it into a shared helper instead of adding it;
-# a pair belongs here only when that helper would have to branch on
-# which query it serves.
+# module:function) under covid_data_pipeline_spark/, or as SQL literal
+# keys (see _sql_literals).  A pair not listed here is a new copy: fold
+# it into a shared helper or SQL fragment instead of adding it; a pair
+# belongs here only when that helper would have to branch on which
+# query it serves.
 NEAR_TWINS_ALLOWED = {
     # distinct TPC-H queries (Q5 / Q10, Q8 / Q9) whose join chains share a
     # prefix: one builder for both would branch on the query's own joins
@@ -125,10 +135,10 @@ def test_profile_summary_median_of_even_reps_is_the_middle_mean(monkeypatch):
     assert summary([2.0, 9.0, 1.0]) == (2.0, 1.0, 9.0)
 
 
-def _function_shingles(path: pathlib.Path, root: pathlib.Path) -> dict[str, set]:
-    """The SHINGLE-token shingles of each top-level ``def`` in ``path``,
-    keyed ``module:function``: its tokens from the ``def`` line to its
-    end, with comments, NL and INDENT tokens and the docstring dropped."""
+def _function_tokens(path: pathlib.Path, root: pathlib.Path) -> dict[str, list[str]]:
+    """The tokens of each top-level ``def`` in ``path``, keyed
+    ``module:function``: from the ``def`` line to its end, with
+    comments, NL and INDENT tokens and the docstring dropped."""
     src = path.read_text()
     lines = src.splitlines(keepends=True)
     out = {}
@@ -141,35 +151,125 @@ def _function_shingles(path: pathlib.Path, root: pathlib.Path) -> dict[str, set]
                 and isinstance(doc.value.value, str):
             doc_at = (doc.lineno - node.lineno + 1, doc.col_offset)
         text = "".join(lines[node.lineno - 1:node.end_lineno])
-        toks = [
+        out[f"{path.relative_to(root).as_posix()}:{node.name}"] = [
             t.string
             for t in tokenize.generate_tokens(io.StringIO(text).readline)
             if t.type not in _SKIPPED_TOKENS and t.start != doc_at
         ]
-        shingles = {tuple(toks[i:i + SHINGLE]) for i in range(len(toks) - SHINGLE + 1)}
-        out[f"{path.relative_to(root).as_posix()}:{node.name}"] = shingles
     return out
 
 
-def near_twins(root: pathlib.Path) -> set[tuple[str, str]]:
-    """Every near-twin pair of top-level functions under ``root``."""
-    shingles = {}
-    for path in sorted(root.rglob("*.py")):
-        shingles.update(_function_shingles(path, root))
+def _is_str(node: ast.AST) -> bool:
+    return isinstance(node, ast.JoinedStr) or (
+        isinstance(node, ast.Constant) and isinstance(node.value, str)
+    )
+
+
+def _sql_tokens(node: ast.expr) -> list[str]:
+    """The SQL tokens of a string or f-string literal as written in the
+    source: each ``{...}`` placeholder is one token, comments are
+    dropped and words are lower-cased."""
+    toks = []
+    for part in node.values if isinstance(node, ast.JoinedStr) else [node]:
+        if isinstance(part, ast.Constant):
+            toks += [
+                t if t[0] == "'" else t.lower()
+                for t in _SQL_TOKEN.findall(part.value)
+                if not t.startswith("--")
+            ]
+        else:
+            toks.append("{" + ast.unparse(part.value) + "}")
+    return toks
+
+
+def _outer_strings(node: ast.AST):
+    """The string literals under ``node`` that are not part of another."""
+    for child in ast.iter_child_nodes(node):
+        if _is_str(child):
+            yield child
+        else:
+            yield from _outer_strings(child)
+
+
+def _sql_literals(path: pathlib.Path, root: pathlib.Path) -> dict[str, list[str]]:
+    """The SQL tokens of the SQL source literals in ``path``: each
+    ``@query(name, oracle=<literal>)`` keyed by the query name, each
+    module-level string constant keyed ``module:NAME``, and each string
+    holding a SELECT inside a top-level function (a fragment builder, a
+    ``spark.sql`` text) keyed ``module:function``, numbered ``#i`` from
+    the second one on; docstrings are skipped."""
+    mod = path.relative_to(root).as_posix()
+    out = {}
+    for node in ast.parse(path.read_text()).body:
+        if isinstance(node, ast.Assign) and _is_str(node.value):
+            for target in node.targets:
+                if isinstance(target, ast.Name):
+                    out[f"{mod}:{target.id}"] = _sql_tokens(node.value)
+        if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        for deco in node.decorator_list:
+            if isinstance(deco, ast.Call) and getattr(deco.func, "id", None) == "query":
+                for kw in deco.keywords:
+                    if kw.arg == "oracle" and _is_str(kw.value):
+                        out[deco.args[0].value] = _sql_tokens(kw.value)
+        body = node.body
+        if isinstance(body[0], ast.Expr) and _is_str(body[0].value):
+            body = body[1:]
+        found = [
+            toks
+            for stmt in body
+            for lit in _outer_strings(stmt)
+            if "select" in (toks := _sql_tokens(lit))
+        ]
+        for i, toks in enumerate(found):
+            out[f"{mod}:{node.name}" + (f"#{i}" if i else "")] = toks
+    return out
+
+
+def _shingles(toks: list[str]) -> set[tuple[str, ...]]:
+    return {tuple(toks[i:i + SHINGLE]) for i in range(len(toks) - SHINGLE + 1)}
+
+
+def _twins(tokens: dict[str, list[str]]) -> set[tuple[str, str]]:
+    """Every near-twin pair of the keyed token sequences ``tokens``."""
+    shingles = {k: _shingles(t) for k, t in tokens.items()}
     pairs = set()
     for a, b in itertools.combinations(sorted(shingles), 2):
         shared = len(shingles[a] & shingles[b])
         smaller = min(len(shingles[a]), len(shingles[b]))
         if shared >= MIN_SHARED_BLOCK or (
             shared >= MIN_SHARED and shared >= MIN_SHARE * smaller
-        ):
+        ) or (len(tokens[a]) >= SHINGLE and tokens[a] == tokens[b]):
             pairs.add((a, b))
     return pairs
+
+
+def near_twins(root: pathlib.Path) -> set[tuple[str, str]]:
+    """Every near-twin pair of top-level functions under ``root``."""
+    tokens = {}
+    for path in sorted(root.rglob("*.py")):
+        tokens.update(_function_tokens(path, root))
+    return _twins(tokens)
+
+
+def sql_twins(root: pathlib.Path) -> set[tuple[str, str]]:
+    """Every near-twin pair of SQL source literals under ``root``.  A
+    fragment interpolated into several literals is one literal of its
+    own, so the scan reads the source, never the rendered SQL."""
+    tokens = {}
+    for path in sorted(root.rglob("*.py")):
+        tokens.update(_sql_literals(path, root))
+    return _twins(tokens)
 
 
 def test_package_holds_no_new_near_twin_functions():
     new = near_twins(REPO / "covid_data_pipeline_spark") - NEAR_TWINS_ALLOWED
     assert not new, f"near-twin function bodies, fold them: {sorted(new)}"
+
+
+def test_package_holds_no_new_sql_twins():
+    new = sql_twins(REPO / "covid_data_pipeline_spark") - NEAR_TWINS_ALLOWED
+    assert not new, f"near-twin SQL literals, fold them into fragments: {sorted(new)}"
 
 
 def _long_host(name: str, block: list[str], pad: int) -> str:
@@ -180,11 +280,18 @@ def _long_host(name: str, block: list[str], pad: int) -> str:
     return "\n".join([f"def {name}(x):", *body, f"    return {name}_0"]) + "\n"
 
 
+def _sql_query(name: str, oracle: str) -> str:
+    """A module-level query ``name`` whose oracle is the literal ``oracle``."""
+    return f"@query({name!r}, oracle={oracle})\ndef {name}(spark, sf_dir):\n    return None\n\n\n"
+
+
 def test_near_twin_scan_flags_a_copied_function(tmp_path):
     """A query copied into another module under a new name is a pair;
     the scan skips the copy's docstring and comments.  A 25-line block
     pasted between two long functions is a pair too, although it is far
-    under half of either body."""
+    under half of either body.  In SQL, a CTE chain copied into two
+    oracle literals is a pair, and so is a short oracle spelled twice;
+    the same chain interpolated into both from one constant is not."""
     src = REPO / "covid_data_pipeline_spark" / "queries" / "joins.py"
     body = ast.get_source_segment(
         src.read_text(),
@@ -203,12 +310,32 @@ def test_near_twin_scan_flags_a_copied_function(tmp_path):
     ]
     (tmp_path / "d.py").write_text(_long_host("host_a", block, 120))
     (tmp_path / "e.py").write_text(_long_host("host_b", block, 120))
-    shingles = {
-        **_function_shingles(tmp_path / "d.py", tmp_path),
-        **_function_shingles(tmp_path / "e.py", tmp_path),
+    tokens = {
+        **_function_tokens(tmp_path / "d.py", tmp_path),
+        **_function_tokens(tmp_path / "e.py", tmp_path),
     }
-    shared = shingles["d.py:host_a"] & shingles["e.py:host_b"]
-    assert MIN_SHARED_BLOCK <= len(shared) < MIN_SHARE * len(shingles["d.py:host_a"])
+    shared = _shingles(tokens["d.py:host_a"]) & _shingles(tokens["e.py:host_b"])
+    assert MIN_SHARED_BLOCK <= len(shared) < MIN_SHARE * len(_shingles(tokens["d.py:host_a"]))
+
+    chain = _KNN_SQL_CTES
+    exact = '"SELECT COUNT(*) AS n FROM t GROUP BY x"'
+    (tmp_path / "sql").mkdir()
+    for m in "fg":
+        (tmp_path / "sql" / f"{m}.py").write_text(
+            _sql_query(f"copied_{m}", f'"""\n    WITH {chain}\n    SELECT {m} FROM edges\n    """')
+            + _sql_query(f"exact_{m}", exact)
+        )
+    (tmp_path / "folded").mkdir()
+    (tmp_path / "folded" / "h.py").write_text(
+        f'CHAIN = """{chain}"""\n\n\n'
+        + "".join(
+            _sql_query(f"shared_{m}", f'f"""\n    WITH {{CHAIN}}\n    SELECT {m} FROM edges\n    """')
+            for m in "fg"
+        )
+    )
+    assert len(_sql_literals(tmp_path / "sql" / "f.py", tmp_path)["exact_f"]) == SHINGLE
+    assert sql_twins(tmp_path / "sql") == {("copied_f", "copied_g"), ("exact_f", "exact_g")}
+    assert sql_twins(tmp_path / "folded") == set()
     assert near_twins(tmp_path) == {
         ("a.py:join_asof_nearest", "b.py:nearest_copy"),
         ("d.py:host_a", "e.py:host_b"),

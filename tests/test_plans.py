@@ -592,6 +592,19 @@ _SHUFFLE_BUDGET = {
     "analytics_abc_classification": 2,
     # one map-side-combined 1-row reduction over the read-back lines
     "scan_text_roundtrip": 1,
+    # the dims and, at this scale, the fact sides broadcast: one agg
+    "join_multikey_chain": 1,
+    # the window formulation of as-of: one user_id shuffle, no self-join
+    "join_asof": 1,
+    # the eval shingle set broadcasts into the gram join; the corpus
+    # side never shuffles by shingle
+    "corpus_contamination_check": 3,
+    # segment-hash window + rollup over 3 skinny columns
+    "dedup_paragraph_exact": 2,
+    # one rank window per (type, user); the rest are calendar-bounded
+    "agg_survival_kaplan_meier": 5,
+    # the test split's shingles broadcast into the train-side join
+    "pipeline_decontaminate": 8,
 }
 
 
